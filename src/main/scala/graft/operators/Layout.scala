@@ -304,48 +304,12 @@ object Layout {
 
   /** [[rowGroupStats]] for an EXPLICIT file list (a manifest read —
     * what a snapshot table's scan planner consults): stats carry the
-    * caller's path strings verbatim so survivors map back 1:1.
-    * Footer opens run on a BOUNDED thread pool (they are independent
-    * small metadata reads — IO-latency-bound, so the walk's wall
-    * time divides by the pool instead of serializing on per-file
-    * RTT); result order stays the caller's path order. */
+    * caller's path strings verbatim so survivors map back 1:1, in
+    * the caller's path order: the key half of [[statsWithKey]],
+    * rethrowing its all-or-nothing failure. */
   def rowGroupStatsFiles(spark: SparkSession, paths: Seq[String],
-                         keyCol: String): Seq[RowGroupStat] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def one(p0: String): Seq[RowGroupStat] = {
-      val p = new org.apache.hadoop.fs.Path(p0)
-      val bucket = p.getParent.getName match {
-        case s if s.contains("=") =>
-          scala.util.Try(s.substring(s.indexOf('=') + 1).toLong).toOption
-        case _ => None
-      }
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
-      try {
-        rd.getFooter.getBlocks.asScala.toSeq.map { b =>
-          val st = b.getColumns.asScala
-            .find(_.getPath.toDotString == keyCol)
-            .getOrElse(throw new IllegalArgumentException(
-              s"rowGroupStats: no column '$keyCol' in $p0"))
-            .getStatistics
-            .asInstanceOf[org.apache.parquet.column.statistics.LongStatistics]
-          RowGroupStat(p0, bucket, b.getRowCount, st.getMin, st.getMax)
-        }
-      } finally rd.close()
-    }
-    if (paths.size <= 1) paths.flatMap(one)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, paths.size))
-      try {
-        val futs = paths.map(p0 => pool.submit(
-          new java.util.concurrent.Callable[Seq[RowGroupStat]] {
-            override def call(): Seq[RowGroupStat] = one(p0)
-          }))
-        futs.flatMap(_.get())
-      } finally pool.shutdown()
-    }
-  }
+                         keyCol: String): Seq[RowGroupStat] =
+    statsWithKey(spark, paths, Some(keyCol), Nil)._1.get
 
   /** Typed per-FILE min/max for arbitrary scalar columns — the
     * generalized footer walk behind format 2.1's `#stat2` manifest
@@ -410,21 +374,6 @@ object Layout {
                         cols: Seq[String]): Seq[TypedRgStat] =
     typedStatsWithBlocks(spark, paths, cols)._2
 
-  /** ONE footer walk emitting BOTH stat granularities — the per-FILE
-    * `#stat2` fold and the per-ROW-GROUP `#stat3` detail
-    * ([[typedStatsFiles]] / [[typedRgStatsFiles]] delegate here;
-    * staging calls it once): two separate walks would double the
-    * metadata round trips per staged file exactly where footer I/O
-    * is priced per open (object stores). Per (file, column) the
-    * claim is ALL-OR-NOTHING: every block must carry usable
-    * statistics of ONE kind, else NEITHER family claims — the file
-    * stat is the fold of its block stats (same canonical encodings),
-    * and consumers of the block detail may treat a recorded set as
-    * the file's COMPLETE block list (a file whose every recorded
-    * block fails DROPS — [[Snapshots.prunedRangesBox]]), which only
-    * the all-or-nothing rule makes safe. Block detail is recorded
-    * only for multi-row-group files. Bounded thread pool like every
-    * footer walk here. */
   /** ONE footer walk emitting the LAYOUT KEY's per-row-group stats
     * AND both typed granularities — the staging path's single
     * metadata pass (guide §6: footer I/O is priced per open; the
@@ -434,7 +383,12 @@ object Layout {
     * yields Failure and the caller records NO key stat lines (a
     * partial set would make unlisted files invisible to pruning);
     * the typed half is per-(file, column) conservative exactly as
-    * [[typedStatsWithBlocks]]. */
+    * [[typedStatsWithBlocks]]. Every footer reader here delegates to
+    * this walk. Footer opens are independent, IO-latency-bound
+    * metadata reads, so they run concurrently through [[graft.Par]]
+    * (at most 16 threads); results keep the caller's path order, and
+    * a failing open (e.g. a missing file) surfaces its own exception
+    * whatever the file count. */
   def statsWithKey(spark: SparkSession, paths: Seq[String],
                    keyCol: Option[String], cols: Seq[String])
       : (scala.util.Try[Seq[RowGroupStat]], Seq[TypedFileStat],
@@ -470,27 +424,13 @@ object Layout {
         (keyStats, fileB, rgB)
       } finally rd.close()
     }
-    val res =
-      if (paths.size <= 1) paths.map(one)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, paths.size))
-        try {
-          val futs = paths.map(p0 => pool.submit(
-            new java.util.concurrent.Callable[(scala.util.Try[Seq[RowGroupStat]],
-                Seq[TypedFileStat], Seq[TypedRgStat])] {
-              override def call() = one(p0)
-            }))
-          futs.map(_.get())
-        } finally pool.shutdown()
-      }
+    val res = graft.Par.all(spark, "Layout.footers")(paths.map(p0 => () => one(p0)))
     val keyAll = scala.util.Try(res.flatMap(_._1.get))
     (keyAll, res.flatMap(_._2), res.flatMap(_._3))
   }
 
   /** The typed per-(file, column) claim fold over an already-open
-    * footer's blocks — shared by [[typedStatsWithBlocks]] and
-    * [[statsWithKey]]. */
+    * footer's blocks — [[statsWithKey]]'s typed half. */
   private def typedOfBlocks(p0: String,
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): (Seq[TypedFileStat], Seq[TypedRgStat]) = {
@@ -531,32 +471,26 @@ object Layout {
     (fileB.result(), rgB.result())
   }
 
+  /** ONE footer walk emitting BOTH stat granularities — the per-FILE
+    * `#stat2` fold and the per-ROW-GROUP `#stat3` detail
+    * ([[typedStatsFiles]] / [[typedRgStatsFiles]] delegate here;
+    * staging calls it once): two separate walks would double the
+    * metadata round trips per staged file exactly where footer I/O
+    * is priced per open (object stores). Per (file, column) the
+    * claim is ALL-OR-NOTHING: every block must carry usable
+    * statistics of ONE kind, else NEITHER family claims — the file
+    * stat is the fold of its block stats (same canonical encodings),
+    * and consumers of the block detail may treat a recorded set as
+    * the file's COMPLETE block list (a file whose every recorded
+    * block fails DROPS — [[Snapshots.prunedRangesBox]]), which only
+    * the all-or-nothing rule makes safe. Block detail is recorded
+    * only for multi-row-group files. The typed half of
+    * [[statsWithKey]]. */
   def typedStatsWithBlocks(spark: SparkSession, paths: Seq[String],
                            cols: Seq[String])
       : (Seq[TypedFileStat], Seq[TypedRgStat]) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def one(p0: String): (Seq[TypedFileStat], Seq[TypedRgStat]) = {
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p0), hconf))
-      try typedOfBlocks(p0, rd.getFooter.getBlocks.asScala.toSeq, cols)
-      finally rd.close()
-    }
-    val res =
-      if (paths.size <= 1) paths.map(one)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, paths.size))
-        try {
-          val futs = paths.map(p0 => pool.submit(
-            new java.util.concurrent.Callable[(Seq[TypedFileStat], Seq[TypedRgStat])] {
-              override def call(): (Seq[TypedFileStat], Seq[TypedRgStat]) =
-                one(p0)
-            }))
-          futs.map(_.get())
-        } finally pool.shutdown()
-      }
-    (res.flatMap(_._1), res.flatMap(_._2))
+    val (_, fileStats, rgStats) = statsWithKey(spark, paths, None, cols)
+    (fileStats, rgStats)
   }
 
   /** Unsigned byte-lexicographic a < b (parquet binary stat order). */

@@ -632,12 +632,14 @@ object ZOrderTable {
     * over an array literal: the higher-order function evaluates an
     * INTERPRETED lambda per array element per row (guide §4 — the
     * publish/append write job paid 2.1 s per 150K-row pass at 255
-    * cuts where the binary search pays 0.37 s; `ZmapProbe`, value
-    * mismatches 0 on the real dims). Value-identical by construction:
-    * the insertion point of an upper-bound binary search over a
-    * sorted (duplicates allowed) array IS the ≤-count; a NULL or NaN
-    * value fails every `v >= cut` comparison and falls through to
-    * the low edge — 0, exactly what the filter-size path produced. */
+    * cuts where the binary search pays 0.37 s; OPTIMIZATION_r14.md
+    * §1, value mismatches 0 on the real dims). Value-identical by
+    * construction: the insertion point of an upper-bound binary
+    * search over a sorted (duplicates allowed) array IS the ≤-count.
+    * Under Spark's NaN-greatest ordering a NaN value passes every
+    * `v >= cut` comparison and lands at the high edge, `cuts.length`;
+    * only NULL fails them all and falls to the low edge, 0 — both
+    * exactly what the filter-size path produced. */
   private def upperBoundCount(v: Column, cuts: Array[Column]): Column = {
     def f(lo: Int, hi: Int): Column =
       if (lo >= hi) lit(lo.toLong)
@@ -769,31 +771,18 @@ object ZOrderTable {
   }
 
   /** [[deriveCuts]] for every dimension, the independent derivations
-    * submitted CONCURRENTLY from a small driver pool (guide §2.6 —
+    * run CONCURRENTLY through [[graft.Par]], one thread per dimension
+    * (guide §2.6 —
     * each dimension's derivation is 2-3 tiny jobs whose wall time is
     * scheduling overhead, so running dims back to back serializes
     * idle time; the scheduler back-fills the executors across them).
     * Results are identical per dimension — the derivations share
-    * nothing but the read-only input frame. */
+    * nothing but the read-only input frame. A failing derivation
+    * (e.g. the string-dim refusal) surfaces its own exception. */
   private def deriveCutsAll(df: DataFrame, rawDims: Seq[String],
                             buckets: Int): Map[String, ZMap] =
-    if (rawDims.size <= 1)
-      rawDims.map(d => d -> deriveCuts(df, d, buckets)).toMap
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(rawDims.size)
-      try rawDims.map(d => d -> pool.submit(
-          new java.util.concurrent.Callable[ZMap] {
-            override def call(): ZMap = deriveCuts(df, d, buckets)
-          })).map { case (d, f) =>
-            // surface the derivation's OWN exception (e.g. the string-
-            // dim refusal), not the pool's ExecutionException wrapper
-            d -> (try f.get() catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            })
-          }.toMap
-      finally pool.shutdown()
-    }
+    rawDims.zip(graft.Par.all(df.sparkSession, "ZOrderTable.cuts")(
+      rawDims.map(d => () => deriveCuts(df, d, buckets)))).toMap
 
   private def parseZMap(s: String): ZMap = {
     val Array(kind, k, cuts) = s.split(":", 3)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Block A — relational core (SURVEY.md §2.A).
   *
@@ -1252,19 +1252,9 @@ object Relational {
     }
     // the two final folds are independent reads of different tables —
     // overlap them (guide §2.6, the q189 shape)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val (sF, rF) =
-      try {
-        val a = submit(fold(Snapshots.read(spark, srcT)))
-        val b = submit(fold(Snapshots.read(spark, repT)))
-        (a.get(), b.get())
-      } finally pool.shutdown()
-    val (s1, s2, s3) = sF
-    val (r1, r2, r3) = rF
+    val Seq((s1, s2, s3), (r1, r2, r3)) = Par.all(spark, "q176.fold")(Seq(
+      () => fold(Snapshots.read(spark, srcT)),
+      () => fold(Snapshots.read(spark, repT))))
     val ledger = Snapshots.appliedBatches(spark, repT)
     Seq(
       ("source", "final", s1, s2, s3),
@@ -1442,18 +1432,10 @@ object Relational {
     // the 'source final' and 'travel v1' rows RESTATE the v3/v1 folds
     // (read == readAt(latest); the fold is deterministic) instead of
     // recomputing them as two more full-table jobs (guide §1.2)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val (readFolds, repFold) =
-      try {
-        val fs = (1L to 3L).map(v =>
-          submit(fold(Snapshots.readAt(spark, srcT, v))))
-        val rep = submit(fold(Snapshots.read(spark, repT)))
-        (fs.map(_.get()), rep.get())
-      } finally pool.shutdown()
+    val folds = Par.all(spark, "q178.fold")(
+      (1L to 3L).map(v => () => fold(Snapshots.readAt(spark, srcT, v))) :+
+        (() => fold(Snapshots.read(spark, repT))))
+    val (readFolds, repFold) = (folds.init, folds.last)
     val reads = (1L to 3L).map { v =>
       val (c, x, s) = readFolds((v - 1).toInt)
       ("read", f"v$v%04d", c, x, s)
@@ -1534,22 +1516,14 @@ object Relational {
     }
     // four independent version-pinned folds (v1/v2/v4 reads + the
     // pruned mid-range scan), run CONCURRENTLY (guide §2.6)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val ((a1, a2, a3), (b1, b2, b3), (c1, c2, c3), (p1, p2, p3)) =
-      try {
-        val a = submit(fold(Snapshots.readAt(spark, out, v1),
-          col("o_orderstatus")))
-        val b = submit(fold(Snapshots.readAt(spark, out, v2), col("status")))
-        val c = submit(fold(Snapshots.readAt(spark, out, v4), col("status")))
-        val p = submit(fold(
+    val Seq((a1, a2, a3), (b1, b2, b3), (c1, c2, c3), (p1, p2, p3)) =
+      Par.all(spark, "q179.fold")(Seq(
+        () => fold(Snapshots.readAt(spark, out, v1), col("o_orderstatus")),
+        () => fold(Snapshots.readAt(spark, out, v2), col("status")),
+        () => fold(Snapshots.readAt(spark, out, v4), col("status")),
+        () => fold(
           Snapshots.prunedScanAt(spark, out, v4, "o_orderkey", 4096L, 12288L),
-          col("status")))
-        (a.get(), b.get(), c.get(), p.get())
-      } finally pool.shutdown()
+          col("status"))))
     val qn = "graft_ren_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = ChangeFeed.readStream(spark, out)
       .writeStream.outputMode("append").format("memory").queryName(qn)
@@ -1711,22 +1685,13 @@ object Relational {
     }
     // seven independent version-pinned folds (six reads + the
     // lookup), run CONCURRENTLY (guide §2.6, the q189 shape)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(7)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
     val versions = Seq(v1 -> "v0001", v3 -> "v0003", v4 -> "v0004",
       v5 -> "v0005", v6 -> "v0006", v7 -> "v0007")
-    val (readFolds, lookupFold) =
-      try {
-        val fs = versions.map { case (v, _) =>
-          submit(fold(H.readAt(spark, out, v)))
-        }
-        val lk = submit(fold(H.lookupAt(spark, out, v7, Seq(
-          "k0000000077", "k0000007007", "k0000014011", "nope"))))
-        (fs.map(_.get()), lk.get())
-      } finally pool.shutdown()
+    val folds = Par.all(spark, "q181.fold")(
+      versions.map { case (v, _) => () => fold(H.readAt(spark, out, v)) } :+
+        (() => fold(H.lookupAt(spark, out, v7, Seq(
+          "k0000000077", "k0000007007", "k0000014011", "nope")))))
+    val (readFolds, lookupFold) = (folds.init, folds.last)
     val reads = versions.zip(readFolds).map { case ((_, lbl), (c, x, s)) =>
       ("read", lbl, c, x, s)
     }
@@ -1801,18 +1766,7 @@ object Relational {
     }
     // the two per-version NDV folds are independent — overlap them
     // (guide §2.6, the q189 shape)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val (r1, r2) =
-      try {
-        val a = submit(rows(v1))
-        val b = submit(rows(v2))
-        (a.get(), b.get())
-      } finally pool.shutdown()
-    (r1 ++ r2)
+    Par.all(spark, "q182.ndv")(Seq(() => rows(v1), () => rows(v2))).flatten
       .toDF("version", "colname", "m1", "m2", "m3")
       .orderBy(col("version"), col("colname"))
   }
@@ -1887,23 +1841,14 @@ object Relational {
     // seven independent version-pinned verification folds, run
     // CONCURRENTLY (guide §2.6, the q189 shape): sequential they
     // serialize seven sub-second jobs' scheduling overhead
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(7)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val folds =
-      try {
-        val fs = Seq(
-          submit(fold(Z.box(spark, out, v1, boxPred))),
-          submit(fold(Z.box(spark, out, v3, boxPred))),
-          submit(fold(Z.box(spark, out, v3, Seq(("x", 0L, 16384L))))),
-          submit(fold(Z.box(spark, out, v3, Seq(("y", 0L, 16384L))))),
-          submit(fold(Z.readAt(spark, out, v3))),
-          submit(fold(Z.readAt(spark, out, v5))),
-          submit(fold(Z.readAt(spark, out, v6))))
-        fs.map(_.get())
-      } finally pool.shutdown()
+    val folds = Par.all(spark, "q183.fold")(Seq(
+      () => fold(Z.box(spark, out, v1, boxPred)),
+      () => fold(Z.box(spark, out, v3, boxPred)),
+      () => fold(Z.box(spark, out, v3, Seq(("x", 0L, 16384L)))),
+      () => fold(Z.box(spark, out, v3, Seq(("y", 0L, 16384L)))),
+      () => fold(Z.readAt(spark, out, v3)),
+      () => fold(Z.readAt(spark, out, v5)),
+      () => fold(Z.readAt(spark, out, v6))))
     val Seq((b11, b12, b13), (b31, b32, b33), (x1, x2, x3),
       (y1, y2, y3), (f1, f2, f3), (g51, g52, g53), (g61, g62, g63)) = folds
     val (s11, s12, s13) = stateRow(v1)
@@ -2036,39 +1981,32 @@ object Relational {
       out
     }
     // the six fixture publishes write DIFFERENT tables from different
-    // projections — independent jobs, submitted CONCURRENTLY from a
-    // driver pool (guide §2.6) so each write's tail back-fills the
-    // executors instead of serializing six small commits
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val ordCF = submit(pub("ord_c", Tables.orders(spark, dir).select(
-      col("o_custkey").as("k"), col("o_orderkey"), col("o_totalprice"),
-      (col("o_custkey") % 16).as("bucket"))))
-    val custF = submit(pub("cust", Tables.customer(spark, dir).select(
-      col("c_custkey").as("k"), col("c_acctbal"),
-      (col("c_custkey") % 16).as("bucket"))))
-    val ordKF = submit(pub("ord_k", Tables.orders(spark, dir).select(
-      col("o_orderkey").as("k"), col("o_totalprice"),
-      expr("o_orderkey div 8192").as("bucket"))))
-    val lineF = submit(pub("line", Tables.lineitem(spark, dir).select(
-      col("l_orderkey").as("k"), col("l_linenumber"),
-      expr("l_orderkey div 8192").as("bucket"))))
-    val hotOF = submit(pub("hot_o", Tables.orders(spark, dir).select(
-      (col("o_custkey") % 50).as("k"), col("o_orderkey"),
-      (col("o_custkey") % 8).as("bucket"))))
-    // one dim row per hot key: the join output stays linear in the
-    // fact (the salted REGIME needs the fact side's multiplicity, not
-    // a quadratic blowup — bench runs this at sf0.1)
-    val hotCF = submit(pub("hot_c", Tables.customer(spark, dir)
-      .filter(col("c_custkey") <= 50).select(
-        (col("c_custkey") % 50).as("k"), col("c_custkey"),
-        (col("c_custkey") % 8).as("bucket"))))
-    val (ordC, cust, ordK, line, hotO, hotC) =
-      (ordCF.get(), custF.get(), ordKF.get(), lineF.get(), hotOF.get(),
-        hotCF.get())
+    // projections — independent jobs, run CONCURRENTLY (guide §2.6) so
+    // each write's tail back-fills the executors instead of
+    // serializing six small commits
+    val Seq(ordC, cust, ordK, line, hotO, hotC) = Par.all(spark, "q185.publish")(Seq(
+      () => pub("ord_c", Tables.orders(spark, dir).select(
+        col("o_custkey").as("k"), col("o_orderkey"), col("o_totalprice"),
+        (col("o_custkey") % 16).as("bucket"))),
+      () => pub("cust", Tables.customer(spark, dir).select(
+        col("c_custkey").as("k"), col("c_acctbal"),
+        (col("c_custkey") % 16).as("bucket"))),
+      () => pub("ord_k", Tables.orders(spark, dir).select(
+        col("o_orderkey").as("k"), col("o_totalprice"),
+        expr("o_orderkey div 8192").as("bucket"))),
+      () => pub("line", Tables.lineitem(spark, dir).select(
+        col("l_orderkey").as("k"), col("l_linenumber"),
+        expr("l_orderkey div 8192").as("bucket"))),
+      () => pub("hot_o", Tables.orders(spark, dir).select(
+        (col("o_custkey") % 50).as("k"), col("o_orderkey"),
+        (col("o_custkey") % 8).as("bucket"))),
+      // one dim row per hot key: the join output stays linear in the
+      // fact (the salted REGIME needs the fact side's multiplicity,
+      // not a quadratic blowup — bench runs this at sf0.1)
+      () => pub("hot_c", Tables.customer(spark, dir)
+        .filter(col("c_custkey") <= 50).select(
+          (col("c_custkey") % 50).as("k"), col("c_custkey"),
+          (col("c_custkey") % 8).as("bucket")))))
     val dBc = JP.plan(spark, ordC, cust, "k")
     val dSh = JP.plan(spark, ordK, line, "k", broadcastBytes = 0)
     val dSa = JP.plan(spark, hotO, hotC, "k", broadcastBytes = 0)
@@ -2082,24 +2020,23 @@ object Relational {
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     // the three executed joins are independent — overlap them (§2.6)
-    val bJ = submit(fold(
-      JP.execute(side(ordC, dBc.left.version), side(cust, dBc.right.version),
-        "k", dBc),
-      concat_ws("|", col("k"), col("o_orderkey"),
-        (dec2(col("o_totalprice")) * 100).cast("long"),
-        (dec2(col("c_acctbal")) * 100).cast("long"))))
-    val sJ = submit(fold(
-      JP.execute(side(ordK, dSh.left.version), side(line, dSh.right.version),
-        "k", dSh),
-      concat_ws("|", col("k"), col("l_linenumber"),
-        (dec2(col("o_totalprice")) * 100).cast("long"))))
-    val aJ = submit(fold(
-      JP.execute(side(hotO, dSa.left.version), side(hotC, dSa.right.version),
-        "k", dSa),
-      concat_ws("|", col("k"), col("o_orderkey"), col("c_custkey"))))
-    val ((b1, b2, b3), (s1, s2, s3), (a1, a2, a3)) =
-      try (bJ.get(), sJ.get(), aJ.get())
-      finally pool.shutdown()
+    val Seq((b1, b2, b3), (s1, s2, s3), (a1, a2, a3)) =
+      Par.all(spark, "q185.join")(Seq(
+        () => fold(
+          JP.execute(side(ordC, dBc.left.version),
+            side(cust, dBc.right.version), "k", dBc),
+          concat_ws("|", col("k"), col("o_orderkey"),
+            (dec2(col("o_totalprice")) * 100).cast("long"),
+            (dec2(col("c_acctbal")) * 100).cast("long"))),
+        () => fold(
+          JP.execute(side(ordK, dSh.left.version),
+            side(line, dSh.right.version), "k", dSh),
+          concat_ws("|", col("k"), col("l_linenumber"),
+            (dec2(col("o_totalprice")) * 100).cast("long"))),
+        () => fold(
+          JP.execute(side(hotO, dSa.left.version),
+            side(hotC, dSa.right.version), "k", dSa),
+          concat_ws("|", col("k"), col("o_orderkey"), col("c_custkey")))))
     // the KMV cardinality estimate vs the exact join count, as a band
     // flag (deterministic: fixed hashes, fixed manifests)
     val est = JP.estimateJoinRows(spark, ordK, line, "k").get
@@ -2306,19 +2243,11 @@ object Relational {
     // four independent version-pinned folds, run CONCURRENTLY (guide
     // §2.6, the q189 shape): the three per-version reads and the
     // step-2 diff's newly-dead rows
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val (readFolds, diffFold) =
-      try {
-        val fs = (1L to 3L).map(v =>
-          submit(fold(Snapshots.readAt(spark, srcT, v))))
-        val d = submit(fold(Snapshots.diff(spark, srcT, v2, v3)
-          .filter(col("_change") === "delete").drop("_change")))
-        (fs.map(_.get()), d.get())
-      } finally pool.shutdown()
+    val folds = Par.all(spark, "q188.fold")(
+      (1L to 3L).map(v => () => fold(Snapshots.readAt(spark, srcT, v))) :+
+        (() => fold(Snapshots.diff(spark, srcT, v2, v3)
+          .filter(col("_change") === "delete").drop("_change"))))
+    val (readFolds, diffFold) = (folds.init, folds.last)
     val reads = (1L to 3L).map { v =>
       val (c, x, s) = readFolds((v - 1).toInt)
       ("read", f"v$v%04d", c, x, s)
@@ -2437,12 +2366,11 @@ object Relational {
     val tsHi = 946684800000000L
     val preds = Seq(("o_orderdate", tsLo: Any, tsHi: Any),
       ("o_totalprice", 50000.0: Any, 150000.0: Any))
-    def fold(df: DataFrame): (Long, Long, Long) = {
-      val r = df.withColumn("h", ordersRowHash)
-        .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L)),
-          coalesce(sum(col("h") % 1000000000000L), lit(0L))).collect()(0)
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
+    def fold(df: DataFrame, extra: Column*): org.apache.spark.sql.Row =
+      df.withColumn("h", ordersRowHash)
+        .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L)) +:
+          coalesce(sum(col("h") % 1000000000000L), lit(0L)) +: extra: _*)
+        .collect()(0)
     val survived = Snapshots.prunedFilesBox(spark, srcT, v1, preds).size.toLong
     val total = Snapshots.files(spark, srcT, v1).size.toLong
     // append shifted keys with +3653-day dates — OUT of every stored
@@ -2455,39 +2383,29 @@ object Relational {
     val v2 = Snapshots.latest(spark, srcT).get
     // All four verification folds are VERSION-PINNED reads (v1's box
     // and full read are unchanged by the append — manifests are
-    // immutable), so they run CONCURRENTLY from a small driver pool
+    // immutable), so they run CONCURRENTLY through Par
     // (guide §2.6): four sub-second jobs back to back serialize idle
     // executors; overlapped, the wall is the slowest fold. The v2
     // full-read fold carries the clamp check in the SAME pass (guide
     // §1.2 — it was a separate full-table job; the grid column rides
     // along in the scan, the fold's hash only references the orders
     // columns so values are unchanged).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val (b1f, b2f, r1f, r2f) =
-      try {
-        val b1 = submit(graft.Prof("q189.fold(box v1)")(
-          fold(Z.boxBy(spark, srcT, v1, preds))))
-        val b2 = submit(graft.Prof("q189.fold(box v2)")(
-          fold(Z.boxBy(spark, srcT, v2, preds))))
-        val r1 = submit(graft.Prof("q189.fold(read v1)")(
-          fold(Z.readAt(spark, srcT, v1))))
-        val r2 = submit(graft.Prof("q189.fold(read v2 + clamp)")(
-          Snapshots.readAt(spark, srcT, v2)
-            .withColumn("h", ordersRowHash)
-            .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L)),
-              coalesce(sum(col("h") % 1000000000000L), lit(0L)),
-              sort_array(collect_set(when(col("o_orderkey") > 2147483648L,
-                col("__gzm_o_orderdate"))))).collect()(0)))
-        (b1.get(), b2.get(), r1.get(), r2.get())
-      } finally pool.shutdown()
-    val (b1c, b1x, b1s) = b1f
-    val (b2c, b2x, b2s) = b2f
-    val (r1c, r1x, r1s) = r1f
-    val (r2c, r2x, r2s) = (r2f.getLong(0), r2f.getLong(1), r2f.getLong(2))
+    val Seq(b1f, b2f, r1f, r2f) = Par.all(spark, "q189.fold")(Seq(
+      () => graft.Prof("q189.fold(box v1)")(
+        fold(Z.boxBy(spark, srcT, v1, preds))),
+      () => graft.Prof("q189.fold(box v2)")(
+        fold(Z.boxBy(spark, srcT, v2, preds))),
+      () => graft.Prof("q189.fold(read v1)")(
+        fold(Z.readAt(spark, srcT, v1))),
+      () => graft.Prof("q189.fold(read v2 + clamp)")(
+        fold(Snapshots.readAt(spark, srcT, v2),
+          sort_array(collect_set(when(col("o_orderkey") > 2147483648L,
+            col("__gzm_o_orderdate"))))))))
+    def m(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    val (b1c, b1x, b1s) = m(b1f)
+    val (b2c, b2x, b2s) = m(b2f)
+    val (r1c, r1x, r1s) = m(r1f)
+    val (r2c, r2x, r2s) = m(r2f)
     val clampCodes = r2f.getSeq[Long](3)
     val props = Snapshots.propsAt(spark, srcT, v2)
     Seq(
@@ -3107,14 +3025,9 @@ object Relational {
       .withColumn("bucket", expr("c_custkey div 4096"))
     // the two fixture publishes and each section's fact/dim folds are
     // independent — overlap them (guide §2.6, the q189 shape)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] {
-        override def call(): T = f
-      })
-    val pubF = submit(Snapshots.publish(fact, factT, "bucket", Seq("o_orderkey")))
-    val pubD = submit(Snapshots.publish(dim, dimT, "bucket", Seq("c_custkey")))
-    pubF.get(); pubD.get()
+    Par.all(spark, "q173.publish")(Seq(
+      () => Snapshots.publish(fact, factT, "bucket", Seq("o_orderkey")),
+      () => Snapshots.publish(dim, dimT, "bucket", Seq("c_custkey"))))
     // the crashed transaction: stages BOTH tables, record never written
     val dead = Snapshots.beginTxn(spark, s"$base/_txns/dead")
     dead.merge(fact.filter(col("o_orderkey") % 11 === 5)
@@ -3134,9 +3047,10 @@ object Relational {
         col("c_mktsegment"))
       conv(substring(md5(canon), 1, 15), 16, 10).cast("long")
     }
-    val cfF = submit(fold(Snapshots.read(spark, factT), ordersRowHash))
-    val cdF = submit(fold(Snapshots.read(spark, dimT), dimRowHash))
-    val ((cf1, cf2, cf3), (cd1, cd2, cd3)) = (cfF.get(), cdF.get())
+    def foldBoth(): Seq[(Long, Long, Long)] = Par.all(spark, "q173.fold")(Seq(
+      () => fold(Snapshots.read(spark, factT), ordersRowHash),
+      () => fold(Snapshots.read(spark, dimT), dimRowHash)))
+    val Seq((cf1, cf2, cf3), (cd1, cd2, cd3)) = foldBoth()
     val crashed = Seq(
       ("crashed", "fact", cf1, cf2, cf3),
       ("crashed", "dim", cd1, cd2, cd3))
@@ -3151,9 +3065,7 @@ object Relational {
         .withColumn("c_mktsegment", lit("TX")),
       dimT, "bucket", Seq("c_custkey"), Seq("c_custkey"))
     txn.commit()
-    val ffF = submit(fold(Snapshots.read(spark, factT), ordersRowHash))
-    val fdF = submit(fold(Snapshots.read(spark, dimT), dimRowHash))
-    val ((ff1, ff2, ff3), (fd1, fd2, fd3)) = (ffF.get(), fdF.get())
+    val Seq((ff1, ff2, ff3), (fd1, fd2, fd3)) = foldBoth()
     val fin = Seq(
       ("final", "fact", ff1, ff2, ff3),
       ("final", "dim", fd1, fd2, fd3))
@@ -3165,9 +3077,7 @@ object Relational {
     }
     val joined = Snapshots.read(spark, factT)
       .join(Snapshots.read(spark, dimT), col("o_custkey") === col("c_custkey"))
-    val (j1, j2, j3) =
-      try fold(joined, joinHash)
-      finally pool.shutdown()
+    val (j1, j2, j3) = fold(joined, joinHash)
     val state = Seq(factT, dimT).zip(Seq("fact", "dim")).map { case (t, lbl) =>
       ("state", lbl, Snapshots.versions(spark, t).size.toLong,
         Snapshots.latest(spark, t).get,

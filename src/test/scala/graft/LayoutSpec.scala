@@ -97,6 +97,23 @@ class LayoutSpec extends SparkSuite {
     assert(sorted.head.min === 0L && sorted.last.max === 1999L)
   }
 
+  test("a footer walk over a missing file throws the FileNotFoundException " +
+    "naming it, for one path and for several") {
+    val out = tmpDir("missing")
+    Layout.publish(fixture, out, "bucket", Seq("key"))
+    val files = Layout.rowGroupStats(spark, out, "key").map(_.path).distinct
+    assert(files.size >= 4)
+    Seq(files.take(1), files.slice(1, 4)).foreach { paths =>
+      val gone = paths(paths.size / 2)
+      assert(new java.io.File(new java.net.URI(gone).getPath).delete(), gone)
+      val e = intercept[java.io.FileNotFoundException] {
+        Layout.rowGroupStatsFiles(spark, paths, "key")
+      }
+      assert(e.getMessage.contains(new java.net.URI(gone).getPath),
+        s"${paths.size} paths: ${e.getMessage}")
+    }
+  }
+
   test("publishChecked refuses a batch that fails its suite and writes " +
     "NOTHING; a passing suite publishes") {
     val out = tmpDir("gate")
