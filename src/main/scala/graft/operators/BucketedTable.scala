@@ -26,9 +26,14 @@ import org.apache.spark.sql.functions._
   * correctness surface.
   *
   * Per-file epochs ride in the manifest as `#filew:<width>:<rel>`
-  * lines (carried forward like stats), so [[compact]] knows which
-  * files predate the current width without opening any of them, and
-  * [[fileWidths]] exposes the epoch census for gates/specs.
+  * lines, so [[compact]] knows which files predate the current width
+  * without opening any of them, and [[fileWidths]] exposes the epoch
+  * census for gates/specs.
+  *
+  * This object supplies only the placement arithmetic (`placement`:
+  * the range locate, `key div width`, the `#filew` lines); staging,
+  * the merge pipeline, the manifest carry rule and every commit are
+  * [[Snapshots]]' ([[Snapshots.mergeImpl]], [[Snapshots.carriedLines]]).
   *
   * Keys must be non-negative integers (`div` bucketing); the derived
   * bucket column ([[BCol]]) is materialized in the data files —
@@ -55,13 +60,16 @@ object BucketedTable {
   }
 
   private def widthAt(spark: SparkSession, dir: String, v: Long): (String, Long) =
-    Snapshots.committedManifest(spark, dir, v).metaValues("bucketw").headOption
+    widthOf(Snapshots.committedManifest(spark, dir, v), s"$dir version $v")
+
+  private def widthOf(m: Snapshots.Manifest, what: String): (String, Long) =
+    m.metaValues("bucketw").headOption
       .map { s =>
         val Array(k, w) = s.split(":", 2)
         (k, w.toLong)
       }
       .getOrElse(throw new IllegalArgumentException(
-        s"$dir version $v is not a bucketed table (no #bucketw metadata)"))
+        s"$what is not a bucketed table (no #bucketw metadata)"))
 
   /** Per-file write-epoch widths of version `v` (manifest-only). */
   def fileWidths(spark: SparkSession, dir: String, v: Long): Map[String, Long] =
@@ -70,62 +78,48 @@ object BucketedTable {
       rel -> w.toLong
     }.toMap
 
-  private def filewLines(rels: Seq[String], w: Long): Seq[String] =
-    rels.map(r => s"filew:$w:$r")
-
-  private def carriedFilew(m: Snapshots.Manifest, kept: Set[String]): Seq[String] =
-    m.meta.filter(_.startsWith("#filew:")).map(_.stripPrefix("#"))
-      .filter(l => kept.contains(l.split(":", 3).last))
-
-  private def carriedStats(m: Snapshots.Manifest, kept: Set[String]): Seq[String] =
-    m.statLines.filter(l => kept.contains(l.split(":", 6).last))
+  /** This layout's placement at the manifest's width: rows bucket at
+    * `key div width`; a key batch locates the files whose recorded key
+    * RANGE intersects it — one broadcast range join of the
+    * manifest-sized stats list, folded with the NULL-key guard. */
+  private def placement(dir: String)(pm: Snapshots.Manifest): Snapshots.Placement = {
+    val (keyCol, w) = widthOf(pm, dir)
+    Snapshots.Placement(BCol, Seq(keyCol), Seq(keyCol), (pm, marked) => {
+      val spark = marked.sparkSession
+      import spark.implicits._
+      val ranges = Snapshots.versionStats(spark, dir, pm, keyCol)
+        .map(s => (s.path.stripPrefix(s"$dir/"), s.min, s.max))
+        .toDF("__file", "__mn", "__mx")
+      // a row matching no range keeps a NULL file (left outer), so
+      // the marker sum is positive iff update rows exist
+      val rows = marked.join(broadcast(ranges),
+          col(keyCol) >= col("__mn") && col(keyCol) <= col("__mx"), "left_outer")
+        .groupBy(col("__file"))
+        .agg(sum(col(keyCol).isNull.cast("long")), sum(col(Snapshots.UpdMark)))
+        .collect()
+      require(rows.forall(_.getLong(1) == 0L),
+        s"merge: update rows carry NULL $keyCol values")
+      val touched = rows.filterNot(_.isNullAt(0)).map(_.getString(0)).toSet
+      Snapshots.Located(pm.files.filter(touched), rows.map(_.getLong(2)).sum)
+    }, place = rows => withBucket(rows.drop(BCol), keyCol, w),
+      derived = Seq(BCol), epochLines = _.map(r => s"filew:$w:$r"))
+  }
 
   /** Publish the first version, bucketing `keyCol div width`. */
   def publish(df: DataFrame, dir: String, keyCol: String, width: Long,
               sortCols: Seq[String] = Nil,
               blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long = {
     require(width > 0, "bucket width must be positive")
-    val spark = df.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    require(Snapshots.latest(spark, dir).isEmpty,
-      s"$dir already has snapshots — use append")
-    val sorts = if (sortCols.nonEmpty) sortCols else Seq(keyCol)
-    val st = Snapshots.stage(withBucket(df, keyCol, width), dir, BCol,
-      sorts, blockSize, numTasks)
-    val v = Snapshots.claimAbove(spark, dir, 0L)
-    Snapshots.commit(spark, dir, v, st.rels,
-      Seq("format:2", s"schema:${st.schemaJson}", s"bucketw:$keyCol:$width") ++
-        filewLines(st.rels, width) ++ st.statLines ++ st.sizeLines)
-    v
+    Snapshots.publishImpl(withBucket(df, keyCol, width), dir, BCol,
+      if (sortCols.nonEmpty) sortCols else Seq(keyCol), blockSize, numTasks,
+      Seq(s"bucketw:$keyCol:$width"), epochLines = _.map(r => s"filew:$width:$r"))
   }
 
   /** Incremental load at the CURRENT width (new files join the
     * current epoch; older epochs' files are untouched). */
   def append(df: DataFrame, dir: String,
-             blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long = {
-    val spark = df.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, w) = widthAt(spark, dir, prev)
-    val st = Snapshots.stage(withBucket(df, keyCol, w), dir, BCol,
-      Seq(keyCol), blockSize, numTasks)
-    val schema = pm.schemaOpt match {
-      case Some(ps) =>
-        Snapshots.mergeSchemas(ps,
-          Snapshots.nullable(withBucket(df, keyCol, w).schema)).json
-      case None => st.schemaJson
-    }
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, pm.files ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        pm.propLines ++ Seq(s"bucketw:$keyCol:$w") ++
-        carriedFilew(pm, pm.files.toSet) ++ filewLines(st.rels, w) ++
-        pm.statLines ++ st.statLines ++ pm.fsizeLines ++ st.sizeLines ++
-        pm.dvLines)
-    v
-  }
+             blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long =
+    Snapshots.appendImpl(df, dir, placement(dir), blockSize, numTasks)
 
   /** Change the bucket width — a METADATA-ONLY commit: the new
     * manifest lists the SAME files with the same stats and epochs,
@@ -134,20 +128,8 @@ object BucketedTable {
     * old epochs when maintenance chooses to. */
   def evolveWidth(spark: SparkSession, dir: String, newWidth: Long): Long = {
     require(newWidth > 0, "bucket width must be positive")
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, _) = widthAt(spark, dir, prev)
-    val schema = pm.schemaOpt.map(Snapshots.nullable(_).json).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no recorded schema"))
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, pm.files,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        pm.propLines ++ Seq(s"bucketw:$keyCol:$newWidth") ++
-        carriedFilew(pm, pm.files.toSet) ++ pm.statLines ++ pm.fsizeLines ++
-        pm.dvLines)
-    v
+    Snapshots.redeclare(spark, dir, "bucketw:")(pm =>
+      s"bucketw:${widthOf(pm, dir)._1}:$newWidth")
   }
 
   /** MERGE across epochs — upsert where the rewrite set is chosen by
@@ -156,70 +138,16 @@ object BucketedTable {
     * range join of the manifest-sized stats list against the
     * updates). Rewritten rows restage at the CURRENT width —
     * touched data migrates as a side effect; untouched files (any
-    * epoch) are shared byte-for-byte. */
+    * epoch) are shared byte-for-byte. No persist of the update batch:
+    * the path is updates-only (see [[Snapshots.mergeImpl]]) — a
+    * caller with an expensive batch DAG persists it itself. */
   def merge(updates: DataFrame, dir: String, keyCols: Seq[String],
             blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long = {
-    require(keyCols.nonEmpty, "merge needs key columns")
-    val spark = updates.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, w) = widthAt(spark, dir, prev)
+    val (keyCol, _) = currentWidth(updates.sparkSession, dir)
     require(keyCols.contains(keyCol),
       s"merge keys must include the layout key $keyCol")
-    // NO persist of the update batch here: this path is updates-only
-    // (guard + range-touch fold + staging write over a typically
-    // trivial upstream DAG) — the [[Snapshots.mergeImpl]] measurement
-    // showed the materialization tax exceeding the saved recompute on
-    // exactly this shape (+0.36 s on q174 in the mid-round window).
-    // A caller with an expensive batch DAG persists it itself.
-    require(updates.filter(col(keyCol).isNull).isEmpty,
-      s"merge: update rows carry NULL $keyCol values")
-    // rewrite set from the manifest stats — zero data-file opens
-    val stats = Snapshots.versionStats(spark, dir, prev, keyCol)
-    import spark.implicits._
-    val ranges = stats.map(s =>
-        (s.path.stripPrefix(s"$dir/"), s.min, s.max))
-      .toDF("__file", "__mn", "__mx")
-    val touched = updates.join(broadcast(ranges),
-        col(keyCol) >= col("__mn") && col(keyCol) <= col("__mx"))
-      .select("__file").distinct().as[String].collect().toSet
-    val upd = withBucket(updates, keyCol, w)
-    val mergedRows =
-      if (touched.isEmpty) upd
-      else {
-        val existing = Snapshots.readFiles(spark, dir,
-          touched.toSeq.sorted, pm.schemaOpt, sizes = pm.fileSizes,
-          dv = Snapshots.resolveDv(spark, dir, pm))
-        // additive/widening alignment, then restaged rows RE-derive
-        // their bucket at the current width (the epoch migration
-        // side effect overrides whatever stale epoch values the old
-        // files' materialized bucket column carries)
-        val (ex0, up) = Snapshots.mergeAlign(existing, upd)
-        ex0.withColumn(BCol, expr(s"$keyCol div $w"))
-          .join(up.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(up)
-      }
-    val st = Snapshots.stage(withBucket(mergedRows.drop(BCol), keyCol, w),
-      dir, BCol, Seq(keyCol), blockSize, numTasks)
-    val kept = pm.files.filterNot(touched)
-    val keptSet = kept.toSet
-    val schema = pm.schemaOpt match {
-      case Some(ps) =>
-        Snapshots.mergeSchemas(ps, Snapshots.nullable(mergedRows.schema)).json
-      case None => st.schemaJson
-    }
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, kept ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        pm.propLines ++ Seq(s"bucketw:$keyCol:$w") ++
-        carriedFilew(pm, keptSet) ++ filewLines(st.rels, w) ++
-        carriedStats(pm, keptSet) ++ st.statLines ++
-        pm.fsizeLines.filter(l => keptSet.contains(l.split(":", 3).last)) ++
-        st.sizeLines ++
-        pm.dvLines.filter(l => keptSet.contains(Snapshots.dvRelOf(l))))
-    v
+    Snapshots.mergeImpl(Some(updates), None, dir, placement(dir), keyCols,
+      blockSize, numTasks)
   }
 
   /** Compaction = the epoch MIGRATOR: rewrite, into one file per
@@ -234,16 +162,13 @@ object BucketedTable {
     * nothing to do. */
   def compact(spark: SparkSession, dir: String,
               blockSize: Long = 128L * 1024 * 1024): Long = {
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, w) = widthAt(spark, dir, prev)
+    val (prev, pm) = Snapshots.writeHead(spark, dir)
+    val (keyCol, w) = widthOf(pm, dir)
     val epochs = fileWidths(spark, dir, prev)
     val stale = pm.files.filter(f => !epochs.get(f).contains(w))
     val current = pm.files.filterNot(stale.contains)
     // where the stale files' keys will land, from manifest stats
-    val ranges = Snapshots.versionStats(spark, dir, prev, keyCol)
+    val ranges = Snapshots.versionStats(spark, dir, pm, keyCol)
       .map(s => s.path.stripPrefix(s"$dir/") -> ((s.min, s.max))).toMap
     val landing = stale.flatMap(f =>
       ranges.get(f).toSeq.flatMap { case (mn, mx) => (mn / w) to (mx / w) }).toSet
@@ -255,30 +180,14 @@ object BucketedTable {
     val frag = current.groupBy(f =>
         Snapshots.fileBucket(f).getOrElse(-1L))
       .filter(_._2.size >= 2).values.flatten.toSeq
-    // DV-bearing files rewrite too: the DV-filtered read below
-    // MATERIALIZES the deletes and their lines drop with the files
+    // DV-bearing files rewrite too: the DV-filtered read MATERIALIZES
+    // the deletes and their lines drop with the files
     val fullDv = Snapshots.resolveDv(spark, dir, pm)
     val dvFiles = pm.files.filter(fullDv.contains)
     val rewrite = (stale ++ conflict ++ frag ++ dvFiles).distinct.sorted
     if (rewrite.isEmpty) return prev
-    val df = Snapshots.readFiles(spark, dir, rewrite, pm.schemaOpt,
-      sizes = pm.fileSizes, dv = fullDv)
-      .withColumn(BCol, expr(s"$keyCol div $w"))
-    val st = Snapshots.stage(withBucket(df.drop(BCol), keyCol, w),
-      dir, BCol, Seq(keyCol), blockSize, 32)
-    val kept = pm.files.filterNot(rewrite.contains)
-    val keptSet = kept.toSet
-    val schema = pm.schemaOpt.map(Snapshots.nullable(_).json).getOrElse(st.schemaJson)
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, kept ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        pm.propLines ++ Seq(s"bucketw:$keyCol:$w") ++
-        carriedFilew(pm, keptSet) ++ filewLines(st.rels, w) ++
-        carriedStats(pm, keptSet) ++ st.statLines ++
-        pm.fsizeLines.filter(l => keptSet.contains(l.split(":", 3).last)) ++
-        st.sizeLines ++
-        pm.dvLines.filter(l => keptSet.contains(Snapshots.dvRelOf(l))))
-    v
+    Snapshots.restage(spark, dir, pm, prev, rewrite, placement(dir)(pm),
+      blockSize, 32)
   }
 
   /** Props-driven maintenance for width-bucketed tables

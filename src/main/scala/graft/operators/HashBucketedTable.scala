@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * point planning here is HASH ARITHMETIC per epoch instead, which
   * is exact and manifest-only:
   *  - [[merge]]/[[delete]] pick their rewrite set by hashing the
-  *    update keys at EACH epoch's modulus (one tiny job per epoch
-  *    over the update batch) and matching the files' path buckets —
-  *    cost ∝ epochs × batch + touched data, correct across any
-  *    epoch mix; rewritten rows restage at the CURRENT modulus
-  *    (touched data migrates as a side effect).
+  *    update keys at EVERY epoch's modulus in one grouped fold per
+  *    merge over the batch, then matching the files' path buckets —
+  *    cost ∝ batch + touched data, correct across any epoch mix;
+  *    rewritten rows restage at the CURRENT modulus (touched data
+  *    migrates as a side effect).
   *  - [[lookupAt]] (the point-read a hash layout exists for) reads,
   *    per epoch, only the buckets the probe keys hash to.
   *  - [[compact]] migrates stale epochs: landing buckets are
@@ -33,6 +33,12 @@ import org.apache.spark.sql.functions._
   * key type would silently corrupt rewrite sets); the modulus must
   * be positive. The derived bucket column ([[BCol]]) is materialized
   * in the files and dropped by [[read]].
+  *
+  * This object supplies only the placement arithmetic (`placement`:
+  * the per-epoch hash locate, the current modulus, the `#fileh`
+  * lines); staging, the merge pipeline, the manifest carry rule and
+  * every commit are [[Snapshots]]' ([[Snapshots.mergeImpl]],
+  * [[Snapshots.carriedLines]]).
   */
 object HashBucketedTable {
 
@@ -75,121 +81,81 @@ object HashBucketedTable {
   }
 
   private def bucketsAt(spark: SparkSession, dir: String, v: Long): (String, Long) =
-    Snapshots.committedManifest(spark, dir, v).metaValues("bucketh").headOption
+    bucketsOf(Snapshots.committedManifest(spark, dir, v), s"$dir version $v")
+
+  private def bucketsOf(m: Snapshots.Manifest, what: String): (String, Long) =
+    m.metaValues("bucketh").headOption
       .map { s =>
         val Array(k, n) = s.split(":", 2)
         (k, n.toLong)
       }
       .getOrElse(throw new IllegalArgumentException(
-        s"$dir version $v is not a hash-bucketed table (no #bucketh metadata)"))
+        s"$what is not a hash-bucketed table (no #bucketh metadata)"))
 
   /** Per-file write-epoch moduli of version `v` (manifest-only). */
   def fileBuckets(spark: SparkSession, dir: String, v: Long): Map[String, Long] =
     fileBuckets(Snapshots.committedManifest(spark, dir, v))
 
   /** The same epoch census off an in-hand manifest — the ONE parse of
-    * the `#fileh` line grammar (deleteVectored's candidate lambda
-    * reads the manifest it is handed, race-consistently). */
-  private[operators] def fileBuckets(m: Snapshots.Manifest): Map[String, Long] =
+    * the `#fileh` line grammar. */
+  private def fileBuckets(m: Snapshots.Manifest): Map[String, Long] =
     m.metaValues("fileh").map { s =>
       val Array(n, rel) = s.split(":", 2)
       rel -> n.toLong
     }.toMap
 
-  private def filehLines(rels: Seq[String], n: Long): Seq[String] =
-    rels.map(r => s"fileh:$n:$r")
-
-  private def carriedFileh(m: Snapshots.Manifest, kept: Set[String]): Seq[String] =
-    m.meta.filter(_.startsWith("#fileh:")).map(_.stripPrefix("#"))
-      .filter(l => kept.contains(l.split(":", 3).last))
-
   /** Publish the first version at `numBuckets`. */
   def publish(df: DataFrame, dir: String, keyCol: String, numBuckets: Long,
               blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long = {
     require(numBuckets > 0, "bucket count must be positive")
-    val spark = df.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    require(Snapshots.latest(spark, dir).isEmpty,
-      s"$dir already has snapshots — use append")
-    val st = Snapshots.stage(withBucket(df, keyCol, numBuckets), dir, BCol,
-      Seq(keyCol), blockSize, numTasks)
-    val v = Snapshots.claimAbove(spark, dir, 0L)
-    Snapshots.commit(spark, dir, v, st.rels,
-      Seq("format:2", s"schema:${st.schemaJson}",
-        s"bucketh:$keyCol:$numBuckets") ++
-        filehLines(st.rels, numBuckets) ++ st.statLines ++ st.sizeLines)
-    v
+    Snapshots.publishImpl(withBucket(df, keyCol, numBuckets), dir, BCol,
+      Seq(keyCol), blockSize, numTasks, Seq(s"bucketh:$keyCol:$numBuckets"),
+      epochLines = _.map(r => s"fileh:$numBuckets:$r"))
+  }
+
+  /** This layout's placement at the manifest's modulus: rows bucket at
+    * `pmod(xxhash64(key), n)`, and a key batch locates its files by
+    * every epoch's hash arithmetic ([[hashFiles]]), NULL keys refused. */
+  private def placement(dir: String)(pm: Snapshots.Manifest): Snapshots.Placement = {
+    val (keyCol, n) = bucketsOf(pm, dir)
+    Snapshots.Placement(BCol, Seq(keyCol), Seq(keyCol), (pm, marked) => {
+      val (files, nullKeys, updRows) =
+        hashFiles(pm, keyCol, marked, col(Snapshots.UpdMark))
+      require(
+        if (nullKeys >= 0L) nullKeys == 0L
+        else marked.filter(col(keyCol).isNull).isEmpty,
+        s"update/delete rows carry NULL $keyCol values")
+      Snapshots.Located(files, updRows)
+    }, place = rows => withBucket(rows.drop(BCol), keyCol, n),
+      derived = Seq(BCol), epochLines = _.map(r => s"fileh:$n:$r"))
   }
 
   /** Incremental load at the CURRENT modulus. */
   def append(df: DataFrame, dir: String,
-             blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long = {
-    val spark = df.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, n) = bucketsAt(spark, dir, prev)
-    val st = Snapshots.stage(withBucket(df, keyCol, n), dir, BCol,
-      Seq(keyCol), blockSize, numTasks)
-    val schema = pm.schemaOpt match {
-      case Some(ps) =>
-        Snapshots.mergeSchemas(ps,
-          Snapshots.nullable(withBucket(df, keyCol, n).schema)).json
-      case None => st.schemaJson
-    }
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, pm.files ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        pm.propLines ++ Seq(s"bucketh:$keyCol:$n") ++
-        carriedFileh(pm, pm.files.toSet) ++ filehLines(st.rels, n) ++
-        pm.statLines ++ st.statLines ++ pm.fsizeLines ++ st.sizeLines ++
-        pm.dvLines)
-    v
-  }
+             blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long =
+    Snapshots.appendImpl(df, dir, placement(dir), blockSize, numTasks)
 
   /** Change the bucket COUNT — a METADATA-ONLY commit (same files,
     * same epochs, only `#bucketh` changes). O(manifest). */
   def evolveBuckets(spark: SparkSession, dir: String, newN: Long): Long = {
     require(newN > 0, "bucket count must be positive")
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, _) = bucketsAt(spark, dir, prev)
-    val schema = pm.schemaOpt.map(Snapshots.nullable(_).json).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no recorded schema"))
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, pm.files,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        pm.propLines ++ Seq(s"bucketh:$keyCol:$newN") ++
-        carriedFileh(pm, pm.files.toSet) ++ pm.statLines ++ pm.fsizeLines ++
-        pm.dvLines)
-    v
+    Snapshots.redeclare(spark, dir, "bucketh:")(pm =>
+      s"bucketh:${bucketsOf(pm, dir)._1}:$newN")
   }
 
-  /** The files any of `keysDf`'s keys can live in, per EPOCH, by
-    * hash arithmetic — one tiny distinct-buckets job per epoch over
-    * the key batch, zero data-file opens. */
-  private def touchedFiles(spark: SparkSession, pm: Snapshots.Manifest,
-                           epochs: Map[String, Long], keyCol: String,
-                           keysDf: DataFrame): Seq[String] =
-    touchedFilesCounted(spark, pm, epochs, keyCol, keysDf, lit(0L))._1
-
   /** Every epoch's bucket arithmetic from ONE grouped fold (guide
-    * §1.2 — this ran one distinct+collect job PER EPOCH): the key
-    * batch groups by the TUPLE of its per-modulus buckets (bounded
-    * by the batch's distinct keys and by the moduli product), each
-    * epoch's bucket set is a projection of the tuples, and the same
-    * fold carries a NULL-key count plus a caller-supplied row-marker
-    * sum — applyImpl's null guard and update-side count were two
-    * more independent actions. Unknown epochs stay conservative.
-    * The two counts are -1 when no positive epoch exists (no fold
-    * ran — callers fall back to their own actions). */
-  private def touchedFilesCounted(spark: SparkSession,
-      pm: Snapshots.Manifest, epochs: Map[String, Long], keyCol: String,
+    * §1.2): the key batch groups by the TUPLE of its per-modulus
+    * buckets (bounded by the batch's distinct keys and by the moduli
+    * product), each epoch's bucket set is a projection of the tuples
+    * matched against the files' path buckets, and the same fold
+    * carries a NULL-key count plus a `marker` sum (the update-row
+    * count of a merge). Zero data-file opens; unknown epochs stay
+    * conservative. The two counts are -1 when no positive epoch exists
+    * (no fold ran — callers fall back to their own actions). */
+  private def hashFiles(pm: Snapshots.Manifest, keyCol: String,
       keysDf: DataFrame, marker: Column): (Seq[String], Long, Long) = {
     requireStringKey(keysDf, keyCol) // probe keys hash too
+    val epochs = fileBuckets(pm)
     val byEpoch = pm.files.groupBy(f => epochs.getOrElse(f, -1L))
     val moduli = byEpoch.keys.filter(_ > 0).toSeq.sorted
     if (moduli.isEmpty)
@@ -221,7 +187,7 @@ object HashBucketedTable {
     * modulus. Rewritten rows restage at the CURRENT modulus. */
   def merge(updates: DataFrame, dir: String, keyCols: Seq[String],
             blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long =
-    applyImpl(Some(updates), None, dir, keyCols, blockSize, numTasks)
+    rewrite(Some(updates), None, dir, keyCols, blockSize, numTasks)
 
   /** DELETE rows by key (see [[Snapshots.delete]] for semantics);
     * rewrite set by per-epoch hash arithmetic like [[merge]].
@@ -229,7 +195,7 @@ object HashBucketedTable {
     * (metadata-only, zero rewrites). */
   def delete(keys: DataFrame, dir: String, keyCols: Seq[String],
              blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32): Long =
-    applyImpl(None, Some(keys), dir, keyCols, blockSize, numTasks)
+    rewrite(None, Some(keys), dir, keyCols, blockSize, numTasks)
 
   /** MERGE-ON-READ delete on a hash table
     * ([[Snapshots.deleteVectored]] through THIS layout's per-epoch
@@ -241,115 +207,24 @@ object HashBucketedTable {
     * a full-table rewrite and this stays a manifest line. */
   def deleteVectored(keys: DataFrame, dir: String,
                      keyCols: Seq[String]): Long = {
-    val spark = keys.sparkSession
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val (keyCol, _) = bucketsAt(spark, dir, prev)
-    require(keyCols.contains(keyCol),
-      s"delete keys must include the layout key $keyCol")
+    requireLayoutKey(keys.sparkSession, dir, keyCols)
     Snapshots.deleteVectoredBy(keys, dir, keyCols, pm =>
-      touchedFiles(spark, pm, fileBuckets(pm), keyCol, keys))
+      Snapshots.locateFiles(placement(dir)(pm), pm, keys))
   }
 
-  private def applyImpl(updatesOpt: Option[DataFrame],
-                        deletesOpt: Option[DataFrame], dir: String,
-                        keyCols: Seq[String], blockSize: Long,
-                        numTasks: Int): Long = {
-    require(keyCols.nonEmpty, "merge/delete needs key columns")
-    val spark = updatesOpt.orElse(deletesOpt).get.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, n) = bucketsAt(spark, dir, prev)
+  private def requireLayoutKey(spark: SparkSession, dir: String,
+                               keyCols: Seq[String]): Unit = {
+    val (keyCol, _) = currentBuckets(spark, dir)
     require(keyCols.contains(keyCol),
-      s"merge keys must include the layout key $keyCol")
-    val epochs = fileBuckets(spark, dir, prev)
-    // MATERIALIZE each side once on the TWO-SIDED (CDC) shape (guide
-    // §5 — the [[Snapshots.mergeImpl]] discipline and gate): with
-    // deletes present the sides feed the NULL-key guard, the
-    // per-epoch bucket folds, the emptiness probe and the staging
-    // write as independent actions. Updates-only merges skip the
-    // persist (the materialization tax measured larger than the
-    // recompute). Caller-persisted frames are left alone.
-    import org.apache.spark.storage.StorageLevel
-    val wantPersist = deletesOpt.isDefined
-    def materialize(df: DataFrame): (DataFrame, Boolean) =
-      if (!wantPersist || df.storageLevel != StorageLevel.NONE) (df, false)
-      else (df.persist(StorageLevel.MEMORY_AND_DISK), true)
-    val (updatesP, updOwned) = updatesOpt.map(materialize)
-      .map(t => (Some(t._1), t._2)).getOrElse((None, false))
-    val (deletesP, delOwned) = deletesOpt.map(materialize)
-      .map(t => (Some(t._1), t._2)).getOrElse((None, false))
-    try {
-      val allKeys = (updatesP.toSeq ++ deletesP.toSeq)
-        .map(_.select(keyCols.map(col): _*)).reduce(_.unionByName(_))
-      // ONE grouped fold yields every epoch's buckets AND the
-      // null-key count (the guard below was its own Spark action)
-      val allKeysM = (updatesP.toSeq.map(_.select(keyCols.map(col): _*)
-          .withColumn("__gh_upd", lit(1L))) ++
-        deletesP.toSeq.map(_.select(keyCols.map(col): _*)
-          .withColumn("__gh_upd", lit(0L)))).reduce(_.unionByName(_))
-      val (touched, nullKeys, _) = graft.Prof(s"hmerge.buckets $dir")(
-        touchedFilesCounted(spark, pm, epochs, keyCol, allKeysM,
-          col("__gh_upd")))
-      require(
-        if (nullKeys >= 0L) nullKeys == 0L
-        else allKeys.filter(col(keyCol).isNull).isEmpty,
-        s"update/delete rows carry NULL $keyCol values")
-      if (touched.isEmpty && updatesP.isEmpty) return prev
-      val dropKeys = allKeys
-      val mergedRows =
-        if (touched.isEmpty) withBucket(updatesP.get, keyCol, n)
-        else {
-          val existing = Snapshots.readFiles(spark, dir, touched.sorted,
-            pm.schemaOpt, sizes = pm.fileSizes,
-            dv = Snapshots.resolveDv(spark, dir, pm))
-          updatesP match {
-            case Some(updates) =>
-              val (ex0, up) = Snapshots.mergeAlign(existing,
-                withBucket(updates, keyCol, n))
-              // restaged rows RE-derive their bucket at the current
-              // modulus (epoch migration side effect)
-              ex0.withColumn(BCol, pmod(xxhash64(col(keyCol)), lit(n)))
-                .join(up.select(keyCols.map(col): _*), keyCols, "left_anti")
-                .unionByName(up)
-            case None =>
-              existing.withColumn(BCol, pmod(xxhash64(col(keyCol)), lit(n)))
-                .join(dropKeys, keyCols, "left_anti")
-          }
-        }
-      val st =
-        if (updatesP.isEmpty && mergedRows.isEmpty)
-          Snapshots.Staged(Nil,
-            pm.schemaOpt.map(Snapshots.nullable(_).json).get, Nil)
-        else Snapshots.stage(
-          withBucket(mergedRows.drop(BCol), keyCol, n), dir, BCol,
-          Seq(keyCol), blockSize, numTasks)
-      val touchedSet = touched.toSet
-      val kept = pm.files.filterNot(touchedSet)
-      val keptSet = kept.toSet
-      val schema = pm.schemaOpt match {
-        case Some(ps) if updatesP.isEmpty => Snapshots.nullable(ps).json
-        case Some(ps) =>
-          Snapshots.mergeSchemas(ps, Snapshots.nullable(mergedRows.schema)).json
-        case None => st.schemaJson
-      }
-      val v = Snapshots.claimAbove(spark, dir, prev)
-      Snapshots.commit(spark, dir, v, kept ++ st.rels,
-        Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-          pm.propLines ++ Seq(s"bucketh:$keyCol:$n") ++
-          carriedFileh(pm, keptSet) ++ filehLines(st.rels, n) ++
-          pm.statLines.filter(l => keptSet.contains(l.split(":", 6).last)) ++
-          st.statLines ++
-          pm.fsizeLines.filter(l => keptSet.contains(l.split(":", 3).last)) ++
-          st.sizeLines ++
-          pm.dvLines.filter(l => keptSet.contains(Snapshots.dvRelOf(l))))
-      v
-    } finally {
-      if (updOwned) updatesP.foreach(_.unpersist(false))
-      if (delOwned) deletesP.foreach(_.unpersist(false))
-    }
+      s"merge/delete keys must include the layout key $keyCol")
+  }
+
+  private def rewrite(updates: Option[DataFrame], deletes: Option[DataFrame],
+                      dir: String, keyCols: Seq[String], blockSize: Long,
+                      numTasks: Int): Long = {
+    requireLayoutKey(updates.orElse(deletes).get.sparkSession, dir, keyCols)
+    Snapshots.mergeImpl(updates, deletes, dir, placement(dir), keyCols,
+      blockSize, numTasks)
   }
 
   /** Size the migrator's rewrite by the manifest's recorded BYTES, not
@@ -372,19 +247,16 @@ object HashBucketedTable {
     * Returns the previous version when there is nothing to do. */
   def compact(spark: SparkSession, dir: String,
               blockSize: Long = 128L * 1024 * 1024): Long = {
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val (keyCol, n) = bucketsAt(spark, dir, prev)
-    val epochs = fileBuckets(spark, dir, prev)
+    val (prev, pm) = Snapshots.writeHead(spark, dir)
+    val (keyCol, n) = bucketsOf(pm, dir)
+    val epochs = fileBuckets(pm)
     val fullDv = Snapshots.resolveDv(spark, dir, pm)
     val stale = pm.files.filter(f => !epochs.get(f).contains(n))
     val current = pm.files.filterNot(stale.contains)
     val landing: Set[Long] =
       if (stale.isEmpty) Set.empty
-      else Snapshots.readFiles(spark, dir, stale, pm.schemaOpt,
-        sizes = pm.fileSizes, dv = fullDv)
+      else Snapshots.readFiles(spark, dir, stale, pm.schemaOpt, pm.colMap,
+        pm.fileSizes, dv = fullDv)
         .select(pmod(xxhash64(col(keyCol)), lit(n)).as("b"))
         .distinct().collect().map(_.getLong(0)).toSet
     val conflict = current.filter(f =>
@@ -395,25 +267,8 @@ object HashBucketedTable {
     val dvFiles = pm.files.filter(fullDv.contains)
     val rewrite = (stale ++ conflict ++ frag ++ dvFiles).distinct.sorted
     if (rewrite.isEmpty) return prev
-    val df = Snapshots.readFiles(spark, dir, rewrite, pm.schemaOpt,
-      sizes = pm.fileSizes, dv = fullDv)
-    val numTasks = compactTasks(pm, rewrite)
-    val st = Snapshots.stage(withBucket(df.drop(BCol), keyCol, n), dir, BCol,
-      Seq(keyCol), blockSize, numTasks)
-    val kept = pm.files.filterNot(rewrite.contains)
-    val keptSet = kept.toSet
-    val schema = pm.schemaOpt.map(Snapshots.nullable(_).json).getOrElse(st.schemaJson)
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, kept ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        pm.propLines ++ Seq(s"bucketh:$keyCol:$n") ++
-        carriedFileh(pm, keptSet) ++ filehLines(st.rels, n) ++
-        pm.statLines.filter(l => keptSet.contains(l.split(":", 6).last)) ++
-        st.statLines ++
-        pm.fsizeLines.filter(l => keptSet.contains(l.split(":", 3).last)) ++
-        st.sizeLines ++
-        pm.dvLines.filter(l => keptSet.contains(Snapshots.dvRelOf(l))))
-    v
+    Snapshots.restage(spark, dir, pm, prev, rewrite, placement(dir)(pm),
+      blockSize, compactTasks(pm, rewrite))
   }
 
   /** POINT LOOKUP at version `v` — the read shape hash bucketing
@@ -425,9 +280,8 @@ object HashBucketedTable {
     import spark.implicits._
     val pm = Snapshots.committedManifest(spark, dir, v)
     val (keyCol, _) = bucketsAt(spark, dir, v)
-    val epochs = fileBuckets(spark, dir, v)
     val keysDf = keys.toDF(keyCol)
-    val files = touchedFiles(spark, pm, epochs, keyCol, keysDf)
+    val files = hashFiles(pm, keyCol, keysDf, lit(0L))._1
     val dv = Snapshots.resolveDv(spark, dir, pm)
     val base =
       if (files.isEmpty)

@@ -393,9 +393,6 @@ object Snapshots {
           case _ => None
         }
       }.toMap
-    /** Raw stat meta lines (for carrying kept files forward). */
-    def statLines: Seq[String] = meta.filter(_.startsWith("#stat:"))
-      .map(_.stripPrefix("#"))
     /** Typed per-file stats for a PHYSICAL column (format 2.1
       * `#stat2:<col>:<kind>:<rows>:<min>:<max>:<rel>` lines):
       * rel → (rows, kind, minEnc, maxEnc). */
@@ -407,13 +404,6 @@ object Snapshots {
           case _ => None
         }
       }.toMap
-    /** Raw stat2 AND stat3 lines (ONE carry surface, the [[dvLines]]
-      * discipline — every kept-file carry site filters these by
-      * [[Snapshots.statRelOf]], so the row-group family cannot be
-      * silently dropped by a site that predates it). */
-    def stat2Lines: Seq[String] = meta.filter(m =>
-      m.startsWith("#stat2:") || m.startsWith("#stat3:"))
-      .map(_.stripPrefix("#"))
     /** Per-ROW-GROUP typed stats for a PHYSICAL column (format 2.3
       * `#stat3:<col>:<kind>:<start>:<len>:<rows>:<min>:<max>:<rel>`
       * lines — recorded at staging only for files with ≥ 2 row
@@ -432,9 +422,6 @@ object Snapshots {
     /** The declared typed-stats column list (PHYSICAL names). */
     def statCols: Seq[String] = metaValues("statcols").headOption
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    /** The statcols declaration line, for carry-forward. */
-    def statColsLines: Seq[String] =
-      metaValues("statcols").headOption.map(s => s"statcols:$s").toSeq
     /** Per-file KMV NDV sketches for a PHYSICAL column (format 2.1
       * `#ndv:<col>:<b64>:<rel>` lines): rel → decoded sketch. */
     def ndvSketches(colPhys: String): Map[String, Array[Long]] =
@@ -445,14 +432,9 @@ object Snapshots {
           case _ => None
         }
       }.toMap
-    /** Raw ndv lines (carry-forward). */
-    def ndvLines: Seq[String] = meta.filter(_.startsWith("#ndv:"))
-      .map(_.stripPrefix("#"))
     /** The declared NDV column list (PHYSICAL names). */
     def ndvCols: Seq[String] = metaValues("ndvcols").headOption
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    def ndvColsLines: Seq[String] =
-      metaValues("ndvcols").headOption.map(s => s"ndvcols:$s").toSeq
     /** Column RENAME map, physical → logical (format 2.1): entries
       * exist only for renamed columns. The PHYSICAL name — the name a
       * column was born under, the one every data file stores — never
@@ -464,9 +446,6 @@ object Snapshots {
     }.toMap
     /** logical → physical (the staging/stat direction). */
     def toPhysical: Map[String, String] = colMap.map(_.swap)
-    /** Raw colmap lines for carrying forward. */
-    def colmapLines: Seq[String] = meta.filter(_.startsWith("#colmap:"))
-      .map(_.stripPrefix("#"))
     /** Per-file byte sizes (`#fsize:<bytes>:<rel>`, recorded from the
       * staging listing — Iceberg's file_size_in_bytes): size-based
       * planning reads the manifest, never the filesystem. */
@@ -476,9 +455,6 @@ object Snapshots {
         case _ => None
       }
     }.toMap
-    /** Raw fsize lines (carry-forward). */
-    def fsizeLines: Seq[String] = meta.filter(_.startsWith("#fsize:"))
-      .map(_.stripPrefix("#"))
     /** Per-file DELETION VECTORS (format 2.2 `#dv:<b64>:<rel>` lines —
       * merge-on-read deletes): rel → sorted dead row POSITIONS
       * ([[Dv]] codec). A version's logical content is its files'
@@ -503,27 +479,18 @@ object Snapshots {
         case _ => None
       }
     }.toMap
-    /** Raw dv AND dvf lines (ONE carry surface — every kept-file carry
-      * site filters these by [[Snapshots.dvRelOf]], so adding a line
-      * family cannot silently skip a site). */
-    def dvLines: Seq[String] = meta.filter(m =>
-      m.startsWith("#dv:") || m.startsWith("#dvf:"))
-      .map(_.stripPrefix("#"))
     /** Generic CARRIED table properties (`#prop:key=value` — the
       * Delta table-properties shape): set once at publish (via the
       * `meta` arg) or later with [[setProp]], and copied forward
-      * verbatim by EVERY write path, so a policy rides on all future
-      * versions until changed. The channel behind the auto-checkpoint
-      * policy (`ckptevery`) and the Z-order layout descriptor
-      * (`zlayout`). */
+      * verbatim by EVERY write path ([[carriedLines]]), so a policy
+      * rides on all future versions until changed. The channel behind
+      * the auto-checkpoint policy (`ckptevery`) and the Z-order layout
+      * descriptor (`zlayout`). */
     def props: Map[String, String] = metaValues("prop").map { s =>
       val i = s.indexOf('=')
       require(i > 0, s"malformed #prop line (need key=value): $s")
       s.substring(0, i) -> s.substring(i + 1)
     }.toMap
-    /** Raw prop lines for carrying forward. */
-    def propLines: Seq[String] = meta.filter(_.startsWith("#prop:"))
-      .map(_.stripPrefix("#"))
   }
 
   private[graft] def manifest(spark: SparkSession, dir: String,
@@ -595,6 +562,54 @@ object Snapshots {
                                       newMeta: Seq[String] = Nil): Seq[String] =
     if (newMeta.exists(_.startsWith("batch:"))) Nil
     else pm.metaValues("batch").headOption.map(id => s"batch:$id").toSeq
+
+  /** Table-level DECLARATIONS — they describe the table, not a file,
+    * so every version carries them. */
+  private val DeclFamilies =
+    Seq("prop:", "colmap:", "statcols:", "ndvcols:", "bucketw:", "bucketh:")
+
+  /** PER-FILE lines — the manifest-relative path is the LAST field
+    * and never contains ':' — carried only while their file is kept. */
+  private val FileFamilies = Seq("stat:", "stat2:", "stat3:", "ndv:",
+    "fsize:", "dv:", "dvf:", "filew:", "fileh:", "filez:")
+
+  /** THE carry rule — the meta lines of a version committed on top of
+    * `pm` that keeps the `kept` files and adds `st`'s:
+    *  - declarations ([[DeclFamilies]]) always carry, the batch ledger
+    *    via [[carriedBatch]];
+    *  - per-file lines ([[FileFamilies]]) carry only for kept files —
+    *    a rewritten file's deletion vector drops with it, because the
+    *    rewrite read was DV-filtered and the deletes materialized;
+    *  - `format`, `schema`, `txn` and `ts` never carry (written fresh);
+    *  - `meta` (new declarations, batch stamp, txn record, the new
+    *    files' epoch lines) leads, and `replaced` drops the carried
+    *    lines it supersedes (a metadata-only commit's one changed
+    *    declaration, or a grown deletion vector).
+    * Every commit that keeps files lands through here
+    * ([[commitReplacing]]), so a line family added later is carried
+    * by adding it to one list. */
+  private[graft] def carriedLines(pm: Manifest, kept: Seq[String],
+      st: Staged, schemaJson: String, meta: Seq[String] = Nil,
+      replaced: String => Boolean = _ => false): Seq[String] = {
+    val keptSet = kept.toSet
+    val carried = pm.meta.map(_.stripPrefix("#")).filter { l =>
+      !replaced(l) && (DeclFamilies.exists(l.startsWith) ||
+        FileFamilies.exists(l.startsWith) && keptSet.contains(lineRel(l)))
+    }
+    Seq("format:2", s"schema:$schemaJson") ++ meta ++ carriedBatch(pm, meta) ++
+      carried ++ st.statLines ++ st.stat2Lines ++ st.ndvLines ++ st.sizeLines
+  }
+
+  /** Every write's prologue: resolve an undecided transaction at the
+    * raw top ([[resolveForWrite]]), then the head version and its
+    * manifest — the base the write plans (and claims) against. */
+  private[operators] def writeHead(spark: SparkSession, dir: String,
+                                   hint: String = ""): (Long, Manifest) = {
+    resolveForWrite(spark, dir)
+    val prev = latest(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"$dir has no snapshots$hint"))
+    (prev, manifest(spark, dir, prev))
+  }
 
   /** Atomically commit `relFiles` as version `v`. Create-exclusive:
     * if `v` already exists (a racing writer won it), this throws and
@@ -1139,11 +1154,91 @@ object Snapshots {
     publishImpl(df, dir, bucketCol, sortCols, blockSize, numTasks, meta,
       statsCols, ndvCols)
 
-  private def publishImpl(df: DataFrame, dir: String, bucketCol: String,
+  /** What the shared write paths ask of a table LAYOUT — its
+    * placement arithmetic, nothing else (staging, alignment, the carry
+    * rule and the commit are [[Snapshots]]'):
+    *  - `locate`: ONE fold over the marked union of a write's incoming
+    *    sides (their `locateCols` plus the [[UpdMark]] row marker) →
+    *    the files those rows can live in, including the layout's own
+    *    null guard;
+    *  - `place`: derive the bucket (and curve) columns at the CURRENT
+    *    epoch — `derived` names them so a rewrite drops the stale
+    *    values first; staging buckets by `bucketCol`, sorts by
+    *    `sortCols`;
+    *  - `epochLines`: the per-file epoch lines of newly staged files.
+    * Built from the manifest a write plans against, so the epoch it
+    * places at is the head's. */
+  private[operators] final case class Placement(
+      bucketCol: String, sortCols: Seq[String], locateCols: Seq[String],
+      locate: (Manifest, DataFrame) => Located,
+      place: DataFrame => DataFrame = identity,
+      derived: Seq[String] = Nil,
+      epochLines: Seq[String] => Seq[String] = _ => Nil)
+
+  /** A locate fold's outcome: the touched files; the same fold's
+    * update-row count (0 = none, any positive value = some; -1 when no
+    * fold ran); and the touched bucket count, which bounds the staging
+    * tasks (rows land in exactly those buckets). */
+  private[operators] final case class Located(files: Seq[String],
+      updRows: Long, buckets: Int = Int.MaxValue)
+
+  /** The locate fold's row marker: 1 on update rows, 0 on delete keys. */
+  private[operators] val UpdMark = "__gupd"
+
+  /** The FLAT layout: the caller supplies the bucket column; locate
+    * is one grouped fold of the bucket values matched against the
+    * files' path buckets. */
+  private def flat(bucketCol: String, sortCols: Seq[String]): Manifest => Placement =
+    _ => Placement(bucketCol, sortCols, Seq(bucketCol), (pm, marked) => {
+      val rows = marked.groupBy(col(bucketCol).cast("long").as("__b"))
+        .agg(sum(col(UpdMark))).collect()
+      // fail fast with the contract, not an NPE deep in the plan — a
+      // NULL bucket would otherwise stage into an unparseable directory
+      val nulls = rows.filter(_.isNullAt(0))
+      require(nulls.isEmpty,
+        s"${if (nulls.exists(_.getLong(1) > 0)) "merge: update" else "delete: key"}" +
+          s" rows carry NULL $bucketCol values — every row must have " +
+          "a non-null bucket (derive it from the key upstream)")
+      val touched = rows.map(_.getLong(0)).toSet
+      Located(pm.files.filter(f => touched.contains(bucketOf(bucketCol)(f))),
+        rows.map(_.getLong(1)).sum, touched.size)
+    })
+
+  /** The union of a write's incoming sides projected to the layout's
+    * locate columns, each row marked update (1) or delete (0). */
+  private def marked(p: Placement, updates: Seq[DataFrame],
+                     deletes: Seq[DataFrame]): DataFrame =
+    (updates.map(_ -> 1L) ++ deletes.map(_ -> 0L)).map { case (df, m) =>
+      p.locateCols.foreach(c => require(df.columns.contains(c),
+        s"update/delete rows must carry the layout column $c"))
+      df.select(p.locateCols.map(col) :+ lit(m).as(UpdMark): _*)
+    }.reduce(_.unionByName(_))
+
+  /** The files `keys`' rows can live in under `p` — the key-only
+    * [[Placement.locate]] a vectored delete plans its candidates with. */
+  private[operators] def locateFiles(p: Placement, pm: Manifest,
+                                     keys: DataFrame): Seq[String] =
+    p.locate(pm, marked(p, Nil, Seq(keys))).files
+
+  /** Stage already-placed rows under the table's PHYSICAL names with
+    * its declared stats/ndv columns. */
+  private[operators] def stagePlaced(p: Placement, pm: Manifest, dir: String,
+                          placed: DataFrame, blockSize: Long,
+                          numTasks: Int): Staged = {
+    val tp = pm.toPhysical
+    stage(toPhysicalDf(placed, tp), dir, tp.getOrElse(p.bucketCol, p.bucketCol),
+      p.sortCols.map(c => tp.getOrElse(c, c)), blockSize, numTasks,
+      stat2Cols = pm.statCols, ndvCols = pm.ndvCols)
+  }
+
+  /** The layouts' publish: [[publish]] plus the new files' epoch
+    * lines (`epochLines`) and the layout's declarations in `extraMeta`. */
+  private[operators] def publishImpl(df: DataFrame, dir: String, bucketCol: String,
                           sortCols: Seq[String], blockSize: Long,
                           numTasks: Int, extraMeta: Seq[String],
                           statsCols: Seq[String] = Nil,
-                          ndvCols: Seq[String] = Nil): Long = {
+                          ndvCols: Seq[String] = Nil,
+                          epochLines: Seq[String] => Seq[String] = _ => Nil): Long = {
     val spark = df.sparkSession
     resolveForWrite(spark, dir)
     require(latest(spark, dir).isEmpty,
@@ -1165,7 +1260,8 @@ object Snapshots {
       else Seq(s"ndvcols:${ndvCols.mkString(",")}")
     commit(spark, dir, v, st.rels,
       extraMeta ++ Seq("format:2", s"schema:${st.schemaJson}") ++ scLine ++
-        ncLine ++ st.statLines ++ st.stat2Lines ++ st.ndvLines ++ st.sizeLines)
+        ncLine ++ epochLines(st.rels) ++ st.statLines ++ st.stat2Lines ++
+        st.ndvLines ++ st.sizeLines)
     v
   }
 
@@ -1176,7 +1272,7 @@ object Snapshots {
   def append(df: DataFrame, dir: String, bucketCol: String,
              sortCols: Seq[String], blockSize: Long = 128L * 1024 * 1024,
              numTasks: Int = 32): Long =
-    appendImpl(df, dir, bucketCol, sortCols, blockSize, numTasks, Nil)
+    appendImpl(df, dir, flat(bucketCol, sortCols), blockSize, numTasks)
 
   /** Swap a frame's columns logical → PHYSICAL for staging (renamed
     * columns write under their birth names so every file in the
@@ -1186,44 +1282,30 @@ object Snapshots {
     else df.select(df.columns.map(c => col(c).as(toPhys.getOrElse(c, c))): _*)
 
   /** The SHARED incremental-write prologue ([[append]] and
-    * [[overwrite]] differ only in the committed file list and the
-    * carried per-file lines): resolve, stage under physical names
-    * with the table's declared stats/ndv columns, merge the schema
-    * additively, claim the next version. */
+    * [[overwrite]] differ only in the kept file list): resolve, place
+    * at the head's epoch, stage under physical names with the table's
+    * declared stats/ndv columns, merge the schema additively. */
   private def stagedIncremental(df: DataFrame, dir: String,
-      bucketCol: String, sortCols: Seq[String], blockSize: Long,
-      numTasks: Int): (Manifest, Staged, String, Long) = {
-    val spark = df.sparkSession
-    resolveForWrite(spark, dir)
-    val prev = latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = manifest(spark, dir, prev)
-    val tp = pm.toPhysical
-    val st = stage(toPhysicalDf(df, tp), dir,
-      tp.getOrElse(bucketCol, bucketCol),
-      sortCols.map(c => tp.getOrElse(c, c)), blockSize, numTasks,
-      stat2Cols = pm.statCols, ndvCols = pm.ndvCols)
+      layout: Manifest => Placement, blockSize: Long,
+      numTasks: Int): (Long, Manifest, Placement, Staged, String) = {
+    val (prev, pm) = writeHead(df.sparkSession, dir, " — use publish")
+    val p = layout(pm)
+    val placed = p.place(df)
+    val st = stagePlaced(p, pm, dir, placed, blockSize, numTasks)
     val schema = pm.schemaOpt match {
-      case Some(ps) => mergeSchemas(ps, nullable(df.schema)).json
+      case Some(ps) => mergeSchemas(ps, nullable(placed.schema)).json
       case None => st.schemaJson
     }
-    (pm, st, schema, claimAbove(spark, dir, prev))
+    (prev, pm, p, st, schema)
   }
 
-  private def appendImpl(df: DataFrame, dir: String, bucketCol: String,
-                         sortCols: Seq[String], blockSize: Long,
-                         numTasks: Int, extraMeta: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val (pm, st, schema, v) =
-      stagedIncremental(df, dir, bucketCol, sortCols, blockSize, numTasks)
-    commit(spark, dir, v, pm.files ++ st.rels,
-      extraMeta ++ Seq("format:2", s"schema:$schema") ++
-        carriedBatch(pm, extraMeta) ++ pm.propLines ++
-        pm.colmapLines ++
-        pm.statColsLines ++ pm.ndvColsLines ++ pm.statLines ++ st.statLines ++
-        pm.stat2Lines ++ st.stat2Lines ++ pm.ndvLines ++ st.ndvLines ++
-        pm.fsizeLines ++ st.sizeLines ++ pm.dvLines)
-    v
+  private[operators] def appendImpl(df: DataFrame, dir: String,
+      layout: Manifest => Placement, blockSize: Long, numTasks: Int,
+      extraMeta: Seq[String] = Nil): Long = {
+    val (prev, pm, p, st, schema) =
+      stagedIncremental(df, dir, layout, blockSize, numTasks)
+    commitReplacing(df.sparkSession, dir, pm, prev, pm.files, st, schema,
+      extraMeta ++ p.epochLines(st.rels))
   }
 
   /** REPLACE the table head's content in one commit (SQL `INSERT
@@ -1257,14 +1339,9 @@ object Snapshots {
           "— overwriting a clustered table is a re-publish decision; " +
           "use the layout's own publish APIs")
     }
-    val (pm, st, schema, v) =
-      stagedIncremental(df, dir, bucketCol, sortCols, blockSize, numTasks)
-    commit(spark, dir, v, st.rels,
-      Seq("format:2", s"schema:$schema") ++ carriedBatch(pm) ++
-        pm.propLines ++ pm.colmapLines ++
-        pm.statColsLines ++ pm.ndvColsLines ++
-        st.statLines ++ st.stat2Lines ++ st.ndvLines ++ st.sizeLines)
-    v
+    val (prev, pm, _, st, schema) = stagedIncremental(df, dir,
+      flat(bucketCol, sortCols), blockSize, numTasks)
+    commitReplacing(spark, dir, pm, prev, Nil, st, schema)
   }
 
   /** Read a set of manifest-relative files. With a recorded schema
@@ -1675,52 +1752,36 @@ object Snapshots {
   def compact(spark: SparkSession, dir: String, bucketCol: String,
               sortCols: Seq[String], blockSize: Long = 128L * 1024 * 1024):
       Long = {
-    resolveForWrite(spark, dir)
-    val prev = latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = manifest(spark, dir, prev)
+    val (prev, pm) = writeHead(spark, dir)
     val bOf = bucketOf(bucketCol) _
     val frag = pm.files.groupBy(bOf).filter(_._2.size >= 2)
     // DELETION-VECTOR reclaim: a DV-bearing file rewrites here even if
-    // its bucket is not fragmented — the read below is DV-filtered, so
-    // the rewrite MATERIALIZES the deletes and the dv line drops
+    // its bucket is not fragmented — the read is DV-filtered, so the
+    // rewrite MATERIALIZES the deletes and the dv line drops
     // (vacuum then reclaims the pre-delete bytes)
     val fullDv = resolveDv(spark, dir, pm)
     val dvBuckets = pm.files.filter(fullDv.contains).map(bOf).toSet
     val rewriteBuckets = frag.keySet ++ dvBuckets
     if (rewriteBuckets.isEmpty) return prev
-    val fragFiles = pm.files.filter(f => rewriteBuckets.contains(bOf(f)))
-    val fragDf = readFiles(spark, dir, fragFiles, pm.schemaOpt, pm.colMap,
-      pm.fileSizes, dv = fullDv)
-    val tp = pm.toPhysical
-    val st = stage(toPhysicalDf(fragDf, tp), dir,
-      tp.getOrElse(bucketCol, bucketCol),
-      sortCols.map(c => tp.getOrElse(c, c)), blockSize,
-      math.max(rewriteBuckets.size, 1), stat2Cols = pm.statCols,
-      ndvCols = pm.ndvCols)
-    val kept = pm.files.filterNot(f => rewriteBuckets.contains(bOf(f)))
-    val keptSet = kept.toSet
-    // stat:<key>:<rows>:<min>:<max>:<relpath> — path is the 6th field
-    val keptStats = pm.statLines.filter(l =>
-      keptSet.contains(l.split(":", 6).last))
-    // stat2 lines carry SEVEN fields (stat2:col:kind:rows:min:max:rel)
-    // and ndv lines FOUR (ndv:col:b64:rel) — the path is always last
-    val keptStats2 = pm.stat2Lines.filter(l =>
-      keptSet.contains(statRelOf(l)))
-    val keptNdv = pm.ndvLines.filter(l =>
-      keptSet.contains(l.split(":", 4).last))
-    val keptSizes = pm.fsizeLines.filter(l =>
-      keptSet.contains(l.split(":", 3).last))
-    val keptDv = pm.dvLines.filter(l => keptSet.contains(dvRelOf(l)))
+    restage(spark, dir, pm, prev,
+      pm.files.filter(f => rewriteBuckets.contains(bOf(f))),
+      flat(bucketCol, sortCols)(pm), blockSize, rewriteBuckets.size)
+  }
+
+  /** Every compaction's tail (flat and the layouts' epoch migrators —
+    * each picks only its rewrite set and task count): read `rewrite`
+    * with renames and deletion vectors applied, re-place every row at
+    * the CURRENT epoch, stage, and commit kept + new files. */
+  private[operators] def restage(spark: SparkSession, dir: String,
+      pm: Manifest, prev: Long, rewrite: Seq[String], p: Placement,
+      blockSize: Long, numTasks: Int): Long = {
+    val rows = readFiles(spark, dir, rewrite, pm.schemaOpt, pm.colMap,
+      pm.fileSizes, dv = resolveDv(spark, dir, pm)).drop(p.derived: _*)
+    val st = stagePlaced(p, pm, dir, p.place(rows), blockSize, numTasks)
     val schema = pm.schemaOpt.map(nullable(_).json).getOrElse(st.schemaJson)
-    val v = claimAbove(spark, dir, prev)
-    commit(spark, dir, v, kept ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ carriedBatch(pm) ++
-        pm.propLines ++ pm.colmapLines ++
-        pm.statColsLines ++ pm.ndvColsLines ++ keptStats ++ st.statLines ++
-        keptStats2 ++ st.stat2Lines ++ keptNdv ++ st.ndvLines ++
-        keptSizes ++ st.sizeLines ++ keptDv)
-    v
+    val rewritten = rewrite.toSet
+    commitReplacing(spark, dir, pm, prev, pm.files.filterNot(rewritten), st,
+      schema, p.epochLines(st.rels))
   }
 
   /** Run a snapshot WRITE under the optimistic-concurrency RETRY loop
@@ -1854,7 +1915,7 @@ object Snapshots {
             keyCols: Seq[String], sortCols: Seq[String],
             blockSize: Long = 128L * 1024 * 1024,
             numTasks: Int = 32, meta: Seq[String] = Nil): Long =
-    mergeImpl(Some(updates), None, dir, bucketCol, keyCols, sortCols,
+    mergeImpl(Some(updates), None, dir, flat(bucketCol, sortCols), keyCols,
       blockSize, numTasks, meta)
 
   /** DELETE rows by key — the missing half of CDC apply (and the
@@ -1874,7 +1935,7 @@ object Snapshots {
              keyCols: Seq[String], sortCols: Seq[String],
              blockSize: Long = 128L * 1024 * 1024,
              numTasks: Int = 32, meta: Seq[String] = Nil): Long =
-    mergeImpl(None, Some(keys), dir, bucketCol, keyCols, sortCols,
+    mergeImpl(None, Some(keys), dir, flat(bucketCol, sortCols), keyCols,
       blockSize, numTasks, meta)
 
   /** MERGE-ON-READ delete (deletion vectors — the public Delta DV /
@@ -1901,15 +1962,8 @@ object Snapshots {
     * commits). */
   def deleteVectored(keys: DataFrame, dir: String, bucketCol: String,
                      keyCols: Seq[String]): Long =
-    deleteVectoredBy(keys, dir, keyCols, { pm =>
-      val bOf = bucketOf(bucketCol) _
-      val bRows = keys.select(col(bucketCol).cast("long")).distinct().collect()
-      require(bRows.forall(!_.isNullAt(0)),
-        s"delete keys carry NULL $bucketCol values — every row must have " +
-          "a non-null bucket (derive it from the key upstream)")
-      val touched = bRows.map(_.getLong(0)).toSet
-      pm.files.filter(f => touched.contains(bOf(f)))
-    })
+    deleteVectoredBy(keys, dir, keyCols,
+      pm => locateFiles(flat(bucketCol, Nil)(pm), pm, keys))
 
   /** [[deleteVectored]]'s engine with the CANDIDATE-FILE selection
     * abstracted out — the layout tables route their own epoch
@@ -1988,10 +2042,7 @@ object Snapshots {
     *    bounded by file count like every other metadata operation. */
   private def deleteVectoredHits(spark: SparkSession, dir: String)(
       hitsOf: Manifest => Option[(DataFrame, Long)]): Long = {
-    resolveForWrite(spark, dir)
-    val prev = latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = manifest(spark, dir, prev)
+    val (prev, pm) = writeHead(spark, dir)
     val schema = pm.schemaOpt.map(nullable(_).json).getOrElse(
       throw new IllegalArgumentException(
         s"$dir predates manifest format 2 — deleteVectored needs a schema"))
@@ -2044,34 +2095,20 @@ object Snapshots {
       } else distributedDvEncode(spark, dir, pm, hitsDf)
     } finally if (doPersist) hitsDf.unpersist()
     if (encoded.isEmpty) return prev
-    // untouched files keep their existing lines VERBATIM (inline or
-    // sidecar ref); grown files re-encode — inline up to Dv.InlineMax,
-    // one immutable sidecar past it (the old sidecar becomes an
-    // orphan; vacuum reclaims it once no kept manifest references it)
+    // every file is kept: untouched files keep their existing lines
+    // VERBATIM (inline or sidecar ref) and their stats (now per-FILE
+    // upper bounds; rowCountAt subtracts the dead positions); grown
+    // files re-encode — inline up to Dv.InlineMax, one immutable
+    // sidecar past it (the old sidecar becomes an orphan; vacuum
+    // reclaims it once no kept manifest references it)
     val grownRels = encoded.iterator.map(_._1).toSet
-    val untouched = pm.dvLines.filterNot(l => grownRels.contains(dvRelOf(l)))
-    val dvAll = untouched ++ encoded.sortBy(_._1).map {
-      case (rel, _, p) if p.startsWith("i:") => s"dv:${p.drop(2)}:$rel"
-      case (rel, cnt, p) => s"dvf:$cnt:${p.drop(2)}:$rel"
-    }
-    // everything else carries verbatim — same files, same stats (now
-    // per-FILE upper bounds; rowCountAt subtracts the dead positions)
-    val carried = pm.meta.filter(m => m.startsWith("#stat:") ||
-      m.startsWith("#stat2:") || m.startsWith("#stat3:") ||
-      m.startsWith("#statcols:") ||
-      m.startsWith("#ndv:") || m.startsWith("#ndvcols:") ||
-      m.startsWith("#bucketw:") || m.startsWith("#filew:") ||
-      m.startsWith("#bucketh:") || m.startsWith("#fileh:") ||
-      m.startsWith("#filez:") || m.startsWith("#colmap:") ||
-      m.startsWith("#prop:") || m.startsWith("#fsize:"))
-      .map(_.stripPrefix("#"))
-    // NOTE: dv/dvf lines are NOT in this list — untouched ones are
-    // carried via `untouched` below, grown ones re-encode
-    val v = claimAbove(spark, dir, prev)
-    commit(spark, dir, v, pm.files,
-      Seq("format:2", s"schema:$schema") ++ carriedBatch(pm) ++
-        carried ++ dvAll)
-    v
+    commitReplacing(spark, dir, pm, prev, pm.files, Staged(Nil, schema, Nil),
+      schema, encoded.sortBy(_._1).toSeq.map {
+        case (rel, _, p) if p.startsWith("i:") => s"dv:${p.drop(2)}:$rel"
+        case (rel, cnt, p) => s"dvf:$cnt:${p.drop(2)}:$rel"
+      },
+      replaced = l => (l.startsWith("dv:") || l.startsWith("dvf:")) &&
+        grownRels.contains(lineRel(l)))
   }
 
   /** The wide-erasure encode: grow + encode every touched file's
@@ -2165,24 +2202,34 @@ object Snapshots {
                    sortCols: Seq[String],
                    blockSize: Long = 128L * 1024 * 1024,
                    numTasks: Int = 32, meta: Seq[String] = Nil): Long =
-    mergeImpl(Some(updates), Some(deletes), dir, bucketCol, keyCols, sortCols,
-      blockSize, numTasks, meta)
+    mergeImpl(Some(updates), Some(deletes), dir, flat(bucketCol, sortCols),
+      keyCols, blockSize, numTasks, meta)
 
-  private def mergeImpl(updatesOpt: Option[DataFrame],
-                        deletesOpt: Option[DataFrame], dir: String,
-                        bucketCol: String, keyCols: Seq[String],
-                        sortCols: Seq[String], blockSize: Long,
-                        numTasks: Int, meta: Seq[String]): Long = {
+  /** THE key-rewrite pipeline — every merge, delete and
+    * [[applyChanges]] on every layout (`layout` supplies only the
+    * placement arithmetic, see [[Placement]]):
+    *  1. persist the sides only when deletes are present;
+    *  2. ONE locate fold over the marked union of both sides;
+    *  3. read the touched files (renames and deletion vectors applied);
+    *  4. widening alignment, anti-join the replaced/deleted keys, union
+    *     the updates;
+    *  5. the emptiness probe, only when the fold counted no update rows;
+    *  6. place at the current epoch, stage under physical names;
+    *  7. commit through the carry rule plus the new files' epoch lines.
+    * Only the touched files are rewritten — untouched ones share their
+    * bytes with the previous version, and earlier versions keep reading
+    * the pre-merge state. */
+  private[operators] def mergeImpl(updatesOpt: Option[DataFrame],
+      deletesOpt: Option[DataFrame], dir: String,
+      layout: Manifest => Placement, keyCols: Seq[String], blockSize: Long,
+      numTasks: Int, meta: Seq[String] = Nil): Long = {
     require(keyCols.nonEmpty, "merge/delete needs key columns")
     val spark = updatesOpt.orElse(deletesOpt).get.sparkSession
-    resolveForWrite(spark, dir)
-    val prev = latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = manifest(spark, dir, prev)
-    val bOf = bucketOf(bucketCol) _
+    val (prev, pm) = writeHead(spark, dir, " — use publish")
+    val p = layout(pm)
     // MATERIALIZE each incoming side once on the TWO-SIDED (CDC) shape
     // (guide §5 — with deletes present a merge consumes its sides
-    // through 3-4 independent actions: two bucket-location folds, the
+    // through several independent actions: the locate fold, the
     // emptiness probe, and the staging write, the last two via the
     // dropKeys anti-join). Without a persist every action recomputes
     // the side's full upstream DAG — for a streaming CDC microbatch
@@ -2198,123 +2245,99 @@ object Snapshots {
     // caller already persisted are left alone (and not unpersisted
     // behind the caller's back).
     import org.apache.spark.storage.StorageLevel
-    val wantPersist = deletesOpt.isDefined
     def materialize(df: DataFrame): (DataFrame, Boolean) =
-      if (!wantPersist || df.storageLevel != StorageLevel.NONE) (df, false)
+      if (deletesOpt.isEmpty || df.storageLevel != StorageLevel.NONE) (df, false)
       else (df.persist(StorageLevel.MEMORY_AND_DISK), true)
-    val (updatesP, updOwned) = updatesOpt.map(materialize)
-      .map(t => (Some(t._1), t._2)).getOrElse((None, false))
-    val (deletesP, delOwned) = deletesOpt.map(materialize)
-      .map(t => (Some(t._1), t._2)).getOrElse((None, false))
+    val updates = updatesOpt.map(materialize)
+    val deletes = deletesOpt.map(materialize)
     try {
-      // ONE pass per side yields the touched buckets AND the row count
-      // (the count lets the common case skip the emptiness probe below)
-      def bucketsOf(df: DataFrame, what: String): (Set[Long], Long) =
-        graft.Prof(s"merge.buckets($what) $dir") {
-          val rows = df.groupBy(col(bucketCol).cast("long").as("__b"))
-            .count().collect()
-          // fail fast with the contract, not an NPE deep in the plan — a
-          // NULL bucket would otherwise stage into an unparseable directory
-          require(rows.forall(!_.isNullAt(0)),
-            s"$what rows carry NULL $bucketCol values — every row must have " +
-              "a non-null bucket (derive it from the key upstream)")
-          (rows.map(_.getLong(0)).toSet, rows.map(_.getLong(1)).sum)
-        }
-      val (updBuckets, updRows) = updatesP.map(bucketsOf(_, "merge: update"))
-        .getOrElse((Set.empty[Long], 0L))
-      val (delBuckets, _) = deletesP.map(bucketsOf(_, "delete: key"))
-        .getOrElse((Set.empty[Long], 0L))
-      val touched = updBuckets ++ delBuckets
-      if (touched.isEmpty) return prev // empty batch: nothing to commit
-      val existingFiles = pm.files.filter(f => touched.contains(bOf(f)))
+      val updatesP = updates.map(_._1)
+      val deletesP = deletes.map(_._1)
+      val loc = graft.Prof(s"merge.locate $dir")(
+        p.locate(pm, marked(p, updatesP.toSeq, deletesP.toSeq)))
+      // an empty batch, or a pure delete of keys no file holds
+      if (loc.files.isEmpty && (updatesP.isEmpty || loc.updRows == 0L))
+        return prev
       // the keys whose existing rows must NOT survive: replaced + deleted
       val dropKeys = (updatesP.toSeq ++ deletesP.toSeq)
-        .map(_.select(keyCols.map(col): _*))
-        .reduce(_.unionByName(_))
-      if (existingFiles.isEmpty && updatesP.isEmpty)
-        return prev // pure delete of keys in non-existent buckets: no-op
+        .map(_.select(keyCols.map(col): _*)).reduce(_.unionByName(_))
       val mergedRows =
-        if (existingFiles.isEmpty) updatesP.get
+        if (loc.files.isEmpty) updatesP.get
         else {
-          val existing = readFiles(spark, dir, existingFiles, pm.schemaOpt,
+          val existing = readFiles(spark, dir, loc.files, pm.schemaOpt,
             pm.colMap, pm.fileSizes, dv = resolveDv(spark, dir, pm))
+            .drop(p.derived: _*)
           // additive/WIDENING evolution: updates may ADD columns (old
           // rows null-fill on read) and shared columns may WIDEN in
           // either direction — both sides align to the per-column
           // widest type, then matched/deleted keys drop
           updatesP match {
-            case Some(updates) =>
-              val (ex, up) = mergeAlign(existing, updates)
+            case Some(u) =>
+              val (ex, up) = mergeAlign(existing, u)
               ex.join(dropKeys, keyCols, "left_anti").unionByName(up)
             case None =>
               existing.join(dropKeys, keyCols, "left_anti")
           }
         }
-      // a delete can empty its buckets entirely: commit kept files only
-      // (the bucket disappears) — stage refuses zero-file writes. The
-      // emptiness probe runs only when it can actually fire: deletes
-      // present AND no surviving update row (a merged frame that unions
-      // a non-empty update side can never be empty — the bucket fold
-      // above already counted it, so the probe's extra scan is skipped
-      // on every ordinary CDC batch).
-      val tp = pm.toPhysical
+      val placed = p.place(mergedRows)
+      // a delete can empty its files entirely: commit kept files only
+      // — stage refuses zero-file writes. The probe runs only when it
+      // can fire: deletes present AND no update row (a merged frame
+      // that unions a non-empty update side can never be empty — the
+      // locate fold already counted it, so ordinary CDC batches skip
+      // the probe's scan; only a layout whose fold could not run
+      // (updRows == -1) asks the update side itself).
+      val updNonEmpty = loc.updRows > 0L ||
+        (loc.updRows < 0L && updatesP.exists(!_.isEmpty))
       val st =
-        if (deletesOpt.isDefined && updRows == 0L &&
+        if (deletesOpt.isDefined && !updNonEmpty &&
             graft.Prof(s"merge.emptyProbe $dir")(mergedRows.isEmpty))
           Staged(Nil, pm.schemaOpt.map(nullable(_).json).getOrElse(
-            nullable(mergedRows.schema).json), Nil)
-        else stage(toPhysicalDf(mergedRows, tp), dir,
-          tp.getOrElse(bucketCol, bucketCol),
-          sortCols.map(c => tp.getOrElse(c, c)), blockSize,
-          // staged rows live in exactly the touched buckets, so more
-          // write tasks than buckets is pure scheduling overhead
-          // (guide §2: derive partitioning from the data, not a
-          // constant) — file count is partitionBy(bucket), unchanged
-          math.min(numTasks, math.max(1, touched.size)),
-          stat2Cols = pm.statCols, ndvCols = pm.ndvCols)
-      val kept = pm.files.filterNot(f => touched.contains(bOf(f)))
+            nullable(placed.schema).json), Nil)
+        // staged rows live in exactly the touched buckets, so more
+        // write tasks than buckets is pure scheduling overhead (guide
+        // §2: derive partitioning from the data, not a constant)
+        else stagePlaced(p, pm, dir, placed, blockSize,
+          math.min(numTasks, math.max(1, loc.buckets)))
       val schema = pm.schemaOpt match {
         case Some(ps) if updatesP.isEmpty => nullable(ps).json // deletes never evolve
-        case Some(ps) => mergeSchemas(ps, nullable(mergedRows.schema)).json
+        case Some(ps) => mergeSchemas(ps, nullable(placed.schema)).json
         case None => st.schemaJson
       }
-      commitReplacing(spark, dir, pm, prev, kept, st, schema, meta)
-    } finally {
-      if (updOwned) updatesP.foreach(_.unpersist(false))
-      if (delOwned) deletesP.foreach(_.unpersist(false))
+      val touched = loc.files.toSet
+      commitReplacing(spark, dir, pm, prev, pm.files.filterNot(touched), st,
+        schema, meta ++ p.epochLines(st.rels))
+    } finally (updates ++ deletes).foreach { case (df, owned) =>
+      if (owned) df.unpersist(false)
     }
   }
 
-  /** The REPLACE-FILES commit every rewrite path shares (bucket-merge,
-    * SQL MERGE's copy-on-write): kept files carry their per-file lines
-    * verbatim, staged files bring theirs, declarations and the ledger
-    * header carry, ONE manifest lands. The rewritten files' deletion
-    * vectors drop with the files — the rewrite read was DV-filtered,
-    * so the deletes just MATERIALIZED. */
+  /** The REPLACE-FILES commit every write that keeps files shares
+    * (merge, compaction, appends, vectored deletes, metadata-only
+    * commits, SQL MERGE's copy-on-write): claim the next version above
+    * `prev` and land kept + staged files with [[carriedLines]] in ONE
+    * manifest. */
   private[operators] def commitReplacing(spark: SparkSession, dir: String,
       pm: Manifest, prev: Long, kept: Seq[String], st: Staged,
-      schemaJson: String, meta: Seq[String] = Nil): Long = {
-    val keptSet = kept.toSet
-    val keptStats = pm.statLines.filter(l =>
-      keptSet.contains(l.split(":", 6).last))
-    // stat2 lines carry SEVEN fields (stat2:col:kind:rows:min:max:rel)
-    // and ndv lines FOUR (ndv:col:b64:rel) — the path is always last
-    val keptStats2 = pm.stat2Lines.filter(l =>
-      keptSet.contains(statRelOf(l)))
-    val keptNdv = pm.ndvLines.filter(l =>
-      keptSet.contains(l.split(":", 4).last))
-    val keptSizes = pm.fsizeLines.filter(l =>
-      keptSet.contains(l.split(":", 3).last))
-    val keptDv = pm.dvLines.filter(l => keptSet.contains(dvRelOf(l)))
+      schemaJson: String, meta: Seq[String] = Nil,
+      replaced: String => Boolean = _ => false): Long = {
     val v = claimAbove(spark, dir, prev)
     commit(spark, dir, v, kept ++ st.rels,
-      Seq("format:2", s"schema:$schemaJson") ++ meta ++ carriedBatch(pm, meta) ++
-        pm.propLines ++
-        pm.colmapLines ++
-        pm.statColsLines ++ pm.ndvColsLines ++ keptStats ++ st.statLines ++
-        keptStats2 ++ st.stat2Lines ++ keptNdv ++ st.ndvLines ++
-        keptSizes ++ st.sizeLines ++ keptDv)
+      carriedLines(pm, kept, st, schemaJson, meta, replaced))
     v
+  }
+
+  /** A METADATA-ONLY commit that changes one carried declaration:
+    * same files, same per-file lines; `line(pm)` supersedes every
+    * carried line starting with `family` (a layout's granularity
+    * evolution). */
+  private[operators] def redeclare(spark: SparkSession, dir: String,
+      family: String)(line: Manifest => String): Long = {
+    val (prev, pm) = writeHead(spark, dir)
+    val schema = pm.schemaOpt.map(nullable(_).json).getOrElse(
+      throw new IllegalArgumentException(s"$dir has no recorded schema"))
+    commitReplacing(spark, dir, pm, prev, pm.files, Staged(Nil, schema, Nil),
+      schema, Seq(line(pm)), _.startsWith(family))
   }
 
   /** Column RENAME as a METADATA-ONLY commit (format 2.1 — the
@@ -2332,10 +2355,7 @@ object Snapshots {
     * however large the table. */
   def rename(spark: SparkSession, dir: String, oldName: String,
              newName: String): Long = {
-    resolveForWrite(spark, dir)
-    val prev = latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = manifest(spark, dir, prev)
+    val (prev, pm) = writeHead(spark, dir)
     val ps = pm.schemaOpt.getOrElse(throw new IllegalArgumentException(
       s"$dir predates manifest format 2 — rename needs a recorded schema"))
     require(ps.fieldNames.contains(oldName),
@@ -2362,24 +2382,11 @@ object Snapshots {
     val newMap = (pm.colMap - phys) ++
       (if (phys == newName) Map.empty[String, String]
        else Map(phys -> newName)) // rename back to birth name drops the entry
-    val schema = StructType(ps.fields.map(f =>
-      if (f.name == oldName) f.copy(name = newName) else f))
-    val carried = pm.meta.filter(m => m.startsWith("#stat:") ||
-      m.startsWith("#stat2:") || m.startsWith("#stat3:") ||
-      m.startsWith("#statcols:") ||
-      m.startsWith("#ndv:") || m.startsWith("#ndvcols:") ||
-      m.startsWith("#bucketw:") || m.startsWith("#filew:") ||
-      m.startsWith("#bucketh:") || m.startsWith("#fileh:") ||
-      m.startsWith("#filez:") || m.startsWith("#dv:") ||
-      m.startsWith("#dvf:") ||
-      m.startsWith("#prop:") || m.startsWith("#fsize:"))
-      .map(_.stripPrefix("#"))
-    val v = claimAbove(spark, dir, prev)
-    commit(spark, dir, v, pm.files,
-      Seq("format:2", s"schema:${nullable(schema).json}") ++
-        carriedBatch(pm) ++
-        newMap.toSeq.sorted.map { case (p, l) => s"colmap:$p:$l" } ++ carried)
-    v
+    val schema = nullable(StructType(ps.fields.map(f =>
+      if (f.name == oldName) f.copy(name = newName) else f))).json
+    commitReplacing(spark, dir, pm, prev, pm.files, Staged(Nil, schema, Nil),
+      schema, newMap.toSeq.sorted.map { case (p, l) => s"colmap:$p:$l" },
+      _.startsWith("colmap:"))
   }
 
   /** Validate a SEQUENCE of renames against the table's current state
@@ -2444,31 +2451,35 @@ object Snapshots {
                  sortCols: Seq[String],
                  blockSize: Long = 128L * 1024 * 1024,
                  numTasks: Int = 32,
-                 deletes: Option[DataFrame] = None): Long = {
-    val spark = updates.sparkSession
-    // batch ids are MONOTONE per streaming query (Spark's checkpoint
-    // guarantees it), so any id <= the highest applied one is a
-    // re-delivery — absorbed without reading a single manifest
-    // beyond the newest batch-bearing one (the Delta-sink
-    // txn-version semantics; an all-manifests ledger scan per batch
-    // would go quadratic over a long stream's life)
+                 deletes: Option[DataFrame] = None): Long =
+    exactlyOnce(updates.sparkSession, dir, batchId)(stamp =>
+      publishImpl(updates, dir, bucketCol, sortCols, blockSize, numTasks,
+        stamp)) { (_, stamp) =>
+      mergeImpl(Some(updates), deletes, dir, flat(bucketCol, sortCols),
+        keyCols, blockSize, numTasks, stamp)
+    }
+
+  /** The exactly-once LEDGER every batch sink shares ([[mergeBatch]],
+    * [[ZOrderTable.mergeBatch]]): batch ids are MONOTONE per streaming
+    * query (Spark's checkpoint guarantees it), so any id <= the
+    * highest applied one is a re-delivery — absorbed (the current
+    * version, nothing changes) without reading a single manifest
+    * beyond the newest batch-bearing one (the Delta-sink txn-version
+    * semantics; an all-manifests ledger scan per batch would go
+    * quadratic over a long stream's life). Otherwise the BOOTSTRAP
+    * batch creates the table and later batches `apply` on top of the
+    * head version — both stamped with the `batch:<id>` line they are
+    * handed, so a crash-replay of any batch, the bootstrap included,
+    * is absorbed instead of re-applied. */
+  private[operators] def exactlyOnce(spark: SparkSession, dir: String,
+      batchId: Long)(bootstrap: Seq[String] => Long)(
+      apply: (Long, Seq[String]) => Long): Long = {
+    val stamp = Seq(s"batch:$batchId")
     if (lastAppliedBatch(spark, dir).exists(batchId <= _))
-      latest(spark, dir).get // re-delivery: already applied, change nothing
+      latest(spark, dir).get
     else latest(spark, dir) match {
-      case None =>
-        // BOOTSTRAP: the first batch creates the table — stamped into
-        // the ledger like any other batch, so a crash-replay of the
-        // bootstrap batch is absorbed above instead of re-merged
-        publishImpl(updates, dir, bucketCol, sortCols, blockSize,
-          numTasks, Seq(s"batch:$batchId"))
-      case Some(_) => deletes match {
-        case Some(d) =>
-          applyChanges(updates, d, dir, bucketCol, keyCols, sortCols,
-            blockSize, numTasks, meta = Seq(s"batch:$batchId"))
-        case None =>
-          merge(updates, dir, bucketCol, keyCols, sortCols, blockSize,
-            numTasks, meta = Seq(s"batch:$batchId"))
-      }
+      case None => bootstrap(stamp)
+      case Some(v) => apply(v, stamp)
     }
   }
 
@@ -2556,8 +2567,12 @@ object Snapshots {
     * manifest == footers). Compute once and pass to repeated
     * [[prunedScanAt]] calls over the same version. */
   def versionStats(spark: SparkSession, dir: String, v: Long,
-                   keyCol: String): Seq[Layout.RowGroupStat] = {
-    val m = committedManifest(spark, dir, v)
+                   keyCol: String): Seq[Layout.RowGroupStat] =
+    versionStats(spark, dir, committedManifest(spark, dir, v), keyCol)
+
+  /** [[versionStats]] off an in-hand manifest. */
+  private[operators] def versionStats(spark: SparkSession, dir: String,
+      m: Manifest, keyCol: String): Seq[Layout.RowGroupStat] = {
     // stats are keyed by the PHYSICAL column name (rename-proof) —
     // translate the caller's logical name through this version's map
     val phys = m.toPhysical.getOrElse(keyCol, keyCol)
@@ -2918,15 +2933,11 @@ object Snapshots {
 
   /** The data-file rel path of one dv/dvf carry line (the LAST field
     * either way) — what kept-file carry filters match on. */
-  private[operators] def dvRelOf(line: String): String =
-    if (line.startsWith("dvf:")) line.split(":", 4).last
-    else line.split(":", 3).last
-
-  /** The manifest-relative path of a stat2 OR stat3 line — the path
-    * is always the LAST field and never contains ':' (the line
-    * grammar), so one extractor covers both families the shared
-    * [[Manifest.stat2Lines]] carry surface mixes. */
-  private[operators] def statRelOf(line: String): String =
+  /** The manifest-relative path of a PER-FILE meta line (any of
+    * [[FileFamilies]]) — the path is always the LAST field and never
+    * contains ':' (the line grammar), so one extractor covers every
+    * family. */
+  private[operators] def lineRel(line: String): String =
     line.substring(line.lastIndexOf(':') + 1)
 
   /** Immutable sidecar payloads cache (a sidecar is written once and
@@ -3160,7 +3171,7 @@ object Snapshots {
                sortCols: Seq[String], blockSize: Long = 128L * 1024 * 1024,
                numTasks: Int = 32): Long = {
       require(!claimed.contains(dir), s"transaction already claimed $dir")
-      claim(dir, appendImpl(df, dir, bucketCol, sortCols, blockSize,
+      claim(dir, appendImpl(df, dir, flat(bucketCol, sortCols), blockSize,
         numTasks, txnMeta))
     }
 

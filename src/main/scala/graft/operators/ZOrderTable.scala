@@ -32,7 +32,8 @@ import org.apache.spark.sql.types.LongType
   * commit, per-file write epochs ride as `#filez:<shift>:<rel>`
   * lines, [[merge]]/[[delete]] pick their rewrite sets by PER-EPOCH
   * prefix arithmetic (cells of the update batch at each epoch's
-  * shift — one tiny job per epoch, manifest-matched), rewritten rows
+  * shift — one grouped fold per merge at the finest shift, coarser
+  * epochs derived on the driver, manifest-matched), rewritten rows
   * restage at the CURRENT shift (touched data migrates as a side
   * effect), and [[compact]] is the migrator for the rest. Stats-based
   * BOX PRUNING is deliberately epoch-INDEPENDENT: per-dimension
@@ -44,9 +45,13 @@ import org.apache.spark.sql.types.LongType
   * correctness: pruning decisions come from the dimensions' own
   * recorded min/max, and residual filters are exact.
   *
-  * Scale: everything here is [[Snapshots]] machinery — one hash
-  * repartition + local sort per write, merge/delete cost ∝ touched
-  * cells (× epochs for the tiny cell jobs), planning is manifest-only.
+  * Scale: everything here is [[Snapshots]] machinery — this object
+  * supplies only the placement arithmetic (`placement`: the cell
+  * locate, the curve key at the current shift, the `#filez` lines);
+  * staging, the merge pipeline, the manifest carry rule and every
+  * commit are [[Snapshots.mergeImpl]] / [[Snapshots.carriedLines]].
+  * One hash repartition + local sort per write, merge/delete cost ∝
+  * touched cells plus one cell fold, planning is manifest-only.
   * At 100 TB pick `shift` so a cell ≈ one task's worth of rows
   * (cells = 2^(keyBits − shift)) and coarsen/refine later with
   * [[evolveShift]] + [[compact]].
@@ -84,9 +89,12 @@ object ZOrderTable {
   /** The layout version `v` was written under (from the carried
     * `#prop:zlayout` line). */
   def layoutAt(spark: SparkSession, dir: String, v: Long): ZLayout =
-    Snapshots.propsAt(spark, dir, v).get(PropKey).map(parseLayout)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$dir version $v is not a z-order table (no zlayout property)"))
+    layoutOf(Snapshots.committedManifest(spark, dir, v), s"$dir version $v")
+
+  private def layoutOf(m: Snapshots.Manifest, what: String): ZLayout =
+    m.props.get(PropKey).map(parseLayout).getOrElse(
+      throw new IllegalArgumentException(
+        s"$what is not a z-order table (no zlayout property)"))
 
   /** The layout currently in force. */
   def currentLayout(spark: SparkSession, dir: String): ZLayout =
@@ -98,33 +106,15 @@ object ZOrderTable {
     fileShifts(Snapshots.committedManifest(spark, dir, v))
 
   /** The same epoch census off an in-hand manifest — the ONE parse of
-    * the `#filez` line grammar (deleteVectored's candidate lambda
-    * reads the manifest it is handed, race-consistently). */
-  private[operators] def fileShifts(m: Snapshots.Manifest): Map[String, Int] =
+    * the `#filez` line grammar (a write locates against the manifest
+    * it plans on, race-consistently). */
+  private def fileShifts(m: Snapshots.Manifest): Map[String, Int] =
     m.metaValues("filez").flatMap {
       s => s.split(":", 2) match {
         case Array(n, rel) => Some(rel -> n.toInt)
         case _ => None
       }
     }.toMap
-
-  private def filezLines(rels: Seq[String], shift: Int): Seq[String] =
-    rels.map(r => s"filez:$shift:$r")
-
-  private def carriedMeta(pm: Snapshots.Manifest, kept: Set[String]) = {
-    // stat:<key>:<rows>:<min>:<max>:<rel> / stat2: 7 fields / ndv: 4 /
-    // fsize + filez: 3 — the path is always the last field
-    val stats = pm.statLines.filter(l => kept.contains(l.split(":", 6).last))
-    val stats2 = pm.stat2Lines.filter(l =>
-      kept.contains(Snapshots.statRelOf(l)))
-    val ndv = pm.ndvLines.filter(l => kept.contains(l.split(":", 4).last))
-    val sizes = pm.fsizeLines.filter(l => kept.contains(l.split(":", 3).last))
-    val filez = pm.meta.filter(_.startsWith("#filez:")).map(_.stripPrefix("#"))
-      .filter(l => kept.contains(l.split(":", 3).last))
-    val dv = pm.dvLines.filter(l => kept.contains(Snapshots.dvRelOf(l)))
-    pm.propLines ++ pm.statColsLines ++ pm.ndvColsLines ++
-      filez ++ stats ++ stats2 ++ ndv ++ sizes ++ dv
-  }
 
   private def keyExpr(l: ZLayout): Column = {
     import org.apache.spark.sql.graftext.Bits
@@ -150,6 +140,19 @@ object ZOrderTable {
       .withColumn(BCol, shiftrightunsigned(col(ZCol), l.shift))
   }
 
+  /** This layout's placement under the manifest's `zlayout`: rows get
+    * their curve key and cell at the CURRENT shift, and a batch
+    * locates its files by every epoch's prefix arithmetic
+    * ([[cellFiles]]). */
+  private def placement(dir: String)(pm: Snapshots.Manifest): Snapshots.Placement = {
+    val l = layoutOf(pm, dir)
+    Snapshots.Placement(BCol, Seq(ZCol), l.dims, (pm, marked) => {
+      val (files, updRows) = cellFiles(pm, l, marked, col(Snapshots.UpdMark))
+      Snapshots.Located(files, updRows)
+    }, place = withLayout(_, l), derived = Seq(ZCol, BCol),
+      epochLines = _.map(r => s"filez:${l.shift}:$r"))
+  }
+
   /** Publish the first version clustered on `dims` (2 or 3 LongType
     * grid columns): bucket = curve-key prefix (`2^(16·d − shift)`
     * cells), within-bucket sort = the full key (tight row groups),
@@ -159,22 +162,10 @@ object ZOrderTable {
               numTasks: Int = 32, extraStatsCols: Seq[String] = Nil,
               ndvCols: Seq[String] = Nil, meta: Seq[String] = Nil): Long = {
     val l = ZLayout(curve, shift, dims)
-    val spark = df.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    require(Snapshots.latest(spark, dir).isEmpty,
-      s"$dir already has snapshots — use append")
-    val statsCols = (dims ++ extraStatsCols).distinct
-    val st = Snapshots.stage(withLayout(df, l), dir, BCol, Seq(ZCol),
-      blockSize, numTasks, stat2Cols = statsCols, ndvCols = ndvCols)
-    val v = Snapshots.claimAbove(spark, dir, 0L)
-    Snapshots.commit(spark, dir, v, st.rels,
-      meta ++ Seq("format:2", s"schema:${st.schemaJson}",
-        s"prop:$PropKey=${l.propValue}",
-        s"statcols:${statsCols.mkString(",")}") ++
-        (if (ndvCols.isEmpty) Nil else Seq(s"ndvcols:${ndvCols.mkString(",")}")) ++
-        filezLines(st.rels, l.shift) ++ st.statLines ++ st.stat2Lines ++
-        st.ndvLines ++ st.sizeLines)
-    v
+    Snapshots.publishImpl(withLayout(df, l), dir, BCol, Seq(ZCol), blockSize,
+      numTasks, meta :+ s"prop:$PropKey=${l.propValue}",
+      (dims ++ extraStatsCols).distinct, ndvCols,
+      _.map(r => s"filez:$shift:$r"))
   }
 
   /** Incremental load under the table's OWN layout (re-derived from
@@ -182,76 +173,35 @@ object ZOrderTable {
     * from earlier epochs coexist untouched). */
   def append(df: DataFrame, dir: String,
              blockSize: Long = 128L * 1024 * 1024,
-             numTasks: Int = 32): Long = {
-    val spark = df.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val l = layoutAt(spark, dir, prev)
-    val laid = withLayout(df, l)
-    val st = Snapshots.stage(laid, dir, BCol, Seq(ZCol), blockSize, numTasks,
-      stat2Cols = pm.statCols, ndvCols = pm.ndvCols)
-    val schema = pm.schemaOpt match {
-      case Some(ps) => Snapshots.mergeSchemas(ps,
-        Snapshots.nullable(laid.schema)).json
-      case None => st.schemaJson
-    }
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, pm.files ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        carriedMeta(pm, pm.files.toSet) ++ filezLines(st.rels, l.shift) ++
-        st.statLines ++ st.stat2Lines ++ st.ndvLines ++ st.sizeLines)
-    v
-  }
+             numTasks: Int = 32): Long =
+    Snapshots.appendImpl(df, dir, placement(dir), blockSize, numTasks)
 
   /** Change the CELL GRANULARITY — a METADATA-ONLY commit (same
     * files, same epochs, only the `zlayout` property's shift
     * changes). New writes land at the new shift; earlier epochs
     * coexist and migrate when touched (or via [[compact]]). The
     * curve and dimensions are immutable — they define the key. */
-  def evolveShift(spark: SparkSession, dir: String, newShift: Int): Long = {
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val old = layoutAt(spark, dir, prev)
-    val l = ZLayout(old.curve, newShift, old.dims) // validates the range
-    require(newShift != old.shift, s"table is already at shift $newShift")
-    val schema = pm.schemaOpt.map(Snapshots.nullable(_).json).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no recorded schema"))
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    // carriedMeta copies the OLD zlayout prop line — drop it first
-    val carried = carriedMeta(pm, pm.files.toSet)
-      .filterNot(_.startsWith(s"prop:$PropKey="))
-    Snapshots.commit(spark, dir, v, pm.files,
-      Seq("format:2", s"schema:$schema", s"prop:$PropKey=${l.propValue}") ++
-        Snapshots.carriedBatch(pm) ++ carried)
-    v
-  }
-
-  /** The files any of `rowsWithDims`'s rows can live in, per EPOCH,
-    * by curve-prefix arithmetic: the batch's cells at each epoch's
-    * shift (one tiny distinct job per epoch), matched against the
-    * files' path buckets. Zero data-file opens. */
-  private def touchedFiles(spark: SparkSession, pm: Snapshots.Manifest,
-                           epochs: Map[String, Int], l: ZLayout,
-                           rowsWithDims: DataFrame): Seq[String] =
-    touchedFilesCounted(spark, pm, epochs, l, rowsWithDims, lit(0L))._1
+  def evolveShift(spark: SparkSession, dir: String, newShift: Int): Long =
+    Snapshots.redeclare(spark, dir, s"prop:$PropKey=") { pm =>
+      val old = layoutOf(pm, dir)
+      val l = ZLayout(old.curve, newShift, old.dims) // validates the range
+      require(newShift != old.shift, s"table is already at shift $newShift")
+      s"prop:$PropKey=${l.propValue}"
+    }
 
   /** The per-epoch touched-file decision from ONE grouped fold
-    * (guide §1.2 — this ran one distinct+collect job PER EPOCH): the
-    * batch's cells fold once at the FINEST positive shift, and every
-    * coarser epoch's cell set derives by a further right shift on
-    * the driver (exact: `zkey >>> sh == (zkey >>> minShift) >>>
-    * (sh − minShift)` for sh ≥ minShift). The same fold carries a
-    * caller-supplied row marker sum (the [[Snapshots.mergeImpl]]
-    * trick) — applyImpl passes the update-side flag so a non-empty
-    * update side skips the merged-frame emptiness probe without an
-    * extra take(1) action. */
-  private def touchedFilesCounted(spark: SparkSession,
-      pm: Snapshots.Manifest, epochs: Map[String, Int], l: ZLayout,
+    * (guide §1.2): the batch's cells fold once at the FINEST positive
+    * shift, and every coarser epoch's cell set derives by a further
+    * right shift on the driver (exact: `zkey >>> sh == (zkey >>>
+    * minShift) >>> (sh − minShift)` for sh ≥ minShift), matched
+    * against the files' path buckets — zero data-file opens. The
+    * same fold carries a `marker` sum (a merge's update-row count, so
+    * a non-empty update side skips the emptiness probe); -1 when no
+    * epoch is known (no fold ran; every file is conservatively
+    * touched). */
+  private def cellFiles(pm: Snapshots.Manifest, l: ZLayout,
       rowsWithDims: DataFrame, marker: Column): (Seq[String], Long) = {
+    val epochs = fileShifts(pm)
     val byEpoch = pm.files.groupBy(f => epochs.getOrElse(f, -1))
     val zkey = keyExpr(l)
     val shifts = byEpoch.keys.filter(_ > 0)
@@ -292,7 +242,8 @@ object ZOrderTable {
       s"merge by $keyCols cannot prune safely: the layout dims ${l.dims} " +
         "are not all key columns, so an update may MOVE a row's cell and " +
         "orphan the old copy — use mergeMoving (one locate scan)")
-    applyImpl(Some(updates), None, dir, keyCols, blockSize, numTasks)
+    Snapshots.mergeImpl(Some(updates), None, dir, placement(dir), keyCols,
+      blockSize, numTasks)
   }
 
   /** Delete by key — `keys` must carry `keyCols` AND the dimension
@@ -304,7 +255,8 @@ object ZOrderTable {
   def delete(keys: DataFrame, dir: String, keyCols: Seq[String],
              blockSize: Long = 128L * 1024 * 1024,
              numTasks: Int = 32): Long =
-    applyImpl(None, Some(keys), dir, keyCols, blockSize, numTasks)
+    Snapshots.mergeImpl(None, Some(keys), dir, placement(dir), keyCols, blockSize,
+      numTasks)
 
   /** MERGE-ON-READ delete on a z-table ([[Snapshots.deleteVectored]]
     * through THIS layout's cell arithmetic): matched rows' positions
@@ -339,8 +291,7 @@ object ZOrderTable {
         acc.withColumn(d, codeExpr(col(raw), keys.schema(raw).dataType, zm))
     }
     Snapshots.deleteVectoredBy(keys, dir, keyCols, pm =>
-      touchedFiles(spark, pm, fileShifts(pm), l,
-        keyed.select(l.dims.map(col): _*)))
+      Snapshots.locateFiles(placement(dir)(pm), pm, keyed))
   }
 
   /** Upsert by `keyCols` when the dims are ATTRIBUTES (an update may
@@ -360,106 +311,8 @@ object ZOrderTable {
       .join(broadcast(updates.select(keyCols.map(col): _*).distinct()),
         keyCols, "left_semi")
       .select((keyCols ++ l.dims).distinct.map(col): _*)
-    applyImpl(Some(updates), Some(oldPositions), dir, keyCols, blockSize,
-      numTasks)
-  }
-
-  private def applyImpl(updatesOpt: Option[DataFrame],
-                        deletesOpt: Option[DataFrame], dir: String,
-                        keyCols: Seq[String], blockSize: Long,
-                        numTasks: Int, meta: Seq[String] = Nil): Long = {
-    require(keyCols.nonEmpty, "merge/delete needs key columns")
-    val spark = updatesOpt.orElse(deletesOpt).get.sparkSession
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots — use publish"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val l = layoutAt(spark, dir, prev)
-    val epochs = fileShifts(spark, dir, prev)
-    (updatesOpt.toSeq ++ deletesOpt.toSeq).foreach { f =>
-      l.dims.foreach(d => require(f.columns.contains(d),
-        s"update/delete rows must carry the layout dimension $d"))
-    }
-    // MATERIALIZE each side once on the TWO-SIDED (CDC) shape (guide
-    // §5 — the [[Snapshots.mergeImpl]] discipline and gate): with
-    // deletes present the sides feed the per-epoch cell folds, the
-    // emptiness probe and the staging write as INDEPENDENT actions; a
-    // streaming microbatch's DAG (changed-file read + net() shuffle)
-    // would otherwise recompute per action. Updates-only merges skip
-    // the persist (one fold + one write; the materialization tax
-    // measured larger than the recompute). Batches are churn-sized;
-    // caller-persisted frames are left alone.
-    import org.apache.spark.storage.StorageLevel
-    val wantPersist = deletesOpt.isDefined
-    def materialize(df: DataFrame): (DataFrame, Boolean) =
-      if (!wantPersist || df.storageLevel != StorageLevel.NONE) (df, false)
-      else (df.persist(StorageLevel.MEMORY_AND_DISK), true)
-    val (updatesP, updOwned) = updatesOpt.map(materialize)
-      .map(t => (Some(t._1), t._2)).getOrElse((None, false))
-    val (deletesP, delOwned) = deletesOpt.map(materialize)
-      .map(t => (Some(t._1), t._2)).getOrElse((None, false))
-    try {
-      // cells are located from BOTH sides' dims (an update's target cell
-      // and a delete's current cell), per epoch — ONE grouped fold for
-      // every epoch, carrying an update-side row marker so the
-      // emptiness probe below can be skipped without its own action
-      val allDims = (updatesP.toSeq.map(_.select(l.dims.map(col): _*)
-          .withColumn("__gz_upd", lit(1L))) ++
-        deletesP.toSeq.map(_.select(l.dims.map(col): _*)
-          .withColumn("__gz_upd", lit(0L)))).reduce(_.unionByName(_))
-      val dropKeys = (updatesP.toSeq ++ deletesP.toSeq)
-        .map(_.select(keyCols.map(col): _*)).reduce(_.unionByName(_))
-      val (touched, updRows) = graft.Prof(s"zmerge.cells $dir")(
-        touchedFilesCounted(spark, pm, epochs, l, allDims,
-          col("__gz_upd")))
-      if (touched.isEmpty && updatesP.isEmpty) return prev
-      val mergedRows =
-        if (touched.isEmpty) updatesP.get
-        else {
-          val existing = Snapshots.readFiles(spark, dir, touched.sorted,
-            pm.schemaOpt, pm.colMap, pm.fileSizes,
-            dv = Snapshots.resolveDv(spark, dir, pm)).drop(ZCol, BCol)
-          updatesP match {
-            case Some(updates) =>
-              val (ex, up) = Snapshots.mergeAlign(existing, updates)
-              ex.join(dropKeys, keyCols, "left_anti").unionByName(up)
-            case None =>
-              existing.join(dropKeys, keyCols, "left_anti")
-          }
-        }
-      // a delete can empty its cells entirely: commit kept files only.
-      // The probe only fires when it CAN be empty — a non-empty update
-      // side unions in and survives. The cell fold above already
-      // counted the update rows, so no extra action decides; only the
-      // all-unknown-epoch path (updRows == -1, no fold ran) falls back
-      // to a take(1) on the materialized side.
-      val updNonEmpty = updRows > 0L ||
-        (updRows == -1L && updatesP.exists(!_.isEmpty))
-      val st =
-        if (deletesOpt.isDefined && !updNonEmpty && mergedRows.isEmpty)
-          Snapshots.Staged(Nil, pm.schemaOpt.map(Snapshots.nullable(_).json)
-            .getOrElse(Snapshots.nullable(mergedRows.schema).json), Nil)
-        else Snapshots.stage(withLayout(mergedRows, l), dir, BCol, Seq(ZCol),
-          blockSize, numTasks, stat2Cols = pm.statCols, ndvCols = pm.ndvCols)
-      val touchedSet = touched.toSet
-      val kept = pm.files.filterNot(touchedSet)
-      val schema = pm.schemaOpt match {
-        case Some(ps) if updatesP.isEmpty => Snapshots.nullable(ps).json
-        case Some(ps) => Snapshots.mergeSchemas(ps,
-          Snapshots.nullable(withLayout(mergedRows, l).schema)).json
-        case None => st.schemaJson
-      }
-      val v = Snapshots.claimAbove(spark, dir, prev)
-      Snapshots.commit(spark, dir, v, kept ++ st.rels,
-        meta ++ Seq("format:2", s"schema:$schema") ++
-          Snapshots.carriedBatch(pm, meta) ++
-          carriedMeta(pm, kept.toSet) ++ filezLines(st.rels, l.shift) ++
-          st.statLines ++ st.stat2Lines ++ st.ndvLines ++ st.sizeLines)
-      v
-    } finally {
-      if (updOwned) updatesP.foreach(_.unpersist(false))
-      if (delOwned) deletesP.foreach(_.unpersist(false))
-    }
+    Snapshots.mergeImpl(Some(updates), Some(oldPositions), dir, placement(dir),
+      keyCols, blockSize, numTasks)
   }
 
   /** Idempotent batch upsert into a z-table — the EXACTLY-ONCE
@@ -475,40 +328,33 @@ object ZOrderTable {
                  keyCols: Seq[String], bootstrap: ZLayout,
                  blockSize: Long = 128L * 1024 * 1024, numTasks: Int = 32,
                  deletes: Option[DataFrame] = None): Long = {
-    val spark = updates.sparkSession
     require(bootstrap.dims.forall(keyCols.contains),
       s"mergeBatch by $keyCols cannot prune safely: the layout dims " +
         s"${bootstrap.dims} must be key columns (the merge contract)")
-    if (Snapshots.lastAppliedBatch(spark, dir).exists(batchId <= _))
-      Snapshots.latest(spark, dir).get // re-delivery: already applied
-    else Snapshots.latest(spark, dir) match {
-      case None =>
-        publish(updates, dir, bootstrap.dims, bootstrap.shift,
-          bootstrap.curve, blockSize, numTasks,
-          meta = Seq(s"batch:$batchId"))
-      case Some(v) =>
-        // re-validate against the table's ACTUAL layout, not the
-        // caller-supplied bootstrap: a sink mis-wired to an existing
-        // table whose real dims are NOT all key columns would
-        // otherwise take the pruned path silently, and an update that
-        // moves a row's cell would leave the old copy alive in its
-        // untouched cell — exactly the duplication merge refuses up
-        // front. The curve/dims identity check catches the mis-wiring
-        // itself (same failure, one step earlier); shift may differ —
-        // it evolves.
-        val actual = layoutAt(spark, dir, v)
-        require(actual.curve == bootstrap.curve &&
-          actual.dims == bootstrap.dims,
-          s"mergeBatch bootstrap layout (${bootstrap.curve}:" +
-            s"${bootstrap.dims.mkString(",")}) does not match the " +
-            s"table's (${actual.curve}:${actual.dims.mkString(",")}) — " +
-            "this sink is wired to the wrong table")
-        require(actual.dims.forall(keyCols.contains),
-          s"mergeBatch by $keyCols cannot prune safely: the table's " +
-            s"layout dims ${actual.dims} are not all key columns — an " +
-            "update could move a row's cell and orphan the old copy")
-        applyImpl(Some(updates), deletes, dir, keyCols, blockSize,
-          numTasks, meta = Seq(s"batch:$batchId"))
+    Snapshots.exactlyOnce(updates.sparkSession, dir, batchId)(stamp =>
+      publish(updates, dir, bootstrap.dims, bootstrap.shift,
+        bootstrap.curve, blockSize, numTasks, meta = stamp)) { (v, stamp) =>
+      // re-validate against the table's ACTUAL layout, not the
+      // caller-supplied bootstrap: a sink mis-wired to an existing
+      // table whose real dims are NOT all key columns would otherwise
+      // take the pruned path silently, and an update that moves a
+      // row's cell would leave the old copy alive in its untouched
+      // cell — exactly the duplication merge refuses up front. The
+      // curve/dims identity check catches the mis-wiring itself (same
+      // failure, one step earlier); shift may differ — it evolves.
+      val actual = layoutAt(updates.sparkSession, dir, v)
+      require(actual.curve == bootstrap.curve &&
+        actual.dims == bootstrap.dims,
+        s"mergeBatch bootstrap layout (${bootstrap.curve}:" +
+          s"${bootstrap.dims.mkString(",")}) does not match the " +
+          s"table's (${actual.curve}:${actual.dims.mkString(",")}) — " +
+          "this sink is wired to the wrong table")
+      require(actual.dims.forall(keyCols.contains),
+        s"mergeBatch by $keyCols cannot prune safely: the table's " +
+          s"layout dims ${actual.dims} are not all key columns — an " +
+          "update could move a row's cell and orphan the old copy")
+      Snapshots.mergeImpl(Some(updates), deletes, dir, placement(dir), keyCols,
+        blockSize, numTasks, stamp)
     }
   }
 
@@ -528,20 +374,18 @@ object ZOrderTable {
     * Returns the previous version when there is nothing to do. */
   def compact(spark: SparkSession, dir: String,
               blockSize: Long = 128L * 1024 * 1024): Long = {
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
-    val l = layoutAt(spark, dir, prev)
-    val epochs = fileShifts(spark, dir, prev)
+    val (prev, pm) = Snapshots.writeHead(spark, dir)
+    val p = placement(dir)(pm)
+    val shift = layoutOf(pm, dir).shift
+    val epochs = fileShifts(pm)
     val fullDv = Snapshots.resolveDv(spark, dir, pm)
-    val stale = pm.files.filter(f => !epochs.get(f).contains(l.shift))
+    val stale = pm.files.filter(f => !epochs.get(f).contains(shift))
     val current = pm.files.filterNot(stale.contains)
     val landing: Set[Long] =
       if (stale.isEmpty) Set.empty
       else Snapshots.readFiles(spark, dir, stale, pm.schemaOpt, pm.colMap,
         pm.fileSizes, dv = fullDv)
-        .select(shiftrightunsigned(col(ZCol), l.shift).as("c"))
+        .select(shiftrightunsigned(col(ZCol), shift).as("c"))
         .distinct().collect().map(_.getLong(0)).toSet
     val conflict = current.filter(f =>
       Snapshots.fileBucket(f).exists(landing.contains))
@@ -551,21 +395,7 @@ object ZOrderTable {
     val dvFiles = pm.files.filter(fullDv.contains)
     val rewrite = (stale ++ conflict ++ frag ++ dvFiles).distinct.sorted
     if (rewrite.isEmpty) return prev
-    val df = Snapshots.readFiles(spark, dir, rewrite, pm.schemaOpt,
-        pm.colMap, pm.fileSizes, dv = fullDv)
-      .drop(ZCol, BCol)
-    val st = Snapshots.stage(withLayout(df, l), dir, BCol, Seq(ZCol),
-      blockSize, math.max(rewrite.size, 1), stat2Cols = pm.statCols,
-      ndvCols = pm.ndvCols)
-    val kept = pm.files.filterNot(rewrite.contains)
-    val schema = pm.schemaOpt.map(Snapshots.nullable(_).json)
-      .getOrElse(st.schemaJson)
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, kept ++ st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        carriedMeta(pm, kept.toSet) ++ filezLines(st.rels, l.shift) ++
-        st.statLines ++ st.stat2Lines ++ st.ndvLines ++ st.sizeLines)
-    v
+    Snapshots.restage(spark, dir, pm, prev, rewrite, p, blockSize, rewrite.size)
   }
 
   /** Props-driven maintenance for z-tables ([[Snapshots.maintain]]'s
@@ -866,37 +696,28 @@ object ZOrderTable {
                   numTasks: Int = 32): Long = {
     require(buckets >= 2 && buckets <= 65536 && 65536 % buckets == 0,
       s"buckets must divide the 16-bit grid (got $buckets)")
-    Snapshots.resolveForWrite(spark, dir)
-    val prev = Snapshots.latest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir has no snapshots"))
-    val pm = Snapshots.committedManifest(spark, dir, prev)
+    val (prev, pm) = Snapshots.writeHead(spark, dir)
     val l = layoutAt(spark, dir, prev)
     require(l.dims.forall(_.startsWith(MapPrefix)),
       s"$dir is not a quantile-mapped z-table (dims ${l.dims})")
     val rawDims = l.dims.map(_.stripPrefix(MapPrefix))
-    val raw = read(spark, dir) // current content, mapped columns dropped
+    val raw = readAt(spark, dir, prev) // mapped columns dropped
     val maps = deriveCutsAll(raw, rawDims, buckets)
     val withCodes = rawDims.foldLeft(raw)((acc, d) =>
       acc.withColumn(MapPrefix + d,
         codeExpr(col(d), raw.schema(d).dataType, maps(d))))
-    val st = Snapshots.stage(withLayout(withCodes, l), dir, BCol, Seq(ZCol),
-      blockSize, numTasks, stat2Cols = pm.statCols, ndvCols = pm.ndvCols)
-    val keptProps = pm.propLines.filterNot(p =>
-      rawDims.exists(d => p.startsWith(s"prop:${mapPropKey(d)}=")))
+    val p = placement(dir)(pm)
+    val st = Snapshots.stagePlaced(p, pm, dir, p.place(withCodes), blockSize,
+      numTasks)
     val schema = pm.schemaOpt.map(Snapshots.nullable(_).json)
       .getOrElse(st.schemaJson)
-    val v = Snapshots.claimAbove(spark, dir, prev)
-    Snapshots.commit(spark, dir, v, st.rels,
-      Seq("format:2", s"schema:$schema") ++ Snapshots.carriedBatch(pm) ++
-        keptProps ++
-        rawDims.map { d =>
-          val m = maps(d)
-          s"prop:${mapPropKey(d)}=${m.kind}:${m.buckets}:${m.cuts.mkString(",")}"
-        } ++
-        pm.statColsLines ++ pm.ndvColsLines ++
-        filezLines(st.rels, l.shift) ++
-        st.statLines ++ st.stat2Lines ++ st.ndvLines ++ st.sizeLines)
-    v
+    val mapKeys = rawDims.map(d => s"prop:${mapPropKey(d)}=")
+    Snapshots.commitReplacing(spark, dir, pm, prev, Nil, st, schema,
+      rawDims.map { d =>
+        val m = maps(d)
+        s"prop:${mapPropKey(d)}=${m.kind}:${m.buckets}:${m.cuts.mkString(",")}"
+      } ++ p.epochLines(st.rels),
+      replaced = line => mapKeys.exists(line.startsWith))
   }
 
   /** Manifest-pruned box scan on RAW mapped-dimension predicates,

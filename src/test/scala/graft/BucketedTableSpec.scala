@@ -25,6 +25,31 @@ class BucketedTableSpec extends SparkSuite {
       pmod(col("id") * 811L + 13L, lit(900L)).as("key"),
       (col("id") * 31L).as("payload"))
 
+  test("after a payload rename EVERY width write keeps the renamed column " +
+    "readable and the #colmap line: append, evolve, evolve + compact, merge") {
+    // key -> payload of the fixture (payload = 31 × the row's position)
+    val base = fixture.select("key", "payload").as[(Long, Long)].collect()
+      .map { case (k, p) => k.toString -> p }.toMap
+    val cases: Seq[(String, String => Unit, Map[String, Long])] = Seq(
+      ("append", d => BucketedTable.append(spark.range(900, 920)
+        .select(col("id").as("key"), (col("id") * 2L).as("pl")), d),
+        base ++ (900 until 920).map(k => k.toString -> k * 2L)),
+      ("evolveWidth", d => BucketedTable.evolveWidth(spark, d, 100L), base),
+      ("evolveWidth + compact", { d =>
+        BucketedTable.evolveWidth(spark, d, 100L); BucketedTable.compact(spark, d)
+      }, base),
+      ("merge", d => BucketedTable.merge(Seq((7L, -5L)).toDF("key", "pl"), d,
+        Seq("key")), base + ("7" -> -5L)))
+    RenameCarry.all(cases.map { case (what, write, want) => what -> { () =>
+      val dir = tmpDir("renw")
+      BucketedTable.publish(fixture, dir, "key", 300L)
+      Snapshots.rename(spark, dir, "payload", "pl")
+      write(dir)
+      RenameCarry.check(spark, dir, BucketedTable.read(spark, dir), "key", "pl",
+        want, what)
+    }})
+  }
+
   private def keysAt(dir: String, v: Long): Seq[Long] =
     BucketedTable.readAt(spark, dir, v).select("key").as[Long]
       .collect().sorted.toSeq

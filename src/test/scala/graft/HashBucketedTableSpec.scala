@@ -39,10 +39,38 @@ class HashBucketedTableSpec extends SparkSuite {
       Snapshots.latest(spark, dir).get).values.toSet === Set(4L),
       "fileh epoch lines survive the rename")
     assert(H.read(spark, dir).columns.sorted.toSeq === Seq("key", "pl"))
-    // the per-epoch machinery still works post-rename
-    val v = H.merge(Seq(("k0001", 9L)).toDF("key", "pl"), dir, Seq("key"))
-    assert(H.readAt(spark, dir, v).filter(col("key") === "k0001")
-      .select("pl").as[Long].head() === 9L)
+    // the per-epoch machinery still works post-rename, and every row
+    // the merge did not rewrite keeps its renamed value
+    H.merge(Seq(("k0001", 9L)).toDF("key", "pl"), dir, Seq("key"))
+    RenameCarry.check(spark, dir, H.read(spark, dir), "key", "pl",
+      expected(0 until 600) + ("k0001" -> 9L), "merge")
+  }
+
+  private def expected(ids: Range): Map[String, Long] =
+    ids.map(i => f"k$i%04d" -> i * 31L).toMap
+
+  test("after a payload rename EVERY hash write keeps the renamed column " +
+    "readable and the #colmap line: append, evolve, evolve + compact, " +
+    "merge, delete") {
+    val cases: Seq[(String, String => Unit, Map[String, Long])] = Seq(
+      ("append", d => H.append(spark.range(600, 620).select(
+        format_string("k%04d", col("id")).as("key"),
+        (col("id") * 31L).as("pl")), d), expected(0 until 620)),
+      ("evolveBuckets", d => H.evolveBuckets(spark, d, 8L), expected(0 until 600)),
+      ("evolveBuckets + compact", { d =>
+        H.evolveBuckets(spark, d, 8L); H.compact(spark, d)
+      }, expected(0 until 600)),
+      ("merge", d => H.merge(Seq(("k0001", 9L)).toDF("key", "pl"), d,
+        Seq("key")), expected(0 until 600) + ("k0001" -> 9L)),
+      ("delete", d => H.delete(fixture.filter(col("key") < "k0010")
+        .select("key"), d, Seq("key")), expected(10 until 600)))
+    RenameCarry.all(cases.map { case (what, write, want) => what -> { () =>
+      val dir = tmpDir("renw")
+      H.publish(fixture, dir, "key", 4L)
+      Snapshots.rename(spark, dir, "payload", "pl")
+      write(dir)
+      RenameCarry.check(spark, dir, H.read(spark, dir), "key", "pl", want, what)
+    }})
   }
 
   test("publish/append/evolveBuckets: evolution is METADATA-ONLY (exact " +

@@ -241,6 +241,42 @@ class ZOrderTableSpec extends SparkSuite {
     assert(ZOrderTable.fileShifts(spark, dir,
       Snapshots.latest(spark, dir).get).values.toSet === Set(28))
     assert(ZOrderTable.read(spark, dir).columns.contains("val"))
+    // a further cross-epoch merge keeps every other row's renamed value
+    ZOrderTable.merge(Seq((7L, x7, y7, 5L)).toDF("id", "x", "y", "val"),
+      dir, Seq("id", "x", "y"))
+    RenameCarry.check(spark, dir, ZOrderTable.read(spark, dir), "id", "val",
+      (0 until 20000).map(i => i.toString -> i * 3L).toMap + ("7" -> 5L),
+      "merge")
+  }
+
+  test("after a payload rename EVERY z write keeps the renamed column " +
+    "readable and the #colmap line: append, evolve, evolve + compact, " +
+    "merge, delete") {
+    def want(ids: Range) = ids.map(i => i.toString -> i * 3L).toMap
+    val x7 = 7L * 7919 % 65536
+    val y7 = 7L * 104729 % 65536
+    val cases: Seq[(String, String => Unit, Map[String, Long])] = Seq(
+      ("append", d => ZOrderTable.append(grid()
+        .filter(col("id") >= 600 && col("id") < 620)
+        .withColumnRenamed("v", "val"), d), want(0 until 620)),
+      ("evolveShift", d => ZOrderTable.evolveShift(spark, d, 28), want(0 until 600)),
+      ("evolveShift + compact", { d =>
+        ZOrderTable.evolveShift(spark, d, 28); ZOrderTable.compact(spark, d)
+      }, want(0 until 600)),
+      ("merge", d => ZOrderTable.merge(
+        Seq((7L, x7, y7, 5L)).toDF("id", "x", "y", "val"), d,
+        Seq("id", "x", "y")), want(0 until 600) + ("7" -> 5L)),
+      ("delete", d => ZOrderTable.delete(grid().filter(col("id") < 10)
+        .select("id", "x", "y"), d, Seq("id")), want(10 until 600)))
+    RenameCarry.all(cases.map { case (what, write, expected) => what -> { () =>
+      val dir = tmpDir("renw")
+      ZOrderTable.publish(grid().filter(col("id") < 600), dir, Seq("x", "y"),
+        shift = 26)
+      Snapshots.rename(spark, dir, "v", "val")
+      write(dir)
+      RenameCarry.check(spark, dir, ZOrderTable.read(spark, dir), "id", "val",
+        expected, what)
+    }})
   }
 
   test("3-dimensional layout: shift 42 on the 48-bit key = 4x4x4 cells; " +
