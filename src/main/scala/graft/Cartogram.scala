@@ -41,7 +41,10 @@ case class Cartogram(gdf: DataFrame, valueField: String, idField: String,
 
   /** Dorling circle cartogram (reference cartogram.py:245; Jacobi
     * iteration — see [[graft.operators.Dorling]] for the deviation).
-    * `stop` mirrors the reference's early-halt parameter.
+    * `stop` mirrors the reference's early-halt parameter. Up to
+    * [[graft.operators.Borders.SmallN]] regions the whole call runs on
+    * the driver from one collect; above it, distributed. Both paths
+    * give bit-equal output.
     * @return id, value, radius, x, y, geometry (circle WKT) */
   def dorling(iterations: Int = 100, ratio: Double = 0.4,
               friction: Double = 0.5, stop: Option[Int] = None): DataFrame =
@@ -49,7 +52,9 @@ case class Cartogram(gdf: DataFrame, valueField: String, idField: String,
       iterations = stop.map(math.min(_, iterations)).getOrElse(iterations),
       ratio = ratio, friction = friction))
 
-  /** Queen-contiguity borders (reference border_util.py:5).
+  /** Queen-contiguity borders (reference border_util.py:5), paired on
+    * the driver up to [[graft.operators.Borders.SmallN]] regions and by
+    * the distributed grid join above; the rows are the same either way.
     * @return focal_id, neighbor_id, weight (shared boundary length) */
   def borders(): DataFrame = Borders.compute(gdf, idField, geometryField)
 }

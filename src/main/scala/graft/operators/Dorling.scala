@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType}
 
 import graft.functions.GeoFunctions._
+import graft.geom.{Ops, Pt, Wkt}
 
 /** Dorling circle cartogram (reference pycart/cartogram.py:245).
   *
@@ -48,11 +50,7 @@ object Dorling {
     */
   def radii(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
             precomputedBorders: Option[DataFrame] = None): (DataFrame, Double) = {
-    val regions = df.select(
-        col(idCol).as("id"), col(valueCol).cast("double").as("value"), col(geomCol).as("geom"))
-      .withColumn("x", st_centroid_x(col("geom")))
-      .withColumn("y", st_centroid_y(col("geom")))
-      .withColumn("perimeter", st_perimeter(col("geom")))
+    val regions = measured(project(df, idCol, valueCol, geomCol))
 
     val borders = precomputedBorders.getOrElse(Borders.compute(df, idCol, geomCol))
 
@@ -74,8 +72,24 @@ object Dorling {
       .collect()
     val k = row.getDouble(0) / row.getDouble(1)
 
-    (regions.withColumn("radius", sqrt(col("value") / math.Pi) * lit(k)).drop("geom"), k)
+    (withRadius(regions, k), k)
   }
+
+  /** (id, value as double, geom): the columns every Dorling path reads. */
+  private def project(df: DataFrame, idCol: String, valueCol: String, geomCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(valueCol).cast("double").as("value"), col(geomCol).as("geom"))
+
+  private def measured(regions: DataFrame): DataFrame = regions
+    .withColumn("x", st_centroid_x(col("geom")))
+    .withColumn("y", st_centroid_y(col("geom")))
+    .withColumn("perimeter", st_perimeter(col("geom")))
+
+  private def withRadius(regions: DataFrame, k: Double): DataFrame =
+    regions.withColumn("radius", sqrt(col("value") / math.Pi) * lit(k)).drop("geom")
+
+  private def circles(pos: DataFrame, quadsegs: Int): DataFrame =
+    pos.withColumn("geometry", st_buffer_point(col("x"), col("y"), col("radius"), lit(quadsegs)))
+      .select("id", "value", "radius", "x", "y", "geometry")
 
   /** One Jacobi iteration of the force model over (id, value, x, y,
     * perimeter, radius). Exposed for q24 and the spec. */
@@ -245,95 +259,148 @@ object Dorling {
     *
     * Region tables are broadcast-scale by nature (a cartogram has
     * thousands of regions, not billions), so when the region count is
-    * at most `smallN` the Jacobi loop runs driver-side over collected
-    * arrays — identical force model, deterministic (sorted-id)
-    * summation — instead of paying ~`iterations` Spark job launches.
-    * Larger inputs (or smallN = 0) take the distributed per-iteration
-    * step path; both paths share radii/borders and the step math.
-    * The default crossover is measured: the driver loop is O(n^2) per
-    * iteration and at 10k regions (tools/ScaleStress) it already
-    * loses to the grid-binned distributed step (10.7 s vs 7.9 s for
-    * 3 iterations); at hundreds of regions it wins by the full
-    * per-iteration job-launch cost.
+    * at most `smallN` (default [[Borders.SmallN]]) the WHOLE call runs
+    * on one collect of (id, value, geometry): Queen pairs
+    * ([[Borders.queenPairs]]), centroids and perimeters, k, radii,
+    * widest and the Jacobi loop ([[jacobi]]) all run on the driver and
+    * the result is one local DataFrame: the size check and the collect
+    * are its only Spark jobs (2 on a 64-region map, where the
+    * distributed path at 1 iteration runs 20). Larger inputs (or
+    * smallN = 0) take the distributed path: the leveled-grid borders
+    * ([[Borders.grid]]), radii's decimal aggregate, and one
+    * checkpointed [[step]] per iteration. The default crossover is
+    * measured: the driver loop is O(n^2) per iteration and at 10k
+    * regions (tools/ScaleStress) it already loses to the grid-binned
+    * distributed step (10.7 s vs 7.9 s for 3 iterations); at hundreds
+    * of regions it wins by the full per-iteration job-launch cost.
+    * Inputs the driver path cannot reproduce exactly — a null id,
+    * value or geometry, a repeated id, or no Queen pair at all — take
+    * the distributed path whatever their size.
     *
-    * POSITION PARITY ACROSS PATHS: both paths accumulate per-focal
-    * force sums in scale-12 decimal (the distributed step via its
-    * decimal aggregate, the driver loop by rounding each double
-    * contribution to the same scale and adding exactly), and every
-    * other operation is the identical per-row IEEE expression — so
-    * run() positions are BIT-EQUAL across the smallN dispatch at any
-    * iteration count, in settling and chaotic regimes alike
-    * (CartogramSpec asserts exact equality at the 100-iteration
-    * default; the never-settling all-contact fixture is the case
-    * where any accumulation-order difference would compound).
+    * PARITY ACROSS PATHS: k uses radii's scale-10 HALF_UP decimal sums;
+    * both paths accumulate per-focal force sums in scale-12 decimal
+    * (the distributed step via its decimal aggregate, the driver loop
+    * by rounding each double contribution to the same scale and adding
+    * exactly), and every other operation is the identical per-row IEEE
+    * expression — so run() output is BIT-EQUAL across the smallN
+    * dispatch at any iteration count, in settling and chaotic regimes
+    * alike, with the same schema (CartogramParitySpec; the
+    * never-settling all-contact fixture is the case where any
+    * accumulation-order difference would compound).
     *
     * @param df (idCol, valueCol, geomCol WKT)
     * @return id, value, radius, x, y, geometry (circle WKT)
     */
   def run(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
           iterations: Int = 100, ratio: Double = 0.4, friction: Double = 0.5,
-          quadsegs: Int = 16, smallN: Int = 2000): DataFrame = {
+          quadsegs: Int = 16, smallN: Int = Borders.SmallN): DataFrame = {
+    val input = project(df, idCol, valueCol, geomCol)
+    Borders.collectIfSmall(input, smallN)
+      .flatMap(rows => local(rows, input.schema("id").dataType))
+      .map { m =>
+        val (x, y) = jacobi(m, iterations, ratio, friction)
+        val out = m.ids.indices.map(i => Row(m.ids(i), m.value(i), m.radius(i), x(i), y(i),
+          Wkt.write(Ops.bufferPoint(Pt(x(i), y(i)), m.radius(i), quadsegs))))
+        // the distributed path's schema, nullability included, from its
+        // own plan (analysis only: no job runs)
+        val pos0 = withRadius(measured(input), 1.0)
+          .select("id", "value", "x", "y", "perimeter", "radius")
+        val pos = if (iterations <= 0) pos0 else step(pos0,
+          pos0.select(col("id").as("focal_id"), col("id").as("neighbor_id"), lit(0.0).as("weight")),
+          1.0, ratio, friction)
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), circles(pos, quadsegs).schema)
+      }
+      .getOrElse(distributed(df, idCol, valueCol, geomCol, iterations, ratio, friction, quadsegs))
+  }
+
+  private def distributed(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
+                          iterations: Int, ratio: Double, friction: Double,
+                          quadsegs: Int): DataFrame = {
     // Materialize borders ONCE — its lineage holds the geometry
     // spatial join, which would otherwise re-execute both inside
     // radii's k-aggregate and inside every iteration's step join.
-    val borders = Borders.compute(df, idCol, geomCol).localCheckpoint()
+    val borders = Borders.grid(df, idCol, geomCol).localCheckpoint()
     val (regions0, _) = radii(df, idCol, valueCol, geomCol, Some(borders))
-    val widest = regions0.agg(max(col("radius"))).collect()(0).getDouble(0)
-
     var pos = regions0.select("id", "value", "x", "y", "perimeter", "radius")
       .localCheckpoint()
-    val n = pos.count()
-    if (n <= smallN && iterations > 0) {
-      pos = jacobiLocal(pos, borders, widest, iterations, ratio, friction)
-    } else {
-      // One checkpoint per iteration: a step embeds joins+aggregations,
-      // so chaining steps compounds shuffles into one oversized plan
-      // (measured 3x slower at cadence 4) — materialize each round.
-      // checkpointFlat, not bare localCheckpoint: inherited stats
-      // estimates compound geometrically across iterations and stall
-      // the planner past ~20 rounds (see PlanUtil.checkpointFlat).
-      var i = 0
-      while (i < iterations) {
-        pos = graft.PlanUtil.checkpointFlat(step(pos, borders, widest, ratio, friction))
-        i += 1
-      }
+    val widest = pos.agg(max(col("radius"))).collect()(0).getDouble(0)
+    // One checkpoint per iteration: a step embeds joins+aggregations,
+    // so chaining steps compounds shuffles into one oversized plan
+    // (measured 3x slower at cadence 4) — materialize each round.
+    // checkpointFlat, not bare localCheckpoint: inherited stats
+    // estimates compound geometrically across iterations and stall
+    // the planner past ~20 rounds (see PlanUtil.checkpointFlat).
+    var i = 0
+    while (i < iterations) {
+      pos = graft.PlanUtil.checkpointFlat(step(pos, borders, widest, ratio, friction))
+      i += 1
     }
-    pos.withColumn("geometry",
-        st_buffer_point(col("x"), col("y"), col("radius"), lit(quadsegs)))
-      .select("id", "value", "radius", "x", "y", "geometry")
+    circles(pos, quadsegs)
   }
 
-  /** Driver-side Jacobi iterations over collected positions: the same
-    * force model as [[step]] (forces from the previous iteration's
-    * snapshot, applied simultaneously), with per-focal force sums
-    * accumulated EXACTLY like the distributed step's decimal
-    * aggregate: each double contribution rounds to scale-12 decimal
-    * (HALF_UP — the same semantics as Spark's cast to
-    * DecimalType(30, 12)), the decimals add exactly (order cannot
-    * matter), and the total converts back to double. Every remaining
-    * operation is the identical per-row IEEE expression, so the two
-    * paths are BIT-EQUAL at any iteration count — including chaotic
-    * all-contact regimes where any accumulation-order difference
-    * would compound (CartogramSpec asserts exact equality at the
-    * 100-iteration default in both regimes). */
-  private def jacobiLocal(pos: DataFrame, bordersDf: DataFrame, widest: Double,
-                          iterations: Int, ratio: Double, friction: Double): DataFrame = {
-    val spark = pos.sparkSession
-    val borders = bordersDf.collect()
-      .map(r => (r.get(0).toString, r.get(1).toString) -> r.getDouble(2)).toMap
-    val rows = pos.collect().sortBy(_.get(0).toString)
-    val ids = rows.map(_.get(0))
-    val idStr = ids.map(_.toString)
-    val value = rows.map(_.getAs[Double]("value"))
-    val per = rows.map(_.getAs[Double]("perimeter"))
-    val radius = rows.map(_.getAs[Double]("radius"))
-    var x = rows.map(_.getAs[Double]("x"))
-    var y = rows.map(_.getAs[Double]("y"))
-    val n = ids.length
-    // Double -> scale-12 decimal exactly as Catalyst's cast does it:
-    // shortest-string BigDecimal (valueOf), then HALF_UP to 12 places
-    def dec12(d: Double): java.math.BigDecimal =
-      java.math.BigDecimal.valueOf(d).setScale(12, java.math.RoundingMode.HALF_UP)
+  /** A region table on the driver, rows in id order: what [[radii]]
+    * computes (k included) plus the directed Queen weights by row
+    * index pair. */
+  private[graft] final case class LocalRegions(
+      ids: Array[Any], value: Array[Double], x: Array[Double], y: Array[Double],
+      perimeter: Array[Double], radius: Array[Double], k: Double,
+      weights: Map[(Int, Int), Double])
+
+  /** [[radii]] on collected (id, value, geom) rows, bit-equal to it;
+    * None for an input only the distributed path reproduces (see
+    * [[run]]). */
+  private[graft] def local(rows: Array[Row], idType: DataType): Option[LocalRegions] = {
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) return None
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val keyOf = Borders.catalystKeys(rows.map(_.get(0)), idType)
+    val order = rows.indices.sortWith((a, b) => ord.lt(keyOf(a), keyOf(b)))
+    val keys = order.map(keyOf).toArray
+    if ((1 until keys.length).exists(i => ord.equiv(keys(i - 1), keys(i)))) return None
+    val sorted = order.map(rows)
+    val geoms = sorted.map(r => Wkt.read(r.getString(2))).toArray
+    val pairs = Borders.queenPairs(keys, geoms, idType)
+    if (pairs.isEmpty) return None
+    val value = sorted.map(_.getDouble(1)).toArray
+    val x = geoms.map(Ops.centroid(_).x)
+    val y = geoms.map(Ops.centroid(_).y)
+    // radii's aggregate: scale-10 decimal sums over directed pairs
+    var d = java.math.BigDecimal.ZERO
+    var r = java.math.BigDecimal.ZERO
+    for ((i, j, _) <- pairs; (f, n) <- Seq((i, j), (j, i))) {
+      d = d.add(decimal(math.sqrt((x(n) - x(f)) * (x(n) - x(f)) +
+                                  (y(n) - y(f)) * (y(n) - y(f))), 10))
+      r = r.add(decimal(math.sqrt(value(f) / math.Pi) + math.sqrt(value(n) / math.Pi), 10))
+    }
+    val k = d.doubleValue / r.doubleValue
+    Some(LocalRegions(sorted.map(_.get(0)).toArray, value, x, y, geoms.map(Ops.perimeter),
+      value.map(v => math.sqrt(v / math.Pi) * k), k,
+      pairs.flatMap { case (i, j, w) => Seq((i, j) -> w, (j, i) -> w) }.toMap))
+  }
+
+  /** Double -> decimal exactly as Catalyst's cast to DecimalType(_, scale)
+    * does it: shortest-string BigDecimal (valueOf), then HALF_UP. */
+  private def decimal(d: Double, scale: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(d).setScale(scale, java.math.RoundingMode.HALF_UP)
+
+  /** Driver-side Jacobi iterations: the same force model as [[step]]
+    * (forces from the previous iteration's snapshot, applied
+    * simultaneously), with per-focal force sums accumulated EXACTLY
+    * like the distributed step's decimal aggregate: each double
+    * contribution rounds to scale-12 decimal, the decimals add
+    * exactly (order cannot matter), and the total converts back to
+    * double. Every remaining operation is the identical per-row IEEE
+    * expression, so the two paths are BIT-EQUAL at any iteration
+    * count — including chaotic all-contact regimes where any
+    * accumulation-order difference would compound.
+    * @return final (x, y) */
+  private def jacobi(m: LocalRegions, iterations: Int, ratio: Double,
+                     friction: Double): (Array[Double], Array[Double]) = {
+    val radius = m.radius
+    val per = m.perimeter
+    var x = m.x
+    var y = m.y
+    val n = x.length
+    val widest = radius.max
 
     for (_ <- 0 until iterations) {
       val nx = new Array[Double](n)
@@ -352,13 +419,13 @@ object Dorling {
             val overlap = radius(j) + radius(idx) - dist
             val dx = x(j) - x(idx); val dy = y(j) - y(idx)
             if (overlap > 0.0) {
-              xrepelD = xrepelD.add(dec12(-overlap * dx / dist))
-              yrepelD = yrepelD.add(dec12(-overlap * dy / dist))
+              xrepelD = xrepelD.add(decimal(-overlap * dx / dist, 12))
+              yrepelD = yrepelD.add(decimal(-overlap * dy / dist, 12))
             } else {
-              val ov = borders.get((idStr(idx), idStr(j)))
+              val ov = m.weights.get((idx, j))
                 .map(w => math.abs(overlap) * w / per(idx)).getOrElse(overlap)
-              xattractD = xattractD.add(dec12(ov * dx / dist))
-              yattractD = yattractD.add(dec12(ov * dy / dist))
+              xattractD = xattractD.add(decimal(ov * dx / dist, 12))
+              yattractD = yattractD.add(decimal(ov * dy / dist, 12))
             }
           }
         }
@@ -386,10 +453,6 @@ object Dorling {
       }
       x = nx; y = ny
     }
-    val out = (0 until n).map { i =>
-      org.apache.spark.sql.Row(ids(i), value(i), x(i), y(i), per(i), radius(i))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, 1), pos.schema)
+    (x, y)
   }
 }

@@ -107,8 +107,12 @@ object Unigram {
   def pieceCosts(docs: DataFrame, textCol: String,
                  maxPieceLen: Int = 4, topK: Int = 48,
                  maxWordLen: Int = 32): DataFrame = {
+    // materialized once for the several scans below; localCheckpoint,
+    // not cache(): the returned frame is lazy and reads `wt`, so a
+    // cache could never be released, and it would stay registered in
+    // the session's CacheManager
     val wt = wordTypes(docs, textCol)
-      .filter(length(col("w")) <= maxWordLen).cache()
+      .filter(length(col("w")) <= maxWordLen).localCheckpoint()
     val cand = wt
       .select(col("w"), col("freq"),
         explode(sequence(lit(1), length(col("w")))).as("i"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.operators.{Borders, Dorling}
 
 /** Cartogram operators at a few hundred regions (the driver fixtures
@@ -21,18 +21,32 @@ class BordersScaleSpec extends SparkSuite {
     }.toDF("id", "geometry", "value")
   }
 
+  /** Borders through [[Borders.compute]] (the driver path at these
+    * sizes) and through the distributed grid entry, each checked by
+    * `closedForm`; the two outputs must be equal row for row. */
+  private def bothPaths(df: DataFrame)(closedForm: Array[Row] => Unit): Unit = {
+    val viaCompute = Borders.compute(df, "id", "geometry").collect()
+    val viaGrid = Borders.grid(df, "id", "geometry").collect()
+    closedForm(viaCompute)
+    closedForm(viaGrid)
+    def sorted(b: Array[Row]) = b.map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).sorted.toSeq
+    assert(sorted(viaCompute) === sorted(viaGrid))
+  }
+
   test("Queen borders on a 20x20 tessellation match the closed form") {
-    val b = Borders.compute(grid, "id", "geometry").collect()
-    // directed neighbor count: interior 8, edge 5, corner 3
-    val expected = 8 * (n - 2) * (n - 2) + 5 * 4 * (n - 2) + 3 * 4
-    assert(b.length === expected)
-    // edge-adjacent pairs weigh the full side (4.0), diagonal pairs 0
-    b.foreach { r =>
-      val i = r.getAs[Long]("focal_id"); val j = r.getAs[Long]("neighbor_id")
-      val (xi, yi) = (i % n, i / n); val (xj, yj) = (j % n, j / n)
-      val manhattan = math.abs(xi - xj) + math.abs(yi - yj)
-      val w = r.getAs[Double]("weight")
-      if (manhattan == 1) assert(w === 4.0, s"pair $i-$j") else assert(w === 0.0, s"pair $i-$j")
+    bothPaths(grid) { b =>
+      // directed neighbor count: interior 8, edge 5, corner 3
+      val expected = 8 * (n - 2) * (n - 2) + 5 * 4 * (n - 2) + 3 * 4
+      assert(b.length === expected)
+      // edge-adjacent pairs weigh the full side (4.0), diagonal pairs 0
+      b.foreach { r =>
+        val i = r.getAs[Long]("focal_id"); val j = r.getAs[Long]("neighbor_id")
+        val (xi, yi) = (i % n, i / n); val (xj, yj) = (j % n, j / n)
+        val manhattan = math.abs(xi - xj) + math.abs(yi - yj)
+        val w = r.getAs[Double]("weight")
+        if (manhattan == 1) assert(w === 4.0, s"pair $i-$j") else assert(w === 0.0, s"pair $i-$j")
+      }
     }
   }
 
@@ -48,24 +62,27 @@ class BordersScaleSpec extends SparkSuite {
     val big = Seq(((n * n).toLong,
       s"POLYGON ((0 $top, 400 $top, 400 ${top + 400}, 0 ${top + 400}, 0 $top))",
       1.0)).toDF("id", "geometry", "value")
+    val withStrip = grid.unionAll(big)
     val t0 = System.nanoTime()
-    val b = Borders.compute(grid.unionAll(big), "id", "geometry").collect()
+    Borders.grid(withStrip, "id", "geometry").collect()
     val secs = (System.nanoTime() - t0) / 1e9
-    // grid-internal adjacency unchanged
-    val gridPairs = b.filter(r => r.getAs[Long]("focal_id") < n * n &&
-      r.getAs[Long]("neighbor_id") < n * n)
-    val expected = 8 * (n - 2) * (n - 2) + 5 * 4 * (n - 2) + 3 * 4
-    assert(gridPairs.length === expected)
-    // the strip touches exactly the n top-row cells, sharing their
-    // full 4.0 top edges (x in [0, 4n] ⊂ [0, 400])
-    val bigPairs = b.filter(_.getAs[Long]("focal_id") === n.toLong * n)
-    assert(bigPairs.length === n, s"strip adjacencies: ${bigPairs.length}")
-    bigPairs.foreach { r =>
-      val nb = r.getAs[Long]("neighbor_id")
-      assert(nb >= (n - 1).toLong * n && nb < n.toLong * n, s"non-top-row neighbor $nb")
-      assert(r.getAs[Double]("weight") === 4.0)
+    bothPaths(withStrip) { b =>
+      // grid-internal adjacency unchanged
+      val gridPairs = b.filter(r => r.getAs[Long]("focal_id") < n * n &&
+        r.getAs[Long]("neighbor_id") < n * n)
+      val expected = 8 * (n - 2) * (n - 2) + 5 * 4 * (n - 2) + 3 * 4
+      assert(gridPairs.length === expected)
+      // the strip touches exactly the n top-row cells, sharing their
+      // full 4.0 top edges (x in [0, 4n] ⊂ [0, 400])
+      val bigPairs = b.filter(_.getAs[Long]("focal_id") === n.toLong * n)
+      assert(bigPairs.length === n, s"strip adjacencies: ${bigPairs.length}")
+      bigPairs.foreach { r =>
+        val nb = r.getAs[Long]("neighbor_id")
+        assert(nb >= (n - 1).toLong * n && nb < n.toLong * n, s"non-top-row neighbor $nb")
+        assert(r.getAs[Double]("weight") === 4.0)
+      }
     }
-    info(f"outlier borders in $secs%.1f s")
+    info(f"outlier borders (grid) in $secs%.1f s")
     assert(secs < 60.0, s"outlier grid too slow: $secs s — candidate blow-up?")
   }
 

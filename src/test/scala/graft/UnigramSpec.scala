@@ -172,4 +172,13 @@ class UnigramSpec extends SparkSuite {
   }
 
   private def col(s: String) = org.apache.spark.sql.functions.col(s)
+
+  test("pieceCosts leaves nothing registered in the session's CacheManager") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val pieces = Unigram.pieceCosts(docs, "text", maxPieceLen = 4, topK = 48)
+    assert(pieces.count() > 0)
+    assert(cacheManager.isEmpty, "pieceCosts left a cached plan behind")
+  }
 }
