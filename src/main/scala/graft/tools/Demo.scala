@@ -24,11 +24,12 @@ object Demo {
 
     // The pycart user journey, Spark-native: GeoJSON + population CSV
     // -> merged frame -> Cartogram facade
-    // (reference data/Test/square_test.geojson + squares_pop.csv).
+    // (data/Test/square_test.geojson + squares_pop.csv in the repo;
+    // run from the repo root).
     val geo = GeoJsonSource.readFeatureCollection(
-        spark, "/root/reference/data/Test/square_test.geojson")
+        spark, "data/Test/square_test.geojson")
       .select(col("properties")("name").as("name"), col("geometry"))
-    val pop = CsvAttrs.read(spark, "/root/reference/data/Test/squares_pop.csv")
+    val pop = CsvAttrs.read(spark, "data/Test/squares_pop.csv")
       .select(col("name"), CsvAttrs.cleanLong(col("Population")).as("population"))
     val squares = CsvAttrs.mergeAttrs(geo, "name", pop, "name")
 

@@ -14,7 +14,7 @@ class CartogramSpec extends SparkSuite {
 
   lazy val squares = {
     val df = GeoJsonSource.readFeatureCollection(
-      spark, "/root/reference/data/Test/square_test.geojson")
+      spark, "data/Test/square_test.geojson")
     val pops = Map("TL" -> 100.0, "BL" -> 200.0, "TR" -> 400.0, "BR" -> 150.0)
     val popUdf = udf((n: String) => pops(n))
     df.select(col("properties")("name").as("name"), col("geometry"))

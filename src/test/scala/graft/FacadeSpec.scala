@@ -11,9 +11,9 @@ class FacadeSpec extends SparkSuite {
 
   lazy val gdf = {
     val geo = GeoJsonSource.readFeatureCollection(
-        spark, "/root/reference/data/Test/square_test.geojson")
+        spark, "data/Test/square_test.geojson")
       .select(col("id"), col("properties")("name").as("name"), col("geometry"))
-    val pop = CsvAttrs.read(spark, "/root/reference/data/Test/squares_pop.csv")
+    val pop = CsvAttrs.read(spark, "data/Test/squares_pop.csv")
       .select(col("name"), CsvAttrs.cleanLong(col("Population")).as("population"))
     CsvAttrs.mergeAttrs(geo, "name", pop, "name")
   }

@@ -3,7 +3,7 @@ package graft
 import graft.geom._
 
 /** Kernel parity with shapely on the reference's own test fixture
-  * (/root/reference/data/Test/square_test.geojson — 4 rectangles).
+  * (data/Test/square_test.geojson — 4 rectangles).
   * Expected values are closed-form (axis-aligned rectangles).
   */
 class GeomSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -107,7 +107,7 @@ class GeomSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("GeoJSON: parse the reference FeatureCollection fixture") {
-    val src = scala.io.Source.fromFile("/root/reference/data/Test/square_test.geojson")
+    val src = scala.io.Source.fromFile("data/Test/square_test.geojson")
     val json = try src.mkString finally src.close()
     val feats = GeoJson.parseCollection(json)
     assert(feats.length === 4)
