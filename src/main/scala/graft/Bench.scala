@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line.
+  * and prints ONE JSON line on stdout.
   *
   * Protocol: SPARK_GRAFT_RUNS (default 3) FULL ROUNDS over the whole
   * query set, reported three ways — per-query min across rounds (the
@@ -13,9 +13,11 @@ import org.apache.spark.sql.SparkSession
   * round's totals and stays VISIBLE in `runs` instead of silently
   * inflating the headline: this host has measured 43 s and 129 s
   * totals for the identical binary (BENCH.md), and the r4 artifact's
-  * 140 s headline was exactly such a window. The same JSON is also
-  * written to SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL.json) so
-  * the artifact survives stdout mangling.
+  * 140 s headline was exactly such a window. That full-detail JSON
+  * is written to SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL.json);
+  * stdout's final line is the compact [[stdoutLine]], which fits a
+  * 2000-byte tail. Timed region and min-across-rounds unchanged by
+  * the output format.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -84,31 +86,49 @@ object Bench {
       s"\"" + n + "\":" + gcPer.getOrElse(n, 0L)).mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(minPer)},""" +
+        s""""names_sha":"${namesSha(names)}",""" +
         s""""runs":$runsJson,"gc_ms_max":$gcJson,"n_runs":$nRuns,""" +
         s""""load_avg":[$loadStart,$loadEnd],"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath: ${e.getMessage}") }
-    // ONE stdout JSON line, sized to survive a consumer's stdout tail
-    // window: the r12/r13 layout printed the full-detail line (190
-    // queries x 3 rounds of per-query times, ~40 KB) to stdout, any
-    // tail-window consumer saw a mid-line fragment, and the trailing
-    // compact summary carried no per-query map — so per-query results
-    // were invisible two rounds running. Now the full-detail JSON
-    // (runs, gc_ms_max, full precision) goes ONLY to the artifact
-    // file, and stdout's final line is the driver contract —
-    // metric/value/queries/sf — with the min-per-query map at
-    // millisecond precision (~5 KB for 190 entries). Timed region and
-    // min-across-rounds methodology unchanged.
-    def ms(v: Double): String =
-      if (v < 0) "-1.0" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qCompact = names.map(n => s"\"" + n + "\":" + ms(minPer(n)))
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qCompact,""" +
-        s""""n_queries":${names.size},"n_runs":$nRuns,""" +
-        s""""load_avg":[$loadStart,$loadEnd],"sf":"$sfDir",""" +
-        s""""per_query_in":"$outPath"}""")
+    println(stdoutLine(names, minPer, nRuns, sfDir))
     spark.stop()
+  }
+
+  /** A query at or past this many milliseconds prints as this value
+    * in the stdout line (the artifact keeps the exact seconds); it
+    * bounds every array entry to 7 digits. */
+  val MsCap = 9999999L
+
+  /** Short hash of the sorted query-name list: identifies which name
+    * each `q_ms` position stands for (the artifact carries it too). */
+  def namesSha(sortedNames: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(sortedNames.mkString("\n").getBytes("UTF-8"))
+      .take(6).map(b => f"${b & 0xff}%02x").mkString
+
+  /** The final stdout JSON line, sized for a consumer that keeps only
+    * a 2000-byte stdout tail: total seconds, the query count, a short
+    * hash of the sorted names, the `sf` directory's name, and the
+    * min-per-query times as an integer-ms ARRAY in sorted-name order
+    * (-1 = failed; capped at [[MsCap]]). `value` is the sum of the
+    * printed ms, or -1 when any query failed. The named map, every
+    * round and `gc_ms_max` stay in the artifact file only. */
+  def stdoutLine(sortedNames: Seq[String], minPer: Map[String, Double],
+                 nRuns: Int, sfDir: String): String = {
+    val ms = sortedNames.map { n =>
+      val v = minPer(n)
+      if (v < 0) -1L else math.min(math.round(v * 1000), MsCap)
+    }
+    val total =
+      if (ms.exists(_ < 0)) "-1.0"
+      else "%.3f".formatLocal(java.util.Locale.ROOT, ms.sum / 1000.0)
+    val sf = new java.io.File(sfDir).getName
+      .filter(c => c < 128 && (c.isLetterOrDigit || "._-".contains(c))).take(32)
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""n_queries":${sortedNames.size},"n_runs":$nRuns,""" +
+      s""""names_sha":"${namesSha(sortedNames)}","sf":"$sf",""" +
+      s""""q_ms":${ms.mkString("[", ",", "]")}}"""
   }
 }

@@ -332,9 +332,10 @@ object Layout {
   /** Typed PER-ROW-GROUP min/max — the footer detail behind format
     * 2.3's `#stat3` manifest lines (Iceberg's split-offsets +
     * column-bounds idea folded into one line family): `start`/`len`
-    * are the row group's BYTE position and compressed size (what a
-    * range read needs to select exactly it — parquet's midpoint
-    * rule), `rows` its row count. Same value encodings as
+    * are the row group's BYTE position and compressed size (the
+    * block's identity, which the box scan checks agrees across the
+    * predicate columns of one file), `rows` its row count. Same
+    * value encodings as
     * [[TypedFileStat]] (kind i/d/s). */
   case class TypedRgStat(path: String, column: String, start: Long,
                          len: Long, rows: Long, kind: String,
@@ -482,7 +483,7 @@ object Layout {
     * stat is the fold of its block stats (same canonical encodings),
     * and consumers of the block detail may treat a recorded set as
     * the file's COMPLETE block list (a file whose every recorded
-    * block fails DROPS — [[Snapshots.prunedRangesBox]]), which only
+    * block fails DROPS — [[Snapshots.prunedFilesBoxRg]]), which only
     * the all-or-nothing rule makes safe. Block detail is recorded
     * only for multi-row-group files. The typed half of
     * [[statsWithKey]]. */

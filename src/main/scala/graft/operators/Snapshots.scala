@@ -2667,10 +2667,8 @@ object Snapshots {
     * residual filter is exact — so the result always equals the
     * full-scan filter. */
   def prunedScanAtBy(spark: SparkSession, dir: String, v: Long,
-                     column: String, lo: Any, hi: Any,
-                     stats: Option[Seq[Layout.TypedFileStat]] = None): DataFrame =
-    prunedScanAtBox(spark, dir, v, Seq((column, lo, hi)), stats.map(s =>
-      Map(column -> s)))
+                     column: String, lo: Any, hi: Any): DataFrame =
+    prunedScanAtBox(spark, dir, v, Seq((column, lo, hi)))
 
   /** The manifest-relative files a `[lo, hi)` predicate on `column`
     * must read at version `v` — the pruning DECISION alone (what
@@ -2689,15 +2687,11 @@ object Snapshots {
     * box is the bucket cell's projection — an axis-aligned box reads
     * just the cells it intersects). */
   def prunedFilesBox(spark: SparkSession, dir: String, v: Long,
-                     preds: Seq[(String, Any, Any)],
-                     stats: Option[Map[String, Seq[Layout.TypedFileStat]]] = None)
-      : Seq[String] = {
+                     preds: Seq[(String, Any, Any)]): Seq[String] = {
     require(preds.nonEmpty, "box pruning needs at least one predicate")
     val m = committedManifest(spark, dir, v)
     val byCol = preds.map { case (c, _, _) =>
-      val st = stats.flatMap(_.get(c))
-        .getOrElse(versionStatsFor(spark, dir, v, c))
-      c -> st.map(s => s.path -> s).toMap
+      c -> versionStatsFor(spark, dir, v, c).map(s => s.path -> s).toMap
     }.toMap
     m.files.filter { rel =>
       preds.forall { case (c, lo, hi) =>
@@ -2709,115 +2703,47 @@ object Snapshots {
     }
   }
 
-  /** The ROW-GROUP refinement of [[prunedFilesBox]] (format 2.3
-    * `#stat3` consumption): split the file-level survivors into files
-    * read WHOLE and files read as surviving BYTE RANGES only —
-    * decided entirely from the manifest, zero footer opens. Per
-    * box-surviving file: no `#stat3` claim (single-row-group files
-    * never record one), a deletion vector (positions are whole-file
-    * row indices), or inconsistent block sets across predicate
-    * columns → WHOLE (conservative); every block surviving → WHOLE
-    * (the vectorized path is cheaper than the range reader when
-    * nothing skips); otherwise the CONTIGUOUS runs of surviving
-    * blocks become ranges (a file whose every block fails drops
-    * entirely — finer than the file-level decision). */
-  def prunedRangesBox(spark: SparkSession, dir: String, v: Long,
-                      preds: Seq[(String, Any, Any)],
-                      fileSurvivors: Option[Seq[String]] = None)
-      : (Seq[String], Seq[(String, Seq[(Long, Long)])]) = {
+  /** [[prunedFilesBox]] refined by the manifest's per-ROW-GROUP
+    * `#stat3` lines: a file-level survivor drops when NO recorded
+    * row group satisfies every predicate at once — finer than the
+    * file-level decision, which judges each predicate against the
+    * whole file's min/max. Manifest only, zero footer opens. A file
+    * keeps when it has no `#stat3` claim (single-row-group files
+    * never record one) or its predicate columns disagree on the
+    * block list (start/len are the block identity). Safe because a
+    * recorded set is the file's COMPLETE block list (the
+    * all-or-nothing rule of [[Layout.typedStatsWithBlocks]]). */
+  private[graft] def prunedFilesBoxRg(spark: SparkSession, dir: String,
+      v: Long, preds: Seq[(String, Any, Any)]): Seq[String] = {
     val m = committedManifest(spark, dir, v)
-    // callers that already ran the file-level pass (prunedScanAtBox)
-    // hand its survivors in rather than paying the pruning twice
-    val surviving = fileSurvivors.getOrElse(
-      prunedFilesBox(spark, dir, v, preds))
-    val dvRels = m.dv.keySet ++ m.dvRefs.keySet
     val byCol = preds.map { case (c, _, _) =>
       c -> m.stats3(m.toPhysical.getOrElse(c, c))
     }.toMap
-    val whole = Seq.newBuilder[String]
-    val partial = Seq.newBuilder[(String, Seq[(Long, Long)])]
-    surviving.foreach { rel =>
+    prunedFilesBox(spark, dir, v, preds).filter { rel =>
       val claims = preds.flatMap { case (c, lo, hi) =>
         byCol(c).get(rel).map(gs => (lo, hi, gs))
       }
       val blockSets = claims.map(_._3.map(g => (g.start, g.len))).distinct
-      if (claims.isEmpty || dvRels.contains(rel) || blockSets.size != 1)
-        whole += rel
-      else {
-        val blocks = blockSets.head
-        val surviveIdx = blocks.indices.filter { i =>
+      claims.isEmpty || blockSets.size != 1 ||
+        blockSets.head.indices.exists { i =>
           claims.forall { case (lo, hi, gs) =>
             stat2Survives(gs(i).kind, gs(i).min, gs(i).max, lo, hi)
           }
         }
-        if (surviveIdx.size == blocks.size) whole += rel
-        else if (surviveIdx.nonEmpty) {
-          // merge CONSECUTIVE surviving blocks into one byte range
-          // (never bridging a skipped block — midpoint selection
-          // would resurrect it)
-          val runs = Seq.newBuilder[(Long, Long)]
-          var runStart = -1L
-          var runEnd = -1L
-          var prevI = -2
-          surviveIdx.foreach { i =>
-            val (st, ln) = blocks(i)
-            if (i == prevI + 1 && runStart >= 0) runEnd = st + ln
-            else {
-              if (runStart >= 0) runs += ((runStart, runEnd - runStart))
-              runStart = st; runEnd = st + ln
-            }
-            prevI = i
-          }
-          runs += ((runStart, runEnd - runStart))
-          partial += rel -> runs.result()
-        } // else: every block fails — the file drops entirely
-      }
     }
-    (whole.result(), partial.result())
   }
 
   /** Stats-pruned scan of a version under a CONJUNCTION of range
     * predicates, `[lo, hi)` each — [[prunedScanAtBy]] generalized to
     * the multi-dimensional box query: planned entirely from the
-    * manifest, surviving files = the per-dimension survivals'
-    * INTERSECTION refined to surviving ROW GROUPS where `#stat3`
-    * lines exist ([[prunedRangesBox]] — partially-surviving files
-    * read as byte ranges through [[RgRead]], skipping whole row
-    * groups without a footer open at planning), residual = the exact
-    * AND. Always equals the full-scan filter. */
-  /** Conf key: execute partially-surviving files as BYTE-RANGE reads
-    * ([[RgRead]]) instead of whole-file vectorized reads. DEFAULT OFF
-    * — measured honestly (ScaleStress `rgscan`, BENCH.md): on a local
-    * filesystem with statistics-bearing footers, Spark's OWN task-side
-    * row-group pruning reads the same surviving bytes VECTORIZED
-    * (~20× the record-materializing range reader's throughput), so the
-    * range path only wins where the PLANNING properties dominate —
-    * high-latency object stores (footer round-trips priced per file)
-    * or schedulers that must size tasks by true surviving bytes. The
-    * DECISION surface ([[prunedRangesBox]]) is always available and
-    * always manifest-only. */
-  val RgScanKey = "spark.graft.scan.rowGroupRanges"
-
+    * manifest, reads the files [[prunedFilesBoxRg]] keeps (whole,
+    * vectorized — Spark's task-side footer pruning skips the failing
+    * row groups inside them), residual = the exact AND. Always
+    * equals the full-scan filter. */
   def prunedScanAtBox(spark: SparkSession, dir: String, v: Long,
-                      preds: Seq[(String, Any, Any)],
-                      stats: Option[Map[String, Seq[Layout.TypedFileStat]]] = None)
-      : DataFrame = {
+                      preds: Seq[(String, Any, Any)]): DataFrame = {
     val m = committedManifest(spark, dir, v)
-    val surviving0 = prunedFilesBox(spark, dir, v, preds, stats)
-    // the row-group refinement only engages on the manifest's own
-    // stats (an explicit `stats` override is the verification path —
-    // footer-walked per FILE, so it stays file-granular) and when the
-    // range-read execution is asked for; the DECISION still tightens
-    // the file set either way (a file whose every row group fails
-    // drops entirely — finer than the file-level stats)
-    val rgExec = spark.conf.getOption(RgScanKey).exists(_.toBoolean)
-    val (whole, partial) =
-      if (stats.isDefined) (surviving0, Seq.empty)
-      else {
-        val (w, p) = prunedRangesBox(spark, dir, v, preds, Some(surviving0))
-        if (rgExec) (w, p) else (w ++ p.map(_._1), Seq.empty)
-      }
-    val surviving = whole
+    val surviving = prunedFilesBoxRg(spark, dir, v, preds)
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val residual = preds.map { case (column, lo, hi) =>
       val isTs = m.schemaOpt.exists { s =>
@@ -2831,27 +2757,13 @@ object Snapshots {
               else col(column)
       c >= lit(lo) && c < lit(hi)
     }.reduce(_ && _)
-    val wholePart =
-      if (surviving.isEmpty)
-        readFiles(spark, dir, m.files, m.schemaOpt, m.colMap, m.fileSizes,
-          dv = m.dv, dvRefs = m.dvRefs)
-          .filter(residual).limit(0)
-      else readFiles(spark, dir, surviving, m.schemaOpt, m.colMap,
-        m.fileSizes, dv = m.dv, dvRefs = m.dvRefs)
-        .filter(residual)
-    if (partial.isEmpty) wholePart
-    else {
-      // the partially-surviving files read as BYTE RANGES (whole row
-      // groups skip without their pages ever leaving disk); DV-bearing
-      // files never land here (prunedRangesBox degrades them), so no
-      // position filtering is owed on this side
-      val ranges = partial.flatMap { case (rel, rs) =>
-        rs.map { case (start, len) => RgRead.Range(s"$dir/$rel", start, len) }
-      }
-      val rgPart = RgRead.read(spark, m.schemaOpt.get, m.toPhysical, ranges)
-        .filter(residual)
-      wholePart.unionByName(rgPart)
-    }
+    if (surviving.isEmpty)
+      readFiles(spark, dir, m.files, m.schemaOpt, m.colMap, m.fileSizes,
+        dv = m.dv, dvRefs = m.dvRefs)
+        .filter(residual).limit(0)
+    else readFiles(spark, dir, surviving, m.schemaOpt, m.colMap,
+      m.fileSizes, dv = m.dv, dvRefs = m.dvRefs)
+      .filter(residual)
   }
 
   /** TOTAL byte size of version `v`, planned from the manifest's

@@ -1620,7 +1620,7 @@ object Relational {
     val surviving = tsStats.count(s =>
       s.kind == "i" && s.max.toLong >= lo && s.min.toLong < hi)
     val (t1, t2, t3) = fold(Snapshots.prunedScanAtBy(spark, out, v3,
-      "o_orderdate", lo, hi, Some(tsStats)))
+      "o_orderdate", lo, hi))
     val (o1, o2, o3) = fold(Snapshots.prunedScanAtBy(spark, out, v3,
       "o_orderstatus", "O", "P"))
     val (k1, k2, k3) = fold(Snapshots.prunedScanAtBy(spark, out, v3,

@@ -47,15 +47,9 @@ object CsvSource {
     raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
 
   /** Exact (good, corrupt) accounting in one cached pass — the
-    * JsonlSource.stats contract (cache for the same
-    * corrupt-column-projection reason documented there). */
-  def stats(raw: DataFrame): (Long, Long) = {
-    val r = raw.cache().agg(
-      sum(when(col(CorruptCol).isNull, 1L).otherwise(0L)),
-      sum(when(col(CorruptCol).isNotNull, 1L).otherwise(0L))).collect()(0)
-    (if (r.isNullAt(0)) 0L else r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+    * [[JsonlSource.stats]] contract and body (the corrupt column has
+    * the same name and the same corrupt-only-projection rule). */
+  def stats(raw: DataFrame): (Long, Long) = JsonlSource.stats(raw)
 
   /** Write as headered CSV, one file per partition (splittable
     * shards, no driver collect). */

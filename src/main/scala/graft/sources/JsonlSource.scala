@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Newline-delimited JSON document corpus source — the de facto LLM
   * training-data interchange shape (one `{"id":…,"text":…,…}` object
@@ -47,24 +48,28 @@ object JsonlSource {
     raw.filter(col(CorruptCol).isNull).drop(CorruptCol)
 
   /** The malformed source lines, verbatim — quarantine material.
-    * (Spark refuses corrupt-only projections on an uncached JSON
-    * scan — the raw line isn't in the parsed columns — so this
-    * re-reads via text+json the one time it's asked for.) */
+    * Spark refuses corrupt-only projections on a raw JSON scan (the
+    * raw line isn't in the parsed columns), so the filter reads
+    * through a lazy local checkpoint of the full parse — not
+    * `cache()`, which would stay registered in the session's
+    * CacheManager for as long as the returned frame may be read. */
   def corrupt(raw: DataFrame): DataFrame =
-    raw.cache().filter(col(CorruptCol).isNotNull).select(CorruptCol)
+    raw.localCheckpoint(eager = false)
+      .filter(col(CorruptCol).isNotNull).select(CorruptCol)
 
   /** Exact accounting in ONE pass: (good rows, corrupt lines) — the
     * corruption-budget gate a production ingest runs per shard.
     * (cache() first: Spark disallows corrupt-column-only projections
     * over a raw JSON scan — the pruned scan would re-parse and could
     * disagree with itself — and the documented escape is reading
-    * through the cache. The accounting pass is also exactly the scan
-    * a caller then reuses via [[docs]]/[[corrupt]], so the cache is
-    * work we'd want kept anyway.) */
+    * through the cache. The cache is released once the counts are
+    * collected, unless the caller had cached `raw` already.) */
   def stats(raw: DataFrame): (Long, Long) = {
-    val r = raw.cache().agg(
+    val owned = raw.storageLevel == StorageLevel.NONE
+    val r = try raw.cache().agg(
       sum(when(col(CorruptCol).isNull, 1L).otherwise(0L)),
       sum(when(col(CorruptCol).isNotNull, 1L).otherwise(0L))).collect()(0)
+    finally if (owned) raw.unpersist(false)
     (if (r.isNullAt(0)) 0L else r.getLong(0),
       if (r.isNullAt(1)) 0L else r.getLong(1))
   }

@@ -481,9 +481,10 @@ private[streaming] class ChangeFileReader(
   * PHYSICAL fields the file actually has — fields the file predates
   * stay null (additive evolution), and each present field widens
   * from the FILE's stored primitive to the requested Catalyst type
-  * (int32→long, float/int32→double — exactly [[GroupDecode]]'s
-  * contract; any other pairing refuses loudly). Flat scalar schemas
-  * only. */
+  * (int32→long, float→double, int32→double — the lossless promotions
+  * [[graft.operators.Snapshots]] permits and Spark's own parquet
+  * reader performs on the batch path; any other pairing refuses
+  * loudly). Flat scalar schemas only. */
 private[graft] class RowArrayReadSupport(
     physNames: Array[String], dataTypes: Array[DataType],
     rowWidth: Int, where: String)
@@ -502,10 +503,14 @@ private[graft] class RowArrayReadSupport(
     // output row per stored row — keep ONE file column as the row
     // pacemaker rather than relying on parquet-mr's empty-projection
     // path (some versions reject it, and its EmptyRecordReader never
-    // calls the root converter's start()); its values discard
+    // calls the root converter's start()); its values discard. It
+    // must be a PRIMITIVE column: prepareForRead hands the pacemaker
+    // a PrimitiveConverter, which a group column cannot take
     val fields =
       if (kept.nonEmpty) kept.map(n => file.getType(file.getFieldIndex(n)))
-      else Array(file.getType(0))
+      else Array((0 until file.getFieldCount).map(file.getType(_))
+        .find(_.isPrimitive).getOrElse(throw new UnsupportedOperationException(
+          s"no primitive column to pace null-filled rows by in $where")))
     new ReadSupport.ReadContext(new MessageType(file.getName, fields: _*))
   }
 
@@ -637,82 +642,6 @@ private[graft] class RowArrayReadSupport(
         java.util.Arrays.copyOf(
           slots.asInstanceOf[Array[AnyRef]], rowWidth).asInstanceOf[Array[Any]]
       override def getRootConverter: GroupConverter = root
-    }
-  }
-}
-
-/** Parquet-mr Group → Catalyst INTERNAL values, shared by the change
-  * feed's executor reader and the batch row-group-range reader
-  * ([[graft.operators.RgRead]]): dispatch on the FILE's physical
-  * primitive and WIDEN to the requested Catalyst type where they
-  * differ (int32→long, float→double, int32→double — exactly the
-  * lossless promotions [[graft.operators.Snapshots]] permits, and the
-  * same promotions Spark's own parquet reader performs on the batch
-  * path). Any other physical/logical pairing fails loudly. Flat
-  * scalar schemas only (the snapshot-table write shape). */
-private[graft] object GroupDecode {
-
-  /** Resolve each requested PHYSICAL field name to its index and
-    * stored primitive in this file's schema (-1 = the file predates
-    * the column: null-fill). */
-  def resolve(t: org.apache.parquet.schema.GroupType,
-              physNames: Array[String])
-      : (Array[Int], Array[org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName]) = {
-    val idx = physNames.map(n =>
-      if (t.containsField(n)) t.getFieldIndex(n) else -1)
-    val prim = idx.map(fi =>
-      if (fi < 0) null
-      else t.getType(fi).asPrimitiveType().getPrimitiveTypeName)
-    (idx, prim)
-  }
-
-  def readValue(g: org.apache.parquet.example.data.Group, fi: Int,
-                prim: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName,
-                dt: DataType, where: String): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    def refuse(): Nothing = throw new UnsupportedOperationException(
-      s"column type ${dt.simpleString} cannot be read " +
-        s"from a $prim-typed file column in $where")
-    dt match {
-      case LongType | TimestampType | TimestampNTZType => prim match {
-        case INT64 => g.getLong(fi, 0)
-        case INT32 => g.getInteger(fi, 0).toLong // pre-widening file
-        case _ => refuse()
-      }
-      case IntegerType | DateType => prim match {
-        case INT32 => g.getInteger(fi, 0)
-        case _ => refuse()
-      }
-      case DoubleType => prim match {
-        case DOUBLE => g.getDouble(fi, 0)
-        case FLOAT => g.getFloat(fi, 0).toDouble // pre-widening file
-        case INT32 => g.getInteger(fi, 0).toDouble // int→double widening
-        case _ => refuse()
-      }
-      case FloatType => prim match {
-        case FLOAT => g.getFloat(fi, 0)
-        case _ => refuse()
-      }
-      case BooleanType => g.getBoolean(fi, 0)
-      case StringType => UTF8String.fromBytes(g.getBinary(fi, 0).getBytes)
-      case BinaryType => g.getBinary(fi, 0).getBytes
-      case d: DecimalType =>
-        prim match {
-          case INT32 => org.apache.spark.sql.types.Decimal(
-            g.getInteger(fi, 0).toLong, d.precision, d.scale)
-          case INT64 => org.apache.spark.sql.types.Decimal(
-            g.getLong(fi, 0), d.precision, d.scale)
-          case BINARY | FIXED_LEN_BYTE_ARRAY =>
-            org.apache.spark.sql.types.Decimal(
-              scala.math.BigDecimal(new java.math.BigDecimal(
-                new java.math.BigInteger(g.getBinary(fi, 0).getBytes), d.scale)),
-              d.precision, d.scale)
-          case other => throw new UnsupportedOperationException(
-            s"decimal stored as $other is outside the contract ($where)")
-        }
-      case other => throw new UnsupportedOperationException(
-        s"flat scalar columns only; ${other.simpleString} " +
-          s"in $where is outside the contract")
     }
   }
 }

@@ -1432,43 +1432,6 @@ object ScaleStress {
         Snapshots.read(spark, dirN).count()))
     }
 
-    if (sections("rgscan")) {
-    // format 2.3 sub-file skipping, priced: ONE 2.5 GB-ish file of 40M
-    // sorted rows with many row groups — a 1% mid-file range reads the
-    // surviving row-group byte ranges vs the whole file (file-level
-    // stats cannot prune an interior range at all). Identical folds.
-    import graft.operators.Snapshots
-    val n = 40000000L
-    val dir = "/tmp/graft_scale_rgscan"
-    Snapshots.dropPath(spark, dir)
-    val rows = spark.range(0, n, 1, 1).select(col("id").as("k"),
-      (col("id") * 31).as("payload"), lit(0L).as("bucket"))
-    timed("rgscan: publish 40M sorted rows as ONE multi-row-group file")(
-      Snapshots.publish(rows, dir, "bucket", Seq("k"),
-        numTasks = 1, statsCols = Seq("k")))
-    val (whole, partial) = Snapshots.prunedRangesBox(spark, dir, 1L,
-      Seq(("k", 20000000L, 20400000L)))
-    val rangeBytes = partial.flatMap(_._2).map(_._2).sum
-    println(s"[stress] rgscan: whole=${whole.size} partial=${partial.size} " +
-      s"rangeBytes=$rangeBytes")
-    spark.conf.set(Snapshots.RgScanKey, "true")
-    timed("rgscan: 1% mid-file range via ROW-GROUP byte ranges " +
-      "(#stat3 + RgRead, conf ON)")(
-      Snapshots.prunedScanAtBox(spark, dir, 1L,
-        Seq(("k", 20000000L, 20400000L)))
-        .agg(sum("payload")).collect()(0).getLong(0))
-    spark.conf.unset(Snapshots.RgScanKey)
-    timed("rgscan: same range, DEFAULT path (vectorized whole file + " +
-      "Spark's task-side row-group pruning)")(
-      Snapshots.prunedScanAtBox(spark, dir, 1L,
-        Seq(("k", 20000000L, 20400000L)))
-        .agg(sum("payload")).collect()(0).getLong(0))
-    timed("rgscan: same range as the raw full read + filter")(
-      Snapshots.read(spark, dir)
-        .filter(col("k") >= 20000000L && col("k") < 20400000L)
-        .agg(sum("payload")).collect()(0).getLong(0))
-    }
-
     if (sections("feedplan")) {
     // r10's per-trigger planning claim, measured: versions()/latest()
     // are manifest-read-free after warm (parsed manifests and decided

@@ -136,4 +136,38 @@ class FormatsSpec extends SparkSuite {
         StructField("_corrupt_record", StringType, true))))
     }
   }
+
+  test("JsonlSource stats/corrupt and CsvSource stats leave nothing " +
+    "registered in the session's CacheManager, with the same counts") {
+    import graft.sources.{CsvSource, JsonlSource}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val jdir = java.nio.file.Files.createTempDirectory("graft_jsonl_cm").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(jdir, "part-0.json"),
+      java.util.Arrays.asList(
+        """{"id": 1, "text": "ok"}""", """{"id": 2, "text": "cut""",
+        """nope""", """{"id": 3, "text": "fine"}"""))
+    val json = JsonlSource.read(spark, jdir, StructType(Seq(
+      StructField("id", LongType, true), StructField("text", StringType, true))))
+    assert(JsonlSource.stats(json) === ((2L, 2L)))
+    assert(cacheManager.isEmpty, "JsonlSource.stats left a cached plan behind")
+    assert(JsonlSource.corrupt(json).collect().map(_.getString(0)).toSet ===
+      Set("""{"id": 2, "text": "cut""", "nope"))
+    assert(cacheManager.isEmpty, "JsonlSource.corrupt left a cached plan behind")
+    val cdir = java.nio.file.Files.createTempDirectory("graft_csv_cm").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(cdir, "part-0.csv"),
+      java.util.Arrays.asList("id,text", "1,a", "x,b", "3,c"))
+    val csv = CsvSource.read(spark, cdir, StructType(Seq(
+      StructField("id", LongType, true), StructField("text", StringType, true))))
+    assert(CsvSource.stats(csv) === ((2L, 1L)))
+    assert(cacheManager.isEmpty, "CsvSource.stats left a cached plan behind")
+    // a frame the caller cached stays cached
+    val kept = json.cache()
+    try {
+      assert(JsonlSource.stats(kept) === ((2L, 2L)))
+      assert(kept.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally kept.unpersist()
+  }
 }

@@ -6,9 +6,10 @@ import graft.operators.Snapshots
 
 /** Format 2.3 per-ROW-GROUP manifest statistics (`#stat3`): recorded
   * at staging for multi-row-group files only, consumed by the box
-  * scan to read surviving BYTE RANGES instead of whole files — the
-  * decision entirely manifest-side (no footer opens at planning),
-  * the answers identical to the full filter. */
+  * scan to DROP a file none of whose row groups can satisfy the whole
+  * predicate conjunction — the decision entirely manifest-side (no
+  * footer opens at planning), the answers identical to the full
+  * filter. */
 class RowGroupStatsSpec extends SparkSuite {
 
   import spark.implicits._
@@ -23,15 +24,13 @@ class RowGroupStatsSpec extends SparkSuite {
     col("id").as("key"), (col("id") * 31L).as("payload"),
     lit(0L).as("bucket"))
 
-  test("a MID-FILE range that file-level stats cannot prune reads ONLY " +
-    "the surviving row groups: #stat3 recorded at staging (multi-group " +
-    "files only), the range decision is manifest-only, consecutive " +
-    "survivors merge into one byte range, and the scan equals the full " +
-    "filter bit-for-bit") {
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSet
+
+  test("a MID-FILE range that file-level stats cannot prune: #stat3 " +
+    "recorded at staging (multi-group files only), the file kept by the " +
+    "row-group decision, and the box scan equals the full filter") {
     val dir = tmpDir("mid")
-    // the range-read EXECUTION is conf-gated (the decision is not) —
-    // this case pins the execution path end to end
-    spark.conf.set(Snapshots.RgScanKey, "true")
     // ONE bucket -> ONE file; tiny blocks -> many row groups over the
     // sorted key; 'key' declared as a stats column so stat2+stat3 record
     Snapshots.publish(fixture, dir, "bucket", Seq("key"),
@@ -42,49 +41,46 @@ class RowGroupStatsSpec extends SparkSuite {
     assert(rgLines.size >= 4,
       s"64KB blocks over 20k sorted rows must yield several row groups " +
         s"(got ${rgLines.size})")
-    // file-level stats CANNOT prune an interior range (the one file
-    // covers [0, 20000)) — the row-group refinement can
-    val (whole, partial) =
-      Snapshots.prunedRangesBox(spark, dir, 1L, Seq(("key", 5000L, 6000L)))
-    assert(whole.isEmpty && partial.size === 1,
-      s"the single file must go PARTIAL, got whole=$whole partial=$partial")
-    val ranges = partial.head._2
-    val fileBytes = new java.io.File(s"$dir/${partial.head._1}").length()
-    val rangeBytes = ranges.map(_._2).sum
-    assert(rangeBytes < fileBytes / 2,
-      s"a 5% key range over sorted data must skip most bytes " +
-        s"($rangeBytes of $fileBytes survive)")
-    assert(ranges.size === 1,
-      s"consecutive surviving row groups merge into ONE range: $ranges")
-    // identical answers
+    // the one file covers [0, 20000) and a row group covers the range
+    assert(Snapshots.prunedFilesBoxRg(spark, dir, 1L,
+      Seq(("key", 5000L, 6000L))).size === 1)
     val pruned = Snapshots.prunedScanAtBox(spark, dir, 1L,
       Seq(("key", 5000L, 6000L)))
     val full = Snapshots.read(spark, dir)
       .filter(col("key") >= 5000L && col("key") < 6000L)
-    assert(pruned.collect().map(_.toSeq).toSet ===
-      full.collect().map(_.toSeq).toSet)
+    assert(rows(pruned) === rows(full))
     assert(pruned.count() === 1000L)
-    // a range past every row group drops the file entirely — finer
-    // than file-level... which would drop it too; the interesting
-    // finer case: a range covering only the LAST row group
+    // a range covering only the LAST row group
     val lastLo = 19990L
-    val (w2, p2) =
-      Snapshots.prunedRangesBox(spark, dir, 1L, Seq(("key", lastLo, 99999L)))
-    assert(w2.isEmpty && p2.size === 1 && p2.head._2.size === 1)
     assert(Snapshots.prunedScanAtBox(spark, dir, 1L,
       Seq(("key", lastLo, 99999L))).count() === 20000L - lastLo)
-    // default (conf off): same answers through the vectorized
-    // whole-file read — Spark's own task-side pruning covers the skip
-    spark.conf.unset(Snapshots.RgScanKey)
-    assert(Snapshots.prunedScanAtBox(spark, dir, 1L,
-      Seq(("key", 5000L, 6000L))).count() === 1000L)
+  }
+
+  test("a two-predicate box that no single row group satisfies drops the " +
+    "file the file-level stats keep, and the scan still equals the full " +
+    "filter") {
+    val dir = tmpDir("box2")
+    Snapshots.publish(fixture, dir, "bucket", Seq("key"),
+      blockSize = 64L * 1024, numTasks = 1,
+      statsCols = Seq("key", "payload"))
+    // low keys live in the first row groups, high payloads (31 * key)
+    // in the last ones: the file's own min/max windows overlap both
+    val box = Seq(("key", 0L, 1000L), ("payload", 31L * 19000, 31L * 20000))
+    assert(Snapshots.prunedFilesBox(spark, dir, 1L, box).size === 1,
+      "file-level stats keep the one file")
+    assert(Snapshots.prunedFilesBoxRg(spark, dir, 1L, box).isEmpty,
+      "no row group satisfies both predicates: the file drops")
+    val scan = Snapshots.prunedScanAtBox(spark, dir, 1L, box)
+    val full = Snapshots.read(spark, dir).filter(
+      col("key") >= 0L && col("key") < 1000L &&
+        col("payload") >= 31L * 19000 && col("payload") < 31L * 20000)
+    assert(scan.count() === 0L)
+    assert(rows(scan) === rows(full))
   }
 
   test("degrades conservatively: single-row-group files record NO #stat3 " +
-    "lines and read whole; a DV-bearing file reads whole (positions are " +
-    "whole-file row indices) with the deletes applied; a RENAMED column " +
-    "still prunes (stats are physical-keyed) and the range read maps " +
-    "names") {
+    "lines and read whole; a DV-bearing file answers with the deletes " +
+    "applied; a RENAMED column's #stat3 lines resolve through the colmap") {
     val dir = tmpDir("degrade")
     // big blocks -> one row group per file -> no stat3 lines at all
     Snapshots.publish(fixture, dir, "bucket", Seq("key"),
@@ -96,37 +92,36 @@ class RowGroupStatsSpec extends SparkSuite {
     assert(Snapshots.prunedScanAtBox(spark, dir, 1L,
       Seq(("key", 5000L, 6000L))).count() === 1000L)
 
-    spark.conf.set(Snapshots.RgScanKey, "true")
     val dir2 = tmpDir("dv")
     Snapshots.publish(fixture, dir2, "bucket", Seq("key"),
       blockSize = 64L * 1024, numTasks = 1, statsCols = Seq("key"))
-    // kill some keys INSIDE the probed range — the DV file must read
-    // whole (conservative) and the scan must still subtract them
+    // kill some keys INSIDE the probed range — the scan must subtract them
     val v2 = Snapshots.deleteVectored(
       fixture.filter(col("key") % 100 === 7).select("key", "bucket"),
       dir2, "bucket", Seq("key"))
-    val (w3, p3) =
-      Snapshots.prunedRangesBox(spark, dir2, v2, Seq(("key", 5000L, 6000L)))
-    assert(p3.isEmpty && w3.size === 1,
-      "a DV-bearing file degrades to the whole-file read")
-    assert(Snapshots.prunedScanAtBox(spark, dir2, v2,
-      Seq(("key", 5000L, 6000L))).count() === 1000L - 10L)
+    val dvScan = Snapshots.prunedScanAtBox(spark, dir2, v2,
+      Seq(("key", 5000L, 6000L)))
+    assert(dvScan.count() === 1000L - 10L)
+    assert(rows(dvScan) === rows(Snapshots.readAt(spark, dir2, v2)
+      .filter(col("key") >= 5000L && col("key") < 6000L)))
 
     // rename: the logical name prunes through the physical-keyed stats
     val dir3 = tmpDir("ren")
     Snapshots.publish(fixture, dir3, "bucket", Seq("key"),
       blockSize = 64L * 1024, numTasks = 1, statsCols = Seq("key"))
     val v3 = Snapshots.rename(spark, dir3, "key", "k2")
-    val (w4, p4) =
-      Snapshots.prunedRangesBox(spark, dir3, v3, Seq(("k2", 5000L, 6000L)))
-    assert(w4.isEmpty && p4.size === 1,
+    // two windows the one file spans but no one row group does: only
+    // the renamed column's #stat3 lines can drop the file
+    val apart = Seq(("k2", 1000L, 2000L), ("k2", 15000L, 16000L))
+    assert(Snapshots.prunedFilesBox(spark, dir3, v3, apart).size === 1)
+    assert(Snapshots.prunedFilesBoxRg(spark, dir3, v3, apart).isEmpty,
       "the renamed column's stat3 lines resolve via the colmap")
+    assert(Snapshots.prunedScanAtBox(spark, dir3, v3, apart).count() === 0L)
     val scan = Snapshots.prunedScanAtBox(spark, dir3, v3,
       Seq(("k2", 5000L, 6000L)))
     assert(scan.columns.contains("k2") && scan.count() === 1000L)
     assert(scan.agg(sum("payload")).head().getLong(0) ===
       (5000L until 6000L).map(_ * 31L).sum)
-    spark.conf.unset(Snapshots.RgScanKey)
   }
 
   test("#stat3 lines CARRY like their #stat2 siblings: a merge keeps the " +
@@ -191,12 +186,8 @@ class RowGroupStatsSpec extends SparkSuite {
     // the regression: a predicate matching ONLY rows in the poisoned
     // block — with partial #stat3 recorded, every RECORDED block fails
     // and the file would DROP, silently losing these rows
-    for (exec <- Seq(true, false)) {
-      spark.conf.set(Snapshots.RgScanKey, exec.toString)
-      try assert(Snapshots.prunedScanAtBox(spark, dir, 1L,
-          Seq(("dval", 15001.0, 15010.0))).count() === 9L,
-        s"rows beside the NaN must survive the box scan (exec=$exec)")
-      finally spark.conf.unset(Snapshots.RgScanKey)
-    }
+    assert(Snapshots.prunedScanAtBox(spark, dir, 1L,
+        Seq(("dval", 15001.0, 15010.0))).count() === 9L,
+      "rows beside the NaN must survive the box scan")
   }
 }
