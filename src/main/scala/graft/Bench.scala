@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
@@ -8,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * query set, reported three ways — per-query min across rounds (the
   * headline `queries` map and `value` total), per-round totals with
   * per-query times (`runs`), and the system load average at start and
-  * end (`load_avg`). Whole rounds rather than back-to-back repeats,
+  * end (`load_avg`); per query, the max GC wall across rounds
+  * (`gc_ms_max`) and the generated classes Spark compiled in the last
+  * round (`codegen_last`). Whole rounds rather than back-to-back repeats,
   * so one noisy-neighbor contention window poisons at most one
   * round's totals and stays VISIBLE in `runs` instead of silently
   * inflating the headline: this host has measured 43 s and 129 s
@@ -49,10 +52,16 @@ object Bench {
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     val gcPer = new scala.collection.mutable.HashMap[String, Long]()
+    // per query, the generated classes Spark compiled (code-cache
+    // misses) during it, overwritten each round: a warm query whose
+    // plan bakes per-call literals into its code still compiles here
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val codegenLast = new scala.collection.mutable.HashMap[String, Long]()
     // a failed query must be visible, not report a plausible time
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
       val g0 = gcMillis
+      val c0 = compiles
       try {
         SparkEntry.queries(name)(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
@@ -65,6 +74,7 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1.0
       }
+      finally codegenLast(name) = compiles - c0
     }
     val runs: Seq[Map[String, Double]] =
       (1 to nRuns).map(_ => names.map(n => n -> timeOne(n)).toMap)
@@ -82,12 +92,13 @@ object Bench {
     // a failed query must invalidate the headline, not silently
     // shrink it by its -1.0 sentinel (the per-round total convention)
     val total = if (minPer.values.exists(_ < 0)) -1.0 else minPer.values.sum
-    val gcJson = names.map(n =>
-      s"\"" + n + "\":" + gcPer.getOrElse(n, 0L)).mkString("{", ",", "}")
+    def perQuery(m: collection.Map[String, Long]): String =
+      names.map(n => s"\"" + n + "\":" + m.getOrElse(n, 0L)).mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${qJson(minPer)},""" +
         s""""names_sha":"${namesSha(names)}",""" +
-        s""""runs":$runsJson,"gc_ms_max":$gcJson,"n_runs":$nRuns,""" +
+        s""""runs":$runsJson,"gc_ms_max":${perQuery(gcPer)},""" +
+        s""""codegen_last":${perQuery(codegenLast)},"n_runs":$nRuns,""" +
         s""""load_avg":[$loadStart,$loadEnd],"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes("UTF-8"))
@@ -114,7 +125,8 @@ object Bench {
     * min-per-query times as an integer-ms ARRAY in sorted-name order
     * (-1 = failed; capped at [[MsCap]]). `value` is the sum of the
     * printed ms, or -1 when any query failed. The named map, every
-    * round and `gc_ms_max` stay in the artifact file only. */
+    * round, `gc_ms_max` and `codegen_last` stay in the artifact file
+    * only. */
   def stdoutLine(sortedNames: Seq[String], minPer: Map[String, Double],
                  nRuns: Int, sfDir: String): String = {
     val ms = sortedNames.map { n =>

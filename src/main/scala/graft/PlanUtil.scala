@@ -9,8 +9,8 @@ object PlanUtil {
     * inherited statistics.
     *
     * `localCheckpoint()` truncates lineage but PRESERVES the origin
-    * plan's estimated statistics. In an iterative loop (Dorling force
-    * steps, connected-components rounds) iteration k+1's join plan
+    * plan's estimated statistics. In an iterative loop (connected-
+    * components rounds, WordPiece merges) iteration k+1's join plan
     * multiplies iteration k's inherited sizeInBytes estimates, so the
     * estimate's BigInt WIDTH grows geometrically with the iteration
     * count and driver-side planning stalls inside BigInteger

@@ -22,11 +22,12 @@ import graft.geom.{Geom, Ops, Wkt}
   * thousand rows — and on those every Spark stage is pure overhead:
   * the grid runs 4 jobs and 9 stages on 64 or 256 regions, while the
   * driver test is O(n^2) cheap bbox comparisons plus the exact
-  * geometry test on bbox-intersecting pairs only. 2000 is the
-  * crossover `Dorling.run`'s driver-side Jacobi loop measured (it
-  * loses to the distributed step at 10k regions); one constant keeps
-  * a whole Dorling call on one side of it. Both sides apply the same
-  * pair rule, so their rows, weights and schema are bit-equal:
+  * geometry test on bbox-intersecting pairs only. 2000 is below the
+  * crossover of `Dorling.run`'s driver-side Jacobi loop (it loses to
+  * the distributed step at 10k regions, 18.5 s vs 14.3 s for 3
+  * iterations); one constant keeps a whole Dorling call on one side
+  * of it. Both sides apply the same pair rule, so their rows, weights
+  * and schema are bit-equal:
   * null ids drop out; a pair is kept as (lo, hi) under the `<` Spark
   * evaluates for the id type (byte order for strings); the bboxes
   * intersect, boundaries included; `Ops.touches(lo, hi)` holds; the
@@ -85,10 +86,15 @@ object Borders {
   }
 
   /** The rows of `df` when it has at most `n` of them (`n <= 0`: never).
-    * Counts at most n + 1 rows first, so a large input never ships its
-    * rows to the driver; `n = Int.MaxValue` admits every input. */
+    * Counts at most n + 1 rows per partition first, so a large input
+    * never ships its rows to the driver; `n = Int.MaxValue` admits
+    * every input. The count is not `limit(n + 1).count()`: Spark names
+    * each limit's counter uniquely in its generated code, so that plan
+    * compiles anew on every call. */
   private[operators] def collectIfSmall(df: DataFrame, n: Int): Option[Array[Row]] =
-    if (n > 0 && (n == Int.MaxValue || df.limit(n + 1).count() <= n)) Some(df.collect())
+    if (n > 0 && (n == Int.MaxValue ||
+        df.queryExecution.toRdd.mapPartitions(it => Iterator(it.take(n + 1).size)).fold(0)(_ + _) <= n))
+      Some(df.collect())
     else None
 
   /** Ids as the catalyst values Spark's comparisons read (null stays null). */

@@ -1,9 +1,16 @@
 package graft.operators
 
+import java.math.{BigDecimal => Dec}
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.GeoFunctions._
 import graft.geom.{Ops, Pt, Wkt}
@@ -14,6 +21,8 @@ import graft.geom.{Ops, Pt, Wkt}
   *   k = sum(centroid distance over directed pairs)
   *     / sum(sqrt(Vf/pi) + sqrt(Vn/pi) over directed pairs)
   *   r_i = sqrt(V_i/pi) * k,  widest = max r_i.
+  * Without a Queen pair (islands only) k is undefined, and every entry
+  * refuses the map with an IllegalArgumentException.
   *
   * Force model per iteration (cartogram.py:352-402): every region
   * looks at regions within `widest + r_focal`; overlapping circles
@@ -24,55 +33,35 @@ import graft.geom.{Ops, Pt, Wkt}
   *
   * DELIBERATE DEVIATION: the reference applies updates region-by-region
   * inside one iteration (Gauss-Seidel — inherently sequential, cannot
-  * scale past one core). This implementation computes all forces from
-  * the previous iteration's positions and applies them simultaneously
-  * (Jacobi). Same fixed points, order-independent, embarrassingly
-  * parallel; convergence is asserted in DorlingSpec rather than
-  * per-step equality with the reference.
+  * scale past one core). [[run]] computes all forces from the previous
+  * iteration's positions and applies them simultaneously (Jacobi). Same
+  * fixed points, order-independent, embarrassingly parallel.
   *
-  * Scale design: the per-iteration neighbour search is a grid-binned
-  * self-join (cell = 2*widest, 3x3 probe), so each iteration is one
-  * shuffle of O(n) small rows — no O(n^2) pair matrix. Radii/borders
-  * are computed once up front. Deterministic decimal summation keeps
-  * k bit-identical at any parallelism. Lineage is cut per iteration
-  * with localCheckpoint (the standard Spark iterative-algorithm
-  * pattern, cf. GraphX Pregel).
+  * Design: one force kernel ([[Forces]]) serves every path. The driver
+  * loop ([[jacobi]]) runs it per region over all others; the
+  * distributed step runs it per grid cell (cell = 2*widest, 3x3
+  * probe): one shuffle of O(n) small rows and one checkpoint per
+  * iteration, no O(n^2) pair matrix, and no generated code that
+  * depends on k, widest, ratio or friction, so a warm call compiles
+  * nothing. k, widest and the border weights take one job up front.
+  * Exact decimal sums keep k and the per-focal forces bit-identical
+  * at any parallelism.
   */
 object Dorling {
 
   /** Compute per-region radii + the scale coefficient k (exposed
     * separately for q23's oracle check).
     * @param precomputedBorders Borders.compute output to reuse; when
-    *        absent it is computed here. Callers that also need the
-    *        borders (run/runSequential) pass it in so the spatial
-    *        self-join — the most expensive stage — runs exactly once.
+    *        absent it is computed here (q24 passes the borders it
+    *        also steps with).
     * @return (regions: id, value, x, y, perimeter, radius ; k)
     */
   def radii(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
             precomputedBorders: Option[DataFrame] = None): (DataFrame, Double) = {
     val regions = measured(project(df, idCol, valueCol, geomCol))
-
     val borders = precomputedBorders.getOrElse(Borders.compute(df, idCol, geomCol))
-
-    val f = regions.select(col("id").as("focal_id"), col("x").as("fx"),
-      col("y").as("fy"), col("value").as("fv"))
-    val n = regions.select(col("id").as("neighbor_id"), col("x").as("nx"),
-      col("y").as("ny"), col("value").as("nv"))
-
-    // Exact decimal sums => order-independent, deterministic at any
-    // parallelism (SURVEY.md §4).
-    val dec = DecimalType(30, 10)
-    val Array(row) = borders.join(f, "focal_id").join(n, "neighbor_id")
-      .select(
-        sqrt((col("nx") - col("fx")) * (col("nx") - col("fx")) +
-             (col("ny") - col("fy")) * (col("ny") - col("fy"))).as("dist"),
-        (sqrt(col("fv") / math.Pi) + sqrt(col("nv") / math.Pi)).as("rsum"))
-      .agg(sum(col("dist").cast(dec)).cast("double").as("d"),
-           sum(col("rsum").cast(dec)).cast("double").as("r"))
-      .collect()
-    val k = row.getDouble(0) / row.getDouble(1)
-
-    (withRadius(regions, k), k)
+    val k = attach(unscaled(regions), borders).map(_._2).fold(Scale.Zero)(_ + _).k
+    (regions.withColumn("radius", sqrt(col("value") / math.Pi) * lit(k)).drop("geom"), k)
   }
 
   /** (id, value as double, geom): the columns every Dorling path reads. */
@@ -84,175 +73,40 @@ object Dorling {
     .withColumn("y", st_centroid_y(col("geom")))
     .withColumn("perimeter", st_perimeter(col("geom")))
 
-  private def withRadius(regions: DataFrame, k: Double): DataFrame =
-    regions.withColumn("radius", sqrt(col("value") / math.Pi) * lit(k)).drop("geom")
+  /** The step's columns before k is known. */
+  private def unscaled(regions: DataFrame): DataFrame =
+    regions.withColumn("radius", lit(null).cast(DoubleType))
 
-  private def circles(pos: DataFrame, quadsegs: Int): DataFrame =
-    pos.withColumn("geometry", st_buffer_point(col("x"), col("y"), col("radius"), lit(quadsegs)))
-      .select("id", "value", "radius", "x", "y", "geometry")
+  /** The step's columns, in order, and the indices the kernel reads. */
+  private val Layout = Seq("id", "value", "x", "y", "perimeter", "radius")
+  private val V = 1; private val X = 2; private val Y = 3; private val P = 4; private val R = 5
 
   /** One Jacobi iteration of the force model over (id, value, x, y,
-    * perimeter, radius). Exposed for q24 and the spec. */
+    * perimeter, radius). Rows that share an id pool their forces and
+    * each moves by the pool. Exposed for q24 and the spec. */
   def step(pos: DataFrame, borders: DataFrame, widest: Double,
            ratio: Double, friction: Double): DataFrame = {
-    val cs = math.max(2.0 * widest, 1e-12)
-
-    // focal side probes its 3x3 cell neighbourhood; neighbour side
-    // sits in its own cell => each (focal, nb) candidate appears once.
-    val probes = pos
-      .withColumn("dcell", explode(array((-1 to 1).flatMap(i => (-1 to 1).map(j =>
-        struct(lit(i.toLong).as("x"), lit(j.toLong).as("y")))): _*)))
-      .select(col("id").as("f_id"), col("x").as("fx"), col("y").as("fy"),
-        col("radius").as("f_radius"), col("perimeter").as("f_perimeter"),
-        struct((floor(col("x") / cs) + col("dcell.x")).as("x"),
-               (floor(col("y") / cs) + col("dcell.y")).as("y")).as("cell"))
-    val targets = pos.select(col("id").as("n_id"), col("x").as("nx"), col("y").as("ny"),
-      col("radius").as("n_radius"),
-      struct(floor(col("x") / cs).as("x"), floor(col("y") / cs).as("y")).as("cell"))
-
-    val cand = probes.join(targets, Seq("cell"))
-      .filter(col("f_id") =!= col("n_id"))
-      .withColumn("dist", sqrt((col("nx") - col("fx")) * (col("nx") - col("fx")) +
-                               (col("ny") - col("fy")) * (col("ny") - col("fy"))))
-      // reference cartogram.py:357: 0 < dist < widest + r_focal
-      .filter(col("dist") > 0 && col("dist") < lit(widest) + col("f_radius"))
-
-    val bw = borders.select(col("focal_id").as("f_id"), col("neighbor_id").as("n_id"),
-      col("weight"))
-
-    val contribs = cand.join(bw, Seq("f_id", "n_id"), "left")
-      .withColumn("overlap", col("n_radius") + col("f_radius") - col("dist"))
-      .withColumn("dx", col("nx") - col("fx"))
-      .withColumn("dy", col("ny") - col("fy"))
-      // _attract (cartogram.py:126): border pairs rescale overlap to
-      // |overlap| * weight / focal_perimeter; others keep raw overlap
-      .withColumn("a_overlap",
-        when(col("weight").isNotNull, abs(col("overlap")) * col("weight") / col("f_perimeter"))
-          .otherwise(col("overlap")))
-      .groupBy(col("f_id"))
-      .agg(
-        // exact decimal sums: per-focal force totals are identical at
-        // any parallelism (and SQL-oracle-checkable — q24)
-        sum(when(col("overlap") > 0, -col("overlap") * col("dx") / col("dist")).otherwise(0.0)
-          .cast(DecimalType(30, 12))).cast("double").as("xrepel"),
-        sum(when(col("overlap") > 0, -col("overlap") * col("dy") / col("dist")).otherwise(0.0)
-          .cast(DecimalType(30, 12))).cast("double").as("yrepel"),
-        sum(when(col("overlap") <= 0, col("a_overlap") * col("dx") / col("dist")).otherwise(0.0)
-          .cast(DecimalType(30, 12))).cast("double").as("xattract"),
-        sum(when(col("overlap") <= 0, col("a_overlap") * col("dy") / col("dist")).otherwise(0.0)
-          .cast(DecimalType(30, 12))).cast("double").as("yattract"),
-        min(col("dist")).as("min_dist"))
-
-    val joined = pos.join(contribs, pos("id") === contribs("f_id"), "left")
-      .withColumn("xrepel", coalesce(col("xrepel"), lit(0.0)))
-      .withColumn("yrepel", coalesce(col("yrepel"), lit(0.0)))
-      .withColumn("xattract", coalesce(col("xattract"), lit(0.0)))
-      .withColumn("yattract", coalesce(col("yattract"), lit(0.0)))
-      // cartogram.py:364: closest = min(widest, nearest neighbour)
-      .withColumn("closest", least(lit(widest), coalesce(col("min_dist"), lit(widest))))
-
-    // cartogram.py:377-397 vector blend, verbatim formulas
-    val attractDist = sqrt(col("xattract") * col("xattract") + col("yattract") * col("yattract"))
-    val repelDist0 = sqrt(col("xrepel") * col("xrepel") + col("yrepel") * col("yrepel"))
-    val scaled = joined
-      .withColumn("attract_dist", attractDist)
-      .withColumn("repel_dist0", repelDist0)
-      .withColumn("xrepel_s", when(col("repel_dist0") > col("closest"),
-        col("closest") * col("xrepel") / (col("repel_dist0") + 1.0)).otherwise(col("xrepel")))
-      .withColumn("yrepel_s", when(col("repel_dist0") > col("closest"),
-        col("closest") * col("yrepel") / (col("repel_dist0") + 1.0)).otherwise(col("yrepel")))
-      .withColumn("repel_dist", least(col("repel_dist0"), col("closest")))
-      .withColumn("xattract_s", when(col("repel_dist") <= 0 && col("attract_dist") > col("closest"),
-        col("closest") * col("xattract") / (col("attract_dist") + 1.0)).otherwise(col("xattract")))
-      .withColumn("yattract_s", when(col("repel_dist") <= 0 && col("attract_dist") > col("closest"),
-        col("closest") * col("yattract") / (col("attract_dist") + 1.0)).otherwise(col("yattract")))
-      .withColumn("xtotal", when(col("repel_dist") > 0,
-          (lit(1.0) - ratio) * col("xrepel_s") +
-          lit(ratio) * (col("repel_dist") * col("xattract") / (col("attract_dist") + 1.0)))
-        .otherwise(col("xattract_s")))
-      .withColumn("ytotal", when(col("repel_dist") > 0,
-          (lit(1.0) - ratio) * col("yrepel_s") +
-          lit(ratio) * (col("repel_dist") * col("yattract") / (col("attract_dist") + 1.0)))
-        .otherwise(col("yattract_s")))
-
-    scaled.select(
-      pos("id"), col("value"), col("perimeter"), col("radius"),
-      (pos("x") + lit(friction) * col("xtotal")).as("x"),
-      (pos("y") + lit(friction) * col("ytotal")).as("y"))
-      .select("id", "value", "x", "y", "perimeter", "radius")
+    val in = pos.select(Layout.map(col): _*)
+    val out = iterate(attach(in, borders).map(_._1), widest, ratio, friction, pool = true)
+    pos.sparkSession.createDataFrame(out.map(_.row), StructType(in.schema.map(f =>
+      if (f.name == "x" || f.name == "y") f.copy(nullable = true) else f)))
   }
 
-  /** Reference-exact sequential Dorling (Gauss-Seidel: each region
-    * moves immediately, later regions in the SAME iteration see the
-    * move — reference cartogram.py:352-402 verbatim, including the
-    * attract-overlap rescale quirk for border pairs). Driver-side on
-    * collected rows: the parity/debug path for small input, NOT the
-    * scale path (that's [[run]]).
+  /** Sequential Dorling, as the reference iterates (Gauss-Seidel: each
+    * region moves immediately, later regions in the SAME iteration see
+    * the move), with [[run]]'s force kernel, on the driver: a parity and
+    * debug path for the inputs [[run]]'s driver path takes.
     * @return id, value, radius, x, y (final circle centers)
     */
   def runSequential(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
                     iterations: Int = 100, ratio: Double = 0.4,
                     friction: Double = 0.5): Seq[(String, Double, Double, Double, Double)] = {
-    val bordersDf = Borders.compute(df, idCol, geomCol).localCheckpoint()
-    val (regionsDf, _) = radii(df, idCol, valueCol, geomCol, Some(bordersDf))
-    val borders = bordersDf
-      .collect().map(r => (r.get(0).toString, r.get(1).toString) -> r.getDouble(2)).toMap
-    val rows = regionsDf.orderBy(col("id")).collect()
-    val ids = rows.map(_.get(0).toString)
-    val value = rows.map(_.getAs[Double]("value"))
-    val per = rows.map(_.getAs[Double]("perimeter"))
-    val radius = rows.map(_.getAs[Double]("radius"))
-    val x = rows.map(_.getAs[Double]("x")).clone()
-    val y = rows.map(_.getAs[Double]("y")).clone()
-    val n = ids.length
-    val widest = radius.max
-
-    for (_ <- 0 until iterations; idx <- 0 until n) {
-      var xrepel = 0.0; var yrepel = 0.0; var xattract = 0.0; var yattract = 0.0
-      var closest = widest
-      // neighbours: 0 < dist < widest + r_focal (cartogram.py:357)
-      val nbs = (0 until n).filter { j =>
-        if (j == idx) false else {
-          val d = math.sqrt((x(j) - x(idx)) * (x(j) - x(idx)) + (y(j) - y(idx)) * (y(j) - y(idx)))
-          d > 0 && d < widest + radius(idx)
-        }
-      }
-      nbs.foreach { j =>
-        val dist = math.sqrt((x(j) - x(idx)) * (x(j) - x(idx)) + (y(j) - y(idx)) * (y(j) - y(idx)))
-        if (dist < closest) closest = dist
-        val overlap = radius(j) + radius(idx) - dist
-        val dx = x(j) - x(idx); val dy = y(j) - y(idx)
-        if (overlap > 0.0) {                       // _repel (cartogram.py:35)
-          xrepel -= overlap * dx / dist
-          yrepel -= overlap * dy / dist
-        } else {                                   // _attract (cartogram.py:80)
-          val ov = borders.get((ids(idx), ids(j)))
-            .map(w => math.abs(overlap) * w / per(idx)).getOrElse(overlap)
-          xattract += ov * dx / dist
-          yattract += ov * dy / dist
-        }
-      }
-      val attractDist = math.sqrt(xattract * xattract + yattract * yattract)
-      var repelDist = math.sqrt(xrepel * xrepel + yrepel * yrepel)
-      if (repelDist > closest) {                   // cartogram.py:381
-        xrepel = closest * xrepel / (repelDist + 1.0)
-        yrepel = closest * yrepel / (repelDist + 1.0)
-        repelDist = closest
-      }
-      val (xt, yt) =
-        if (repelDist > 0) (
-          (1.0 - ratio) * xrepel + ratio * (repelDist * xattract / (attractDist + 1.0)),
-          (1.0 - ratio) * yrepel + ratio * (repelDist * yattract / (attractDist + 1.0)))
-        else {
-          if (attractDist > closest) (
-            closest * xattract / (attractDist + 1.0),
-            closest * yattract / (attractDist + 1.0))
-          else (xattract, yattract)
-        }
-      x(idx) += friction * xt                      // cartogram.py:397-400
-      y(idx) += friction * yt
-    }
-    (0 until n).map(i => (ids(i), value(i), radius(i), x(i), y(i)))
+    val input = project(df, idCol, valueCol, geomCol)
+    val m = local(input.collect(), input.schema("id").dataType).getOrElse(
+      throw new IllegalArgumentException("Dorling.runSequential takes unique non-null ids, " +
+        "values and geometries with at least one Queen-contiguous pair"))
+    val (x, y) = jacobi(m, iterations, ratio, friction, sequential = true)
+    m.ids.indices.map(i => (m.ids(i).toString, m.value(i), m.radius(i), x(i), y(i)))
   }
 
   /** Full Dorling run.
@@ -264,29 +118,27 @@ object Dorling {
     * ([[Borders.queenPairs]]), centroids and perimeters, k, radii,
     * widest and the Jacobi loop ([[jacobi]]) all run on the driver and
     * the result is one local DataFrame: the size check and the collect
-    * are its only Spark jobs (2 on a 64-region map, where the
-    * distributed path at 1 iteration runs 20). Larger inputs (or
+    * are its only Spark jobs (at most 2 on a 64-region map, where the
+    * distributed path at 1 iteration runs 8). Larger inputs (or
     * smallN = 0) take the distributed path: the leveled-grid borders
-    * ([[Borders.grid]]), radii's decimal aggregate, and one
-    * checkpointed [[step]] per iteration. The default crossover is
-    * measured: the driver loop is O(n^2) per iteration and at 10k
-    * regions (tools/ScaleStress) it already loses to the grid-binned
-    * distributed step (10.7 s vs 7.9 s for 3 iterations); at hundreds
-    * of regions it wins by the full per-iteration job-launch cost.
-    * Inputs the driver path cannot reproduce exactly — a null id,
-    * value or geometry, a repeated id, or no Queen pair at all — take
-    * the distributed path whatever their size.
+    * ([[Borders.grid]]), one job for k, widest and the border weights,
+    * and one job per iteration. The default crossover is measured: the
+    * driver loop is O(n^2) per iteration and at 10k regions
+    * (tools/ScaleStress geo, 4 vCPUs) it loses to the distributed step
+    * (18.5 s vs 14.3 s for 3 iterations); at hundreds of regions it
+    * wins by the per-iteration job-launch cost. Inputs the driver path
+    * declines take the distributed path whatever their size: a null
+    * value keeps a null radius and circle and its region at its
+    * centroid; the rows of a repeated id pool their forces and each
+    * moves by the pool; a null id has no neighbours; a map without a
+    * Queen pair is refused.
     *
-    * PARITY ACROSS PATHS: k uses radii's scale-10 HALF_UP decimal sums;
-    * both paths accumulate per-focal force sums in scale-12 decimal
-    * (the distributed step via its decimal aggregate, the driver loop
-    * by rounding each double contribution to the same scale and adding
-    * exactly), and every other operation is the identical per-row IEEE
-    * expression — so run() output is BIT-EQUAL across the smallN
-    * dispatch at any iteration count, in settling and chaotic regimes
-    * alike, with the same schema (CartogramParitySpec; the
-    * never-settling all-contact fixture is the case where any
-    * accumulation-order difference would compound).
+    * PARITY ACROSS PATHS: both paths take k from the same scale-10
+    * decimal sums and every force from [[Forces]], so run() output is
+    * BIT-EQUAL across the smallN dispatch at any iteration count, in
+    * settling and chaotic regimes alike, with the same schema
+    * (CartogramParitySpec; its never-settling all-contact fixture is
+    * where any accumulation-order difference would compound).
     *
     * @param df (idCol, valueCol, geomCol WKT)
     * @return id, value, radius, x, y, geometry (circle WKT)
@@ -299,16 +151,9 @@ object Dorling {
       .flatMap(rows => local(rows, input.schema("id").dataType))
       .map { m =>
         val (x, y) = jacobi(m, iterations, ratio, friction)
-        val out = m.ids.indices.map(i => Row(m.ids(i), m.value(i), m.radius(i), x(i), y(i),
-          Wkt.write(Ops.bufferPoint(Pt(x(i), y(i)), m.radius(i), quadsegs))))
-        // the distributed path's schema, nullability included, from its
-        // own plan (analysis only: no job runs)
-        val pos0 = withRadius(measured(input), 1.0)
-          .select("id", "value", "x", "y", "perimeter", "radius")
-        val pos = if (iterations <= 0) pos0 else step(pos0,
-          pos0.select(col("id").as("focal_id"), col("id").as("neighbor_id"), lit(0.0).as("weight")),
-          1.0, ratio, friction)
-        df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), circles(pos, quadsegs).schema)
+        val out = m.ids.indices.map(i => circle(m.ids(i), m.value(i), m.radius(i), x(i), y(i), quadsegs))
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+          circleSchema(measured(input), iterations > 0))
       }
       .getOrElse(distributed(df, idCol, valueCol, geomCol, iterations, ratio, friction, quadsegs))
   }
@@ -316,26 +161,167 @@ object Dorling {
   private def distributed(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
                           iterations: Int, ratio: Double, friction: Double,
                           quadsegs: Int): DataFrame = {
-    // Materialize borders ONCE — its lineage holds the geometry
-    // spatial join, which would otherwise re-execute both inside
-    // radii's k-aggregate and inside every iteration's step join.
-    val borders = Borders.grid(df, idCol, geomCol).localCheckpoint()
-    val (regions0, _) = radii(df, idCol, valueCol, geomCol, Some(borders))
-    var pos = regions0.select("id", "value", "x", "y", "perimeter", "radius")
-      .localCheckpoint()
-    val widest = pos.agg(max(col("radius"))).collect()(0).getDouble(0)
-    // One checkpoint per iteration: a step embeds joins+aggregations,
-    // so chaining steps compounds shuffles into one oversized plan
-    // (measured 3x slower at cadence 4) — materialize each round.
-    // checkpointFlat, not bare localCheckpoint: inherited stats
-    // estimates compound geometrically across iterations and stall
-    // the planner past ~20 rounds (see PlanUtil.checkpointFlat).
-    var i = 0
-    while (i < iterations) {
-      pos = graft.PlanUtil.checkpointFlat(step(pos, borders, widest, ratio, friction))
-      i += 1
+    val regions = measured(project(df, idCol, valueCol, geomCol))
+    // one job: k, widest and the repeated ids; it materializes `attached`
+    val attached = checkpointed(attach(unscaled(regions), Borders.grid(df, idCol, geomCol)))
+    val scale = attached.map(_._2).fold(Scale.Zero)(_ + _)
+    val k = scale.k
+    // = max r_i: IEEE products with one k >= 0 keep their factors' order
+    val widest = scale.rootMax * k
+    var pos = attached.map { case (r, _) => r.copy(row = Row(r.row(0), r.row(V), r.row(X),
+      r.row(Y), r.row(P), if (r.row.isNullAt(V)) null else root(r.row.getDouble(V)) * k)) }
+    for (_ <- 0 until iterations) {
+      pos = checkpointed(iterate(pos, widest, ratio, friction, pool = scale.dups > 0))
+      pos.count()
     }
-    circles(pos, quadsegs)
+    df.sparkSession.createDataFrame(pos.map(r =>
+      circle(r.row(0), r.row(V), r.row(R), r.row(X), r.row(Y), quadsegs)), circleSchema(regions, iterations > 0))
+  }
+
+  /** `rdd` marked for a local checkpoint, its blocks kept serialized:
+    * deserialized blocks make Spark estimate their size by walking the
+    * cached objects, which costs more than computing them. */
+  private def checkpointed[T](rdd: RDD[T]): RDD[T] =
+    rdd.persist(StorageLevel.MEMORY_AND_DISK_SER).localCheckpoint()
+
+  /** A [[run]] output row; no circle where the radius or centre is null. */
+  private def circle(id: Any, value: Any, radius: Any, x: Any, y: Any, quadsegs: Int): Row =
+    Row(id, value, radius, x, y, (radius, x, y) match {
+      case (r: Double, cx: Double, cy: Double) => Wkt.write(Ops.bufferPoint(Pt(cx, cy), r, quadsegs))
+      case _ => null
+    })
+
+  /** [[run]]'s schema on both paths: x and y turn nullable once a step
+    * has run. */
+  private def circleSchema(regions: DataFrame, moved: Boolean): StructType = {
+    def xy(name: String) = regions.schema(name).copy(nullable = moved || regions.schema(name).nullable)
+    StructType(Seq(regions.schema("id"), regions.schema("value"),
+      StructField("radius", DoubleType), xy("x"), xy("y"), StructField("geometry", StringType)))
+  }
+
+  /** k's sums over directed Queen pairs (D: centroid distances, R:
+    * sqrt(Vf/pi) + sqrt(Vn/pi)), each term rounded HALF_UP to scale 10
+    * and added exactly, as Catalyst's decimal sum does (null before the
+    * first term); and, for the distributed prologue, the region rows,
+    * the largest sqrt(V/pi) and the rows whose id repeats. */
+  private final case class Scale(d: Dec, r: Dec, regions: Long, rootMax: Double, dups: Long) {
+    def +(o: Scale): Scale = Scale(plus(d, o.d), plus(r, o.r), regions + o.regions,
+      math.max(rootMax, o.rootMax), dups + o.dups)
+    def k: Double = {
+      if (d == null || r == null) throw new IllegalArgumentException("Dorling: k = D/R is " +
+        s"undefined without a Queen-contiguous pair of regions with values; these $regions regions have none")
+      d.doubleValue / r.doubleValue
+    }
+  }
+
+  private object Scale {
+    val Zero: Scale = Scale(null, null, 0, Double.NegativeInfinity, 0)
+    /** one directed pair's terms; a null input, read as NaN, adds none */
+    def pair(fx: Double, fy: Double, fv: Double, nx: Double, ny: Double, nv: Double): Scale =
+      Scale(term(distance(fx, fy, nx, ny), 10), term(root(fv) + root(nv), 10), 0, Double.NegativeInfinity, 0)
+  }
+
+  private def plus(a: Dec, b: Dec): Dec = if (a == null) b else if (b == null) a else a.add(b)
+
+  /** Double -> decimal exactly as Catalyst's cast to DecimalType(_, scale)
+    * does it: shortest-string BigDecimal (valueOf), then HALF_UP; null
+    * (no term) for a non-finite value. */
+  private def term(d: Double, scale: Int): Dec =
+    if (java.lang.Double.isFinite(d)) Dec.valueOf(d).setScale(scale, java.math.RoundingMode.HALF_UP)
+    else null
+
+  private def distance(fx: Double, fy: Double, nx: Double, ny: Double): Double =
+    math.sqrt((nx - fx) * (nx - fx) + (ny - fy) * (ny - fy))
+
+  private def root(v: Double): Double = math.sqrt(v / math.Pi)
+
+  /** A double column, NaN for null. */
+  private def num(row: Row, i: Int): Double = if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
+
+  /** A row in the step's columns between distributed iterations, its id
+    * as a hash key (a null key meets nothing), and one (neighbour key,
+    * weight) per Queen border row of its id. */
+  private final case class Region(row: Row, key: Any, weights: Array[(Any, Double)])
+
+  /** A region as the focals in its 3x3 cells see it. */
+  private final case class Candidate(key: Any, x: Double, y: Double, radius: Double)
+
+  private def keyOf(id: Any): Any = id match { case b: Array[Byte] => b.toSeq; case v => v }
+
+  /** Each row of `pos` (the step's columns) as a [[Region]] with its
+    * share of [[Scale]]. Shuffles: regions by id, border rows by
+    * neighbour (to meet the neighbour's rows), then by focal. Join
+    * semantics as in SQL: a null id meets no border row; a border row
+    * counts once per row of its focal id and, in k, once per row of
+    * its neighbour id. */
+  private def attach(pos: DataFrame, borders: DataFrame): RDD[(Region, Scale)] = {
+    val parts = pos.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val byId = grouped(pos.select(Layout.map(col): _*).rdd
+      .map(r => keyOf(r.get(0)) -> Row.fromSeq(r.toSeq)), parts)
+    val edges = grouped(borders.select("focal_id", "neighbor_id", "weight").rdd.flatMap { b =>
+      val (f, n) = (keyOf(b.get(0)), keyOf(b.get(1)))
+      if (f == null || n == null) None else Some(n -> (f, b.getDouble(2)))
+    }, parts)
+    val byFocal = grouped(byId.zipPartitions(edges) { (ids, es) =>
+      val rowsOf = ids.toMap
+      es.flatMap { case (n, fws) => fws.map { case (f, w) => f -> (n, w, rowsOf.getOrElse(n, Nil)) } }
+    }, parts)
+    byId.zipPartitions(byFocal) { (ids, fs) =>
+      val nbsOf = fs.toMap
+      ids.flatMap { case (key, rows) =>
+        val nbs = nbsOf.getOrElse(key, Nil)
+        val weights = nbs.map { case (n, w, _) => (n, w) }.toArray
+        val dup = if (key != null && rows.size > 1) 1 else 0
+        rows.map { f =>
+          val own = Scale(null, null, 1, if (f.isNullAt(V)) Double.NegativeInfinity else root(f.getDouble(V)), dup)
+          (Region(f, key, weights), (for ((_, _, nRows) <- nbs; n <- nRows)
+            yield Scale.pair(num(f, X), num(f, Y), num(f, V), num(n, X), num(n, Y), num(n, V))).foldLeft(own)(_ + _))
+        }
+      }
+    }
+  }
+
+  /** `pairs` grouped by key in one shuffle into `parts` partitions.
+    * Not groupByKey or cogroup: their reduce side inserts into a map
+    * whose size Spark keeps estimating by walking the grouped values,
+    * which costs more per task than the force kernel. */
+  private def grouped[K: ClassTag, V: ClassTag](pairs: RDD[(K, V)], parts: Int): RDD[(K, Iterable[V])] =
+    pairs.partitionBy(new HashPartitioner(parts))
+      .mapPartitions(_.toSeq.groupMap(_._1)(_._2).iterator, preservesPartitioning = true)
+
+  /** One Jacobi iteration over `pos`: one shuffle by grid cell (cell =
+    * 2 * widest, at least the search radius widest + r_focal, so a
+    * focal's candidates all sit in its 3x3 cells). Each region goes to
+    * its own cell as a focal, and to all 9 as a [[Candidate]].
+    * With `pool`, rows that share an id pool their forces (a second
+    * shuffle, by id). */
+  private def iterate(pos: RDD[Region], widest: Double, ratio: Double, friction: Double,
+                      pool: Boolean): RDD[Region] = {
+    val cs = math.max(2.0 * widest, 1e-12)
+    val forces = grouped(pos.flatMap { r =>
+      val (x, y) = (num(r.row, X), num(r.row, Y))
+      val (cx, cy) = (math.floor(x / cs).toLong, math.floor(y / cs).toLong)
+      val seen = Candidate(r.key, x, y, num(r.row, R))
+      for (i <- -1 to 1; j <- -1 to 1) yield (cx + i, cy + j) -> (if (i == 0 && j == 0) r else null, seen)
+    }, pos.partitions.length).flatMap { case (_, members) =>
+      members.collect { case (f, _) if f != null =>
+        val acc = new Forces(widest)
+        if (f.key != null) for ((_, n) <- members if n.key != null && n.key != f.key)
+          acc.add(num(f.row, X), num(f.row, Y), num(f.row, R), num(f.row, P), n.x, n.y, n.radius)(
+            f.weights.collect { case (k, w) if k == n.key => w })
+        f -> acc
+      }
+    }
+    val pooled = if (!pool) forces else grouped(forces.map(p => p._1.key -> p), pos.partitions.length)
+      .flatMap { case (_, rs) =>
+        val sum = rs.map(_._2).reduce(_ merge _)
+        rs.map(_._1 -> sum)
+      }
+    pooled.map { case (r, f) =>
+      val (x, y) = f.move(num(r.row, X), num(r.row, Y), ratio, friction)
+      r.copy(row = Row(r.row(0), r.row(V), if (r.row.isNullAt(X)) null else x,
+        if (r.row.isNullAt(Y)) null else y, r.row(P), r.row(R)))
+    }
   }
 
   /** A region table on the driver, rows in id order: what [[radii]]
@@ -363,93 +349,100 @@ object Dorling {
     val value = sorted.map(_.getDouble(1)).toArray
     val x = geoms.map(Ops.centroid(_).x)
     val y = geoms.map(Ops.centroid(_).y)
-    // radii's aggregate: scale-10 decimal sums over directed pairs
-    var d = java.math.BigDecimal.ZERO
-    var r = java.math.BigDecimal.ZERO
-    for ((i, j, _) <- pairs; (f, n) <- Seq((i, j), (j, i))) {
-      d = d.add(decimal(math.sqrt((x(n) - x(f)) * (x(n) - x(f)) +
-                                  (y(n) - y(f)) * (y(n) - y(f))), 10))
-      r = r.add(decimal(math.sqrt(value(f) / math.Pi) + math.sqrt(value(n) / math.Pi), 10))
-    }
-    val k = d.doubleValue / r.doubleValue
+    val k = pairs.iterator.flatMap { case (i, j, _) => Iterator((i, j), (j, i)) }
+      .map { case (f, n) => Scale.pair(x(f), y(f), value(f), x(n), y(n), value(n)) }
+      .foldLeft(Scale.Zero)(_ + _).k
     Some(LocalRegions(sorted.map(_.get(0)).toArray, value, x, y, geoms.map(Ops.perimeter),
-      value.map(v => math.sqrt(v / math.Pi) * k), k,
+      value.map(v => root(v) * k), k,
       pairs.flatMap { case (i, j, w) => Seq((i, j) -> w, (j, i) -> w) }.toMap))
   }
 
-  /** Double -> decimal exactly as Catalyst's cast to DecimalType(_, scale)
-    * does it: shortest-string BigDecimal (valueOf), then HALF_UP. */
-  private def decimal(d: Double, scale: Int): java.math.BigDecimal =
-    java.math.BigDecimal.valueOf(d).setScale(scale, java.math.RoundingMode.HALF_UP)
+  /** The force on one focal region from the previous positions
+    * (cartogram.py:352-400); every path runs it, so the driver and
+    * distributed paths are bit-equal by construction. The four sums
+    * are exact: each term rounds HALF_UP to scale 12 and the decimals
+    * add, so neither the candidate order nor the split of a repeated
+    * id's rows across cells changes a bit. */
+  private[operators] final class Forces(widest: Double) extends Serializable {
+    private var xrepel, yrepel, xattract, yattract: Dec = Dec.ZERO
+    private var closest = widest
 
-  /** Driver-side Jacobi iterations: the same force model as [[step]]
-    * (forces from the previous iteration's snapshot, applied
-    * simultaneously), with per-focal force sums accumulated EXACTLY
-    * like the distributed step's decimal aggregate: each double
-    * contribution rounds to scale-12 decimal, the decimals add
-    * exactly (order cannot matter), and the total converts back to
-    * double. Every remaining operation is the identical per-row IEEE
-    * expression, so the two paths are BIT-EQUAL at any iteration
-    * count — including chaotic all-contact regimes where any
-    * accumulation-order difference would compound.
+    /** Candidate (nx, ny, nr) of focal (fx, fy, fr, fp), ids differing.
+      * Each focal -> candidate Queen border weight adds the candidate
+      * once; with none it adds once as a non-Queen pair. A NaN (null)
+      * radius or perimeter adds no term. */
+    def add(fx: Double, fy: Double, fr: Double, fp: Double, nx: Double, ny: Double, nr: Double)(
+        weights: => Iterable[Double]): Unit = {
+      val dist = distance(fx, fy, nx, ny)
+      // reference cartogram.py:357: 0 < dist < widest + r_focal
+      if (dist > 0 && dist < widest + fr) {
+        // cartogram.py:364: closest = min(widest, nearest neighbour)
+        if (dist < closest) closest = dist
+        val overlap = nr + fr - dist
+        val dx = nx - fx; val dy = ny - fy
+        def attract(ov: Double): Unit = {
+          xattract = plus(xattract, term(ov * dx / dist, 12))
+          yattract = plus(yattract, term(ov * dy / dist, 12))
+        }
+        val ws = weights
+        if (overlap > 0.0) for (_ <- 0 until math.max(ws.size, 1)) {  // _repel (cartogram.py:35)
+          xrepel = plus(xrepel, term(-overlap * dx / dist, 12))
+          yrepel = plus(yrepel, term(-overlap * dy / dist, 12))
+        }
+        else if (ws.isEmpty) attract(overlap)      // _attract (cartogram.py:80)
+        else ws.foreach(w => attract(math.abs(overlap) * w / fp))
+      }
+    }
+
+    /** Pools another row's sums of the same id into these. */
+    def merge(o: Forces): Forces = {
+      xrepel = xrepel.add(o.xrepel); yrepel = yrepel.add(o.yrepel)
+      xattract = xattract.add(o.xattract); yattract = yattract.add(o.yattract)
+      closest = math.min(closest, o.closest)
+      this
+    }
+
+    /** (x, y) moved by the blended force (cartogram.py:377-400). */
+    def move(x: Double, y: Double, ratio: Double, friction: Double): (Double, Double) = {
+      var (xr, yr) = (xrepel.doubleValue, yrepel.doubleValue)
+      val (xa, ya) = (xattract.doubleValue, yattract.doubleValue)
+      val attractDist = math.sqrt(xa * xa + ya * ya)
+      var repelDist = math.sqrt(xr * xr + yr * yr)
+      if (repelDist > closest) {
+        xr = closest * xr / (repelDist + 1.0)
+        yr = closest * yr / (repelDist + 1.0)
+        repelDist = closest
+      }
+      val (xt, yt) =
+        if (repelDist > 0) (
+          (1.0 - ratio) * xr + ratio * (repelDist * xa / (attractDist + 1.0)),
+          (1.0 - ratio) * yr + ratio * (repelDist * ya / (attractDist + 1.0)))
+        else if (attractDist > closest) (
+          closest * xa / (attractDist + 1.0),
+          closest * ya / (attractDist + 1.0))
+        else (xa, ya)
+      (x + friction * xt, y + friction * yt)
+    }
+  }
+
+  /** Driver-side iterations of [[Forces]] on every region from all
+    * others: applied simultaneously (Jacobi), or each as soon as it is
+    * computed when `sequential` (Gauss-Seidel, [[runSequential]]).
     * @return final (x, y) */
-  private def jacobi(m: LocalRegions, iterations: Int, ratio: Double,
-                     friction: Double): (Array[Double], Array[Double]) = {
-    val radius = m.radius
-    val per = m.perimeter
-    var x = m.x
-    var y = m.y
-    val n = x.length
+  private def jacobi(m: LocalRegions, iterations: Int, ratio: Double, friction: Double,
+                     sequential: Boolean = false): (Array[Double], Array[Double]) = {
+    val (radius, per, n) = (m.radius, m.perimeter, m.ids.length)
+    var x = m.x.clone()
+    var y = m.y.clone()
     val widest = radius.max
-
     for (_ <- 0 until iterations) {
-      val nx = new Array[Double](n)
-      val ny = new Array[Double](n)
-      for (idx <- 0 until n) {
-        var xrepelD = java.math.BigDecimal.ZERO
-        var yrepelD = java.math.BigDecimal.ZERO
-        var xattractD = java.math.BigDecimal.ZERO
-        var yattractD = java.math.BigDecimal.ZERO
-        var closest = widest
-        for (j <- 0 until n if j != idx) {
-          val dist = math.sqrt((x(j) - x(idx)) * (x(j) - x(idx)) +
-                               (y(j) - y(idx)) * (y(j) - y(idx)))
-          if (dist > 0 && dist < widest + radius(idx)) {
-            if (dist < closest) closest = dist
-            val overlap = radius(j) + radius(idx) - dist
-            val dx = x(j) - x(idx); val dy = y(j) - y(idx)
-            if (overlap > 0.0) {
-              xrepelD = xrepelD.add(decimal(-overlap * dx / dist, 12))
-              yrepelD = yrepelD.add(decimal(-overlap * dy / dist, 12))
-            } else {
-              val ov = m.weights.get((idx, j))
-                .map(w => math.abs(overlap) * w / per(idx)).getOrElse(overlap)
-              xattractD = xattractD.add(decimal(ov * dx / dist, 12))
-              yattractD = yattractD.add(decimal(ov * dy / dist, 12))
-            }
-          }
-        }
-        var xrepel = xrepelD.doubleValue
-        var yrepel = yrepelD.doubleValue
-        val xattract = xattractD.doubleValue
-        val yattract = yattractD.doubleValue
-        val attractDist = math.sqrt(xattract * xattract + yattract * yattract)
-        var repelDist = math.sqrt(xrepel * xrepel + yrepel * yrepel)
-        if (repelDist > closest) {
-          xrepel = closest * xrepel / (repelDist + 1.0)
-          yrepel = closest * yrepel / (repelDist + 1.0)
-          repelDist = closest
-        }
-        val (xt, yt) =
-          if (repelDist > 0) (
-            (1.0 - ratio) * xrepel + ratio * (repelDist * xattract / (attractDist + 1.0)),
-            (1.0 - ratio) * yrepel + ratio * (repelDist * yattract / (attractDist + 1.0)))
-          else if (attractDist > closest) (
-            closest * xattract / (attractDist + 1.0),
-            closest * yattract / (attractDist + 1.0))
-          else (xattract, yattract)
-        nx(idx) = x(idx) + friction * xt
-        ny(idx) = y(idx) + friction * yt
+      val (nx, ny) = if (sequential) (x, y) else (new Array[Double](n), new Array[Double](n))
+      for (i <- 0 until n) {
+        val f = new Forces(widest)
+        for (j <- 0 until n if j != i)
+          f.add(x(i), y(i), radius(i), per(i), x(j), y(j), radius(j))(m.weights.get((i, j)))
+        val (mx, my) = f.move(x(i), y(i), ratio, friction)
+        nx(i) = mx; ny(i) = my
       }
       x = nx; y = ny
     }

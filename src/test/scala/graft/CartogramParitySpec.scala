@@ -106,6 +106,7 @@ class CartogramParitySpec extends SparkSuite {
     info(s"Dorling.run(smallN = 0): $setup jobs at 0 iterations, $oneStep at 1")
     assert(setup > 4, "the distributed prologue (grid borders, k, widest) runs Spark jobs")
     assert(oneStep > setup, "an iteration runs a distributed step")
+    assert(oneStep - setup <= 2, "an iteration adds at most 2 jobs")
   }
 }
 

@@ -1,0 +1,155 @@
+package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Borders, Dorling}
+
+/** Dorling's distributed path on the inputs the driver path declines
+  * (a map without a Queen pair, a repeated id, a null value), and the
+  * generated code a warm distributed call compiles. */
+class DorlingDistributedSpec extends SparkSuite {
+  import DorlingDistributedSpec._
+
+  private def df(regions: Seq[(String, String, Option[Double])]): DataFrame = {
+    import spark.implicits._
+    regions.toDF("name", "geometry", "population")
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  for ((label, regions) <- Seq(
+      "two disjoint squares" -> Seq(("A", rect(0, 0, 1, 1), Some(10.0)), ("B", rect(5, 5, 6, 6), Some(20.0))),
+      "a single region" -> Seq(("A", rect(0, 0, 1, 1), Some(10.0)))))
+    test(s"$label: run, run(smallN = 0) and radii refuse, naming k and the region count") {
+      val in = df(regions)
+      for ((call, body) <- Seq[(String, () => Any)](
+          "run" -> (() => Dorling.run(in, "name", "population", "geometry").collect()),
+          "run(smallN = 0)" -> (() =>
+            Dorling.run(in, "name", "population", "geometry", smallN = 0).collect()),
+          "radii" -> (() => Dorling.radii(in, "name", "population", "geometry")))) {
+        val e = intercept[IllegalArgumentException](body())
+        assert(e.getMessage.contains("k = D/R is undefined without a Queen-contiguous pair"), call)
+        assert(e.getMessage.contains(s"${regions.length} regions"), s"$call: ${e.getMessage}")
+      }
+    }
+
+  /** q24's shape: borders, radii, widest, one step; rows sorted by
+    * (id, x bits) as (id, x bits, y bits). */
+  private def stepped(in: DataFrame): Seq[(String, Long, Long)] = {
+    val borders = Borders.compute(in, "name", "geometry").localCheckpoint()
+    val (regions, _) = Dorling.radii(in, "name", "population", "geometry", Some(borders))
+    val widest = regions.agg(max(col("radius"))).collect()(0).getDouble(0)
+    Dorling.step(regions, borders, widest, ratio = 0.4, friction = 0.5).collect()
+      .map(r => (r.getString(0), bits(r.getDouble(2)), bits(r.getDouble(3)))).sortBy(r => (r._1, r._2)).toSeq
+  }
+
+  /** run at 3 iterations as (id, radius bits or null, x bits, y bits),
+    * sorted; the default dispatch must give the same rows as smallN = 0 */
+  private def ran(in: DataFrame): Seq[(String, Any, Long, Long)] = {
+    def rows(smallN: Int) = Dorling.run(in, "name", "population", "geometry", iterations = 3,
+        smallN = smallN).collect()
+      .map(r => (r.getString(0), if (r.isNullAt(2)) null else bits(r.getDouble(2)),
+        bits(r.getDouble(3)), bits(r.getDouble(4)))).sortBy(r => (r._1, r._3)).toSeq
+    val distributed = rows(0)
+    assert(rows(Borders.SmallN) === distributed, "the default dispatch")
+    distributed
+  }
+
+  test("a repeated id: its rows pool their forces and each moves by the pool (pinned)") {
+    val in = df(grid3.map { case (id, g, v) => (if (id == "R11") "R00" else id, g, Some(v)) })
+    val step = stepped(in)
+    assert(step === dupStep)
+    // both R00 rows (centroids (2, 2) and (6, 6)) move by one vector
+    val Seq(a, b) = step.filter(_._1 == "R00").map(r =>
+      (java.lang.Double.longBitsToDouble(r._2), java.lang.Double.longBitsToDouble(r._3)))
+    assert(math.abs((a._1 - 2) - (b._1 - 6)) < 1e-12 && math.abs((a._2 - 2) - (b._2 - 6)) < 1e-12)
+    assert(ran(in) === dupRun)
+  }
+
+  test("a null value: its radius and circle stay null and its region stays at its centroid (pinned)") {
+    val in = df(grid3.map { case (id, g, v) => (id, g, if (id == "R11") None else Some(v)) })
+    assert(stepped(in) === nullStep)
+    assert(ran(in) === nullRun)
+    val r11 = Dorling.run(in, "name", "population", "geometry", iterations = 3, smallN = 0)
+      .filter(col("id") === "R11").collect().head
+    assert(r11.isNullAt(2) && r11.getDouble(3) === 6.0 && r11.getDouble(4) === 6.0 && r11.isNullAt(5))
+  }
+
+  /** Classes Spark's code generator compiled (code-cache misses) in `body`. */
+  private def compiles(body: => Unit): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("codegen guard: a warm distributed run compiles <= 2 classes, iterations 2 and 3 none") {
+    // one geometry (the grid join's generated code depends on its cell
+    // size), so only the values, hence k and widest, change per call
+    def run(values: (Int, Int) => Double, iterations: Int): Unit =
+      Dorling.run(df(for (j <- 0 until 6; i <- 0 until 6)
+          yield (f"R$i%02d_$j%02d", rect(i, j, i + 1, j + 1), Some(values(i, j)))),
+        "name", "population", "geometry", iterations = iterations, smallN = 0).collect()
+    run((i, j) => 100.0 + (i * 31 + j * 17) % 50, 3)
+    val other = compiles(run((i, j) => 40.0 + (i * 7 + j * 13) % 90, 3))
+    val one = compiles(run((i, j) => 10.0 + i * j, 1))
+    val three = compiles(run((i, j) => 500.0 + (i + 3 * j) % 11 * 20, 3))
+    info(s"compiled: $other warm (3 iterations), $one at 1 iteration, $three at 3")
+    assert(other <= 2)
+    assert(three <= one, "iterations 2 and 3 compiled code")
+  }
+}
+
+object DorlingDistributedSpec {
+  private def rect(x0: Double, y0: Double, x1: Double, y1: Double): String =
+    s"POLYGON (($x0 $y0, $x1 $y0, $x1 $y1, $x0 $y1, $x0 $y0))"
+
+  private val grid3 = CartogramParitySpec.grid3
+
+  // The pins below are the SQL-aggregate step's output (borders, radii,
+  // one step, and run at 3 iterations), kept bit for bit by the kernel.
+  private val dupStep = Seq(
+    ("R00", 0x40009c0b748a192bL, 0x3ff83ffbe65d0c0eL),
+    ("R00", 0x40184e05ba450c95L, 0x40160ffef9974304L),
+    ("R01", 0x4017e8f9e778e366L, 0x3ff6608f1bf5f0f4L),
+    ("R02", 0x402468044faba161L, 0x3ff99bdaa63c4bfbL),
+    ("R10", 0x3ff2a1f3807340d3L, 0x40177cb77a4f5255L),
+    ("R12", 0x40252cb80b817f9aL, 0x401694d6077f4b73L),
+    ("R20", 0x3ff4d7b617d98a7aL, 0x40250b6851e70b6eL),
+    ("R21", 0x40176bf43d98d776L, 0x4025643e2a0ac649L),
+    ("R22", 0x40252a100bd2e057L, 0x40250c53ce86f825L))
+
+  private val dupRun: Seq[(String, Any, Long, Long)] = Seq(
+    ("R00", 0x40006bbc99630e96L, 0x3fffa96c48ae1031L, 0x3ff47c7b6905db1fL),
+    ("R00", 0x400607e7960af0b7L, 0x4017ea5b122b840cL, 0x40151f1eda4176c8L),
+    ("R01", 0x4001fcf67d52c8b0L, 0x4017c6e01dd9767aL, 0x3fe7d4f0a4136eb6L),
+    ("R02", 0x40036deda8f2f2d2L, 0x4024c7bbb9de0bafL, 0x3fef597391631d8fL),
+    ("R10", 0x4004c55a6392a501L, 0x3fe1a169446e0cc8L, 0x40176648248cc031L),
+    ("R12", 0x400738fb41fde42cL, 0x402649bd34a41f0aL, 0x4016712cfdba893eL),
+    ("R20", 0x40085b2630432f58L, 0x3fdc7a2c9588850dL, 0x4025e824927e1038L),
+    ("R21", 0x40097066a274d3d8L, 0x40174bc4fd738d81L, 0x402657bceae4639aL),
+    ("R22", 0x400a7a526041d578L, 0x4026f3f0ac8485f0L, 0x40265dc7f790b158L))
+
+  private val nullStep = Seq(
+    ("R00", 0x3ff5c0c7b80e6267L, 0x3ff35f1f32baa77cL),
+    ("R01", 0x4016fc44c7bed786L, 0x3ff601e20edbf590L),
+    ("R02", 0x40261fbfbef1ac20L, 0x3ff3177123827248L),
+    ("R10", 0x3ff16d8b4c3bb444L, 0x40152cd15e95ff7cL),
+    ("R11", 0x4018000000000000L, 0x4018000000000000L),
+    ("R12", 0x402636c44e7065abL, 0x40155d635dedfdc0L),
+    ("R20", 0x3fec5f31ab895408L, 0x402635549bf808b0L),
+    ("R21", 0x401790e10eb1d184L, 0x402705d602a38d22L),
+    ("R22", 0x402644112f2df7d7L, 0x402612ce896e034eL))
+
+  private val nullRun: Seq[(String, Any, Long, Long)] = Seq(
+    ("R00", 0x40076be0becd0e8cL, 0x3fe2545d1564df30L, 0xbfb8a45bb0f3a1c8L),
+    ("R01", 0x4009a827b91af624L, 0x40178116c1062410L, 0x3ff1cd35bb59fa3cL),
+    ("R02", 0x400bb66b1d7cfad6L, 0x402787c9e1239c34L, 0xbfe38b9872cbd410L),
+    ("R10", 0x400da04097513380L, 0x3fea50b60f5a4b87L, 0x4015d7a413bdd80fL),
+    ("R11", null, 0x4018000000000000L, 0x4018000000000000L),
+    ("R12", 0x40108fb9d691a5a6L, 0x4026cfb66dd6112fL, 0x4015a453862ff1dcL),
+    ("R20", 0x40115ea97d637966L, 0xbff3620fa9f63782L, 0x40284e71ae7e0c83L),
+    ("R21", 0x40122463165233e9L, 0x4016f7ad2ba3c252L, 0x402813cc93481b93L),
+    ("R22", 0x4012e2080440cc60L, 0x402a222f834e80a2L, 0x4028dd62a1317e4eL))
+}
