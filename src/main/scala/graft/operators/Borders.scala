@@ -24,7 +24,7 @@ import graft.geom.{Geom, Ops, Wkt}
   * driver test is O(n^2) cheap bbox comparisons plus the exact
   * geometry test on bbox-intersecting pairs only. 2000 is below the
   * crossover of `Dorling.run`'s driver-side Jacobi loop (it loses to
-  * the distributed step at 10k regions, 18.5 s vs 14.3 s for 3
+  * the distributed step at 10k regions, 20.2 s vs 16.2 s for 3
   * iterations); one constant keeps a whole Dorling call on one side
   * of it. Both sides apply the same pair rule, so their rows, weights
   * and schema are bit-equal:
@@ -86,16 +86,15 @@ object Borders {
   }
 
   /** The rows of `df` when it has at most `n` of them (`n <= 0`: never).
-    * Counts at most n + 1 rows per partition first, so a large input
-    * never ships its rows to the driver; `n = Int.MaxValue` admits
-    * every input. The count is not `limit(n + 1).count()`: Spark names
-    * each limit's counter uniquely in its generated code, so that plan
-    * compiles anew on every call. */
+    * Takes at most n + 1 rows, so a large input ships no more than that
+    * to the driver; `n = Int.MaxValue` admits every input. Not
+    * `limit(n + 1).count()`: Spark names each such limit's counter
+    * uniquely in its generated code, so that plan compiles anew on
+    * every call; `take` runs its limit outside generated code. */
   private[operators] def collectIfSmall(df: DataFrame, n: Int): Option[Array[Row]] =
-    if (n > 0 && (n == Int.MaxValue ||
-        df.queryExecution.toRdd.mapPartitions(it => Iterator(it.take(n + 1).size)).fold(0)(_ + _) <= n))
-      Some(df.collect())
-    else None
+    if (n <= 0) None
+    else if (n == Int.MaxValue) Some(df.collect())
+    else Some(df.take(n + 1)).filter(_.length <= n)
 
   /** Ids as the catalyst values Spark's comparisons read (null stays null). */
   private[operators] def catalystKeys(ids: Array[Any], idType: DataType): Array[Any] =

@@ -37,9 +37,9 @@ import graft.geom.{Ops, Pt, Wkt}
   * iteration's positions and applies them simultaneously (Jacobi). Same
   * fixed points, order-independent, embarrassingly parallel.
   *
-  * Design: one force kernel ([[Forces]]) serves every path. The driver
-  * loop ([[jacobi]]) runs it per region over all others; the
-  * distributed step runs it per grid cell (cell = 2*widest, 3x3
+  * Design: one force kernel ([[Forces]]) serves both [[run]] paths.
+  * The driver loop ([[jacobi]]) runs it per region over all others;
+  * the distributed step runs it per grid cell (cell = 2*widest, 3x3
   * probe): one shuffle of O(n) small rows and one checkpoint per
   * iteration, no O(n^2) pair matrix, and no generated code that
   * depends on k, widest, ratio or friction, so a warm call compiles
@@ -92,21 +92,77 @@ object Dorling {
       if (f.name == "x" || f.name == "y") f.copy(nullable = true) else f)))
   }
 
-  /** Sequential Dorling, as the reference iterates (Gauss-Seidel: each
-    * region moves immediately, later regions in the SAME iteration see
-    * the move), with [[run]]'s force kernel, on the driver: a parity and
-    * debug path for the inputs [[run]]'s driver path takes.
+  /** Reference-exact sequential Dorling (Gauss-Seidel: each region
+    * moves immediately, later regions in the SAME iteration see the
+    * move — reference cartogram.py:352-402 verbatim, including the
+    * attract-overlap rescale quirk for border pairs). Driver-side on
+    * collected rows: the parity/debug path for small input, NOT the
+    * scale path (that's [[run]]).
     * @return id, value, radius, x, y (final circle centers)
     */
   def runSequential(df: DataFrame, idCol: String, valueCol: String, geomCol: String,
                     iterations: Int = 100, ratio: Double = 0.4,
                     friction: Double = 0.5): Seq[(String, Double, Double, Double, Double)] = {
-    val input = project(df, idCol, valueCol, geomCol)
-    val m = local(input.collect(), input.schema("id").dataType).getOrElse(
-      throw new IllegalArgumentException("Dorling.runSequential takes unique non-null ids, " +
-        "values and geometries with at least one Queen-contiguous pair"))
-    val (x, y) = jacobi(m, iterations, ratio, friction, sequential = true)
-    m.ids.indices.map(i => (m.ids(i).toString, m.value(i), m.radius(i), x(i), y(i)))
+    val bordersDf = Borders.compute(df, idCol, geomCol).localCheckpoint()
+    val (regionsDf, _) = radii(df, idCol, valueCol, geomCol, Some(bordersDf))
+    val borders = bordersDf
+      .collect().map(r => (r.get(0).toString, r.get(1).toString) -> r.getDouble(2)).toMap
+    val rows = regionsDf.orderBy(col("id")).collect()
+    val ids = rows.map(_.get(0).toString)
+    val value = rows.map(_.getAs[Double]("value"))
+    val per = rows.map(_.getAs[Double]("perimeter"))
+    val radius = rows.map(_.getAs[Double]("radius"))
+    val x = rows.map(_.getAs[Double]("x")).clone()
+    val y = rows.map(_.getAs[Double]("y")).clone()
+    val n = ids.length
+    val widest = radius.max
+
+    for (_ <- 0 until iterations; idx <- 0 until n) {
+      var xrepel = 0.0; var yrepel = 0.0; var xattract = 0.0; var yattract = 0.0
+      var closest = widest
+      // neighbours: 0 < dist < widest + r_focal (cartogram.py:357)
+      val nbs = (0 until n).filter { j =>
+        if (j == idx) false else {
+          val d = math.sqrt((x(j) - x(idx)) * (x(j) - x(idx)) + (y(j) - y(idx)) * (y(j) - y(idx)))
+          d > 0 && d < widest + radius(idx)
+        }
+      }
+      nbs.foreach { j =>
+        val dist = math.sqrt((x(j) - x(idx)) * (x(j) - x(idx)) + (y(j) - y(idx)) * (y(j) - y(idx)))
+        if (dist < closest) closest = dist
+        val overlap = radius(j) + radius(idx) - dist
+        val dx = x(j) - x(idx); val dy = y(j) - y(idx)
+        if (overlap > 0.0) {                       // _repel (cartogram.py:35)
+          xrepel -= overlap * dx / dist
+          yrepel -= overlap * dy / dist
+        } else {                                   // _attract (cartogram.py:80)
+          val ov = borders.get((ids(idx), ids(j)))
+            .map(w => math.abs(overlap) * w / per(idx)).getOrElse(overlap)
+          xattract += ov * dx / dist
+          yattract += ov * dy / dist
+        }
+      }
+      val attractDist = math.sqrt(xattract * xattract + yattract * yattract)
+      var repelDist = math.sqrt(xrepel * xrepel + yrepel * yrepel)
+      if (repelDist > closest) {                   // cartogram.py:381
+        xrepel = closest * xrepel / (repelDist + 1.0)
+        yrepel = closest * yrepel / (repelDist + 1.0)
+        repelDist = closest
+      }
+      val (xt, yt) =
+        if (repelDist > 0) (
+          (1.0 - ratio) * xrepel + ratio * (repelDist * xattract / (attractDist + 1.0)),
+          (1.0 - ratio) * yrepel + ratio * (repelDist * yattract / (attractDist + 1.0)))
+        else {
+          if (attractDist > closest) (
+            closest * xattract / (attractDist + 1.0),
+            closest * yattract / (attractDist + 1.0))
+          else (xattract, yattract)
+        }
+      x(idx) += friction * xt                      // cartogram.py:397-400
+      y(idx) += friction * yt
+    }
+    (0 until n).map(i => (ids(i), value(i), radius(i), x(i), y(i)))
   }
 
   /** Full Dorling run.
@@ -117,15 +173,15 @@ object Dorling {
     * on one collect of (id, value, geometry): Queen pairs
     * ([[Borders.queenPairs]]), centroids and perimeters, k, radii,
     * widest and the Jacobi loop ([[jacobi]]) all run on the driver and
-    * the result is one local DataFrame: the size check and the collect
-    * are its only Spark jobs (at most 2 on a 64-region map, where the
-    * distributed path at 1 iteration runs 8). Larger inputs (or
-    * smallN = 0) take the distributed path: the leveled-grid borders
-    * ([[Borders.grid]]), one job for k, widest and the border weights,
-    * and one job per iteration. The default crossover is measured: the
+    * the result is one local DataFrame: the collect, which is also the
+    * size check, is its only Spark work (at most 2 jobs on a 64-region
+    * map, where the distributed path at 1 iteration runs 8). Larger
+    * inputs (or smallN = 0) take the distributed path: the
+    * leveled-grid borders ([[Borders.grid]]), one job for k, widest and
+    * the border weights, and one job per iteration. The default crossover is measured: the
     * driver loop is O(n^2) per iteration and at 10k regions
     * (tools/ScaleStress geo, 4 vCPUs) it loses to the distributed step
-    * (18.5 s vs 14.3 s for 3 iterations); at hundreds of regions it
+    * (20.2 s vs 16.2 s for 3 iterations); at hundreds of regions it
     * wins by the per-iteration job-launch cost. Inputs the driver path
     * declines take the distributed path whatever their size: a null
     * value keeps a null radius and circle and its region at its
@@ -253,11 +309,14 @@ object Dorling {
     * neighbour (to meet the neighbour's rows), then by focal. Join
     * semantics as in SQL: a null id meets no border row; a border row
     * counts once per row of its focal id and, in k, once per row of
-    * its neighbour id. */
+    * its neighbour id. Every shuffle here and in [[iterate]] has one
+    * partition per core, or the input's count when larger: these RDD
+    * shuffles get no adaptive coalescing, so Spark SQL's shuffle
+    * setting (200 by default) would launch as many tasks per pass. */
   private def attach(pos: DataFrame, borders: DataFrame): RDD[(Region, Scale)] = {
-    val parts = pos.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val byId = grouped(pos.select(Layout.map(col): _*).rdd
-      .map(r => keyOf(r.get(0)) -> Row.fromSeq(r.toSeq)), parts)
+    val rows = pos.select(Layout.map(col): _*).rdd
+    val parts = math.max(pos.sparkSession.sparkContext.defaultParallelism, rows.getNumPartitions)
+    val byId = grouped(rows.map(r => keyOf(r.get(0)) -> Row.fromSeq(r.toSeq)), parts)
     val edges = grouped(borders.select("focal_id", "neighbor_id", "weight").rdd.flatMap { b =>
       val (f, n) = (keyOf(b.get(0)), keyOf(b.get(1)))
       if (f == null || n == null) None else Some(n -> (f, b.getDouble(2)))
@@ -358,8 +417,9 @@ object Dorling {
   }
 
   /** The force on one focal region from the previous positions
-    * (cartogram.py:352-400); every path runs it, so the driver and
-    * distributed paths are bit-equal by construction. The four sums
+    * (cartogram.py:352-400); both [[run]] paths run it, so they are
+    * bit-equal by construction ([[runSequential]] keeps the reference's
+    * own plain-double loop). The four sums
     * are exact: each term rounds HALF_UP to scale 12 and the decimals
     * add, so neither the candidate order nor the split of a repeated
     * id's rows across cells changes a bit. */
@@ -425,18 +485,16 @@ object Dorling {
     }
   }
 
-  /** Driver-side iterations of [[Forces]] on every region from all
-    * others: applied simultaneously (Jacobi), or each as soon as it is
-    * computed when `sequential` (Gauss-Seidel, [[runSequential]]).
+  /** Driver-side Jacobi iterations of [[Forces]] on every region from
+    * all others, applied simultaneously.
     * @return final (x, y) */
-  private def jacobi(m: LocalRegions, iterations: Int, ratio: Double, friction: Double,
-                     sequential: Boolean = false): (Array[Double], Array[Double]) = {
+  private def jacobi(m: LocalRegions, iterations: Int, ratio: Double,
+                     friction: Double): (Array[Double], Array[Double]) = {
     val (radius, per, n) = (m.radius, m.perimeter, m.ids.length)
-    var x = m.x.clone()
-    var y = m.y.clone()
+    var (x, y) = (m.x, m.y)
     val widest = radius.max
     for (_ <- 0 until iterations) {
-      val (nx, ny) = if (sequential) (x, y) else (new Array[Double](n), new Array[Double](n))
+      val (nx, ny) = (new Array[Double](n), new Array[Double](n))
       for (i <- 0 until n) {
         val f = new Forces(widest)
         for (j <- 0 until n if j != i)

@@ -97,6 +97,16 @@ class CartogramParitySpec extends SparkSuite {
     assert(dorling <= 4)
   }
 
+  test("job guard: the same map checkpointed over 8 partitions keeps those bounds") {
+    val in = df(lattice(8)).repartition(8).localCheckpoint()
+    assert(in.rdd.getNumPartitions === 8)
+    val borders = jobsOf(Borders.compute(in, "name", "geometry").collect())
+    val dorling = jobsOf(Dorling.run(in, "name", "population", "geometry", iterations = 100).collect())
+    info(s"Borders.compute: $borders jobs, Dorling.run(100): $dorling jobs")
+    assert(borders <= 3)
+    assert(dorling <= 4)
+  }
+
   test("job guard: smallN = 0 still runs the grid and the distributed step") {
     val in = df(lattice(8))
     val setup = jobsOf(Dorling.run(in, "name", "population", "geometry",
