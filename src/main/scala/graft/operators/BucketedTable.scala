@@ -213,6 +213,6 @@ object BucketedTable {
   def prunedScanAt(spark: SparkSession, dir: String, v: Long,
                    lo: Long, hi: Long): DataFrame = {
     val (keyCol, _) = widthAt(spark, dir, v)
-    Snapshots.prunedScanAt(spark, dir, v, keyCol, lo, hi).drop(BCol)
+    Snapshots.prunedScanAtBy(spark, dir, v, keyCol, lo, hi).drop(BCol)
   }
 }

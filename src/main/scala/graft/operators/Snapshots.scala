@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *  - `#stat:<key>:<rows>:<min>:<max>:<relpath>`  per-FILE min/max
   *    of the layout key, footer-walked at WRITE time over ONLY the
   *    newly staged files and carried forward for kept files — so
-  *    [[prunedScanAt]]/[[versionStats]] plan from the manifest alone
+  *    [[prunedScanAtBy]]/[[versionStats]] plan from the manifest alone
   *    with ZERO data-file opens (the Delta/Iceberg stats-in-metadata
   *    shape; the footer walk remains as the verification path).
   *  - `#batch:<id>`  the exactly-once sink's ledger entry.
@@ -980,16 +980,14 @@ object Snapshots {
       .option("parquet.block.size", blockSize)
       .partitionBy(DirCol)
       .parquet(stageDir)
-    graft.Prof(s"stage.write $dir") {
-      if (!df.schema.fields.exists(f => hasTz(f.dataType))) writeStaged()
-      else stageTsLock.synchronized {
-        val tsPrev = df.sparkSession.conf.getOption(tsKey)
-        df.sparkSession.conf.set(tsKey, "TIMESTAMP_MICROS")
-        try writeStaged()
-        finally tsPrev match {
-          case Some(v) => df.sparkSession.conf.set(tsKey, v)
-          case None => df.sparkSession.conf.unset(tsKey)
-        }
+    if (!df.schema.fields.exists(f => hasTz(f.dataType))) writeStaged()
+    else stageTsLock.synchronized {
+      val tsPrev = df.sparkSession.conf.getOption(tsKey)
+      df.sparkSession.conf.set(tsKey, "TIMESTAMP_MICROS")
+      try writeStaged()
+      finally tsPrev match {
+        case Some(v) => df.sparkSession.conf.set(tsKey, v)
+        case None => df.sparkSession.conf.unset(tsKey)
       }
     }
     val f = fs(df.sparkSession, dir)
@@ -1028,27 +1026,25 @@ object Snapshots {
       df.schema(keyCol).dataType == LongType
     val typedCols = stat2Cols.filter(c => !c.contains(":"))
     val (statLines, stat2, stat3): (Seq[String], Seq[String], Seq[String]) =
-      graft.Prof(s"stage.stats $dir") {
-        if (!keyOk && typedCols.isEmpty) (Seq.empty, Seq.empty, Seq.empty)
-        else scala.util.Try {
-          val (keyTry, fileStats, rgStats) = Layout.statsWithKey(
-            df.sparkSession, staged.map(r => s"$dir/$r"),
-            if (keyOk) Some(keyCol) else None, typedCols)
-          (keyTry.map(_.groupBy(_.path).toSeq.map { case (p, gs) =>
-              val rel = p.stripPrefix(s"$dir/")
-              s"stat:$keyCol:${gs.map(_.rowCount).sum}:" +
-                s"${gs.map(_.min).min}:${gs.map(_.max).max}:$rel"
-            }).getOrElse(Seq.empty),
-           fileStats.map(ts => s"stat2:${ts.column}:${ts.kind}:${ts.rows}:" +
-             s"${ts.min}:${ts.max}:${ts.path.stripPrefix(s"$dir/")}"),
-           rgStats.map(rg => s"stat3:${rg.column}:${rg.kind}:${rg.start}:" +
-             s"${rg.len}:${rg.rows}:${rg.min}:${rg.max}:" +
-             rg.path.stripPrefix(s"$dir/")))
-        }.getOrElse((Seq.empty, Seq.empty, Seq.empty))
-      }
+      if (!keyOk && typedCols.isEmpty) (Seq.empty, Seq.empty, Seq.empty)
+      else scala.util.Try {
+        val (keyTry, fileStats, rgStats) = Layout.statsWithKey(
+          df.sparkSession, staged.map(r => s"$dir/$r"),
+          if (keyOk) Some(keyCol) else None, typedCols)
+        (keyTry.map(_.groupBy(_.path).toSeq.map { case (p, gs) =>
+            val rel = p.stripPrefix(s"$dir/")
+            s"stat:$keyCol:${gs.map(_.rowCount).sum}:" +
+              s"${gs.map(_.min).min}:${gs.map(_.max).max}:$rel"
+          }).getOrElse(Seq.empty),
+         fileStats.map(ts => s"stat2:${ts.column}:${ts.kind}:${ts.rows}:" +
+           s"${ts.min}:${ts.max}:${ts.path.stripPrefix(s"$dir/")}"),
+         rgStats.map(rg => s"stat3:${rg.column}:${rg.kind}:${rg.start}:" +
+           s"${rg.len}:${rg.rows}:${rg.min}:${rg.max}:" +
+           rg.path.stripPrefix(s"$dir/")))
+      }.getOrElse((Seq.empty, Seq.empty, Seq.empty))
     // KMV NDV sketches for the DECLARED ndv columns: one distinct +
     // windowed-top-k pass over ONLY this commit's new files
-    val ndvL: Seq[String] = graft.Prof(s"stage.ndv $dir") {
+    val ndvL: Seq[String] =
       if (ndvCols.isEmpty) Seq.empty
       else {
         val back = df.sparkSession.read.parquet(staged.map(r => s"$dir/$r"): _*)
@@ -1070,7 +1066,6 @@ object Snapshots {
           }
         }
       }
-    }
     Staged(staged, nullable(df.schema).json, statLines, stat2 ++ stat3,
       ndvL, sizeLines)
   }
@@ -1564,144 +1559,151 @@ object Snapshots {
       scala.util.Try(seg.substring(seg.indexOf('=') + 1).toLong).toOption
     }
 
-  /** Build a [[FilePruner]] from a manifest's recorded per-file stats
-    * (`#stat2` typed lines for the declared stats columns, plus the
-    * layout key's own `#stat` lines): pushed-down comparison
-    * predicates on those columns drop whole files at PLANNING time —
-    * Delta-style data skipping for every plain `.filter` on a
-    * snapshot read, not just the explicit prunedScan APIs. Strictly
-    * CONSERVATIVE: only bare `attr <op> literal` conjuncts prune
-    * (casts, expressions, unknown shapes make no claim), a file
-    * without a recorded stat for the column survives, and null rows
-    * cannot match a comparison anyway so min/max exclusion is sound.
-    * The residual filter still runs — pruning never changes answers,
-    * only I/O. Attribute names here are PHYSICAL (the relation reads
-    * under physical names; stats are stored physical-keyed —
-    * rename-proof on both sides). */
-  private[operators] def statsPruner(m: Manifest): FilePruner = {
-    val statKeyCols = m.metaValues("stat").flatMap(_.split(":", 2).headOption)
-      .distinct
-    val availCols = (m.statCols ++ statKeyCols).toSet
-    if (availCols.isEmpty) NoPrune
-    else filters => {
-      import org.apache.spark.sql.catalyst.expressions._
-      // survives(kind, minEnc, maxEnc)
-      type Test = (String, String, String) => Boolean
-      def longTest(mode: Char, v: Long): Test = (kind, mn, mx) =>
-        kind != "i" || (mode match {
-          case '=' => mn.toLong <= v && v <= mx.toLong
-          case '>' => mx.toLong > v
-          case 'g' => mx.toLong >= v
-          case '<' => mn.toLong < v
-          case _ => mn.toLong <= v // 'l'
-        })
-      def dblTest(mode: Char, v: Double): Test = (kind, mn, mx) =>
-        kind != "d" || (mode match {
-          case '=' => mn.toDouble <= v && v <= mx.toDouble
-          case '>' => mx.toDouble > v
-          case 'g' => mx.toDouble >= v
-          case '<' => mn.toDouble < v
-          case _ => mn.toDouble <= v
-        })
-      def strTest(mode: Char, v: Array[Byte]): Test = (kind, mn, mx) =>
+  /** One stat test of the file-skip rule: given a recorded stat
+    * `(kind, minEnc, maxEnc)` of a file or row group, can it hold a
+    * row the conjunct accepts? */
+  private type StatTest = (String, String, String) => Boolean
+
+  /** THE file-skip rule of the manifest path — the only code that
+    * compares a recorded min/max with a predicate bound. Each bare
+    * `attr <op> literal` conjunct (=, <=>, <, <=, >, >=, IN, InSet,
+    * StartsWith) on a column in `statCols` becomes one
+    * `(physical column, test)`. A bound of the stat's own family
+    * (integral ↔ kind "i", floating ↔ "d", string ↔ "s") prunes; a
+    * bound of any other family, a null, a cast or an unknown shape
+    * makes no claim, so the stat is kept. Null rows cannot match a
+    * comparison, so min/max exclusion is sound. Attribute names are
+    * PHYSICAL (stats are stored physical-keyed — rename-proof). */
+  private def statTests(
+      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      statCols: Set[String]): Seq[(String, StatTest)] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    def longTest(mode: Char, v: Long): StatTest = (kind, mn, mx) =>
+      kind != "i" || (mode match {
+        case '=' => mn.toLong <= v && v <= mx.toLong
+        case '>' => mx.toLong > v
+        case 'g' => mx.toLong >= v
+        case '<' => mn.toLong < v
+        case _ => mn.toLong <= v // 'l'
+      })
+    def dblTest(mode: Char, v: Double): StatTest = (kind, mn, mx) =>
+      kind != "d" || (mode match {
+        case '=' => mn.toDouble <= v && v <= mx.toDouble
+        case '>' => mx.toDouble > v
+        case 'g' => mx.toDouble >= v
+        case '<' => mn.toDouble < v
+        case _ => mn.toDouble <= v
+      })
+    def strTest(mode: Char, v: Array[Byte]): StatTest = (kind, mn, mx) =>
+      kind != "s" || {
+        val dec = java.util.Base64.getDecoder
+        lazy val lo = dec.decode(mn)
+        lazy val hi = dec.decode(mx)
+        mode match {
+          case '=' => !Layout.bytesLt(v, lo) && !Layout.bytesLt(hi, v)
+          case '>' => Layout.bytesLt(v, hi) // max > v
+          case 'g' => !Layout.bytesLt(hi, v) // max >= v
+          case '<' => Layout.bytesLt(lo, v) // min < v
+          case _ => !Layout.bytesLt(v, lo) // min <= v
+        }
+      }
+    def valueTest(mode: Char, value: Any): Option[StatTest] = value match {
+      case i: java.lang.Integer => Some(longTest(mode, i.longValue))
+      case j: java.lang.Long => Some(longTest(mode, j.longValue))
+      case sh: java.lang.Short => Some(longTest(mode, sh.longValue))
+      case b: java.lang.Byte => Some(longTest(mode, b.longValue))
+      case d: java.lang.Double => Some(dblTest(mode, d.doubleValue))
+      case fl: java.lang.Float => Some(dblTest(mode, fl.doubleValue))
+      case u: org.apache.spark.unsafe.types.UTF8String =>
+        Some(strTest(mode, u.getBytes))
+      case _ => None // null or another type: no claim
+    }
+    def attrOf(e: Expression): Option[String] = e match {
+      case a: AttributeReference if statCols.contains(a.name) => Some(a.name)
+      case _ => None
+    }
+    def mk(a: Expression, mode: Char, l: Literal): Option[(String, StatTest)] =
+      for (c <- attrOf(a); t <- valueTest(mode, l.value)) yield (c, t)
+    // a stat survives an IN list iff ANY member's point-test survives
+    def anyOf(c: String, values: Seq[Any]): Option[(String, StatTest)] = {
+      val each = values.map(valueTest('=', _))
+      if (each.forall(_.isDefined)) {
+        val ts = each.flatten
+        Some(c -> ((kind, mn, mx) => ts.exists(_(kind, mn, mx))))
+      } else None
+    }
+    // strings starting with prefix p live in [p, succ(p)): succ
+    // increments the last non-0xFF byte (all-0xFF → unbounded above)
+    def startsWithTest(p: Array[Byte]): StatTest = {
+      val succ: Option[Array[Byte]] = {
+        val b = p.clone()
+        var i = b.length - 1
+        while (i >= 0 && b(i) == -1) { b(i) = 0; i -= 1 }
+        if (i < 0) None else { b(i) = (b(i) + 1).toByte; Some(b.take(i + 1)) }
+      }
+      (kind, mn, mx) =>
         kind != "s" || {
           val dec = java.util.Base64.getDecoder
-          lazy val lo = dec.decode(mn)
-          lazy val hi = dec.decode(mx)
-          mode match {
-            case '=' => !Layout.bytesLt(v, lo) && !Layout.bytesLt(hi, v)
-            case '>' => Layout.bytesLt(v, hi) // max > v
-            case 'g' => !Layout.bytesLt(hi, v) // max >= v
-            case '<' => Layout.bytesLt(lo, v) // min < v
-            case _ => !Layout.bytesLt(v, lo) // min <= v
-          }
+          !Layout.bytesLt(dec.decode(mx), p) && // max >= p
+            succ.forall(u => Layout.bytesLt(dec.decode(mn), u)) // min < succ
         }
-      def litTest(mode: Char, l: Literal): Option[Test] = l.value match {
-        case null => None
-        case i: java.lang.Integer => Some(longTest(mode, i.longValue))
-        case j: java.lang.Long => Some(longTest(mode, j.longValue))
-        case sh: java.lang.Short => Some(longTest(mode, sh.longValue))
-        case b: java.lang.Byte => Some(longTest(mode, b.longValue))
-        case d: java.lang.Double => Some(dblTest(mode, d.doubleValue))
-        case fl: java.lang.Float => Some(dblTest(mode, fl.doubleValue))
-        case u: org.apache.spark.unsafe.types.UTF8String =>
-          Some(strTest(mode, u.getBytes))
-        case _ => None
-      }
-      def attrOf(e: Expression): Option[String] = e match {
-        case a: AttributeReference if availCols.contains(a.name) => Some(a.name)
-        case _ => None
-      }
-      def mk(a: Expression, mode: Char, l: Literal): Option[(String, Test)] =
-        for (c <- attrOf(a); t <- litTest(mode, l)) yield (c, t)
-      // a file survives an IN list iff ANY member's point-test survives
-      def anyOf(tests: Seq[Test]): Test = (kind, mn, mx) =>
-        tests.exists(_(kind, mn, mx))
-      // strings starting with prefix p live in [p, succ(p)): succ
-      // increments the last non-0xFF byte (all-0xFF → unbounded above)
-      def startsWithTest(p: Array[Byte]): Test = {
-        val succ: Option[Array[Byte]] = {
-          val b = p.clone()
-          var i = b.length - 1
-          while (i >= 0 && b(i) == -1) { b(i) = 0; i -= 1 }
-          if (i < 0) None else { b(i) = (b(i) + 1).toByte; Some(b.take(i + 1)) }
-        }
-        (kind, mn, mx) =>
-          kind != "s" || {
-            val dec = java.util.Base64.getDecoder
-            !Layout.bytesLt(dec.decode(mx), p) && // max >= p
-              succ.forall(u => Layout.bytesLt(dec.decode(mn), u)) // min < succ
-          }
-      }
-      def test(e: Expression): Option[(String, Test)] = e match {
-        case EqualTo(a, l: Literal) => mk(a, '=', l)
-        case EqualTo(l: Literal, a) => mk(a, '=', l)
-        case EqualNullSafe(a, l: Literal) if l.value != null => mk(a, '=', l)
-        case EqualNullSafe(l: Literal, a) if l.value != null => mk(a, '=', l)
-        case GreaterThan(a, l: Literal) => mk(a, '>', l)
-        case GreaterThan(l: Literal, a) => mk(a, '<', l)
-        case GreaterThanOrEqual(a, l: Literal) => mk(a, 'g', l)
-        case GreaterThanOrEqual(l: Literal, a) => mk(a, 'l', l)
-        case LessThan(a, l: Literal) => mk(a, '<', l)
-        case LessThan(l: Literal, a) => mk(a, '>', l)
-        case LessThanOrEqual(a, l: Literal) => mk(a, 'l', l)
-        case LessThanOrEqual(l: Literal, a) => mk(a, 'g', l)
-        case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-          for {
-            c <- attrOf(a)
-            ts <- {
-              val each = vs.map(v => litTest('=', v.asInstanceOf[Literal]))
-              if (each.forall(_.isDefined)) Some(each.flatten) else None
-            }
-          } yield (c, anyOf(ts))
-        case InSet(a, hset) if hset.nonEmpty =>
-          for {
-            c <- attrOf(a)
-            ts <- {
-              val each = hset.toSeq.map {
-                case null => None
-                case u: org.apache.spark.unsafe.types.UTF8String =>
-                  Some(strTest('=', u.getBytes))
-                case i: java.lang.Integer => Some(longTest('=', i.longValue))
-                case j: java.lang.Long => Some(longTest('=', j.longValue))
-                case sh: java.lang.Short => Some(longTest('=', sh.longValue))
-                case b: java.lang.Byte => Some(longTest('=', b.longValue))
-                case d: java.lang.Double => Some(dblTest('=', d.doubleValue))
-                case fl: java.lang.Float => Some(dblTest('=', fl.doubleValue))
-                case _ => None
-              }
-              if (each.forall(_.isDefined)) Some(each.flatten) else None
-            }
-          } yield (c, anyOf(ts))
-        case StartsWith(a, l: Literal) =>
-          attrOf(a).flatMap(c => l.value match {
-            case u: org.apache.spark.unsafe.types.UTF8String =>
-              Some(c -> startsWithTest(u.getBytes))
-            case _ => None
-          })
-        case _ => None
-      }
-      val tests = filters.flatMap(test)
+    }
+    def test(e: Expression): Option[(String, StatTest)] = e match {
+      case EqualTo(a, l: Literal) => mk(a, '=', l)
+      case EqualTo(l: Literal, a) => mk(a, '=', l)
+      case EqualNullSafe(a, l: Literal) if l.value != null => mk(a, '=', l)
+      case EqualNullSafe(l: Literal, a) if l.value != null => mk(a, '=', l)
+      case GreaterThan(a, l: Literal) => mk(a, '>', l)
+      case GreaterThan(l: Literal, a) => mk(a, '<', l)
+      case GreaterThanOrEqual(a, l: Literal) => mk(a, 'g', l)
+      case GreaterThanOrEqual(l: Literal, a) => mk(a, 'l', l)
+      case LessThan(a, l: Literal) => mk(a, '<', l)
+      case LessThan(l: Literal, a) => mk(a, '>', l)
+      case LessThanOrEqual(a, l: Literal) => mk(a, 'l', l)
+      case LessThanOrEqual(l: Literal, a) => mk(a, 'g', l)
+      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
+        attrOf(a).flatMap(anyOf(_, vs.map(_.asInstanceOf[Literal].value)))
+      case InSet(a, hset) if hset.nonEmpty =>
+        attrOf(a).flatMap(anyOf(_, hset.toSeq))
+      case StartsWith(a, l: Literal) =>
+        attrOf(a).flatMap(c => l.value match {
+          case u: org.apache.spark.unsafe.types.UTF8String =>
+            Some(c -> startsWithTest(u.getBytes))
+          case _ => None
+        })
+      case _ => None
+    }
+    filters.flatMap(test)
+  }
+
+  /** The PHYSICAL columns whose recorded stats the file-skip rule
+    * judges: the declared `#stat2` columns plus the layout key's
+    * `#stat` lines. DECIMAL columns are left out: parquet records their
+    * min/max as UNSCALED integers (kind "i"), which no bound can be
+    * compared with without the scale. */
+  private def statColumns(m: Manifest): Set[String] = {
+    val decimals = m.schemaOpt.toSeq.flatMap(_.fields).collect {
+      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType] =>
+        m.toPhysical.getOrElse(f.name, f.name)
+    }
+    (m.statCols ++ m.metaValues("stat").flatMap(_.split(":", 2).headOption))
+      .toSet -- decimals
+  }
+
+  /** Build a [[FilePruner]] from a manifest's recorded per-file stats
+    * (`#stat2` typed lines for the declared stats columns, plus the
+    * layout key's own `#stat` lines) under the one file-skip rule,
+    * [[statTests]]: pushed-down comparison predicates drop whole
+    * files at PLANNING time — Delta-style data skipping for every
+    * plain `.filter` on a snapshot read and for the range and box
+    * scans. A file without a recorded stat for the column is kept,
+    * and no footer is opened to find one. The residual filter still
+    * runs — pruning never changes answers, only I/O. */
+  private[operators] def statsPruner(m: Manifest): FilePruner = {
+    val availCols = statColumns(m)
+    if (availCols.isEmpty) NoPrune
+    else filters => {
+      val tests = statTests(filters, availCols)
       if (tests.isEmpty) None
       else {
         // per-column per-file stats: typed #stat2 first, the layout
@@ -2253,8 +2255,7 @@ object Snapshots {
     try {
       val updatesP = updates.map(_._1)
       val deletesP = deletes.map(_._1)
-      val loc = graft.Prof(s"merge.locate $dir")(
-        p.locate(pm, marked(p, updatesP.toSeq, deletesP.toSeq)))
+      val loc = p.locate(pm, marked(p, updatesP.toSeq, deletesP.toSeq))
       // an empty batch, or a pure delete of keys no file holds
       if (loc.files.isEmpty && (updatesP.isEmpty || loc.updRows == 0L))
         return prev
@@ -2291,7 +2292,7 @@ object Snapshots {
         (loc.updRows < 0L && updatesP.exists(!_.isEmpty))
       val st =
         if (deletesOpt.isDefined && !updNonEmpty &&
-            graft.Prof(s"merge.emptyProbe $dir")(mergedRows.isEmpty))
+            mergedRows.isEmpty)
           Staged(Nil, pm.schemaOpt.map(nullable(_).json).getOrElse(
             nullable(placed.schema).json), Nil)
         // staged rows live in exactly the touched buckets, so more
@@ -2564,8 +2565,8 @@ object Snapshots {
     * manifest carries no stats for — legacy manifests, or a
     * different key column than the one recorded — fall back to the
     * footer walk, which stays the verification path (the spec pins
-    * manifest == footers). Compute once and pass to repeated
-    * [[prunedScanAt]] calls over the same version. */
+    * manifest == footers). Pruning never calls this: the range and
+    * box scans read the manifest's stats through [[statsPruner]]. */
   def versionStats(spark: SparkSession, dir: String, v: Long,
                    keyCol: String): Seq[Layout.RowGroupStat] =
     versionStats(spark, dir, committedManifest(spark, dir, v), keyCol)
@@ -2588,39 +2589,14 @@ object Snapshots {
     fromManifest ++ walked
   }
 
-  /** Footer-pruned range scan of a VERSION — time travel composed
-    * with min/max skipping, planned ENTIRELY from the manifest: the
-    * manifest supplies the file list AND the per-file key stats (no
-    * directory walk, no footer opens — unreferenced/orphaned files
-    * never consulted, non-surviving files never touched), and only
-    * surviving files are read before the residual filter. Same rows
-    * as `readAt(v).filter(lo <= key < hi)`, I/O proportional to the
-    * predicate's key range within that version. */
-  def prunedScanAt(spark: SparkSession, dir: String, v: Long,
-                   keyCol: String, lo: Long, hi: Long,
-                   stats: Option[Seq[Layout.RowGroupStat]] = None): DataFrame = {
-    val m = committedManifest(spark, dir, v)
-    val st = stats.getOrElse(versionStats(spark, dir, v, keyCol))
-    val surviving = st.filter(s => s.max >= lo && s.min < hi)
-      .map(_.path.stripPrefix(s"$dir/")).distinct
-    val residual = col(keyCol) >= lo && col(keyCol) < hi
-    if (surviving.isEmpty)
-      readFiles(spark, dir, m.files, m.schemaOpt, m.colMap, m.fileSizes,
-        dv = m.dv, dvRefs = m.dvRefs)
-        .filter(residual).limit(0)
-    else readFiles(spark, dir, surviving, m.schemaOpt, m.colMap, m.fileSizes,
-      dv = m.dv, dvRefs = m.dvRefs)
-      .filter(residual)
-  }
-
   /** Typed per-file stats for ANY declared stats column of version
     * `v` — read from the MANIFEST (zero data-file opens; the
     * `#stat2` lines were typed-footer-walked once at write time over
     * each commit's new files). Files without a recorded entry fall
     * back to the typed footer walk, the verification path (the spec
-    * pins manifest == footers per recorded column). `column` is the
-    * version's LOGICAL name; stats are stored physical-keyed
-    * (rename-proof). */
+    * pins manifest == footers per recorded column); pruning never
+    * calls this. `column` is the version's LOGICAL name; stats are
+    * stored physical-keyed (rename-proof). */
   def versionStatsFor(spark: SparkSession, dir: String, v: Long,
                       column: String): Seq[Layout.TypedFileStat] = {
     val m = committedManifest(spark, dir, v)
@@ -2637,35 +2613,20 @@ object Snapshots {
     fromManifest ++ walked
   }
 
-  /** [lo, hi) survival decision on one encoded typed stat. */
-  private def stat2Survives(kind: String, minEnc: String, maxEnc: String,
-                            lo: Any, hi: Any): Boolean = kind match {
-    case "i" =>
-      maxEnc.toLong >= lo.asInstanceOf[Number].longValue &&
-        minEnc.toLong < hi.asInstanceOf[Number].longValue
-    case "d" =>
-      maxEnc.toDouble >= lo.asInstanceOf[Number].doubleValue &&
-        minEnc.toDouble < hi.asInstanceOf[Number].doubleValue
-    case "s" =>
-      val dec = java.util.Base64.getDecoder
-      val lb = lo.asInstanceOf[String].getBytes("UTF-8")
-      val hb = hi.asInstanceOf[String].getBytes("UTF-8")
-      // max >= lo && min < hi, unsigned byte order (parquet's own)
-      !Layout.bytesLt(dec.decode(maxEnc), lb) &&
-        Layout.bytesLt(dec.decode(minEnc), hb)
-    case _ => true // unknown kind: keep the file (conservative)
-  }
-
-  /** Stats-pruned range scan of a version on ANY declared stats
-    * column, [lo, hi) — the q169 discipline generalized past the
-    * INT64 layout key: string and timestamp predicates prune too,
-    * planned entirely from the manifest. Typing: integer-family
-    * columns take Long bounds, double/float take Doubles, strings
-    * take Strings, and TIMESTAMP columns take MICROS-since-epoch
-    * Longs (the residual compares `unix_micros`). Pruning is
-    * CONSERVATIVE — a file without a recorded stat is read, the
-    * residual filter is exact — so the result always equals the
-    * full-scan filter. */
+  /** Stats-pruned range scan of a version, `[lo, hi)` on one column
+    * — time travel composed with min/max skipping, planned entirely
+    * from the manifest (the file list and the per-file stats: no
+    * directory walk, no footer opens, orphaned files never consulted,
+    * skipped files never touched). Works on the layout key and on
+    * every declared stats column. Typing: integer-family columns take
+    * Long bounds, double/float take Doubles, strings take Strings, and
+    * TIMESTAMP columns take MICROS-since-epoch Longs (the residual
+    * compares `unix_micros`). Files skip by the one file-skip rule
+    * ([[statTests]]): a bound of another family, a file without a
+    * recorded stat, or a DECIMAL column (see [[statColumns]]) makes
+    * no claim and the file is read. The residual
+    * filter is exact, so the result always equals the full-scan
+    * filter. */
   def prunedScanAtBy(spark: SparkSession, dir: String, v: Long,
                      column: String, lo: Any, hi: Any): DataFrame =
     prunedScanAtBox(spark, dir, v, Seq((column, lo, hi)))
@@ -2673,40 +2634,51 @@ object Snapshots {
   /** The manifest-relative files a `[lo, hi)` predicate on `column`
     * must read at version `v` — the pruning DECISION alone (what
     * [[prunedScanAtBy]] scans), exposed so layout gates/benchmarks
-    * can count skipped files without touching data. Conservative:
-    * files without a recorded stat survive. */
+    * can count skipped files without touching data. */
   def prunedFilesBy(spark: SparkSession, dir: String, v: Long,
                     column: String, lo: Any, hi: Any): Seq[String] =
     prunedFilesBox(spark, dir, v, Seq((column, lo, hi)))
 
   /** [[prunedFilesBy]] for a CONJUNCTION of range predicates — the
-    * multi-dimensional pruning decision a Z-ORDER layout exists for:
-    * a file survives only if EVERY predicate's recorded min/max
-    * window overlaps it, so per-file survival sets INTERSECT across
-    * dimensions (under a z-prefix bucketing each dimension's stats
-    * box is the bucket cell's projection — an axis-aligned box reads
-    * just the cells it intersects). */
+    * multi-dimensional pruning decision a Z-ORDER layout exists for.
+    * Each `(column, lo, hi)` becomes the conjuncts `column >= lo` and
+    * `column < hi` on the physical name, judged by the one file-skip
+    * rule the planning-time pruner uses ([[statsPruner]]): a file
+    * survives only if EVERY conjunct's test keeps it, so per-file
+    * survival sets INTERSECT across dimensions (under a z-prefix
+    * bucketing each dimension's stats box is the bucket cell's
+    * projection — an axis-aligned box reads just the cells it
+    * intersects). A bound of another family than the stat's, or a
+    * file without a recorded stat, makes no claim: the file is kept,
+    * and no footer is opened. Manifest only. */
   def prunedFilesBox(spark: SparkSession, dir: String, v: Long,
                      preds: Seq[(String, Any, Any)]): Seq[String] = {
     require(preds.nonEmpty, "box pruning needs at least one predicate")
     val m = committedManifest(spark, dir, v)
-    val byCol = preds.map { case (c, _, _) =>
-      c -> versionStatsFor(spark, dir, v, c).map(s => s.path -> s).toMap
-    }.toMap
-    m.files.filter { rel =>
-      preds.forall { case (c, lo, hi) =>
-        byCol(c).get(s"$dir/$rel") match {
-          case Some(s) => stat2Survives(s.kind, s.min, s.max, lo, hi)
-          case None => true // no stats claim for this file: must read it
-        }
-      }
+    statsPruner(m)(rangeConjuncts(m, preds)) match {
+      case Some(kept) => m.files.filter(kept)
+      case None => m.files
+    }
+  }
+
+  /** A box's `[lo, hi)` predicates as the conjuncts the file-skip
+    * rule reads: `column >= lo` and `column < hi` on each column's
+    * PHYSICAL name. */
+  private def rangeConjuncts(m: Manifest, preds: Seq[(String, Any, Any)])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    preds.flatMap { case (c, lo, hi) =>
+      val a = AttributeReference(m.toPhysical.getOrElse(c, c),
+        org.apache.spark.sql.types.NullType)()
+      Seq(GreaterThanOrEqual(a, Literal(lo)), LessThan(a, Literal(hi)))
     }
   }
 
   /** [[prunedFilesBox]] refined by the manifest's per-ROW-GROUP
     * `#stat3` lines: a file-level survivor drops when NO recorded
-    * row group satisfies every predicate at once — finer than the
-    * file-level decision, which judges each predicate against the
+    * row group passes every conjunct's test at once — the same
+    * file-skip rule ([[statTests]]) applied per row group, finer than
+    * the file-level decision, which judges each predicate against the
     * whole file's min/max. Manifest only, zero footer opens. A file
     * keeps when it has no `#stat3` claim (single-row-group files
     * never record one) or its predicate columns disagree on the
@@ -2716,19 +2688,16 @@ object Snapshots {
   private[graft] def prunedFilesBoxRg(spark: SparkSession, dir: String,
       v: Long, preds: Seq[(String, Any, Any)]): Seq[String] = {
     val m = committedManifest(spark, dir, v)
-    val byCol = preds.map { case (c, _, _) =>
-      c -> m.stats3(m.toPhysical.getOrElse(c, c))
-    }.toMap
+    val tests = statTests(rangeConjuncts(m, preds), statColumns(m))
+    val byCol = tests.map(_._1).distinct.map(c => c -> m.stats3(c)).toMap
     prunedFilesBox(spark, dir, v, preds).filter { rel =>
-      val claims = preds.flatMap { case (c, lo, hi) =>
-        byCol(c).get(rel).map(gs => (lo, hi, gs))
+      val claims = tests.flatMap { case (c, t) =>
+        byCol(c).get(rel).map(gs => (t, gs))
       }
-      val blockSets = claims.map(_._3.map(g => (g.start, g.len))).distinct
+      val blockSets = claims.map(_._2.map(g => (g.start, g.len))).distinct
       claims.isEmpty || blockSets.size != 1 ||
         blockSets.head.indices.exists { i =>
-          claims.forall { case (lo, hi, gs) =>
-            stat2Survives(gs(i).kind, gs(i).min, gs(i).max, lo, hi)
-          }
+          claims.forall { case (t, gs) => t(gs(i).kind, gs(i).min, gs(i).max) }
         }
     }
   }
@@ -2736,10 +2705,11 @@ object Snapshots {
   /** Stats-pruned scan of a version under a CONJUNCTION of range
     * predicates, `[lo, hi)` each — [[prunedScanAtBy]] generalized to
     * the multi-dimensional box query: planned entirely from the
-    * manifest, reads the files [[prunedFilesBoxRg]] keeps (whole,
-    * vectorized — Spark's task-side footer pruning skips the failing
-    * row groups inside them), residual = the exact AND. Always
-    * equals the full-scan filter. */
+    * manifest by the one file-skip rule, reads the files
+    * [[prunedFilesBoxRg]] keeps (whole, vectorized — Spark's
+    * task-side footer pruning skips the failing row groups inside
+    * them), residual = the exact AND. A bound the rule cannot judge
+    * keeps the file, so the scan always equals the full-scan filter. */
   def prunedScanAtBox(spark: SparkSession, dir: String, v: Long,
                       preds: Seq[(String, Any, Any)]): DataFrame = {
     val m = committedManifest(spark, dir, v)

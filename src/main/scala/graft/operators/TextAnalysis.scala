@@ -946,12 +946,11 @@ object TextAnalysis {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(gramLen >= 1, s"gramLen must be >= 1, got $gramLen")
-    val fx = graft.Prof("langid.checkpoint")(
-      df.select(col(idCol).as("id"), col(labelCol).as("lang"),
+    val fx = df.select(col(idCol).as("id"), col(labelCol).as("lang"),
         ArrayOps.bincount(
           ArrayOps.charGramBuckets(lower(col(textCol)), gramLen, buckets.toLong),
           buckets, bias = true).as("x"))
-      .localCheckpoint())
+      .localCheckpoint()
     // Below a feature-matrix size threshold the training replay runs
     // ON THE DRIVER over one collect of the checkpointed features
     // (guide §1.2/§5 — the Dorling.run small-n discipline): each
@@ -989,15 +988,14 @@ object TextAnalysis {
     * 65 buckets). */
   private def driverTrain(fx: DataFrame, buckets: Int, iters: Int)
       : (Seq[String], collection.Map[String, Array[Long]]) = {
-    val data = graft.Prof("langid.collect")(
-      fx.select(col("lang"), col("x")).collect().map(r =>
-        (if (r.isNullAt(0)) null else r.getString(0),
-          r.getSeq[Long](1).toArray)))
+    val data = fx.select(col("lang"), col("x")).collect().map(r =>
+      (if (r.isNullAt(0)) null else r.getString(0),
+        r.getSeq[Long](1).toArray))
     val cls = data.map(_._1).filter(_ != null).distinct.sorted.toSeq
     require(cls.nonEmpty, "langIdPerceptron: no non-null labels")
     val ws = scala.collection.mutable.Map(
       cls.map(c => c -> Array.fill(buckets + 1)(0L)): _*)
-    graft.Prof("langid.driverTrain")(for (_ <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val upd = cls.map(c => c -> new Array[Long](buckets + 1)).toMap
       data.foreach { case (lang, x) =>
         cls.foreach { c =>
@@ -1022,7 +1020,7 @@ object TextAnalysis {
         var i = 0
         while (i < wc.length) { wc(i) += u(i); i += 1 }
       }
-    })
+    }
     (cls, ws)
   }
 
@@ -1037,9 +1035,8 @@ object TextAnalysis {
     * C=1 twin q87). */
   private def distributedTrain(fx: DataFrame, buckets: Int, iters: Int)
       : (Seq[String], collection.Map[String, Array[Long]]) = {
-    val classes = graft.Prof("langid.classes")(
-      fx.select(col("lang")).filter(col("lang").isNotNull)
-        .distinct().collect().map(_.getString(0)).sorted.toSeq)
+    val classes = fx.select(col("lang")).filter(col("lang").isNotNull)
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
     require(classes.nonEmpty, "langIdPerceptron: no non-null labels")
     val ws = scala.collection.mutable.Map(
       classes.map(c => c -> Array.fill(buckets + 1)(0L)): _*)
@@ -1055,8 +1052,7 @@ object TextAnalysis {
           sum(when(col(s"f_$c"), col(s"y_$c") * element_at(col("x"), i + 1))
             .otherwise(0L)).as(s"u_${c}_$i"))
       }
-      val upd = graft.Prof("langid.iter")(
-        flaggedRows.agg(aggCols.head, aggCols.tail: _*).collect()(0))
+      val upd = flaggedRows.agg(aggCols.head, aggCols.tail: _*).collect()(0)
       classes.zipWithIndex.foreach { case (c, ci) =>
         val base = ci * (buckets + 1)
         ws(c) = Array.tabulate(buckets + 1)(i =>

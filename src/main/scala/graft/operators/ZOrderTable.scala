@@ -547,19 +547,18 @@ object ZOrderTable {
     val bands = math.max(CutBandsFloor, scala.util.Try(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
       .getOrElse(CutBandsFloor))
-    val bounds = graft.Prof(s"cuts.bounds $dim")(scala.util.Try(
+    val bounds = scala.util.Try(
       hist.stat.approxQuantile("v",
         (1 until bands).map(_.toDouble / bands).toArray, 0.01))
-      .getOrElse(Array.empty[Double]).distinct.sorted)
+      .getOrElse(Array.empty[Double]).distinct.sorted
     // band assignment by the same codegen binary search as codeExpr —
     // the histogram is row-count-sized on continuous dimensions, so an
     // interpreted per-element lambda here is the same §4 tax
     val banded = hist.withColumn("band",
       upperBoundCount(col("v").cast("double"),
         bounds.map(b => lit(b))).cast("int"))
-    val totalMap = graft.Prof(s"cuts.bandTotals $dim")(
-      banded.groupBy(col("band")).agg(sum(col("c")).as("t"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    val totalMap = banded.groupBy(col("band")).agg(sum(col("c")).as("t"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = new Array[Long](bounds.length + 1)
     var acc = 0L
     var i = 0
@@ -593,9 +592,8 @@ object ZOrderTable {
   private def deriveCuts(df: DataFrame, dim: String, buckets: Int): ZMap = {
     val (frame, kind, hist) = cutsFrameHist(df, dim, buckets)
     val cuts =
-      try graft.Prof(s"cuts.collect $dim")(
-        frame.orderBy(col("d")).select("cut").collect()
-          .map(_.get(0).toString))
+      try frame.orderBy(col("d")).select("cut").collect()
+        .map(_.get(0).toString)
       finally hist.unpersist()
     ZMap(kind, buckets, cuts)
   }

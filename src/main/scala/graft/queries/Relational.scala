@@ -981,10 +981,10 @@ object Relational {
       .orderBy(col("section"))
   }
 
-  /** Footer pruning composed with TIME TRAVEL under the gate
-    * ([[graft.operators.Snapshots.prunedScanAt]] — the manifest
-    * supplies the file list, real footers supply row-group min/max,
-    * only survivors are read): orders published as v1, q164's
+  /** Min/max pruning composed with TIME TRAVEL under the gate
+    * ([[graft.operators.Snapshots.prunedScanAtBy]] — the manifest
+    * supplies the file list and the per-file key min/max, only
+    * survivors are read): orders published as v1, q164's
     * modify batch merged as v2, then every q156 key-range predicate
     * pruned-scanned AT BOTH VERSIONS. The folds must equal the
     * oracle's plain WHERE over each version's restated content —
@@ -1008,11 +1008,8 @@ object Relational {
     val v2 = Snapshots.merge(mods, out, "bucket",
       Seq("o_orderkey"), Seq("o_orderkey"))
     val rows = Seq((v1, "v1"), (v2, "v2")).flatMap { case (v, vl) =>
-      // one footer walk per version, shared across the predicates —
-      // exactly the cache a scan planner keeps
-      val stats = Some(Snapshots.versionStats(spark, out, v, "o_orderkey"))
       publishPreds.map { case (lbl, lo, hi) =>
-        val r = Snapshots.prunedScanAt(spark, out, v, "o_orderkey", lo, hi, stats)
+        val r = Snapshots.prunedScanAtBy(spark, out, v, "o_orderkey", lo, hi)
           .withColumn("h", ordersRowHash)
           .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L)),
             coalesce(sum(col("h") % 1000000000000L), lit(0L))).collect()(0)
@@ -1082,7 +1079,7 @@ object Relational {
     }
     val prune = {
       val (c, x, s) = fold(
-        Snapshots.prunedScanAt(spark, out, v5, "o_orderkey", 256L, 1280L), hSrc)
+        Snapshots.prunedScanAtBy(spark, out, v5, "o_orderkey", 256L, 1280L), hSrc)
       Seq(("prune", "p1_low", c, x, s))
     }
     val (dropped, deleted, kept) = Snapshots.vacuum(spark, out, v5, retainMs = 0L)
@@ -1522,7 +1519,7 @@ object Relational {
         () => fold(Snapshots.readAt(spark, out, v2), col("status")),
         () => fold(Snapshots.readAt(spark, out, v4), col("status")),
         () => fold(
-          Snapshots.prunedScanAt(spark, out, v4, "o_orderkey", 4096L, 12288L),
+          Snapshots.prunedScanAtBy(spark, out, v4, "o_orderkey", 4096L, 12288L),
           col("status"))))
     val qn = "graft_ren_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = ChangeFeed.readStream(spark, out)
@@ -1580,7 +1577,9 @@ object Relational {
     * date-sliced commits (<1997, 1997–99, ≥1999), so per-file date
     * ranges genuinely discriminate. Sections: a TIMESTAMP-pruned scan
     * (mid-window — exactly the middle slice's files survive, the
-    * 'state' row counts 2 of 6 from the manifest stats alone), a
+    * 'state' row counts 2 of 6 through
+    * [[graft.operators.Snapshots.prunedFilesBy]], the same manifest-only
+    * decision the scan makes), a
     * STRING-pruned scan (status ['O','P') — unsigned-byte order), a
     * second-key long prune, and the full fold; every prune equals its
     * closed-form filter. */
@@ -1614,11 +1613,9 @@ object Relational {
           coalesce(sum(col("h") % 1000000000000L), lit(0L))).collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    val tsStats = Snapshots.versionStatsFor(spark, out, v3, "o_orderdate")
-    // the skip decision REPLAYED from the manifest stats alone: how
-    // many files could the window touch (the 'state' proof row)
-    val surviving = tsStats.count(s =>
-      s.kind == "i" && s.max.toLong >= lo && s.min.toLong < hi)
+    // the skip decision from the manifest stats alone: how many files
+    // could the window touch (the 'state' proof row)
+    val surviving = Snapshots.prunedFilesBy(spark, out, v3, "o_orderdate", lo, hi).size
     val (t1, t2, t3) = fold(Snapshots.prunedScanAtBy(spark, out, v3,
       "o_orderdate", lo, hi))
     val (o1, o2, o3) = fold(Snapshots.prunedScanAtBy(spark, out, v3,
@@ -2356,9 +2353,8 @@ object Relational {
     val src = Tables.orders(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    graft.Prof("q189.publishMapped")(
-      Z.publishMapped(src, srcT, Seq("o_orderdate", "o_totalprice"),
-        shift = 26, buckets = 256))
+    Z.publishMapped(src, srcT, Seq("o_orderdate", "o_totalprice"),
+      shift = 26, buckets = 256)
     val v1 = Snapshots.latest(spark, srcT).get
     // the box: [1998-01-01, 2000-01-01) × [50000, 150000) — raw preds
     // (this generator's order dates span 1995..2001)
@@ -2375,11 +2371,10 @@ object Relational {
     val total = Snapshots.files(spark, srcT, v1).size.toLong
     // append shifted keys with +3653-day dates — OUT of every stored
     // cut: they clamp to the edge cell and never enter the box
-    graft.Prof("q189.appendMapped")(
-      Z.appendMapped(src.filter(col("o_orderkey") % 10 === 1)
-        .withColumn("o_orderkey", col("o_orderkey") + 2147483648L)
-        .withColumn("o_orderdate",
-          col("o_orderdate") + expr("INTERVAL 3653 DAYS")), srcT))
+    Z.appendMapped(src.filter(col("o_orderkey") % 10 === 1)
+      .withColumn("o_orderkey", col("o_orderkey") + 2147483648L)
+      .withColumn("o_orderdate",
+        col("o_orderdate") + expr("INTERVAL 3653 DAYS")), srcT)
     val v2 = Snapshots.latest(spark, srcT).get
     // All four verification folds are VERSION-PINNED reads (v1's box
     // and full read are unchanged by the append — manifests are
@@ -2391,16 +2386,12 @@ object Relational {
     // along in the scan, the fold's hash only references the orders
     // columns so values are unchanged).
     val Seq(b1f, b2f, r1f, r2f) = Par.all(spark, "q189.fold")(Seq(
-      () => graft.Prof("q189.fold(box v1)")(
-        fold(Z.boxBy(spark, srcT, v1, preds))),
-      () => graft.Prof("q189.fold(box v2)")(
-        fold(Z.boxBy(spark, srcT, v2, preds))),
-      () => graft.Prof("q189.fold(read v1)")(
-        fold(Z.readAt(spark, srcT, v1))),
-      () => graft.Prof("q189.fold(read v2 + clamp)")(
-        fold(Snapshots.readAt(spark, srcT, v2),
-          sort_array(collect_set(when(col("o_orderkey") > 2147483648L,
-            col("__gzm_o_orderdate"))))))))
+      () => fold(Z.boxBy(spark, srcT, v1, preds)),
+      () => fold(Z.boxBy(spark, srcT, v2, preds)),
+      () => fold(Z.readAt(spark, srcT, v1)),
+      () => fold(Snapshots.readAt(spark, srcT, v2),
+        sort_array(collect_set(when(col("o_orderkey") > 2147483648L,
+          col("__gzm_o_orderdate")))))))
     def m(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
     val (b1c, b1x, b1s) = m(b1f)
     val (b2c, b2x, b2s) = m(b2f)

@@ -1243,10 +1243,8 @@ object ScaleStress {
       timed(s"statsplan $lbl($nf): footer WALK (verification path)")(
         Layout.rowGroupStatsFiles(spark,
           Snapshots.files(spark, dir, v).map(r => s"$dir/$r"), "key").size)
-      val stats = Snapshots.versionStats(spark, dir, v, "key")
-      timed(s"statsplan $lbl($nf): prunedScanAt one-bucket range (manifest-planned)")(
-        Snapshots.prunedScanAt(spark, dir, v, "key", 0L, per,
-          Some(stats)).count())
+      timed(s"statsplan $lbl($nf): prunedScanAtBy one-bucket range (manifest-planned)")(
+        Snapshots.prunedScanAtBy(spark, dir, v, "key", 0L, per).count())
     }
     }
 

@@ -70,7 +70,7 @@ class DeletionVectorSpec extends SparkSuite {
     assert(Snapshots.files(spark, dir, v3) === filesBefore)
     assert(Snapshots.read(spark, dir).count() === 8000L - nDoomed - 1)
     // pruned scans apply the vectors too (same answer as the filter)
-    val pruned = Snapshots.prunedScanAt(spark, dir, v3, "k", 400L, 600L)
+    val pruned = Snapshots.prunedScanAtBy(spark, dir, v3, "k", 400L, 600L)
     assert(pruned.count() ===
       (400L until 600L).count(k => k % 97 != 0 && k != 500L))
   }
@@ -353,7 +353,7 @@ class DeletionVectorSpec extends SparkSuite {
       assert(viaSidecars.agg(sum("v")).head().getLong(0) ===
         big.filter(col("k") % 2 =!= 0).agg(sum("v")).head().getLong(0))
       // the pruned-scan surface takes the same path
-      assert(Snapshots.prunedScanAt(spark, dir,
+      assert(Snapshots.prunedScanAtBy(spark, dir,
         Snapshots.latest(spark, dir).get, "k", 100L, 300L).count() === 100L)
     } finally spark.conf.unset(key)
   }

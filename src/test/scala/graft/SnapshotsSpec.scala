@@ -168,7 +168,7 @@ class SnapshotsSpec extends SparkSuite {
     Snapshots.merge(fixture.filter(col("key") >= 100 && col("key") < 110)
       .withColumn("payload", lit(0L)), dir, "bucket", Seq("key"), Seq("key"))
     for (v <- Seq(1L, 2L); (lo, hi) <- Seq((100L, 200L), (0L, 2000L), (5000L, 6000L))) {
-      val pruned = Snapshots.prunedScanAt(spark, dir, v, "key", lo, hi)
+      val pruned = Snapshots.prunedScanAtBy(spark, dir, v, "key", lo, hi)
         .select("key", "payload").as[(Long, Long)].collect().sorted.toSeq
       val full = Snapshots.readAt(spark, dir, v)
         .filter(col("key") >= lo && col("key") < hi)
@@ -176,9 +176,9 @@ class SnapshotsSpec extends SparkSuite {
       assert(pruned === full, s"v$v [$lo,$hi)")
     }
     // the v2 pruned scan sees the merged payloads; the v1 scan does not
-    assert(Snapshots.prunedScanAt(spark, dir, 2L, "key", 100L, 110L)
+    assert(Snapshots.prunedScanAtBy(spark, dir, 2L, "key", 100L, 110L)
       .select("payload").as[Long].collect().forall(_ === 0L))
-    assert(Snapshots.prunedScanAt(spark, dir, 1L, "key", 100L, 110L)
+    assert(Snapshots.prunedScanAtBy(spark, dir, 1L, "key", 100L, 110L)
       .select("payload").as[Long].collect().forall(_ !== 0L))
   }
 
@@ -351,7 +351,7 @@ class SnapshotsSpec extends SparkSuite {
     val fdst = java.nio.file.Paths.get(s"$dir/$hidden.hidden")
     java.nio.file.Files.move(fsrc, fdst)
     try {
-      val got = Snapshots.prunedScanAt(spark, dir, v4, "key", 0L, 10L)
+      val got = Snapshots.prunedScanAtBy(spark, dir, v4, "key", 0L, 10L)
         .select("key", "payload").as[(Long, Long)].collect().sorted.toSeq
       val want = fixture.filter(col("key") < 10)
         .select("key", "payload").as[(Long, Long)].collect()
@@ -618,7 +618,7 @@ class SnapshotsSpec extends SparkSuite {
     val v5 = Snapshots.rename(spark, dir, "key", "k2")
     assert(Snapshots.read(spark, dir).count() === 901L)
     // pruning consults PHYSICAL-keyed stats across the rename
-    val pruned = Snapshots.prunedScanAt(spark, dir, v5, "k2", 0L, 10L)
+    val pruned = Snapshots.prunedScanAtBy(spark, dir, v5, "k2", 0L, 10L)
     assert(pruned.select("k2").as[Long].collect().sorted.toSeq ===
       (0L until 10L).toSeq)
     // diff across a rename is EMPTY (identical files cancel)
@@ -645,12 +645,13 @@ class SnapshotsSpec extends SparkSuite {
         col("id").as("key"),
         concat(lit("u"), lpad(col("id").cast("string"), 4, "0")).as("name"),
         timestamp_micros(col("id") * 1000000L + 1600000000000000L).as("ts"),
-        (col("id") / 7.0).as("score"))
+        (col("id") / 7.0).as("score"),
+        col("id").cast("string").as("code"))
       .withColumn("bucket", expr("key div 100"))
     Snapshots.publish(rows, dir, "bucket", Seq("key"),
-      statsCols = Seq("key", "name", "ts", "score"))
+      statsCols = Seq("key", "name", "ts", "score", "code"))
     // manifest == typed footer walk, per recorded column
-    for (c <- Seq("key", "name", "ts", "score")) {
+    for (c <- Seq("key", "name", "ts", "score", "code")) {
       val m = Snapshots.versionStatsFor(spark, dir, 1L, c).sortBy(_.path)
       val w = graft.operators.Layout.typedStatsFiles(spark,
         Snapshots.files(spark, dir, 1L).map(r => s"$dir/$r"), Seq(c))
@@ -672,6 +673,31 @@ class SnapshotsSpec extends SparkSuite {
       .count() === 10L)
     assert(Snapshots.prunedScanAtBy(spark, dir, 1L, "score", 0.0, 1.0)
       .count() === 7L)
+    // one skip rule for every bound (regression pins): a non-integral
+    // bound on the long key keeps the file whose min is its floor (key
+    // 100), and a bound of another family than the column's stats (a
+    // String on the long key, a Long on the numeric-text `code`) makes
+    // no claim — each scan equals the plain filter and the decision
+    // keeps the file holding the match
+    def keysOf(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("key").as[Long].collect().sorted.toSeq
+    val holds100 = Snapshots.versionStatsFor(spark, dir, 1L, "key")
+      .filter(s => s.min.toLong <= 100L && 100L <= s.max.toLong)
+      .map(_.path.stripPrefix(s"$dir/"))
+    assert(holds100.nonEmpty)
+    for ((c, lo, hi, want) <- Seq[(String, Any, Any, Seq[Long])](
+        ("key", 0L, 100.5, (0L to 100L).toSeq),
+        ("key", "100", "200", (100L until 200L).toSeq),
+        ("code", 100L, 200L, (100L until 200L).toSeq))) {
+      val full = Snapshots.readAt(spark, dir, 1L)
+        .filter(col(c) >= lit(lo) && col(c) < lit(hi))
+      assert(keysOf(full) === want, s"$c [$lo, $hi): the plain filter")
+      assert(keysOf(Snapshots.prunedScanAtBy(spark, dir, 1L, c, lo, hi)) ===
+        want, s"$c [$lo, $hi): the pruned scan")
+      assert(holds100.forall(
+        Snapshots.prunedFilesBy(spark, dir, 1L, c, lo, hi).contains),
+        s"$c [$lo, $hi): the file holding key 100 is kept")
+    }
     // an append's new file gets its own stats AND is SKIPPED when its
     // range cannot intersect (name='zzz' is above the probe window)
     Snapshots.append(rows.filter(col("key") < 5).withColumn("name", lit("zzz")),
