@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
-/** Plan hygiene helpers for iterative DataFrame loops. */
+/** Plan hygiene helpers for iterative DataFrame loops and small-input
+  * dispatch. */
 object PlanUtil {
 
   /** Materialize a DataFrame and sever BOTH its lineage and its
@@ -25,4 +26,15 @@ object PlanUtil {
     val cp = df.localCheckpoint()
     cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
   }
+
+  /** The rows of `df` when it has at most `n` of them (`n <= 0`: never).
+    * Takes at most n + 1 rows, so a large input ships no more than that
+    * to the driver; `n = Int.MaxValue` admits every input. Not
+    * `limit(n + 1).count()`: Spark names each such limit's counter
+    * uniquely in its generated code, so that plan compiles anew on
+    * every call; `take` runs its limit outside generated code. */
+  def collectIfSmall(df: DataFrame, n: Int): Option[Array[Row]] =
+    if (n <= 0) None
+    else if (n == Int.MaxValue) Some(df.collect())
+    else Some(df.take(n + 1)).filter(_.length <= n)
 }

@@ -71,7 +71,7 @@ object Borders {
     */
   def compute(df: DataFrame, idCol: String, geomCol: String): DataFrame = {
     val input = df.select(col(idCol).as("id"), col(geomCol).as("geom"))
-    collectIfSmall(input, SmallN) match {
+    graft.PlanUtil.collectIfSmall(input, SmallN) match {
       case None => grid(df, idCol, geomCol)
       case Some(rows) =>
         val ids = rows.map(_.get(0))
@@ -84,17 +84,6 @@ object Borders {
         df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
     }
   }
-
-  /** The rows of `df` when it has at most `n` of them (`n <= 0`: never).
-    * Takes at most n + 1 rows, so a large input ships no more than that
-    * to the driver; `n = Int.MaxValue` admits every input. Not
-    * `limit(n + 1).count()`: Spark names each such limit's counter
-    * uniquely in its generated code, so that plan compiles anew on
-    * every call; `take` runs its limit outside generated code. */
-  private[operators] def collectIfSmall(df: DataFrame, n: Int): Option[Array[Row]] =
-    if (n <= 0) None
-    else if (n == Int.MaxValue) Some(df.collect())
-    else Some(df.take(n + 1)).filter(_.length <= n)
 
   /** Ids as the catalyst values Spark's comparisons read (null stays null). */
   private[operators] def catalystKeys(ids: Array[Any], idType: DataType): Array[Any] =

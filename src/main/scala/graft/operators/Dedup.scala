@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -656,6 +657,10 @@ object Dedup {
     cold + hot
   }
 
+  /** Pair count up to which [[connectedComponents]] runs its rounds on
+    * the driver (see its size dispatch). */
+  val SmallPairs = 200000
+
   /** Connected components over a similarity-pair edge list:
     * min-label propagation with POINTER DOUBLING — each round first
     * takes the min label over the neighborhood, then replaces every
@@ -670,49 +675,151 @@ object Dedup {
     * would mis-cluster without any signal. The default cap of 50
     * doubling rounds covers any graph that fits in storage.
     *
+    * SIZE DISPATCH: the pairs are materialized once (a shuffle-free
+    * `localCheckpoint`, so the upstream pair join runs exactly once
+    * on either side), and a list of at most [[SmallPairs]] pairs is
+    * collected and run through the same rounds on the driver's arrays
+    * ([[localRounds]]); a larger one runs the distributed rounds
+    * ([[componentRounds]]) from the checkpoint. A distributed round
+    * runs three Spark jobs (two checkpoints and a count), so even a
+    * 1,350-pair graph takes ~30 jobs with their own generated classes;
+    * a driver round is a pass over two int arrays. Both sides compare ids
+    * under Spark's ordering for the id type, keep a null id as a
+    * (null, null) row that joins nothing, and throw at `maxIter`, so
+    * their rows and schema are equal (DedupPropertySpec).
+    * Crossover, measured with the pairs already checkpointed, both
+    * sides timed from their own checkpoint (`local[4]`, 4 vCPUs, host
+    * load 2–4, median of 3 warm calls), driver vs distributed:
+    * chain 10k pairs 0.48 vs 8.4 s, 100k 0.67 vs 18.1 s, 1M 6.8 vs
+    * 65.5 s; clique 10k 0.21 vs 1.04 s, 100k 0.30 vs 1.21 s, 1M 1.9 vs
+    * 3.4 s. The driver wins at every size measured, by less as a
+    * clique grows; SmallPairs = 200k caps what the driver holds and
+    * what a larger list ships to it for the size check alone
+    * (SmallPairs + 1 rows).
+    *
     * @param pairs (i, j) undirected edges
     * @return (id, component) — component = min id reachable
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val edges = pairs.select(col("i"), col("j"))
-      .unionAll(pairs.select(col("j").as("i"), col("i").as("j")))
-      .distinct().localCheckpoint()
-    var labels = edges.select(col("i").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint()
+    // the id type the rounds' union widens i and j to
+    val idType = undirected(pairs).schema("i").dataType
+    val cp = pairs.select(col("i").cast(idType).as("i"), col("j").cast(idType).as("j"))
+      .localCheckpoint()
+    // one partition of the checkpoint: the size check is one job
+    graft.PlanUtil.collectIfSmall(cp.coalesce(1), SmallPairs) match {
+      case None => componentRounds(cp, maxIter)
+      case Some(rows) => localComponents(cp, rows, maxIter)
+    }
+  }
+
+  /** [[connectedComponents]] on the driver: `rows` are the collected
+    * `pairs`, whose i and j share one type. */
+  private def localComponents(pairs: DataFrame, rows: Array[Row],
+                              maxIter: Int): DataFrame = {
+    val idType = pairs.schema("i").dataType
+    val ends = rows.flatMap(r => Seq(r.get(0), r.get(1)))
+    val keys = Borders.catalystKeys(ends, idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    // node = rank of a distinct non-null id in Spark's order, so the
+    // min node is the min id; firsts(node) = an end holding that id
+    val node = Array.fill(ends.length)(-1)
+    val firsts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    keys.indices.filter(keys(_) != null).sortWith((a, b) => ord.lt(keys(a), keys(b)))
+      .foreach { e =>
+        if (firsts.isEmpty || ord.compare(keys(firsts.last), keys(e)) != 0) firsts += e
+        node(e) = firsts.length - 1
+      }
+    val edges = rows.indices.filter(k => node(2 * k) >= 0 && node(2 * k + 1) >= 0)
+    val label = localRounds(firsts.length, edges.map(k => node(2 * k)).toArray,
+      edges.map(k => node(2 * k + 1)).toArray, maxIter)
+    val out = firsts.indices.map(n => Row(ends(firsts(n)), ends(firsts(label(n))))) ++
+      (if (keys.contains(null)) Seq(Row(null, null)) else Nil)
+    // the distributed rounds' schema, nullability included, from their own columns
+    val edgeList = undirected(pairs)
+    val schema = jump(propagate(edgeList, initialLabels(edgeList))).select("id", "component").schema
+    pairs.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+  }
+
+  /** The distributed rounds: [[connectedComponents]] above
+    * [[SmallPairs]] pairs. Same output. */
+  private[graft] def componentRounds(pairs: DataFrame, maxIter: Int): DataFrame = {
+    val edges = undirected(pairs).localCheckpoint()
+    var labels = initialLabels(edges).localCheckpoint()
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
-      // pass 1 — propagate: min(own, min over neighbors' labels)
-      val nbMin = edges
-        .join(labels.withColumnRenamed("id", "j"), "j")
-        .groupBy(col("i").as("id")).agg(min(col("component")).as("nb_component"))
       // checkpointFlat per round (NOT bare localCheckpoint): inherited
       // stats estimates would compound geometrically across rounds and
       // stall the planner (see PlanUtil.checkpointFlat).
-      val prop = graft.PlanUtil.checkpointFlat(
-        labels.join(nbMin, Seq("id"), "left")
-          .select(col("id"), col("component").as("old"),
-            least(col("component"), coalesce(col("nb_component"), col("component")))
-              .as("component")))
-      // pass 2 — pointer-jump: component <- label(component). Labels
-      // are node ids and label(x) <= x, so the jump only decreases;
-      // this squares the distance already-propagated labels cover.
-      val jumped = graft.PlanUtil.checkpointFlat(
-        prop.join(
-            prop.select(col("id").as("component"), col("component").as("grand")),
-            Seq("component"), "left")
-          .select(col("id"), col("old"),
-            coalesce(col("grand"), col("component")).as("component")))
+      val prop = graft.PlanUtil.checkpointFlat(propagate(edges, labels))
+      val jumped = graft.PlanUtil.checkpointFlat(jump(prop))
       changed = jumped.filter(col("component") =!= col("old")).count()
       labels = jumped.select("id", "component")
       it += 1
     }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter doubling rounds " +
-          "(graph diameter beyond ~2^maxIter) — raise maxIter")
+    if (changed > 0) throw notConverged(maxIter)
     labels
   }
+
+  /** The rounds of [[componentRounds]] on the driver: `n` nodes whose
+    * order is the ids' order, edges `src(e)`–`dst(e)` in both
+    * directions. Same propagate, jump and no-change test.
+    * @return each node's component node */
+  private def localRounds(n: Int, src: Array[Int], dst: Array[Int],
+                          maxIter: Int): Array[Int] = {
+    var label = Array.range(0, n)
+    var changed = 1
+    var it = 0
+    while (changed > 0 && it < maxIter) {
+      val prop = label.clone()
+      for (e <- src.indices) {
+        val (a, b) = (src(e), dst(e))
+        prop(a) = math.min(prop(a), label(b))
+        prop(b) = math.min(prop(b), label(a))
+      }
+      val jumped = prop.map(prop(_))
+      changed = (0 until n).count(k => jumped(k) != label(k))
+      label = jumped
+      it += 1
+    }
+    if (changed > 0) throw notConverged(maxIter)
+    label
+  }
+
+  private def notConverged(maxIter: Int) = new IllegalStateException(
+    s"connectedComponents did not converge in $maxIter doubling rounds " +
+      "(graph diameter beyond ~2^maxIter) — raise maxIter")
+
+  /** (i, j) in both directions, deduplicated. */
+  private def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(col("i"), col("j"))
+      .unionAll(pairs.select(col("j").as("i"), col("i").as("j")))
+      .distinct()
+
+  /** Every node labeled with itself. */
+  private def initialLabels(edges: DataFrame): DataFrame =
+    edges.select(col("i").as("id")).distinct().withColumn("component", col("id"))
+
+  /** Pass 1 — propagate: min(own, min over neighbors' labels). */
+  private def propagate(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val nbMin = edges
+      .join(labels.withColumnRenamed("id", "j"), "j")
+      .groupBy(col("i").as("id")).agg(min(col("component")).as("nb_component"))
+    labels.join(nbMin, Seq("id"), "left")
+      .select(col("id"), col("component").as("old"),
+        least(col("component"), coalesce(col("nb_component"), col("component")))
+          .as("component"))
+  }
+
+  /** Pass 2 — pointer-jump: component <- label(component). Labels are
+    * node ids and label(x) <= x, so the jump only decreases; this
+    * squares the distance already-propagated labels cover. */
+  private def jump(prop: DataFrame): DataFrame =
+    prop.join(
+        prop.select(col("id").as("component"), col("component").as("grand")),
+        Seq("component"), "left")
+      .select(col("id"), col("old"),
+        coalesce(col("grand"), col("component")).as("component"))
 
   /** End-to-end near-dup dedup: near-dup pairs -> connected
     * components -> keep the min-id representative per cluster.

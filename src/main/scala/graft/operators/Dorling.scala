@@ -203,7 +203,7 @@ object Dorling {
           iterations: Int = 100, ratio: Double = 0.4, friction: Double = 0.5,
           quadsegs: Int = 16, smallN: Int = Borders.SmallN): DataFrame = {
     val input = project(df, idCol, valueCol, geomCol)
-    Borders.collectIfSmall(input, smallN)
+    graft.PlanUtil.collectIfSmall(input, smallN)
       .flatMap(rows => local(rows, input.schema("id").dataType))
       .map { m =>
         val (x, y) = jacobi(m, iterations, ratio, friction)

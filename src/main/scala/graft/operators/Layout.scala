@@ -348,6 +348,10 @@ object Layout {
       : Option[(String, String, String)] = {
     import org.apache.parquet.column.statistics._
     if (st == null || st.isEmpty || !st.hasNonNullValue) None
+    // a DECIMAL's min/max are unscaled (int/long, or fixed-length
+    // bytes above precision 18): no bound compares with them
+    else if (st.`type`.getLogicalTypeAnnotation
+        .isInstanceOf[org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]) None
     else st match {
       case l: LongStatistics =>
         Some(("i", l.getMin.toString, l.getMax.toString))

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -63,31 +58,6 @@ class CartogramParitySpec extends SparkSuite {
     }
   }
 
-  /** Spark jobs `body` starts (counted by a listener on the job's
-    * local property; a sentinel job marks that every earlier event
-    * has been delivered). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(Tag))).foreach(seen.add)
-    }
-    def tagged(tag: String)(f: => Unit): Unit = {
-      sc.setLocalProperty(Tag, tag)
-      try f finally sc.setLocalProperty(Tag, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      tagged("body")(body)
-      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
-      seen.asScala.count(_ == "body")
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("job guard: a 64-region map runs Borders in <= 3 jobs and Dorling in <= 4") {
     val in = df(lattice(8))
     val borders = jobsOf(Borders.compute(in, "name", "geometry").collect())
@@ -121,8 +91,6 @@ class CartogramParitySpec extends SparkSuite {
 }
 
 object CartogramParitySpec {
-  private val Tag = "graft.test.jobguard"
-
   private def rect(x0: Double, y0: Double, x1: Double, y1: Double): String =
     s"POLYGON (($x0 $y0, $x1 $y0, $x1 $y1, $x0 $y1, $x0 $y0))"
 

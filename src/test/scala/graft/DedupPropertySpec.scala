@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
 
@@ -269,21 +271,33 @@ class DedupPropertySpec extends SparkSuite {
     }
   }
 
+  /** The public size dispatch (driver rounds at these sizes) and the
+    * distributed rounds it takes above [[Dedup.SmallPairs]]. */
+  private val componentPaths: Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
+    "dispatch" -> ((p, m) => Dedup.connectedComponents(p, m)),
+    "distributed rounds" -> ((p, m) => Dedup.componentRounds(p, m)))
+
   test("connected components converge on a path graph of diameter >> 20") {
     // A 300-node chain: one-hop-per-round propagation would need 300
     // rounds; pointer doubling must finish well inside the default cap
     // AND label every node with the chain minimum.
     val edges = (0L until 299L).map(k => (k, k + 1)).toDF("i", "j")
-    val comps = Dedup.connectedComponents(edges).as[(Long, Long)].collect()
-    assert(comps.length === 300)
-    assert(comps.forall(_._2 === 0L), s"unconverged labels: ${comps.filter(_._2 != 0L).take(5).toSeq}")
+    for ((path, cc) <- componentPaths) {
+      val comps = cc(edges, 50).as[(Long, Long)].collect()
+      assert(comps.length === 300, path)
+      assert(comps.forall(_._2 === 0L),
+        s"$path: unconverged labels: ${comps.filter(_._2 != 0L).take(5).toSeq}")
+    }
   }
 
   test("connected components throw (not silently mislabel) when capped") {
     val edges = (0L until 99L).map(k => (k, k + 1)).toDF("i", "j")
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(edges, maxIter = 2).collect()
-    }
+    for ((path, cc) <- componentPaths)
+      withClue(path) {
+        intercept[IllegalStateException] {
+          cc(edges, 2).collect()
+        }
+      }
   }
 
   test("connected components on random graphs == brute-force union-find") {
@@ -291,8 +305,6 @@ class DedupPropertySpec extends SparkSuite {
       val n = 60
       val edges = Seq.fill(40)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      val got = Dedup.connectedComponents(edges.toDF("i", "j"))
-        .as[(Long, Long)].collect().toMap
       // brute-force union-find oracle
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
@@ -301,11 +313,64 @@ class DedupPropertySpec extends SparkSuite {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val touched = edges.flatMap { case (a, b) => Seq(a, b) }.toSet
-      touched.foreach { id =>
-        // component = min node id in the brute-force component
-        val comp = (0 until n).filter(x => find(x) == find(id.toInt)).min.toLong
-        assert(got(id) === comp, s"round $round node $id")
+      for ((path, cc) <- componentPaths) {
+        val got = cc(edges.toDF("i", "j"), 50).as[(Long, Long)].collect().toMap
+        assert(got.keySet === touched, s"$path round $round")
+        touched.foreach { id =>
+          // component = min node id in the brute-force component
+          val comp = (0 until n).filter(x => find(x) == find(id.toInt)).min.toLong
+          assert(got(id) === comp, s"$path round $round node $id")
+        }
       }
     }
+  }
+
+  /** Each path's schema and its rows as sorted strings (a null reads "null"). */
+  private def bothPaths(edges: DataFrame): Seq[(StructType, Seq[(String, String)])] =
+    componentPaths.map { case (_, cc) =>
+      val out = cc(edges, 50)
+      (out.schema, out.collect().map(r => (String.valueOf(r.get(0)), String.valueOf(r.get(1))))
+        .sorted.toSeq)
+    }
+
+  test("connected components: string, int and mixed int/long ids, both paths equal") {
+    // strings compare by UTF-8 bytes: "B" < "a" < "é", and "10" < "9"
+    val strs = Seq(("a", "é"), ("é", "B"), ("9", "10"), ("x", "x"), ("10", "zz"))
+      .toDF("i", "j")
+    val Seq(dispatch, rounds) = bothPaths(strs)
+    assert(dispatch === rounds)
+    assert(dispatch._2 === Seq("10" -> "10", "9" -> "10", "B" -> "B", "a" -> "B",
+      "x" -> "x", "zz" -> "10", "é" -> "B"))
+    // int ids, and an int i with a long j (the rounds' union widens both to long)
+    for (ints <- Seq(Seq((3, 1), (1, 2), (7, 5)).toDF("i", "j"),
+        Seq((3, 1L), (1, 2L), (7, 5L)).toDF("i", "j"))) {
+      val Seq(di, ri) = bothPaths(ints)
+      assert(di === ri)
+      assert(di._2 === Seq("1" -> "1", "2" -> "1", "3" -> "1", "5" -> "5", "7" -> "5"))
+    }
+  }
+
+  test("connected components: a null id comes out exactly as the distributed rounds give it") {
+    for (edges <- Seq(
+        Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null), (null, 3L), (4L, 3L)),
+        Seq[(java.lang.Long, java.lang.Long)]((null, null)),
+        Seq[(java.lang.Long, java.lang.Long)]((5L, null)))) {
+      val Seq(dispatch, rounds) = bothPaths(edges.toDF("i", "j"))
+      assert(dispatch === rounds, edges)
+      assert(dispatch._2.contains("null" -> "null"), edges)
+    }
+    // nothing at all, and non-nullable ids: equal schemas too
+    val Seq(e1, e2) = bothPaths(Seq.empty[(Long, Long)].toDF("i", "j"))
+    assert(e1 === e2 && e1._2.isEmpty)
+  }
+
+  test("job guard: the driver path on a checkpointed pair list runs <= 2 Spark jobs") {
+    val pairs = (0L until 299L).map(k => (k, k + 1)).toDF("i", "j")
+      .repartition(8).localCheckpoint()
+    assert(pairs.rdd.getNumPartitions === 8)
+    val jobs = jobsOf(Dedup.connectedComponents(pairs).collect())
+    val rounds = jobsOf(Dedup.componentRounds(pairs, 50).collect())
+    info(s"connectedComponents: $jobs jobs; the distributed rounds: $rounds")
+    assert(jobs <= 2)
   }
 }

@@ -73,11 +73,11 @@ class StatsPruneSpec extends SparkSuite {
   /** One bound for column `c`: a recorded file or row-group min or
     * max (on the integral columns also that edge plus a half), a value
     * inside or around the data, or the other numeric family. The
-    * decimal column's recorded stats are unscaled integers, so its
-    * bounds are drawn from the value range alone. */
+    * decimal column records no stats, so its bounds are drawn from the
+    * value range alone. */
   private def bound(c: String, edges: Seq[Any]): Gen[Any] = {
-    val edge = Gen.oneOf(edges)
-    val halfPast = edge.map(e => e.asInstanceOf[Long] + 0.5)
+    lazy val edge = Gen.oneOf(edges)
+    lazy val halfPast = edge.map(e => e.asInstanceOf[Long] + 0.5)
     c match {
       case "key" => Gen.frequency(
         3 -> edge, 3 -> halfPast, 2 -> Gen.choose(-10L, 4010L),
@@ -153,5 +153,30 @@ class StatsPruneSpec extends SparkSuite {
       .withInitialSeed(Seed(20261019L)).withMinSuccessfulTests(40)
       .withWorkers(1), prop)
     assert(res.passed, Pretty.pretty(res))
+  }
+
+  test("decimal columns record no #stat2/#stat3 lines (parquet keeps them " +
+    "unscaled), and range scans on them equal the plain filter") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_prune_dec").toString + "/tbl"
+    val src = spark.range(0, 600, 1, 1).select(
+        col("id").as("key"),
+        (col("id") / 4).cast("decimal(12,2)").as("d12"),
+        (col("id") / 4).cast("decimal(30,2)").as("d30"))
+      .withColumn("bucket", expr("key div 200"))
+    val v = Snapshots.publish(src, dir, "bucket", Seq("key"),
+      blockSize = 4L * 1024, numTasks = 1, statsCols = Seq("key", "d12", "d30"))
+    val m = Snapshots.manifest(spark, dir, v)
+    assert(m.stats2("key").nonEmpty, "the long column still records its stats")
+    for (c <- Seq("d12", "d30")) {
+      assert(m.stats2(c).isEmpty && m.stats3(c).isEmpty, s"$c recorded stats")
+      assert(Snapshots.versionStatsFor(spark, dir, v, c).isEmpty,
+        s"$c: the footer fallback records stats")
+      for ((lo, hi) <- Seq((10L, 20L), (0.5, 7.25), (BigDecimal("149.75"), 1000L), (50L, 40L))) {
+        def keys(df: DataFrame) = df.select("key").collect().map(_.getLong(0)).sorted.toSeq
+        val want = keys(Snapshots.readAt(spark, dir, v)
+          .filter(col(c) >= lit(lo) && col(c) < lit(hi)))
+        assert(keys(Snapshots.prunedScanAtBy(spark, dir, v, c, lo, hi)) === want, s"$c [$lo, $hi)")
+      }
+    }
   }
 }
