@@ -53,8 +53,9 @@ case class Cartogram(gdf: DataFrame, valueField: String, idField: String,
       ratio = ratio, friction = friction))
 
   /** Queen-contiguity borders (reference border_util.py:5), paired on
-    * the driver up to [[graft.operators.Borders.SmallN]] regions and by
-    * the distributed grid join above; the rows are the same either way.
+    * the driver up to [[graft.operators.Borders.SmallN]] regions and
+    * cell by cell on a distributed grid above; both run one pair rule,
+    * so the rows are the same either way.
     * @return focal_id, neighbor_id, weight (shared boundary length) */
   def borders(): DataFrame = Borders.compute(gdf, idField, geometryField)
 }

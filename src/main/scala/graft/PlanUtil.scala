@@ -1,9 +1,13 @@
 package graft
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Plan hygiene helpers for iterative DataFrame loops and small-input
-  * dispatch. */
+/** Plan hygiene helpers for iterative DataFrame loops, small-input
+  * dispatch and keyed RDD passes. */
 object PlanUtil {
 
   /** Materialize a DataFrame and sever BOTH its lineage and its
@@ -37,4 +41,18 @@ object PlanUtil {
     if (n <= 0) None
     else if (n == Int.MaxValue) Some(df.collect())
     else Some(df.take(n + 1)).filter(_.length <= n)
+
+  /** `pairs` grouped by key in one shuffle into `parts` partitions.
+    * Not groupByKey or cogroup: their reduce side inserts into a map
+    * whose size Spark keeps estimating by walking the grouped values,
+    * which costs more per task than the work done per group. */
+  def grouped[K: ClassTag, V: ClassTag](pairs: RDD[(K, V)], parts: Int): RDD[(K, Iterable[V])] =
+    pairs.partitionBy(new HashPartitioner(parts))
+      .mapPartitions(_.toSeq.groupMap(_._1)(_._2).iterator, preservesPartitioning = true)
+
+  /** The partition count for [[grouped]] on `rdd`'s records: one per
+    * core, or the input's count when larger. RDD shuffles get no
+    * adaptive coalescing, so Spark SQL's shuffle setting (200 by
+    * default) would launch as many tasks per pass. */
+  def partitionsFor(rdd: RDD[_]): Int = math.max(rdd.sparkContext.defaultParallelism, rdd.getNumPartitions)
 }

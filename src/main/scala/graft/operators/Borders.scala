@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
-import graft.functions.GeoFunctions._
+import graft.PlanUtil
 import graft.geom.{Geom, Ops, Wkt}
 
 /** Queen-contiguity border detection.
@@ -15,49 +15,50 @@ import graft.geom.{Geom, Ops, Wkt}
   * weights (neighbour = shares an edge OR a vertex), weight = length of
   * the shared boundary (`intersection(...).length`), islands dropped.
   *
+  * ONE PAIR RULE ([[queenPair]]), run by both paths below: a region
+  * with a null id or a null geometry drops out; a pair is kept as
+  * (lo, hi) under the `<` Spark evaluates for the id type (byte order
+  * for strings; equal ids never pair); the bboxes intersect,
+  * boundaries included; `Ops.touches(lo, hi)` holds; the weight is
+  * `Ops.sharedBorderLength(lo, hi)`; both directions are emitted with
+  * that one weight. So the two paths' rows, weights and schema are
+  * bit-equal.
+  *
   * SIZE DISPATCH: a map of at most [[SmallN]] regions is counted
   * (at most SmallN + 1 rows), collected once and paired on the driver
-  * ([[queenPairs]]); a larger one takes the distributed grid join
+  * ([[queenPairs]]); a larger one takes the distributed grid
   * ([[grid]]). Cartograms are region tables — hundreds to a few
-  * thousand rows — and on those every Spark stage is pure overhead:
-  * the grid runs 4 jobs and 9 stages on 64 or 256 regions, while the
-  * driver test is O(n^2) cheap bbox comparisons plus the exact
-  * geometry test on bbox-intersecting pairs only. 2000 is below the
-  * crossover of `Dorling.run`'s driver-side Jacobi loop (it loses to
-  * the distributed step at 10k regions, 20.2 s vs 16.2 s for 3
+  * thousand rows — and on those every Spark stage is pure overhead,
+  * while the driver test is O(n^2) cheap bbox comparisons plus the
+  * exact geometry test on bbox-intersecting pairs only. 2000 is below
+  * the crossover of `Dorling.run`'s driver-side Jacobi loop (it loses
+  * to the distributed step at 10k regions, 20.2 s vs 16.2 s for 3
   * iterations); one constant keeps a whole Dorling call on one side
-  * of it. Both sides apply the same pair rule, so their rows, weights
-  * and schema are bit-equal:
-  * null ids drop out; a pair is kept as (lo, hi) under the `<` Spark
-  * evaluates for the id type (byte order for strings); the bboxes
-  * intersect, boundaries included; `Ops.touches(lo, hi)` holds; the
-  * weight is `Ops.sharedBorderLength(lo, hi)`; both directions are
-  * emitted with that one weight.
+  * of it.
   *
-  * Above the threshold the grid is unchanged in design: instead of
-  * libpysal's all-pairs matrix (O(n^2),
-  * single node), geometries are binned into a MULTI-LEVEL grid keyed by
-  * their own size class, so candidate pairs come from equi-joins on
-  * (level, cell) and the shuffle stays O(n * levels-per-geom). A
-  * single-level grid sized to the LARGEST bbox (the previous design)
-  * is outlier-hostile: one continent-sized polygon among parcels
-  * inflates every cell until the whole input collapses into a handful
-  * of buckets and the join degenerates quadratic. Here the base cell
-  * is the MEDIAN extent (robust to outliers), each geometry lives at
-  * level l = ceil(log2(extent / base)) where the cell is base * 2^l
-  * (so every geometry spans at most 2x2 cells at its own level), and a
-  * geometry is additionally registered in its ancestor cells at every
-  * OCCUPIED coarser level (the distinct native levels are a <= 64-value
-  * aggregate). A pair joins exactly at the coarser of the two native
-  * levels, anchored to the cell holding the bbox-intersection min
-  * corner — each unordered pair is emitted exactly once, outliers only
-  * pay candidates against what their bbox actually overlaps, and the
-  * small-geometry fine grid keeps its selectivity.
-  *
-  * At 100 TB / millions of polygons, the only shuffle is the
-  * (level, cell) groupBy (AQE-splittable when a cell is hot); the
-  * exact geometry work stays data-local. The base cell size and the
-  * native-level set are two scalar-sized aggregates.
+  * THE GRID partitions by space and runs the pair rule inside each
+  * cell. Instead of libpysal's all-pairs matrix (O(n^2), single node),
+  * regions are keyed to cells of a MULTI-LEVEL grid by their own size
+  * class, and the only shuffle groups them by (level, cell), O(n *
+  * levels-per-region) rows. A single-level grid sized to the LARGEST
+  * bbox is outlier-hostile: one continent-sized polygon among parcels
+  * inflates every cell until the input collapses into a handful of
+  * cells and the test degenerates quadratic. Here a region's size
+  * class c is ceil(log2(extent)); the base cell is 2^c of the MEDIAN
+  * class (robust to outliers); a region lives at level l = max(0, c -
+  * base), where the cell is 2^(base + l), so it spans at most 2x2
+  * cells at its own level; and it also registers in its cells at
+  * every OCCUPIED coarser level. One aggregate, the region count per
+  * size class, gives both the base and the occupied levels. A pair is
+  * tested exactly at the coarser of its two native levels, in the cell
+  * holding the bbox-intersection min corner, so each unordered pair is
+  * tested once, and a cell costs (members native to its level) x (all
+  * members): outliers only pay against what their bbox overlaps, and
+  * the fine grid keeps its selectivity. A region without a finite bbox
+  * (an empty geometry) meets no other and gets no cell. Shuffle
+  * records are the id, the WKT and the bbox; each cell parses a
+  * member's WKT at most once, and only when the member's bbox meets
+  * another's. No generated code depends on the map.
   */
 object Borders {
 
@@ -71,17 +72,14 @@ object Borders {
     */
   def compute(df: DataFrame, idCol: String, geomCol: String): DataFrame = {
     val input = df.select(col(idCol).as("id"), col(geomCol).as("geom"))
-    graft.PlanUtil.collectIfSmall(input, SmallN) match {
+    PlanUtil.collectIfSmall(input, SmallN) match {
       case None => grid(df, idCol, geomCol)
       case Some(rows) =>
-        val ids = rows.map(_.get(0))
         val idType = input.schema("id").dataType
-        val out = queenPairs(catalystKeys(ids, idType), rows.map(r => Wkt.read(r.getString(1))), idType)
-          .flatMap { case (i, j, w) => Seq(Row(ids(i), ids(j), w), Row(ids(j), ids(i), w)) }
-        // the grid's schema, nullability included, from its own columns
-        val schema = input.select(col("id").as("focal_id"), col("id").as("neighbor_id"),
-          st_shared_border(col("geom"), col("geom")).as("weight")).schema
-        df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+        val shapes = shapesOf(rows.iterator, idType).toIndexedSeq
+        val out = directed(idType, queenPairs(shapes, idType).iterator.map { case (i, j, w) =>
+          (shapes(i), shapes(j), w) })
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), schema(input))
     }
   }
 
@@ -89,96 +87,87 @@ object Borders {
   private[operators] def catalystKeys(ids: Array[Any], idType: DataType): Array[Any] =
     ids.map(CatalystTypeConverters.createToCatalystConverter(idType))
 
-  /** The Queen pairs among `geoms` under the grid's pair rule (see the
-    * size dispatch above); `keys` are [[catalystKeys]] of the ids.
-    * @return (lo, hi, weight) index triples, one per unordered pair */
-  private[operators] def queenPairs(keys: Array[Any], geoms: Array[Geom],
-                                    idType: DataType): IndexedSeq[(Int, Int, Double)] = {
-    val lt = TypeUtils.getInterpretedOrdering(idType)
-    val box = geoms.map(Ops.bbox)
-    for {
-      i <- keys.indices if keys(i) != null
-      j <- keys.indices if keys(j) != null && lt.lt(keys(i), keys(j)) &&
-        box(i)._1 <= box(j)._3 && box(j)._1 <= box(i)._3 &&
-        box(i)._2 <= box(j)._4 && box(j)._2 <= box(i)._4 &&
-        Ops.touches(geoms(i), geoms(j))
-    } yield (i, j, Ops.sharedBorderLength(geoms(i), geoms(j)))
+  /** A region as the pair rule reads it: its id as a catalyst value
+    * ([[catalystKeys]]), its WKT and its closed bbox. Its geometry is
+    * never shipped parsed: a shuffled shape parses its WKT on first use. */
+  private[operators] final case class Shape(key: Any, wkt: String, minx: Double, miny: Double,
+                                            maxx: Double, maxy: Double)(@transient private var parsed: Geom) {
+    def geom: Geom = { if (parsed == null) parsed = Wkt.read(wkt); parsed }
+    def meets(o: Shape): Boolean = minx <= o.maxx && o.minx <= maxx && miny <= o.maxy && o.miny <= maxy
+    def finite: Boolean = Seq(minx, miny, maxx, maxy).forall(java.lang.Double.isFinite)
+    /** ceil(log2(extent)) within [-40, 1023]: the cell 2^size covers the bbox */
+    def size: Int = math.min(1023, math.max(-40, math.getExponent(math.nextDown(math.max(maxx - minx, maxy - miny))) + 1))
   }
 
-  /** The distributed leveled-grid join: [[compute]] above [[SmallN]]
+  /** The [[Shape]] of a non-null catalyst id and WKT. */
+  private[operators] def shape(key: Any, wkt: String): Shape = {
+    val g = Wkt.read(wkt)
+    val (minx, miny, maxx, maxy) = Ops.bbox(g)
+    Shape(key, wkt, minx, miny, maxx, maxy)(g)
+  }
+
+  /** (id, WKT) rows as shapes; a null id or geometry gives none. */
+  private def shapesOf(rows: Iterator[Row], idType: DataType): Iterator[Shape] = {
+    val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+    rows.flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None else Some(shape(toKey(r.get(0)), r.getString(1))))
+  }
+
+  /** The Queen pair rule (see above): Some((lo, hi, weight)) when `a`
+    * and `b` are a Queen pair. */
+  private[operators] def queenPair(lt: Ordering[Any], a: Shape, b: Shape): Option[(Shape, Shape, Double)] =
+    if (!a.meets(b) || lt.equiv(a.key, b.key)) None
+    else {
+      val (lo, hi) = if (lt.lt(a.key, b.key)) (a, b) else (b, a)
+      if (Ops.touches(lo.geom, hi.geom)) Some((lo, hi, Ops.sharedBorderLength(lo.geom, hi.geom))) else None
+    }
+
+  /** Every Queen pair among `shapes`, as (lo, hi, weight) index triples. */
+  private[operators] def queenPairs(shapes: IndexedSeq[Shape], idType: DataType): IndexedSeq[(Int, Int, Double)] = {
+    val lt = TypeUtils.getInterpretedOrdering(idType)
+    for (i <- shapes.indices; j <- i + 1 until shapes.length; (lo, _, w) <- queenPair(lt, shapes(i), shapes(j)))
+      yield if (lo eq shapes(i)) (i, j, w) else (j, i, w)
+  }
+
+  /** Both directions of each pair, ids as the input holds them. */
+  private def directed(idType: DataType, pairs: Iterator[(Shape, Shape, Double)]): Iterator[Row] = {
+    val id = CatalystTypeConverters.createToScalaConverter(idType)
+    pairs.flatMap { case (lo, hi, w) => Iterator(Row(id(lo.key), id(hi.key), w), Row(id(hi.key), id(lo.key), w)) }
+  }
+
+  /** Both paths' output schema: the input's id field twice, then the weight. */
+  private def schema(input: DataFrame): StructType = StructType(Seq("focal_id", "neighbor_id")
+    .map(name => input.schema("id").copy(name = name)) :+ StructField("weight", DoubleType, nullable = false))
+
+  /** The distributed leveled grid: [[compute]] above [[SmallN]]
     * regions, and `Dorling.run`'s distributed path. Same output. */
   private[graft] def grid(df: DataFrame, idCol: String, geomCol: String): DataFrame = {
-    val withBox = df
-      .select(col(idCol).as("id"), col(geomCol).as("geom"))
-      .withColumn("bbox", st_bbox(col("geom")))
-      .withColumn("minx", col("bbox")(0)).withColumn("miny", col("bbox")(1))
-      .withColumn("maxx", col("bbox")(2)).withColumn("maxy", col("bbox")(3))
-      .drop("bbox")
-      .withColumn("extent", greatest(col("maxx") - col("minx"), col("maxy") - col("miny")))
-
-    // Robust base cell: the MEDIAN extent (approx; outliers cannot
-    // inflate it). One scalar aggregate.
-    val Array(cellRow) = withBox
-      .agg(percentile_approx(col("extent"), lit(0.5), lit(10000)).as("cs"))
-      .collect()
-    val cs0 = math.max(if (cellRow.isNullAt(0)) 0.0 else cellRow.getDouble(0), 1e-12)
-
-    // Size class: cell at level l is cs0 * 2^l >= extent, so each
-    // geometry spans at most 2 cells per axis at its own level.
-    val leveled = withBox.withColumn("level",
-      when(col("extent") <= cs0, 0)
-        .otherwise(ceil(log(2.0, col("extent") / cs0)).cast("int")))
-
-    // Occupied levels only (<= ~64 distinct values): geometries
-    // register in ancestor cells at coarser levels ONLY where some
-    // geometry natively lives, so a heavy tail costs O(#distinct
-    // levels) rows per geometry, not O(log(max/min)).
-    val collected = leveled.select(col("level")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val nativeLevels = if (collected.isEmpty) Array(0) else collected
-
-    val binned = leveled
-      .withColumn("L", explode(filter(
-        array(nativeLevels.map(lit(_)): _*), l => l >= col("level"))))
-      .withColumn("cs", lit(cs0) * pow(lit(2.0), col("L").cast("double")))
-      .withColumn("cx0", floor(col("minx") / col("cs"))).withColumn("cx1", floor(col("maxx") / col("cs")))
-      .withColumn("cy0", floor(col("miny") / col("cs"))).withColumn("cy1", floor(col("maxy") / col("cs")))
-      .withColumn("cell", explode(flatten(transform(
-        sequence(col("cx0"), col("cx1")),
-        cx => transform(sequence(col("cy0"), col("cy1")),
-          cy => struct(cx.as("x"), cy.as("y")))))))
-      .drop("cx0", "cx1", "cy0", "cy1")
-
-    val l = binned.select(
-      col("id").as("l_id"), col("geom").as("l_geom"), col("L"), col("cell"),
-      col("cs"), col("level").as("l_level"),
-      col("minx").as("l_minx"), col("miny").as("l_miny"),
-      col("maxx").as("l_maxx"), col("maxy").as("l_maxy"))
-    val r = binned.select(
-      col("id").as("r_id"), col("geom").as("r_geom"), col("L"), col("cell"),
-      col("level").as("r_level"),
-      col("minx").as("r_minx"), col("miny").as("r_miny"),
-      col("maxx").as("r_maxx"), col("maxy").as("r_maxy"))
-
-    val pairs = l.join(r, Seq("L", "cell"))
-      .filter(col("l_id") < col("r_id"))
-      // each pair joins ONLY at the coarser of its two native levels
-      .filter(greatest(col("l_level"), col("r_level")) === col("L"))
-      // bboxes must intersect at all
-      .filter(col("l_minx") <= col("r_maxx") && col("r_minx") <= col("l_maxx") &&
-              col("l_miny") <= col("r_maxy") && col("r_miny") <= col("l_maxy"))
-      // emit each pair from exactly one cell: the one holding the
-      // bbox-intersection min corner (at this level's cell size)
-      .filter(col("cell.x") === floor(greatest(col("l_minx"), col("r_minx")) / col("cs")) &&
-              col("cell.y") === floor(greatest(col("l_miny"), col("r_miny")) / col("cs")))
-      .filter(st_touches(col("l_geom"), col("r_geom")))
-      .withColumn("weight", st_shared_border(col("l_geom"), col("r_geom")))
-      .select(col("l_id"), col("r_id"), col("weight"))
-
-    // both directions from the one evaluation of each pair
-    pairs.select(explode(array(
-        struct(col("l_id").as("focal_id"), col("r_id").as("neighbor_id"), col("weight")),
-        struct(col("r_id").as("focal_id"), col("l_id").as("neighbor_id"), col("weight")))).as("p"))
-      .select("p.*")
+    val input = df.select(col(idCol).as("id"), col(geomCol).as("geom"))
+    val idType = input.schema("id").dataType
+    val shapes = input.rdd.mapPartitions(shapesOf(_, idType)).filter(_.finite)
+    val sizes = shapes.map(_.size).countByValue().toSeq.sorted
+    val atOrBelow = sizes.map(_._2).scanLeft(0L)(_ + _).tail
+    val base = sizes.indices.find(i => 2 * atOrBelow(i) >= atOrBelow.last).map(sizes(_)._1).getOrElse(0)
+    val levels = sizes.map(s => math.max(0, s._1 - base)).distinct
+    def level(s: Shape) = math.max(0, s.size - base)
+    def cellSize(l: Int) = math.scalb(1.0, base + l)
+    def at(v: Double, cs: Double) = math.floor(v / cs).toLong
+    val cells = shapes.flatMap { s =>
+      for (l <- levels if l >= level(s); cs = cellSize(l);
+           cx <- at(s.minx, cs) to at(s.maxx, cs); cy <- at(s.miny, cs) to at(s.maxy, cs))
+        yield (l, cx, cy) -> s
+    }
+    val pairs = PlanUtil.grouped(cells, PlanUtil.partitionsFor(shapes)).mapPartitions { groups =>
+      val lt = TypeUtils.getInterpretedOrdering(idType)
+      directed(idType, groups.flatMap { case ((l, cx, cy), members) =>
+        val (m, size) = (members.toIndexedSeq, cellSize(l))
+        val native = m.map(level(_) == l)
+        def anchored(a: Shape, b: Shape) =
+          at(math.max(a.minx, b.minx), size) == cx && at(math.max(a.miny, b.miny), size) == cy
+        for (i <- m.indices.iterator if native(i); j <- m.indices.iterator
+             if (j > i || !native(j)) && anchored(m(i), m(j)); p <- queenPair(lt, m(i), m(j)))
+          yield p
+      })
+    }
+    df.sparkSession.createDataFrame(pairs, schema(input))
   }
 }

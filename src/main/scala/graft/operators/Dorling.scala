@@ -2,16 +2,14 @@ package graft.operators
 
 import java.math.{BigDecimal => Dec}
 
-import scala.reflect.ClassTag
-
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.PlanUtil.{grouped, partitionsFor}
 import graft.functions.GeoFunctions._
 import graft.geom.{Ops, Pt, Wkt}
 
@@ -42,8 +40,9 @@ import graft.geom.{Ops, Pt, Wkt}
   * the distributed step runs it per grid cell (cell = 2*widest, 3x3
   * probe): one shuffle of O(n) small rows and one checkpoint per
   * iteration, no O(n^2) pair matrix, and no generated code that
-  * depends on k, widest, ratio or friction, so a warm call compiles
-  * nothing. k, widest and the border weights take one job up front.
+  * depends on k, widest, ratio, friction or the map's cell size, so a
+  * warm call compiles nothing. k, widest and the border weights take
+  * one job up front, after the border grid's size-class job.
   * Exact decimal sums keep k and the per-focal forces bit-identical
   * at any parallelism.
   */
@@ -68,10 +67,10 @@ object Dorling {
   private def project(df: DataFrame, idCol: String, valueCol: String, geomCol: String): DataFrame =
     df.select(col(idCol).as("id"), col(valueCol).cast("double").as("value"), col(geomCol).as("geom"))
 
-  private def measured(regions: DataFrame): DataFrame = regions
-    .withColumn("x", st_centroid_x(col("geom")))
-    .withColumn("y", st_centroid_y(col("geom")))
-    .withColumn("perimeter", st_perimeter(col("geom")))
+  /** x, y and perimeter added; null for a null geometry. */
+  private def measured(regions: DataFrame): DataFrame =
+    Seq[(String, Column => Column)]("x" -> st_centroid_x, "y" -> st_centroid_y, "perimeter" -> st_perimeter)
+      .foldLeft(regions) { case (df, (name, f)) => df.withColumn(name, when(col("geom").isNotNull, f(col("geom")))) }
 
   /** The step's columns before k is known. */
   private def unscaled(regions: DataFrame): DataFrame =
@@ -175,19 +174,21 @@ object Dorling {
     * widest and the Jacobi loop ([[jacobi]]) all run on the driver and
     * the result is one local DataFrame: the collect, which is also the
     * size check, is its only Spark work (at most 2 jobs on a 64-region
-    * map, where the distributed path at 1 iteration runs 8). Larger
-    * inputs (or smallN = 0) take the distributed path: the
-    * leveled-grid borders ([[Borders.grid]]), one job for k, widest and
-    * the border weights, and one job per iteration. The default crossover is measured: the
+    * map, where the distributed path at 1 iteration runs 4). Larger
+    * inputs (or smallN = 0) take the distributed path: one job for the
+    * border grid's size classes ([[Borders.grid]]), one for its cells,
+    * k, widest and the border weights, and one per iteration. The
+    * default crossover is measured: the
     * driver loop is O(n^2) per iteration and at 10k regions
     * (tools/ScaleStress geo, 4 vCPUs) it loses to the distributed step
     * (20.2 s vs 16.2 s for 3 iterations); at hundreds of regions it
     * wins by the per-iteration job-launch cost. Inputs the driver path
     * declines take the distributed path whatever their size: a null
     * value keeps a null radius and circle and its region at its
-    * centroid; the rows of a repeated id pool their forces and each
-    * moves by the pool; a null id has no neighbours; a map without a
-    * Queen pair is refused.
+    * centroid; a null geometry keeps its radius, has no neighbours and
+    * keeps a null centre and circle; the rows of a repeated id pool
+    * their forces and each moves by the pool; a null id has no
+    * neighbours; a map without a Queen pair is refused.
     *
     * PARITY ACROSS PATHS: both paths take k from the same scale-10
     * decimal sums and every force from [[Forces]], so run() output is
@@ -209,7 +210,7 @@ object Dorling {
         val (x, y) = jacobi(m, iterations, ratio, friction)
         val out = m.ids.indices.map(i => circle(m.ids(i), m.value(i), m.radius(i), x(i), y(i), quadsegs))
         df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
-          circleSchema(measured(input), iterations > 0))
+          circleSchema(measured(input)))
       }
       .getOrElse(distributed(df, idCol, valueCol, geomCol, iterations, ratio, friction, quadsegs))
   }
@@ -231,7 +232,7 @@ object Dorling {
       pos.count()
     }
     df.sparkSession.createDataFrame(pos.map(r =>
-      circle(r.row(0), r.row(V), r.row(R), r.row(X), r.row(Y), quadsegs)), circleSchema(regions, iterations > 0))
+      circle(r.row(0), r.row(V), r.row(R), r.row(X), r.row(Y), quadsegs)), circleSchema(regions))
   }
 
   /** `rdd` marked for a local checkpoint, its blocks kept serialized:
@@ -240,20 +241,20 @@ object Dorling {
   private def checkpointed[T](rdd: RDD[T]): RDD[T] =
     rdd.persist(StorageLevel.MEMORY_AND_DISK_SER).localCheckpoint()
 
-  /** A [[run]] output row; no circle where the radius or centre is null. */
+  /** A [[run]] output row; no circle where the radius or centre is null.
+    * Every NaN is the canonical one, as the distributed path's records
+    * hold it once Java serialization has written them. */
   private def circle(id: Any, value: Any, radius: Any, x: Any, y: Any, quadsegs: Int): Row =
-    Row(id, value, radius, x, y, (radius, x, y) match {
-      case (r: Double, cx: Double, cy: Double) => Wkt.write(Ops.bufferPoint(Pt(cx, cy), r, quadsegs))
-      case _ => null
-    })
+    Row.fromSeq(Seq(id, value, radius, x, y).map { case d: Double if d.isNaN => Double.NaN; case v => v } :+
+      ((radius, x, y) match {
+        case (r: Double, cx: Double, cy: Double) => Wkt.write(Ops.bufferPoint(Pt(cx, cy), r, quadsegs))
+        case _ => null
+      }))
 
-  /** [[run]]'s schema on both paths: x and y turn nullable once a step
-    * has run. */
-  private def circleSchema(regions: DataFrame, moved: Boolean): StructType = {
-    def xy(name: String) = regions.schema(name).copy(nullable = moved || regions.schema(name).nullable)
-    StructType(Seq(regions.schema("id"), regions.schema("value"),
-      StructField("radius", DoubleType), xy("x"), xy("y"), StructField("geometry", StringType)))
-  }
+  /** [[run]]'s schema on both paths, from [[measured]] regions. */
+  private def circleSchema(regions: DataFrame): StructType =
+    StructType(Seq(regions.schema("id"), regions.schema("value"), StructField("radius", DoubleType),
+      regions.schema("x"), regions.schema("y"), StructField("geometry", StringType)))
 
   /** k's sums over directed Queen pairs (D: centroid distances, R:
     * sqrt(Vf/pi) + sqrt(Vn/pi)), each term rounded HALF_UP to scale 10
@@ -315,7 +316,7 @@ object Dorling {
     * setting (200 by default) would launch as many tasks per pass. */
   private def attach(pos: DataFrame, borders: DataFrame): RDD[(Region, Scale)] = {
     val rows = pos.select(Layout.map(col): _*).rdd
-    val parts = math.max(pos.sparkSession.sparkContext.defaultParallelism, rows.getNumPartitions)
+    val parts = partitionsFor(rows)
     val byId = grouped(rows.map(r => keyOf(r.get(0)) -> Row.fromSeq(r.toSeq)), parts)
     val edges = grouped(borders.select("focal_id", "neighbor_id", "weight").rdd.flatMap { b =>
       val (f, n) = (keyOf(b.get(0)), keyOf(b.get(1)))
@@ -339,14 +340,6 @@ object Dorling {
       }
     }
   }
-
-  /** `pairs` grouped by key in one shuffle into `parts` partitions.
-    * Not groupByKey or cogroup: their reduce side inserts into a map
-    * whose size Spark keeps estimating by walking the grouped values,
-    * which costs more per task than the force kernel. */
-  private def grouped[K: ClassTag, V: ClassTag](pairs: RDD[(K, V)], parts: Int): RDD[(K, Iterable[V])] =
-    pairs.partitionBy(new HashPartitioner(parts))
-      .mapPartitions(_.toSeq.groupMap(_._1)(_._2).iterator, preservesPartitioning = true)
 
   /** One Jacobi iteration over `pos`: one shuffle by grid cell (cell =
     * 2 * widest, at least the search radius widest + r_focal, so a
@@ -399,12 +392,12 @@ object Dorling {
     val ord = TypeUtils.getInterpretedOrdering(idType)
     val keyOf = Borders.catalystKeys(rows.map(_.get(0)), idType)
     val order = rows.indices.sortWith((a, b) => ord.lt(keyOf(a), keyOf(b)))
-    val keys = order.map(keyOf).toArray
-    if ((1 until keys.length).exists(i => ord.equiv(keys(i - 1), keys(i)))) return None
+    val shapes = order.map(i => Borders.shape(keyOf(i), rows(i).getString(2)))
+    if ((1 until shapes.length).exists(i => ord.equiv(shapes(i - 1).key, shapes(i).key))) return None
     val sorted = order.map(rows)
-    val geoms = sorted.map(r => Wkt.read(r.getString(2))).toArray
-    val pairs = Borders.queenPairs(keys, geoms, idType)
+    val pairs = Borders.queenPairs(shapes, idType)
     if (pairs.isEmpty) return None
+    val geoms = shapes.map(_.geom).toArray
     val value = sorted.map(_.getDouble(1)).toArray
     val x = geoms.map(Ops.centroid(_).x)
     val y = geoms.map(Ops.centroid(_).y)

@@ -86,38 +86,23 @@ class BordersScaleSpec extends SparkSuite {
     assert(secs < 60.0, s"outlier grid too slow: $secs s — candidate blow-up?")
   }
 
-  test("driver-side Jacobi fast path matches the distributed step on 400 regions") {
-    val fast = Dorling.run(grid, "id", "value", "geometry", iterations = 3)
-      .collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[Double]("x"), r.getAs[Double]("y"))).toMap
-    val dist = Dorling.run(grid, "id", "value", "geometry", iterations = 3, smallN = 0)
-      .collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[Double]("x"), r.getAs[Double]("y"))).toMap
-    assert(fast.keySet === dist.keySet)
-    // same Jacobi model; only double-vs-decimal summation differs
-    fast.foreach { case (id, (fx, fy)) =>
-      val (dx, dy) = dist(id)
-      assert(math.abs(fx - dx) < 1e-6 && math.abs(fy - dy) < 1e-6, s"region $id")
-    }
+  /** Dorling's driver loop and distributed step at `iterations`: every
+    * region's x and y must be equal in raw bits. */
+  private def bitEqualPaths(iterations: Int): Unit = {
+    def xy(smallN: Int) = Dorling.run(grid, "id", "value", "geometry", iterations = iterations, smallN = smallN)
+      .collect().map(r => r.getAs[Long]("id") -> (java.lang.Double.doubleToRawLongBits(r.getAs[Double]("x")),
+        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("y")))).toMap
+    val (fast, dist) = (xy(Borders.SmallN), xy(0))
+    assert(fast.size === n * n)
+    assert(fast === dist)
   }
 
-  test("Jacobi path drift compounds bounded over 30 iterations") {
-    // The per-iteration rounding drift between the two paths compounds;
-    // this pins the documented envelope (Dorling.run scaladoc: ~1e-5 at
-    // 30 iterations, extrapolating to ~1e-4 at the default 100).
-    val fast = Dorling.run(grid, "id", "value", "geometry", iterations = 30)
-      .collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[Double]("x"), r.getAs[Double]("y"))).toMap
-    val dist = Dorling.run(grid, "id", "value", "geometry", iterations = 30, smallN = 0)
-      .collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[Double]("x"), r.getAs[Double]("y"))).toMap
-    var maxDrift = 0.0
-    fast.foreach { case (id, (fx, fy)) =>
-      val (dx, dy) = dist(id)
-      maxDrift = math.max(maxDrift, math.max(math.abs(fx - dx), math.abs(fy - dy)))
-    }
-    info(f"max positional drift after 30 iterations: $maxDrift%.2e")
-    assert(maxDrift < 1e-5, s"drift $maxDrift exceeds documented envelope")
+  test("driver-side Jacobi fast path matches the distributed step on 400 regions") {
+    bitEqualPaths(3)
+  }
+
+  test("Jacobi paths stay bit-equal over 30 iterations") {
+    bitEqualPaths(30)
   }
 
   test("Dorling stays finite and reduces overlap on 400 regions") {

@@ -19,18 +19,21 @@ class CartogramParitySpec extends SparkSuite {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
+  /** Borders rows as sorted (focal, neighbour, weight bits). */
+  private def borderRows(b: DataFrame): Seq[(String, String, Long)] =
+    b.collect().map(r => (r.getString(0), r.getString(1), bits(r.getDouble(2)))).sorted.toSeq
+
   for ((label, regions) <- Seq("3x3 settling grid" -> grid3,
-      "4-rectangle all-contact set" -> allContact, "string ids, non-ASCII and long" -> oddIds)) {
+      "4-rectangle all-contact set" -> allContact, "string ids, non-ASCII and long" -> oddIds,
+      "3x3 grid and an empty region" -> withEmpty)) {
 
     test(s"$label: Borders driver path and grid give bit-equal rows and schemas") {
       val in = df(regions)
       val driver = Borders.compute(in, "name", "geometry")
       val grid = Borders.grid(in, "name", "geometry")
       assert(driver.schema === grid.schema)
-      def rows(b: DataFrame) = b.collect().map(r =>
-        (r.getString(0), r.getString(1), bits(r.getDouble(2)))).sorted.toSeq
-      assert(rows(driver).nonEmpty)
-      assert(rows(driver) === rows(grid))
+      assert(borderRows(driver).nonEmpty)
+      assert(borderRows(driver) === borderRows(grid))
     }
 
     test(s"$label: Dorling driver path and distributed step bit-equal at 0 and 100 iterations") {
@@ -58,6 +61,22 @@ class CartogramParitySpec extends SparkSuite {
     }
   }
 
+  test("a null geometry or a null id drops out of Borders on both paths") {
+    val in = df(grid3.map { case (id, g, v) =>
+      (if (id == "R12") null else id, if (id == "R11") null else g, v) })
+    val without = df(grid3.filter(r => r._1 != "R11" && r._1 != "R12"))
+    val expected = borderRows(Borders.compute(without, "name", "geometry"))
+    assert(expected.nonEmpty)
+    assert(borderRows(Borders.compute(in, "name", "geometry")) === expected)
+    assert(borderRows(Borders.grid(in, "name", "geometry")) === expected)
+  }
+
+  test("job guard: Borders.grid on a 64-region map runs <= 6 jobs") {
+    val jobs = jobsOf(Borders.grid(df(lattice(8)), "name", "geometry").collect())
+    info(s"Borders.grid: $jobs jobs")
+    assert(jobs <= 6)
+  }
+
   test("job guard: a 64-region map runs Borders in <= 3 jobs and Dorling in <= 4") {
     val in = df(lattice(8))
     val borders = jobsOf(Borders.compute(in, "name", "geometry").collect())
@@ -79,14 +98,16 @@ class CartogramParitySpec extends SparkSuite {
 
   test("job guard: smallN = 0 still runs the grid and the distributed step") {
     val in = df(lattice(8))
-    val setup = jobsOf(Dorling.run(in, "name", "population", "geometry",
+    val setup = stagesPerJob(Dorling.run(in, "name", "population", "geometry",
       iterations = 0, smallN = 0).collect())
-    val oneStep = jobsOf(Dorling.run(in, "name", "population", "geometry",
+    val oneStep = stagesPerJob(Dorling.run(in, "name", "population", "geometry",
       iterations = 1, smallN = 0).collect())
-    info(s"Dorling.run(smallN = 0): $setup jobs at 0 iterations, $oneStep at 1")
-    assert(setup > 4, "the distributed prologue (grid borders, k, widest) runs Spark jobs")
-    assert(oneStep > setup, "an iteration runs a distributed step")
-    assert(oneStep - setup <= 2, "an iteration adds at most 2 jobs")
+    info(s"Dorling.run(smallN = 0): stages per job ${setup.mkString(", ")} at 0 iterations, " +
+      s"${oneStep.mkString(", ")} at 1")
+    assert(setup.exists(_ >= 5), "the prologue's k job runs the grid's shuffle and the three " +
+      "shuffles that meet borders with regions")
+    assert(oneStep.length > setup.length, "an iteration runs a distributed step")
+    assert(oneStep.length - setup.length <= 2, "an iteration adds at most 2 jobs")
   }
 }
 
@@ -128,6 +149,9 @@ object CartogramParitySpec {
       (ids(j * 3 + i), s"POLYGON (($ring))", 10.0 + 7.0 * (j * 3 + i))
     }
   }
+
+  /** [[grid3]] and a region with an empty geometry: no bbox, no centroid */
+  val withEmpty: Seq[(String, String, Double)] = grid3 :+ (("R33", "MULTIPOLYGON EMPTY", 75.0))
 
   /** `side` x `side` unit squares */
   def lattice(side: Int): Seq[(String, String, Double)] =

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Borders, Dorling}
 
 /** Dorling's distributed path on the inputs the driver path declines
-  * (a map without a Queen pair, a repeated id, a null value), and the
-  * generated code a warm distributed call compiles. */
+  * (a map without a Queen pair, a repeated id, a null value, a null
+  * geometry), and the generated code a warm distributed call compiles. */
 class DorlingDistributedSpec extends SparkSuite {
   import DorlingDistributedSpec._
 
@@ -45,13 +44,15 @@ class DorlingDistributedSpec extends SparkSuite {
       .map(r => (r.getString(0), bits(r.getDouble(2)), bits(r.getDouble(3)))).sortBy(r => (r._1, r._2)).toSeq
   }
 
-  /** run at 3 iterations as (id, radius bits or null, x bits, y bits),
-    * sorted; the default dispatch must give the same rows as smallN = 0 */
-  private def ran(in: DataFrame): Seq[(String, Any, Long, Long)] = {
+  /** run at 3 iterations as (id, radius bits, x bits, y bits), each
+    * null where the column is, sorted; the default dispatch must give
+    * the same rows as smallN = 0 */
+  private def ran(in: DataFrame): Seq[(String, Any, Any, Any)] = {
+    def bitsOrNull(r: Row, i: Int): Any = if (r.isNullAt(i)) null else bits(r.getDouble(i))
     def rows(smallN: Int) = Dorling.run(in, "name", "population", "geometry", iterations = 3,
         smallN = smallN).collect()
-      .map(r => (r.getString(0), if (r.isNullAt(2)) null else bits(r.getDouble(2)),
-        bits(r.getDouble(3)), bits(r.getDouble(4)))).sortBy(r => (r._1, r._3)).toSeq
+      .map(r => (r.getString(0), bitsOrNull(r, 2), bitsOrNull(r, 3), bitsOrNull(r, 4)))
+      .sortBy(r => (r._1, Option(r._3).map(_.asInstanceOf[Long]))).toSeq
     val distributed = rows(0)
     assert(rows(Borders.SmallN) === distributed, "the default dispatch")
     distributed
@@ -77,16 +78,20 @@ class DorlingDistributedSpec extends SparkSuite {
     assert(r11.isNullAt(2) && r11.getDouble(3) === 6.0 && r11.getDouble(4) === 6.0 && r11.isNullAt(5))
   }
 
-  /** Classes Spark's code generator compiled (code-cache misses) in `body`. */
-  private def compiles(body: => Unit): Long = {
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  test("a null geometry: its radius stays, its x, y and circle stay null (pinned)") {
+    val in = df(grid3.map { case (id, g, v) => (id, if (id == "R11") null else g, Some(v)) })
+    val out = ran(in)
+    assert(out === nullGeomRun)
+    // R11 meets no region and its radius is not the widest, so the others
+    // move exactly as on the map without it
+    assert(out.filter(_._1 != "R11") === ran(df(grid3.filter(_._1 != "R11").map { case (id, g, v) =>
+      (id, g, Some(v)) })))
+    val r11 = Dorling.run(in, "name", "population", "geometry", iterations = 3, smallN = 0)
+      .filter(col("id") === "R11").collect().head
+    assert(!r11.isNullAt(2) && r11.isNullAt(3) && r11.isNullAt(4) && r11.isNullAt(5))
   }
 
   test("codegen guard: a warm distributed run compiles <= 2 classes, iterations 2 and 3 none") {
-    // one geometry (the grid join's generated code depends on its cell
-    // size), so only the values, hence k and widest, change per call
     def run(values: (Int, Int) => Double, iterations: Int): Unit =
       Dorling.run(df(for (j <- 0 until 6; i <- 0 until 6)
           yield (f"R$i%02d_$j%02d", rect(i, j, i + 1, j + 1), Some(values(i, j)))),
@@ -99,6 +104,21 @@ class DorlingDistributedSpec extends SparkSuite {
     assert(other <= 2)
     assert(three <= one, "iterations 2 and 3 compiled code")
   }
+
+  test("codegen guard: Borders.grid and Dorling.run(smallN = 0) on new cell sizes compile <= 2 classes each") {
+    def lattice(cell: Double) = df(for (j <- 0 until 8; i <- 0 until 8)
+      yield (f"R$i%02d_$j%02d", rect(i * cell, j * cell, (i + 1) * cell, (j + 1) * cell),
+        Some(100.0 + (i * 31 + j * 17) % 50)))
+    def borders(in: DataFrame): Unit = Borders.grid(in, "name", "geometry").collect()
+    def dorling(in: DataFrame): Unit =
+      Dorling.run(in, "name", "population", "geometry", iterations = 3, smallN = 0).collect()
+    borders(lattice(1)); dorling(lattice(1))
+    for (cell <- Seq(2.0, 3.0, 5.0)) {
+      val (b, d) = (compiles(borders(lattice(cell))), compiles(dorling(lattice(cell))))
+      info(s"cell size $cell: Borders.grid compiled $b, Dorling.run(smallN = 0) $d")
+      assert(b <= 2 && d <= 2, s"cell size $cell")
+    }
+  }
 }
 
 object DorlingDistributedSpec {
@@ -108,7 +128,9 @@ object DorlingDistributedSpec {
   private val grid3 = CartogramParitySpec.grid3
 
   // The pins below are the SQL-aggregate step's output (borders, radii,
-  // one step, and run at 3 iterations), kept bit for bit by the kernel.
+  // one step, and run at 3 iterations), kept bit for bit by the kernel;
+  // nullGeomRun has no such source (a null geometry threw there): it
+  // pins the kernel's first output for one.
   private val dupStep = Seq(
     ("R00", 0x40009c0b748a192bL, 0x3ff83ffbe65d0c0eL),
     ("R00", 0x40184e05ba450c95L, 0x40160ffef9974304L),
@@ -141,6 +163,17 @@ object DorlingDistributedSpec {
     ("R20", 0x3fec5f31ab895408L, 0x402635549bf808b0L),
     ("R21", 0x401790e10eb1d184L, 0x402705d602a38d22L),
     ("R22", 0x402644112f2df7d7L, 0x402612ce896e034eL))
+
+  private val nullGeomRun: Seq[(String, Any, Any, Any)] = Seq(
+    ("R00", 0x3ffb709ba0eda0b4L, 0x400070f455d9a6c9L, 0x3fff111823c4153eL),
+    ("R01", 0x3ffe0f128b2305bdL, 0x4017af490133a680L, 0x3ffff791bcba0fa2L),
+    ("R02", 0x40003bd0685e2bb1L, 0x4023fbc5706ba76aL, 0x3ff959c3b7230d43L),
+    ("R10", 0x40015ac08c628999L, 0x400013bdf73816a9L, 0x4016fbde10ebc45fL),
+    ("R11", 0x400268401065fa2eL, null, null),
+    ("R12", 0x40036725dcac7776L, 0x4023ef78c88046d5L, 0x40171eb9adf49911L),
+    ("R20", 0x40045996b2d1f21cL, 0x3ff2c6001bd49a09L, 0x4024b34d62acbbb8L),
+    ("R21", 0x4005413ce712e124L, 0x4017bfefd42c0780L, 0x4023db90035dc902L),
+    ("R22", 0x40061f6b82ef6191L, 0x4025d245de9795abL, 0x40255c01cfb0bef5L))
 
   private val nullRun: Seq[(String, Any, Long, Long)] = Seq(
     ("R00", 0x40076be0becd0e8cL, 0x3fe2545d1564df30L, 0xbfb8a45bb0f3a1c8L),

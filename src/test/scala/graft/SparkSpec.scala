@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,16 +31,19 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf0001
 
-  /** Spark jobs `body` starts (counted by a listener on the job's
-    * local property; a sentinel job marks that every earlier event
-    * has been delivered). */
-  def jobsOf(body: => Unit): Int = {
+  /** Spark jobs `body` starts. */
+  def jobsOf(body: => Unit): Int = stagesPerJob(body).length
+
+  /** The stage count of each Spark job `body` starts, in start order
+    * (seen by a listener on the job's local property; a sentinel job
+    * marks that every earlier event has been delivered). */
+  def stagesPerJob(body: => Unit): Seq[Int] = {
     val tag = "graft.test.jobguard"
     val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
+    val seen = new ConcurrentLinkedQueue[(String, Int)]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
+        Option(js.properties).flatMap(p => Option(p.getProperty(tag))).foreach(t => seen.add(t -> js.stageInfos.length))
     }
     def tagged(value: String)(f: => Unit): Unit = {
       sc.setLocalProperty(tag, value)
@@ -50,9 +54,17 @@ trait SparkSuite extends AnyFunSuite {
       tagged("body")(body)
       tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
-      seen.asScala.count(_ == "body")
+      def sentinel = seen.asScala.exists(_._1 == "sentinel")
+      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinel, "listener never saw the sentinel job")
+      seen.asScala.collect { case ("body", stages) => stages }.toSeq
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Classes Spark's code generator compiled (code-cache misses) in `body`. */
+  def compiles(body: => Unit): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
   }
 }
