@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.graftext.{ArrayOps, FunctionInjection, SortedLongIntersectCount, VecDotSeq}
 
@@ -19,7 +21,9 @@ case class GeoMeasures(area: Double, perimeter: Double, cx: Double, cy: Double,
   * whole-stage codegen for the hot arithmetic, and only the geometry
   * decode pays the UDF boundary. st_* names mirror the OGC/Sedona
   * convention (public API surface familiarity), semantics mirror
-  * shapely (what the reference uses).
+  * shapely (what the reference uses). Every function returns NULL
+  * when any argument is NULL, on the Column and the SQL path alike
+  * (both build through [[FunctionInjection.nullSafe]]).
   */
 object GeoFunctions extends Serializable {
 
@@ -62,12 +66,12 @@ object GeoFunctions extends Serializable {
   private val transformU = udf((wkt: String, from: String, to: String) =>
     Wkt.write(Proj.transform(Wkt.read(wkt), from, to)))
 
-  def st_area(wkt: Column): Column = areaU(wkt)
-  def st_perimeter(wkt: Column): Column = perimeterU(wkt)
-  def st_centroid_x(wkt: Column): Column = centroidXU(wkt)
-  def st_centroid_y(wkt: Column): Column = centroidYU(wkt)
+  def st_area(wkt: Column): Column = call(areaU, wkt)
+  def st_perimeter(wkt: Column): Column = call(perimeterU, wkt)
+  def st_centroid_x(wkt: Column): Column = call(centroidXU, wkt)
+  def st_centroid_y(wkt: Column): Column = call(centroidYU, wkt)
   /** array(minx, miny, maxx, maxy) */
-  def st_bbox(wkt: Column): Column = bboxU(wkt)
+  def st_bbox(wkt: Column): Column = call(bboxU, wkt)
   /** struct(area, perimeter, cx, cy, minx, miny, maxx, maxy) from a
     * SINGLE parse of the WKT — the decode-once path for
     * multi-measure projections (q20's shape), where per-measure UDFs
@@ -76,55 +80,50 @@ object GeoFunctions extends Serializable {
     * fields in a second select): Catalyst declines to collapse
     * projects when that would duplicate a non-cheap expression, so
     * the plan keeps exactly one UDF invocation per row. */
-  def st_measures(wkt: Column): Column = measuresU(wkt)
+  def st_measures(wkt: Column): Column = call(measuresU, wkt)
   def st_scale(wkt: Column, fx: Column, fy: Column, ox: Column, oy: Column): Column =
-    scaleU(wkt, fx, fy, ox, oy)
-  def st_scale_about_centroid(wkt: Column, f: Column): Column = scaleAboutCentroidU(wkt, f)
-  def st_translate(wkt: Column, dx: Column, dy: Column): Column = translateU(wkt, dx, dy)
+    call(scaleU, wkt, fx, fy, ox, oy)
+  def st_scale_about_centroid(wkt: Column, f: Column): Column = call(scaleAboutCentroidU, wkt, f)
+  def st_translate(wkt: Column, dx: Column, dy: Column): Column = call(translateU, wkt, dx, dy)
   def st_buffer_point(x: Column, y: Column, r: Column, quadsegs: Column): Column =
-    bufferPointU(x, y, r, quadsegs)
-  def st_distance(w1: Column, w2: Column): Column = distanceU(w1, w2)
-  def st_touches(w1: Column, w2: Column): Column = touchesU(w1, w2)
-  def st_shared_border(w1: Column, w2: Column): Column = sharedBorderU(w1, w2)
-  def st_geojson_to_wkt(gj: Column): Column = geojsonToWktU(gj)
+    call(bufferPointU, x, y, r, quadsegs)
+  def st_distance(w1: Column, w2: Column): Column = call(distanceU, w1, w2)
+  def st_touches(w1: Column, w2: Column): Column = call(touchesU, w1, w2)
+  def st_shared_border(w1: Column, w2: Column): Column = call(sharedBorderU, w1, w2)
+  def st_geojson_to_wkt(gj: Column): Column = call(geojsonToWktU, gj)
   /** area(g1 ∩ g2) with convex g2 parts (Sutherland-Hodgman). */
   def st_convex_intersection_area(w1: Column, w2: Column): Column =
-    convexIntersectionAreaU(w1, w2)
+    call(convexIntersectionAreaU, w1, w2)
   /** area(g1 ∩ g2) for ARBITRARY polygons — concave shapes, holes,
     * multipolygons (Green's-theorem boundary clipping; shapely
     * general-booleans parity for area queries). */
   def st_intersection_area(w1: Column, w2: Column): Column =
-    intersectionAreaU(w1, w2)
+    call(intersectionAreaU, w1, w2)
   /** g1 ∩ g2 as WKT (polygonal result; MULTIPOLYGON EMPTY when the
     * intersection carries no area — shapely `intersection` parity
     * for the polygon-output case). */
   def st_intersection(w1: Column, w2: Column): Column =
-    intersectionU(w1, w2)
+    call(intersectionU, w1, w2)
   /** Reproject WKT between CRSs (EPSG:4326 <-> EPSG:3857; see
     * geom.Proj — unknown pairs fail loudly). */
   def st_transform(wkt: Column, from: Column, to: Column): Column =
-    transformU(wkt, from, to)
+    call(transformU, wkt, from, to)
 
   /** Inject every function into a SparkSessionExtensions hook —
     * cluster-wide availability via spark.sql.extensions
     * (see graft.GraftExtensions). */
-  def injectInto(ext: SparkSessionExtensions): Unit = {
-    all.foreach { case (name, u) => FunctionInjection.inject(ext, name, u) }
-    FunctionInjection.injectExpr(ext, "sorted_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)))
-    FunctionInjection.injectExpr(ext, "vec_dot",
-      exprs => VecDotSeq(exprs(0), exprs(1)))
-  }
+  def injectInto(ext: SparkSessionExtensions): Unit =
+    builders.foreach { case (name, b) => FunctionInjection.injectExpr(ext, name, b) }
 
   /** Late-bind every function into an existing session through the
     * same builder lambdas the extension uses. */
-  def registerBuilders(spark: SparkSession): Unit = {
-    all.foreach { case (name, u) => FunctionInjection.registerInto(spark, name, u) }
-    FunctionInjection.registerExprInto(spark, "sorted_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)))
-    FunctionInjection.registerExprInto(spark, "vec_dot",
-      exprs => VecDotSeq(exprs(0), exprs(1)))
-  }
+  def registerBuilders(spark: SparkSession): Unit =
+    builders.foreach { case (name, b) => FunctionInjection.registerExprInto(spark, name, b) }
+
+  private def builders: Seq[(String, Seq[Expression] => Expression)] =
+    all.map { case (name, u) => name -> FunctionInjection.nullSafe(u.withName(name)) } ++ Seq(
+      "sorted_intersect_count" -> (exprs => SortedLongIntersectCount(exprs(0), exprs(1))),
+      "vec_dot" -> (exprs => VecDotSeq(exprs(0), exprs(1))))
 
   private def all = Seq(
     "st_area" -> areaU, "st_perimeter" -> perimeterU,
@@ -139,22 +138,6 @@ object GeoFunctions extends Serializable {
     "st_intersection" -> intersectionU,
     "st_transform" -> transformU)
 
-  /** Register all functions for SQL use in an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("st_area", areaU)
-    spark.udf.register("st_perimeter", perimeterU)
-    spark.udf.register("st_centroid_x", centroidXU)
-    spark.udf.register("st_centroid_y", centroidYU)
-    spark.udf.register("st_bbox", bboxU)
-    spark.udf.register("st_measures", measuresU)
-    spark.udf.register("st_scale", scaleU)
-    spark.udf.register("st_scale_about_centroid", scaleAboutCentroidU)
-    spark.udf.register("st_translate", translateU)
-    spark.udf.register("st_buffer_point", bufferPointU)
-    spark.udf.register("st_distance", distanceU)
-    spark.udf.register("st_touches", touchesU)
-    spark.udf.register("st_shared_border", sharedBorderU)
-    spark.udf.register("st_geojson_to_wkt", geojsonToWktU)
-    spark.udf.register("st_convex_intersection_area", convexIntersectionAreaU)
-  }
+  private def call(u: UserDefinedFunction, args: Column*): Column =
+    FunctionInjection.columnOf(FunctionInjection.nullSafe(u)(args.map(FunctionInjection.exprOf)))
 }

@@ -182,8 +182,7 @@ object BucketedTable {
       .filter(_._2.size >= 2).values.flatten.toSeq
     // DV-bearing files rewrite too: the DV-filtered read MATERIALIZES
     // the deletes and their lines drop with the files
-    val fullDv = Snapshots.resolveDv(spark, dir, pm)
-    val dvFiles = pm.files.filter(fullDv.contains)
+    val dvFiles = pm.files.filter(pm.dvs.contains)
     val rewrite = (stale ++ conflict ++ frag ++ dvFiles).distinct.sorted
     if (rewrite.isEmpty) return prev
     Snapshots.restage(spark, dir, pm, prev, rewrite, placement(dir)(pm),

@@ -250,13 +250,12 @@ object HashBucketedTable {
     val (prev, pm) = Snapshots.writeHead(spark, dir)
     val (keyCol, n) = bucketsOf(pm, dir)
     val epochs = fileBuckets(pm)
-    val fullDv = Snapshots.resolveDv(spark, dir, pm)
     val stale = pm.files.filter(f => !epochs.get(f).contains(n))
     val current = pm.files.filterNot(stale.contains)
     val landing: Set[Long] =
       if (stale.isEmpty) Set.empty
       else Snapshots.readFiles(spark, dir, stale, pm.schemaOpt, pm.colMap,
-        pm.fileSizes, dv = fullDv)
+        pm.fileSizes, dv = pm.dvs)
         .select(pmod(xxhash64(col(keyCol)), lit(n)).as("b"))
         .distinct().collect().map(_.getLong(0)).toSet
     val conflict = current.filter(f =>
@@ -264,7 +263,7 @@ object HashBucketedTable {
     val frag = current.groupBy(f => Snapshots.fileBucket(f).getOrElse(-1L))
       .filter(_._2.size >= 2).values.flatten.toSeq
     // DV-bearing files rewrite too (materialize + drop the line)
-    val dvFiles = pm.files.filter(fullDv.contains)
+    val dvFiles = pm.files.filter(pm.dvs.contains)
     val rewrite = (stale ++ conflict ++ frag ++ dvFiles).distinct.sorted
     if (rewrite.isEmpty) return prev
     Snapshots.restage(spark, dir, pm, prev, rewrite, placement(dir)(pm),
@@ -282,13 +281,12 @@ object HashBucketedTable {
     val (keyCol, _) = bucketsAt(spark, dir, v)
     val keysDf = keys.toDF(keyCol)
     val files = hashFiles(pm, keyCol, keysDf, lit(0L))._1
-    val dv = Snapshots.resolveDv(spark, dir, pm)
     val base =
       if (files.isEmpty)
         Snapshots.readFiles(spark, dir, pm.files, pm.schemaOpt,
-          sizes = pm.fileSizes, dv = dv).limit(0)
+          sizes = pm.fileSizes, dv = pm.dvs).limit(0)
       else Snapshots.readFiles(spark, dir, files.sorted, pm.schemaOpt,
-        sizes = pm.fileSizes, dv = dv)
+        sizes = pm.fileSizes, dv = pm.dvs)
     base.join(broadcast(keysDf), Seq(keyCol), "left_semi").drop(BCol)
   }
 

@@ -136,8 +136,7 @@ object MergeInto {
     val cond = condition.map(FunctionInjection.columnOf).getOrElse(lit(true))
     def tPos(rels: Seq[String]): DataFrame = aliasOnto(spark,
       Snapshots.readFiles(spark, dir, rels, pm.schemaOpt, pm.colMap,
-        pm.fileSizes, Snapshots.statsPruner(pm), dv = pm.dv,
-        dvRefs = pm.dvRefs, withPos = true),
+        pm.fileSizes, Snapshots.statsPruner(pm), dv = pm.dvs, withPos = true),
       targetOutput, keep = Seq(Snapshots.FileCol, Snapshots.PosCol))
     // job 1 — the files holding matches (pushed conjuncts of the
     // condition file-prune via the manifest's typed stats; the
@@ -360,7 +359,7 @@ object MergeInto {
       }
     def tPos(rels: Seq[String]): DataFrame = aliasOnto(spark,
       Snapshots.readFiles(spark, dir, rels, pm.schemaOpt, pm.colMap,
-        pm.fileSizes, dv = pm.dv, dvRefs = pm.dvRefs, withPos = true),
+        pm.fileSizes, dv = pm.dvs, withPos = true),
       targetOutput, keep = Seq(Snapshots.FileCol, Snapshots.PosCol))
     val t = tPos(pm.files)
 

@@ -175,7 +175,7 @@ object Snapshots {
     txnCache.clear()
     dirListCache.clear()
     checkpointLoaded.clear()
-    dvSidecarCache.clear()
+    Dv.forget(_ => true)
   }
 
   /** Cache key for (dir, version) — a plain string concat, NOT a
@@ -197,7 +197,7 @@ object Snapshots {
     txnCache.keySet().removeIf(hit)
     dirListCache.keySet().removeIf(hit)
     checkpointLoaded.removeIf(hit)
-    dvSidecarCache.keySet().removeIf(hit)
+    Dv.forget(hit.test)
   }
 
   /** Delete `path` recursively AND purge the metadata caches under it
@@ -455,30 +455,15 @@ object Snapshots {
         case _ => None
       }
     }.toMap
-    /** Per-file DELETION VECTORS (format 2.2 `#dv:<b64>:<rel>` lines —
-      * merge-on-read deletes): rel → sorted dead row POSITIONS
-      * ([[Dv]] codec). A version's logical content is its files'
-      * rows MINUS these positions; every read path applies them,
-      * rewrites materialize them (the rewrite reads DV-filtered) and
-      * drop the line, and [[compact]] is the reclaimer. DVs only
-      * GROW on a given file — shrinking would resurrect rows. */
-    def dv: Map[String, Array[Long]] = metaValues("dv").flatMap { s =>
-      s.split(":", 2) match {
-        case Array(b64, rel) => Some(rel -> Dv.decode(b64))
-        case _ => None
-      }
-    }.toMap
-    /** SIDECAR deletion-vector references (format 2.2
-      * `#dvf:<count>:<sidecar-rel>:<rel>` — vectors past
-      * [[Dv.InlineMax]] live in one immutable varint file under
-      * `dir/dv/`; the count rides in the line so [[rowCountAt]]
-      * stays manifest-only): rel → (dead count, sidecar rel). */
-    def dvRefs: Map[String, (Long, String)] = metaValues("dvf").flatMap { s =>
-      s.split(":", 3) match {
-        case Array(cnt, sc, rel) => Some(rel -> ((cnt.toLong, sc)))
-        case _ => None
-      }
-    }.toMap
+    /** Per-file DELETION VECTORS (format 2.2 `#dv:<b64>:<rel>` inline
+      * and `#dvf:<count>:<sidecar-rel>:<rel>` sidecar lines —
+      * merge-on-read deletes): rel → its [[Dv.Vec]]. A version's
+      * logical content is its files' rows MINUS these positions; every
+      * read path applies them, rewrites materialize them (the rewrite
+      * reads DV-filtered) and drop the line, and [[compact]] is the
+      * reclaimer. DVs only GROW on a given file — shrinking would
+      * resurrect rows. */
+    def dvs: Map[String, Dv.Vec] = Dv.parse(metaValues("dv"), metaValues("dvf"))
     /** Generic CARRIED table properties (`#prop:key=value` — the
       * Delta table-properties shape): set once at publish (via the
       * `meta` arg) or later with [[setProp]], and copied forward
@@ -1397,61 +1382,14 @@ object Snapshots {
   private[operators] val FileCol = "__gfile"
   private[operators] val PosCol = "__gpos"
 
-  /** Conf key bounding how many TOTAL dead positions a read will
-    * materialize on the driver as the anti-join's pairs side: past it,
-    * `#dvf` SIDECAR vectors are read DISTRIBUTED (one task per
-    * immutable sidecar file via the binaryFile source) instead of
-    * decoded into a driver LocalRelation — a table carrying deep
-    * uncompacted merge-on-read debt across many files would otherwise
-    * put gigabytes of (file, position) pairs on the driver and
-    * re-serialize them into EVERY query's plan. Inline `#dv` vectors
-    * (≤ [[Dv.InlineMax]] positions each) always stay driver-side —
-    * the manifest parse already holds them. */
-  val DvDistributeThresholdKey = "spark.graft.dv.distributeThreshold"
-
-  private def dvDistributeThreshold(spark: SparkSession): Long =
-    spark.conf.getOption(DvDistributeThresholdKey).map(_.toLong)
-      .getOrElse(1000000L)
-
-  /** Conf key: candidate-scan byte sum (off the manifest's `#fsize`
-    * lines — free at planning) above which a vectored delete PERSISTS
-    * its hits frame across the refusal guard and the collect. The
-    * persist buys the single-scan property — one read of the
-    * candidate files however wide the erasure — which matters when
-    * the candidates are tens of GB; below the threshold a re-scan is
-    * cheaper than materializing the cache (measured: ~+2 s per delete
-    * at gate scale, pure overhead). */
-  val DvPersistHitsBytesKey = "spark.graft.dv.persistHitsBytes"
-
-  private def dvPersistHitsBytes(spark: SparkSession): Long =
-    spark.conf.getOption(DvPersistHitsBytesKey).map(_.toLong)
-      .getOrElse(256L * 1024 * 1024)
-
-  /** Conf key: TOTAL matched positions above which a vectored-delete
-    * COMMIT encodes vectors (and writes sidecars) FROM TASKS instead
-    * of collecting every (file, position) pair onto the driver. The
-    * per-file budget ([[Dv.MaxInlinePositions]]) bounds each file's
-    * vector but not their SUM — a scattered 100M-key erasure over a
-    * 100 TB table passes every per-file check and would otherwise
-    * materialize 100M pairs driver-side before encoding. Past this
-    * threshold the driver receives one (rel, count, payload) row per
-    * touched file — exactly what the manifest will carry anyway. The
-    * write-side mirror of [[DvDistributeThresholdKey]]. */
-  val DvWriteDistributeThresholdKey = "spark.graft.dv.writeDistributeThreshold"
-
-  private def dvWriteDistributeThreshold(spark: SparkSession): Long =
-    spark.conf.getOption(DvWriteDistributeThresholdKey).map(_.toLong)
-      .getOrElse(1000000L)
-
   private[operators] def readFiles(spark: SparkSession, dir: String,
                         rels: Seq[String],
                         schema: Option[StructType],
                         colMap: Map[String, String] = Map.empty,
                         sizes: Map[String, Long] = Map.empty,
                         pruner: FilePruner = NoPrune,
-                        dv: Map[String, Array[Long]] = Map.empty,
-                        withPos: Boolean = false,
-                        dvRefs: Map[String, (Long, String)] = Map.empty)
+                        dv: Map[String, Dv.Vec] = Map.empty,
+                        withPos: Boolean = false)
       : DataFrame =
     schema match {
     case Some(s) =>
@@ -1473,64 +1411,20 @@ object Snapshots {
         physSchema,
         filters => pruner(filters).map(_.map(r => qualOf(r).toString)))
       // DELETION VECTORS: a file with recorded dead positions reads
-      // through one anti-join on (file, position) — rewrites of those
-      // files therefore materialize the DV for free, and a DV-less
-      // read pays nothing (the common case: no extra columns, no
-      // join, same single codegen'd scan)
+      // through one per-row test on (file, position) in the scanning
+      // task — rewrites of those files therefore materialize the DV for
+      // free, and a DV-less read pays nothing (the common case: no
+      // extra columns, same single codegen'd scan)
       val relsSet = rels.toSet
-      val liveDv = dv.filter { case (r, ps) =>
-        ps.nonEmpty && relsSet.contains(r)
-      }
-      val liveRefs = dvRefs.filter { case (r, (c, _)) =>
-        c > 0 && relsSet.contains(r) && !liveDv.contains(r)
-      }
-      val anyDv = liveDv.nonEmpty || liveRefs.nonEmpty
+      val live = dv.filter { case (r, v) => v.count > 0 && relsSet.contains(r) }
+      val anyDv = live.nonEmpty
       val posed =
         if (!anyDv && !withPos) base
         else base.withColumn(FileCol, relPathCol(qualDir.toString))
           .withColumn(PosCol, col("_metadata.row_index"))
       val filtered =
         if (!anyDv) posed
-        else {
-          import spark.implicits._
-          val total = liveDv.valuesIterator.map(_.length.toLong).sum +
-            liveRefs.valuesIterator.map(_._1).sum
-          def localPairs(m: Map[String, Array[Long]]): DataFrame =
-            m.toSeq.flatMap { case (r, ps) => ps.map(p => (r, p)) }
-              .toDF(FileCol, PosCol)
-          // broadcast while the dead set is broadcast-SIZED (~1M
-          // (path, pos) pairs ≈ tens of MB built, sidecars decoded
-          // once through the immutable cache); a table carrying more
-          // dead positions (deep merge-on-read debt compact has not
-          // reclaimed) reads its SIDECAR vectors DISTRIBUTED — one
-          // task per immutable sidecar file, never a driver
-          // LocalRelation — and anti-joins through the shuffle
-          // instead of pinning a giant hash relation on every
-          // executor (see [[DvDistributeThresholdKey]])
-          val dead =
-            if (total <= dvDistributeThreshold(spark))
-              broadcast(localPairs(liveDv ++ liveRefs.map {
-                case (r, (_, sc)) => r -> readSidecar(spark, dir, sc)
-              }))
-            else if (liveRefs.isEmpty) localPairs(liveDv)
-            else {
-              val byPath = liveRefs.map { case (r, (_, sc)) =>
-                f.makeQualified(
-                  new org.apache.hadoop.fs.Path(s"$dir/$sc")).toString -> r
-              }
-              val relOfPath = udf((p: String) => byPath.getOrElse(p,
-                throw new IllegalStateException(
-                  s"dv sidecar scan returned an unexpected path: $p")))
-              val decodePositions = udf((b: Array[Byte]) => Dv.decodeBytes(b))
-              val sidecarPairs = spark.read.format("binaryFile")
-                .load(byPath.keys.toSeq.sorted: _*)
-                .select(relOfPath(col("path")).as(FileCol),
-                  explode(decodePositions(col("content"))).as(PosCol))
-              if (liveDv.isEmpty) sidecarPairs
-              else sidecarPairs.unionByName(localPairs(liveDv))
-            }
-          posed.join(dead, Seq(FileCol, PosCol), "left_anti")
-        }
+        else posed.filter(!Dv.deadTest(spark, dir, live)(col(FileCol), col(PosCol)))
       val surface = s.fields.map(fd =>
         col(toPhys.getOrElse(fd.name, fd.name)).as(fd.name)) ++
         (if (withPos) Seq(col(FileCol), col(PosCol)) else Nil)
@@ -1737,7 +1631,7 @@ object Snapshots {
   def readAt(spark: SparkSession, dir: String, v: Long): DataFrame = {
     val m = committedManifest(spark, dir, v)
     readFiles(spark, dir, m.files, m.schemaOpt, m.colMap, m.fileSizes,
-      statsPruner(m), m.dv, dvRefs = m.dvRefs)
+      statsPruner(m), m.dvs)
   }
 
   /** Read the latest version. */
@@ -1761,8 +1655,7 @@ object Snapshots {
     // its bucket is not fragmented — the read is DV-filtered, so the
     // rewrite MATERIALIZES the deletes and the dv line drops
     // (vacuum then reclaims the pre-delete bytes)
-    val fullDv = resolveDv(spark, dir, pm)
-    val dvBuckets = pm.files.filter(fullDv.contains).map(bOf).toSet
+    val dvBuckets = pm.files.filter(pm.dvs.contains).map(bOf).toSet
     val rewriteBuckets = frag.keySet ++ dvBuckets
     if (rewriteBuckets.isEmpty) return prev
     restage(spark, dir, pm, prev,
@@ -1778,7 +1671,7 @@ object Snapshots {
       pm: Manifest, prev: Long, rewrite: Seq[String], p: Placement,
       blockSize: Long, numTasks: Int): Long = {
     val rows = readFiles(spark, dir, rewrite, pm.schemaOpt, pm.colMap,
-      pm.fileSizes, dv = resolveDv(spark, dir, pm)).drop(p.derived: _*)
+      pm.fileSizes, dv = pm.dvs).drop(p.derived: _*)
     val st = stagePlaced(p, pm, dir, p.place(rows), blockSize, numTasks)
     val schema = pm.schemaOpt.map(nullable(_).json).getOrElse(st.schemaJson)
     val rewritten = rewrite.toSet
@@ -1950,8 +1843,8 @@ object Snapshots {
     * potentially a large fraction of the table for a few thousand
     * rows — where this pays ONE read of the candidate buckets
     * (positions located, nothing staged) and a small manifest line.
-    * Reads apply the vectors via one broadcast anti-join on
-    * (file, position); time travel still reads the pre-delete state;
+    * Reads apply the vectors with a per-row (file, position) test in
+    * the scanning task; time travel still reads the pre-delete state;
     * the change feed emits the newly-dead rows as deletes; any later
     * rewrite of a vectored file (merge, [[compact]] — which targets
     * DV-bearing files explicitly) MATERIALIZES the vector and drops
@@ -1985,16 +1878,13 @@ object Snapshots {
       val candidates = candidatesOf(pm)
       if (candidates.isEmpty) None
       // ONE read of the candidate buckets (already-dead rows excluded
-      // so a vector never double-records — sidecar debt stays off the
-      // driver via the dvRefs passthrough), broadcast-semi-joined to
-      // the keys: the matched rows' (file, position) pairs ARE the
-      // delete
-      else Some((readFiles(spark, dir, candidates, pm.schemaOpt, pm.colMap,
-          pm.fileSizes, dv = pm.dv, dvRefs = pm.dvRefs, withPos = true)
+      // so a vector never double-records), broadcast-semi-joined to the
+      // keys: the matched rows' (file, position) pairs ARE the delete
+      else Some(readFiles(spark, dir, candidates, pm.schemaOpt, pm.colMap,
+          pm.fileSizes, dv = pm.dvs, withPos = true)
         .join(broadcast(keys.select(keyCols.map(col): _*).distinct()),
           keyCols, "left_semi")
-        .select(FileCol, PosCol),
-        candidates.iterator.flatMap(pm.fileSizes.get).sum))
+        .select(FileCol, PosCol))
     }
   }
 
@@ -2012,180 +1902,48 @@ object Snapshots {
   def deleteWhere(spark: SparkSession, dir: String,
                   condition: org.apache.spark.sql.Column): Long =
     deleteVectoredHits(spark, dir) { pm =>
-      Some((readFiles(spark, dir, pm.files, pm.schemaOpt, pm.colMap,
-          pm.fileSizes, statsPruner(pm), dv = pm.dv, dvRefs = pm.dvRefs,
-          withPos = true)
+      Some(readFiles(spark, dir, pm.files, pm.schemaOpt, pm.colMap,
+          pm.fileSizes, statsPruner(pm), dv = pm.dvs, withPos = true)
         .filter(condition)
-        .select(FileCol, PosCol),
-        pm.fileSizes.values.sum))
+        .select(FileCol, PosCol))
     }
 
   /** The vectored-delete ENGINE: `hitsOf` turns the latest manifest
-    * into the (file, position) frame to kill plus a candidate-scan
-    * byte estimate (off the manifest's `#fsize` lines) — None/empty
-    * means nothing matched and nothing commits. Guards the per-file
-    * inline budget, grows vectors, re-encodes inline-vs-sidecar,
-    * carries everything else verbatim, one metadata-only commit.
-    *
-    * Old-vector exclusion rides `hitsOf`'s own read (inline `#dv`
-    * plus `#dvf` refs passthrough — deep sidecar debt never
-    * materializes on the driver here), and the budget guard reads the
-    * LINE-carried counts, so no sidecar opens before the encode pass.
-    *
-    * Two scale knobs:
-    *  - the hits frame PERSISTS across the refusal guard and the
-    *    encode pass only when the candidate scan is worth caching
-    *    ([[DvPersistHitsBytesKey]] — below it a re-scan beats the
-    *    materialization, measured ~2 s per delete at gate scale);
-    *  - past [[DvWriteDistributeThresholdKey]] TOTAL matched
-    *    positions, vectors encode (and sidecars write) FROM TASKS —
-    *    the driver collects one (rel, count, payload) row per touched
-    *    file, never the pairs themselves, so the commit path is
-    *    bounded by file count like every other metadata operation. */
+    * into the (file, position) frame to kill — None/empty means
+    * nothing matched and nothing commits. ONE pass ([[Dv.grow]]): the
+    * hits (already-dead rows excluded by `hitsOf`'s own DV-filtered
+    * read) shuffle by file, and each file's task guards the per-file
+    * budget, grows the vector and stores it inline or as a sidecar;
+    * the driver receives one row per touched file, refuses if any file
+    * went over budget, and otherwise makes one metadata-only commit
+    * carrying everything else verbatim. */
   private def deleteVectoredHits(spark: SparkSession, dir: String)(
-      hitsOf: Manifest => Option[(DataFrame, Long)]): Long = {
+      hitsOf: Manifest => Option[DataFrame]): Long = {
     val (prev, pm) = writeHead(spark, dir)
     val schema = pm.schemaOpt.map(nullable(_).json).getOrElse(
       throw new IllegalArgumentException(
         s"$dir predates manifest format 2 — deleteVectored needs a schema"))
-    val (hitsDf, candBytes) = hitsOf(pm) match {
+    val grown = hitsOf(pm) match {
       case None => return prev
-      case Some(h) => h
+      case Some(hits) => Dv.grow(dir, pm.dvs, hits)
     }
-    // existing debt per file from the manifest LINES alone (sidecar
-    // lines carry their counts) — the guard never opens a sidecar
-    def oldLen(rel: String): Long =
-      pm.dvRefs.get(rel).map(_._1)
-        .orElse(pm.dv.get(rel).map(_.length.toLong)).getOrElse(0L)
-    val doPersist = candBytes >= dvPersistHitsBytes(spark)
-    if (doPersist)
-      hitsDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one (rel, grown count, payload) per touched file;
-    // payload "i:<b64>" = inline line body, "f:<rel>" = sidecar path
-    val encoded: Array[(String, Long, String)] = try {
-      // ENFORCE the documented refusal before anything lands on the
-      // driver: a vector past Dv.MaxInlinePositions per file means the
-      // erasure is rewrite-scale — the copy-on-write delete is the
-      // right tool (an unbounded collect would OOM the driver, not
-      // refuse)
-      val perFile = hitsDf.groupBy(FileCol).count().collect()
-      perFile.foreach { r =>
-        val total = r.getLong(1) + oldLen(r.getString(0))
-        require(total <= Dv.MaxInlinePositions,
-          s"deleteVectored would grow ${r.getString(0)}'s vector to " +
-            s"$total positions (> ${Dv.MaxInlinePositions})" +
-            " — use the copy-on-write delete; rewriting is cheaper at that churn")
-      }
-      if (perFile.isEmpty) Array.empty[(String, Long, String)]
-      else if (perFile.iterator.map(_.getLong(1)).sum <=
-          dvWriteDistributeThreshold(spark)) {
-        // bounded erasure: collect the pairs, merge + encode on the
-        // driver; old SIDECARS are read for touched files only
-        hitsDf.collect().groupBy(_.getString(0)).toArray.map {
-          case (rel, rs) =>
-            val old = pm.dvRefs.get(rel) match {
-              case Some((_, sc)) => readSidecar(spark, dir, sc)
-              case None => pm.dv.getOrElse(rel, Array.empty[Long])
-            }
-            val grown = Dv.merge(old, rs.map(_.getLong(1)))
-            if (grown.length <= Dv.InlineMax)
-              (rel, grown.length.toLong, s"i:${Dv.encode(grown)}")
-            else
-              (rel, grown.length.toLong,
-                s"f:${writeDvSidecar(spark, dir, grown)}")
-        }
-      } else distributedDvEncode(spark, dir, pm, hitsDf)
-    } finally if (doPersist) hitsDf.unpersist()
-    if (encoded.isEmpty) return prev
+    grown.foreach { case (rel, n, v) =>
+      require(v.nonEmpty,
+        s"deleteVectored would grow $rel's vector to $n positions " +
+          s"(> ${Dv.MaxInlinePositions}) — use the copy-on-write delete; " +
+          "rewriting is cheaper at that churn")
+    }
+    if (grown.isEmpty) return prev
     // every file is kept: untouched files keep their existing lines
     // VERBATIM (inline or sidecar ref) and their stats (now per-FILE
     // upper bounds; rowCountAt subtracts the dead positions); grown
-    // files re-encode — inline up to Dv.InlineMax, one immutable
-    // sidecar past it (the old sidecar becomes an orphan; vacuum
+    // files re-encode (the old sidecar becomes an orphan; vacuum
     // reclaims it once no kept manifest references it)
-    val grownRels = encoded.iterator.map(_._1).toSet
+    val grownRels = grown.iterator.map(_._1).toSet
     commitReplacing(spark, dir, pm, prev, pm.files, Staged(Nil, schema, Nil),
-      schema, encoded.sortBy(_._1).toSeq.map {
-        case (rel, _, p) if p.startsWith("i:") => s"dv:${p.drop(2)}:$rel"
-        case (rel, cnt, p) => s"dvf:$cnt:${p.drop(2)}:$rel"
-      },
+      schema, grown.sortBy(_._1).toSeq.map { case (rel, _, v) => Dv.line(rel, v.get) },
       replaced = l => (l.startsWith("dv:") || l.startsWith("dvf:")) &&
         grownRels.contains(lineRel(l)))
-  }
-
-  /** The wide-erasure encode: grow + encode every touched file's
-    * vector IN TASKS and write sidecars from the task that owns the
-    * file — the driver receives one (rel, count, payload) row per
-    * touched file (bounded by file count; the manifest carries the
-    * same rows), never the (file, position) pairs. Shape: shuffle the
-    * pairs partitioned by FILE and sorted by (file, position), then
-    * stream each partition's consecutive runs — one primitive-array
-    * build per file, no boxed groupBy. Old vectors resolve task-side:
-    * inline `#dv` arrays ride a broadcast (the driver already holds
-    * them — they ARE manifest lines); `#dvf` sidecars are read by the
-    * one task that owns the file. A retried/speculated task can leave
-    * an orphan sidecar under `dv/` (fresh UUID per attempt, only one
-    * attempt's rows are consumed) — the same crash-orphan story as
-    * every staged write here; vacuum sweeps it. */
-  private def distributedDvEncode(spark: SparkSession, dir: String,
-      pm: Manifest, hitsDf: DataFrame): Array[(String, Long, String)] = {
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val inlineBc = spark.sparkContext.broadcast(pm.dv)
-    val refsBc = spark.sparkContext.broadcast(pm.dvRefs)
-    val dirStr = dir
-    val inlineMax = Dv.InlineMax
-    val nParts = math.max(32, spark.sparkContext.defaultParallelism)
-    val byFile = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = nParts
-      override def getPartition(key: Any): Int = key match {
-        case (f: String, _) => (f.hashCode & Int.MaxValue) % nParts
-        case _ => 0
-      }
-    }
-    hitsDf.rdd.map(r => ((r.getString(0), r.getLong(1)), ()))
-      .repartitionAndSortWithinPartitions(byFile)
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(String, Long, String)] {
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): (String, Long, String) = {
-            val rel = buf.head._1._1
-            val ps = new scala.collection.mutable.ArrayBuilder.ofLong
-            while (buf.hasNext && buf.head._1._1 == rel) {
-              ps += buf.next()._1._2
-            }
-            val conf = confBc.value.value
-            val old: Array[Long] = refsBc.value.get(rel) match {
-              case Some((_, sc)) =>
-                val p = new org.apache.hadoop.fs.Path(s"$dirStr/$sc")
-                val f = p.getFileSystem(conf)
-                val in = f.open(p)
-                try {
-                  val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-                  in.readFully(bytes)
-                  Dv.decodeBytes(bytes)
-                } finally in.close()
-              case None =>
-                inlineBc.value.getOrElse(rel, Array.empty[Long])
-            }
-            val grown = Dv.merge(old, ps.result())
-            if (grown.length <= inlineMax)
-              (rel, grown.length.toLong, s"i:${Dv.encode(grown)}")
-            else {
-              val scRel =
-                s"dv/${java.util.UUID.randomUUID().toString.take(8)}.dvs"
-              val p = new org.apache.hadoop.fs.Path(s"$dirStr/$scRel")
-              val f = p.getFileSystem(conf)
-              f.mkdirs(p.getParent)
-              val out = f.create(p, false)
-              try out.write(Dv.encodeBytes(grown)) finally out.close()
-              (rel, grown.length.toLong, s"f:$scRel")
-            }
-          }
-        }
-      }.collect()
   }
 
   /** Upserts and deletes in ONE commit — the full CDC apply step a
@@ -2266,7 +2024,7 @@ object Snapshots {
         if (loc.files.isEmpty) updatesP.get
         else {
           val existing = readFiles(spark, dir, loc.files, pm.schemaOpt,
-            pm.colMap, pm.fileSizes, dv = resolveDv(spark, dir, pm))
+            pm.colMap, pm.fileSizes, dv = pm.dvs)
             .drop(p.derived: _*)
           // additive/WIDENING evolution: updates may ADD columns (old
           // rows null-fill on read) and shared columns may WIDEN in
@@ -2516,13 +2274,9 @@ object Snapshots {
     // vNew must not re-insert), and a SHARED file whose vector GREW
     // contributes its newly-dead rows — deletes the file sets alone
     // cannot see, because a DV commit changes no files at all
-    val dvOldM = resolveDv(spark, dir, mOld)
-    val dvNewM = resolveDv(spark, dir, mNew)
-    val grown: Map[String, Array[Long]] = (fo & fn).toSeq.flatMap { rel =>
-      val od = dvOldM.getOrElse(rel, Array.empty[Long]).toSet
-      val nd = dvNewM.getOrElse(rel, Array.empty[Long]).filterNot(od)
-      if (nd.isEmpty) None else Some(rel -> nd)
-    }.toMap
+    val (dvOld, dvNew) = (mOld.dvs, mNew.dvs)
+    def dead(m: Map[String, Dv.Vec], rel: String) = m.get(rel).fold(0L)(_.count)
+    val grown = (fo & fn).toSeq.filter(r => dead(dvNew, r) > dead(dvOld, r)).sorted
     val sizes = mOld.fileSizes ++ mNew.fileSizes
     // both sides read under vNew's schema AND column names: columns
     // the old files predate null-fill natively (additive evolution);
@@ -2532,23 +2286,25 @@ object Snapshots {
     val newSide =
       if (onlyNew.isEmpty) empty
       else readFiles(spark, dir, onlyNew, mNew.schemaOpt, mNew.colMap,
-        sizes, dv = dvNewM)
+        sizes, dv = dvNew)
+    // the grown files' rows dead at vNew and live at vOld
     val grownRows =
       if (grown.isEmpty) empty
       else {
-        import spark.implicits._
-        val sel = broadcast(grown.toSeq
-          .flatMap { case (r, ps) => ps.map(p => (r, p)) }
-          .toDF(FileCol, PosCol))
-        readFiles(spark, dir, grown.keys.toSeq.sorted, mNew.schemaOpt,
-            mNew.colMap, sizes, withPos = true)
-          .join(sel, Seq(FileCol, PosCol), "left_semi")
+        val grownSet = grown.toSet
+        def deadAt(m: Map[String, Dv.Vec]) =
+          Dv.deadTest(spark, dir, m.filter { case (r, _) => grownSet(r) })
+        val (deadNew, deadOld) = (deadAt(dvNew), deadAt(dvOld))
+        val (f, p) = (col(FileCol), col(PosCol))
+        readFiles(spark, dir, grown, mNew.schemaOpt, mNew.colMap, sizes,
+            withPos = true)
+          .filter(deadNew(f, p) && !deadOld(f, p))
           .drop(FileCol, PosCol)
       }
     val oldSide =
       (if (onlyOld.isEmpty) empty
        else readFiles(spark, dir, onlyOld, mNew.schemaOpt, mNew.colMap,
-         sizes, dv = dvOldM))
+         sizes, dv = dvOld))
         .unionByName(grownRows)
     // align column order/types (a no-op under a recorded schema;
     // legacy manifests' partition discovery may disagree per token)
@@ -2729,10 +2485,10 @@ object Snapshots {
     }.reduce(_ && _)
     if (surviving.isEmpty)
       readFiles(spark, dir, m.files, m.schemaOpt, m.colMap, m.fileSizes,
-        dv = m.dv, dvRefs = m.dvRefs)
+        dv = m.dvs)
         .filter(residual).limit(0)
     else readFiles(spark, dir, surviving, m.schemaOpt, m.colMap,
-      m.fileSizes, dv = m.dv, dvRefs = m.dvRefs)
+      m.fileSizes, dv = m.dvs)
       .filter(residual)
   }
 
@@ -2773,8 +2529,7 @@ object Snapshots {
     // merge-on-read deletes: per-file row counts are PRE-DV (the stat
     // lines describe the physical file); the version's logical count
     // subtracts the recorded dead positions
-    val dead = m.dv.valuesIterator.map(_.length.toLong).sum +
-      m.dvRefs.valuesIterator.map(_._1).sum // sidecar counts ride inline
+    val dead = m.dvs.valuesIterator.map(_.count).sum // sidecar counts ride in the line
     if (per.exists(_.isEmpty)) None else Some(per.flatten.sum - dead)
   }
 
@@ -2822,67 +2577,22 @@ object Snapshots {
   private[operators] def lineRel(line: String): String =
     line.substring(line.lastIndexOf(':') + 1)
 
-  /** Immutable sidecar payloads cache (a sidecar is written once and
-    * never modified; rewrites drop the reference and vacuum reclaims
-    * the file). */
-  private val dvSidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
-  /** Read ONE sidecar vector (driver-side, through the immutable
-    * cache) — [[resolveDv]]'s per-file body, also the small-debt
-    * materialization path in [[readFiles]]. */
-  private def readSidecar(spark: SparkSession, dir: String,
-                          sidecarRel: String): Array[Long] =
-    dvSidecarCache.computeIfAbsent(s"$dir/$sidecarRel", { abs =>
-      val p = new org.apache.hadoop.fs.Path(abs)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = f.open(p)
-      try {
-        val len = f.getFileStatus(p).getLen.toInt
-        val bytes = new Array[Byte](len)
-        in.readFully(bytes)
-        Dv.decodeBytes(bytes)
-      } finally in.close()
-    })
-
-  /** Resolve a manifest's FULL deletion vectors: inline `#dv` lines
-    * plus `#dvf` sidecar files (read once per sidecar per process —
-    * they are immutable). The planning-only surfaces ([[rowCountAt]])
-    * use the line-carried counts instead and never open a sidecar;
-    * the READ path ([[readAt]]) passes the refs through to
-    * [[readFiles]] so deep debt can stay OFF the driver entirely. */
+  /** Resolve a manifest's FULL deletion vectors, sidecars decoded —
+    * the inspection surface ([[deletionVectorsAt]]) and the change
+    * feed's replay. Reads apply vectors per task instead
+    * ([[readFiles]]), and the planning surfaces ([[rowCountAt]]) use
+    * the line-carried counts. */
   private[graft] def resolveDv(spark: SparkSession, dir: String,
-                               m: Manifest): Map[String, Array[Long]] = {
-    val refs = m.dvRefs
-    if (refs.isEmpty) m.dv
-    else m.dv ++ refs.map { case (rel, (_, sc)) =>
-      rel -> readSidecar(spark, dir, sc)
+                               m: Manifest): Map[String, Array[Long]] =
+    m.dvs.map { case (rel, v) =>
+      rel -> Dv.positions(spark.sparkContext.hadoopConfiguration, dir, v)
     }
-  }
-
-  /** Stage one sidecar deletion-vector file under `dir/dv/` (written
-    * BEFORE the manifest commit like data files — a crash leaves an
-    * orphan the vacuum sweeps) and return its manifest-relative path. */
-  private def writeDvSidecar(spark: SparkSession, dir: String,
-                             positions: Array[Long]): String = {
-    val rel = s"dv/${java.util.UUID.randomUUID().toString.take(8)}.dvs"
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
-    val f = fs(spark, dir)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(Dv.encodeBytes(positions)) finally out.close()
-    dvSidecarCache.put(s"$dir/$rel", positions.distinct.sorted)
-    rel
-  }
 
   /** The version's DEAD-row count, manifest-only: inline vector
     * lengths plus the sidecar lines' carried counts — never opens a
     * sidecar (the `graft_history` / planning surface). */
-  def deadRowsAt(spark: SparkSession, dir: String, v: Long): Long = {
-    val m = committedManifest(spark, dir, v)
-    m.dv.valuesIterator.map(_.length.toLong).sum +
-      m.dvRefs.valuesIterator.map(_._1).sum
-  }
+  def deadRowsAt(spark: SparkSession, dir: String, v: Long): Long =
+    committedManifest(spark, dir, v).dvs.valuesIterator.map(_.count).sum
 
   /** The batch-ledger header riding on version `v`, if any — carried
     * headers included (a compact/metadata commit reports the id it
@@ -2950,19 +2660,21 @@ object Snapshots {
     // rewrite/re-grow drops the reference and the file becomes an
     // orphan (same retainMs guard — an in-flight writer's
     // just-written sidecar is protected)
-    val dvRoot = new org.apache.hadoop.fs.Path(dir, "dv")
+    val dvRoot = new org.apache.hadoop.fs.Path(dir, Dv.SidecarDir)
     val referencedDv = keep.flatMap(v =>
-      manifest(spark, dir, v).dvRefs.valuesIterator.map(_._2)).toSet
+      manifest(spark, dir, v).dvs.valuesIterator.collect {
+        case Dv.Sidecar(_, sc) => sc
+      }).toSet
     val dvOrphans =
       if (!f.exists(dvRoot)) Seq.empty
       else f.listStatus(dvRoot).toSeq.filter(!_.isDirectory).flatMap { st =>
-        val rel = "dv/" + st.getPath.getName
+        val rel = s"${Dv.SidecarDir}/${st.getPath.getName}"
         if (!referencedDv(rel) && st.getModificationTime <= cutoff) Some(rel)
         else None
       }
     dvOrphans.foreach { rel =>
       f.delete(new org.apache.hadoop.fs.Path(s"$dir/$rel"), false)
-      dvSidecarCache.remove(s"$dir/$rel")
+      Dv.forget(_ == s"$dir/$rel")
     }
     drop.foreach { v =>
       f.delete(manifestPath(dir, v), false)

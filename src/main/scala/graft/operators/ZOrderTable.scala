@@ -378,13 +378,12 @@ object ZOrderTable {
     val p = placement(dir)(pm)
     val shift = layoutOf(pm, dir).shift
     val epochs = fileShifts(pm)
-    val fullDv = Snapshots.resolveDv(spark, dir, pm)
     val stale = pm.files.filter(f => !epochs.get(f).contains(shift))
     val current = pm.files.filterNot(stale.contains)
     val landing: Set[Long] =
       if (stale.isEmpty) Set.empty
       else Snapshots.readFiles(spark, dir, stale, pm.schemaOpt, pm.colMap,
-        pm.fileSizes, dv = fullDv)
+        pm.fileSizes, dv = pm.dvs)
         .select(shiftrightunsigned(col(ZCol), shift).as("c"))
         .distinct().collect().map(_.getLong(0)).toSet
     val conflict = current.filter(f =>
@@ -392,7 +391,7 @@ object ZOrderTable {
     val frag = current.groupBy(f => Snapshots.fileBucket(f).getOrElse(-1L))
       .filter(_._2.size >= 2).values.flatten.toSeq
     // DV-bearing files rewrite too (materialize + drop the line)
-    val dvFiles = pm.files.filter(fullDv.contains)
+    val dvFiles = pm.files.filter(pm.dvs.contains)
     val rewrite = (stale ++ conflict ++ frag ++ dvFiles).distinct.sorted
     if (rewrite.isEmpty) return prev
     Snapshots.restage(spark, dir, pm, prev, rewrite, p, blockSize, rewrite.size)

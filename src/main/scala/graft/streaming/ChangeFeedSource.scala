@@ -241,8 +241,7 @@ private[streaming] class ChangeFeedStream(dir: String, startVersion: Long,
     // a shared file whose deletion vector grew is read too (to emit
     // the newly-dead rows) — admission control prices it like churn
     def deadCounts(m: graft.operators.Snapshots.Manifest): Map[String, Long] =
-      m.dv.map { case (r, ps) => r -> ps.length.toLong } ++
-        m.dvRefs.map { case (r, (c, _)) => r -> c }
+      m.dvs.map { case (r, d) => r -> d.count }
     val dvOldC = prevCommitted.map(p =>
       deadCounts(Snapshots.manifest(spark, dir, p))).getOrElse(Map.empty)
     val dvNewC = deadCounts(mNew)

@@ -1331,11 +1331,9 @@ object ScaleStress {
     }
 
     if (sections("dvdist")) {
-    // r12's distributed-DV claim, measured: a table carrying DEEP
-    // merge-on-read debt (2.5M dead positions over 32 sidecars) reads
-    // with the dead side built DISTRIBUTED (one task per sidecar) vs
-    // the driver-LocalRelation path (threshold raised) — identical
-    // answers, no gigabytes of pairs serialized into the plan.
+    // a table carrying DEEP merge-on-read debt (2.5M dead positions
+    // over 32 sidecars) reads with each scan task testing its own
+    // file's vector — no (file, position) pairs on the driver.
     import graft.operators.Snapshots
     val n = 10000000L
     val dir = "/tmp/graft_scale_dvdist"
@@ -1347,53 +1345,30 @@ object ScaleStress {
       Snapshots.deleteVectored(
         rows.filter(col("k") % 4 === 1).select("k", "bucket"),
         dir, "bucket", Seq("k")))
-    val key = Snapshots.DvDistributeThresholdKey
-    spark.conf.set(key, "10000000000")
-    timed("dvdist: read via driver-local pairs (threshold raised)")(
+    timed("dvdist: read of the erased table")(
       Snapshots.read(spark, dir).count())
-    spark.conf.unset(key) // default 1M < 2.5M -> distributed sidecars
-    timed("dvdist: read via DISTRIBUTED sidecar pairs (default)")(
-      Snapshots.read(spark, dir).count())
-    timed("dvdist: filtered fold over the erased table (distributed)")(
+    timed("dvdist: filtered fold over the erased table")(
       Snapshots.read(spark, dir).filter(col("k") % 1000 === 0)
         .agg(sum("payload")).collect()(0).getLong(0))
     }
 
     if (sections("dvwrite")) {
-    // r13's distributed-COMMIT claim, measured: a vectored erasure of
-    // 10M matched positions (every 4th key of a 40M-row table across
-    // 128 files) encodes + writes its sidecars FROM TASKS — the driver
-    // collects one (rel, count, path) row per file — vs the
-    // driver-side path (threshold raised: 10M (file, pos) pairs
-    // collected, merged and encoded on one thread). Identical erased
-    // answers either way.
+    // a vectored erasure of 10M matched positions (every 4th key of a
+    // 40M-row table across 128 files): the hits shuffle by file and
+    // each task grows and stores its file's vector — the driver
+    // collects one row per file.
     import graft.operators.Snapshots
     val n = 40000000L
-    def build(tag: String): String = {
-      val dir = s"/tmp/graft_scale_dvwrite_$tag"
-      Snapshots.dropPath(spark, dir)
-      val rows = spark.range(0, n, 1, 64).select(col("id").as("k"),
-        (col("id") * 31).as("payload"), expr("id div 312500").as("bucket"))
-      Snapshots.publish(rows, dir, "bucket", Seq("k"))
-      dir
-    }
-    val key = Snapshots.DvWriteDistributeThresholdKey
-    val dirD = build("driver")
+    val dir = "/tmp/graft_scale_dvwrite"
+    Snapshots.dropPath(spark, dir)
+    val rows = spark.range(0, n, 1, 64).select(col("id").as("k"),
+      (col("id") * 31).as("payload"), expr("id div 312500").as("bucket"))
+    Snapshots.publish(rows, dir, "bucket", Seq("k"))
     val doomed = spark.range(0, n).filter(col("id") % 4 === 1)
       .select(col("id").as("k"), expr("k div 312500").as("bucket"))
-    spark.conf.set(key, s"${100L * n}")
-    timed("dvwrite: 10M-position erasure, DRIVER-side encode " +
-      "(threshold raised — 10M pairs collected)")(
-      Snapshots.deleteVectored(doomed, dirD, "bucket", Seq("k")))
-    spark.conf.unset(key) // default 1M << 10M -> task-side encode
-    val dirT = build("task")
-    timed("dvwrite: 10M-position erasure, TASK-side encode + sidecar " +
-      "writes (default — driver sees one row per file)")(
-      Snapshots.deleteVectored(doomed, dirT, "bucket", Seq("k")))
-    timed("dvwrite: erased fold, task-encoded table")(
-      Snapshots.read(spark, dirT).count())
-    timed("dvwrite: erased fold, driver-encoded table (must match)")(
-      Snapshots.read(spark, dirD).count())
+    timed("dvwrite: 10M-position erasure, task-side grow + sidecar writes")(
+      Snapshots.deleteVectored(doomed, dir, "bucket", Seq("k")))
+    timed("dvwrite: erased fold")(Snapshots.read(spark, dir).count())
     }
 
     if (sections("delwhere")) {

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftext
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, If, IsNull, Literal, Or}
 import org.apache.spark.sql.classic.UserDefinedFunctionUtils
 import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
 
@@ -14,13 +14,14 @@ import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFu
   */
 object FunctionInjection {
 
-  def inject(ext: SparkSessionExtensions, name: String,
-             udf: UserDefinedFunction): Unit =
-    ext.injectFunction((
-      FunctionIdentifier(name),
-      new ExpressionInfo(udf.getClass.getName, name),
-      (exprs: Seq[Expression]) => UserDefinedFunctionUtils.toScalaUDF(
-        udf.asInstanceOf[SparkUserDefinedFunction].withName(name), exprs)))
+  /** The builder of a UDF-backed function that returns NULL when any
+    * argument is NULL: the UDF body never sees a null input. */
+  def nullSafe(udf: UserDefinedFunction): Seq[Expression] => Expression = { exprs =>
+    val call = UserDefinedFunctionUtils.toScalaUDF(
+      udf.asInstanceOf[SparkUserDefinedFunction], exprs)
+    If(exprs.map(e => IsNull(e): Expression).reduce(Or(_, _)),
+      Literal(null, call.dataType), call)
+  }
 
   /** Inject a plain expression constructor (for native expressions
     * like SortedLongIntersectCount). */
@@ -31,19 +32,11 @@ object FunctionInjection {
       new ExpressionInfo(classOf[SortedLongIntersectCount].getName, name),
       builder))
 
-  /** Register the same builder directly on an EXISTING session's
-    * function registry (extensions only apply to sessions created
-    * after the builder; this covers late binding and lets tests
-    * exercise the identical builder lambdas without spawning a second
+  /** Register a builder directly on an EXISTING session's function
+    * registry (extensions only apply to sessions created after the
+    * builder; this covers late binding and lets tests exercise the
+    * identical builder lambdas without spawning a second
     * SparkContext). */
-  def registerInto(spark: org.apache.spark.sql.SparkSession, name: String,
-                   udf: UserDefinedFunction): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(udf.getClass.getName, name),
-      (exprs: Seq[Expression]) => UserDefinedFunctionUtils.toScalaUDF(
-        udf.asInstanceOf[SparkUserDefinedFunction].withName(name), exprs))
-
   def registerExprInto(spark: org.apache.spark.sql.SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(

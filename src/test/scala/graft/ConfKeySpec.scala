@@ -8,9 +8,7 @@ import scala.jdk.CollectionConverters._
   * a flag) from appearing without these lists changing with it. */
 class ConfKeySpec extends org.scalatest.funsuite.AnyFunSuite {
 
-  private val pinned = Set("vacuum.retainMs", "testClockMicros",
-    "dv.distributeThreshold", "dv.persistHitsBytes",
-    "dv.writeDistributeThreshold")
+  private val pinned = Set("vacuum.retainMs", "testClockMicros")
 
   private val pinnedEnv = Set("CPUS", "SF_DIR", "RUNS", "CONF", "BENCH_OUT")
 

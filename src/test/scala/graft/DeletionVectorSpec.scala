@@ -37,6 +37,29 @@ class DeletionVectorSpec extends SparkSuite {
     }
   }
 
+  test("merge and encode agree with the (a ++ b).distinct.sorted " +
+    "reference over seeded random position sets") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    import org.scalacheck.rng.Seed
+    import org.scalacheck.util.Pretty
+    // unsorted with duplicates, or sorted and distinct (a decoded
+    // vector's and a task's sorted hits' shape)
+    val positions = Gen.oneOf(
+      Gen.listOf(Gen.choose(0L, 200L)).map(_.toArray),
+      Gen.listOf(Gen.choose(0L, 1L << 40)).map(_.distinct.sorted.toArray))
+    val prop = Prop.forAllNoShrink(positions, positions) { (a, b) =>
+      val want = (a ++ b).distinct.sorted.toSeq
+      ((Dv.merge(a, b).toSeq == want) :| "merge") &&
+        ((Dv.decode(Dv.encode(a ++ b)).toSeq == want) :| "encode") &&
+        ((Dv.decodeBytes(Dv.encodeBytes(a ++ b)).toSeq == want) :| "encodeBytes")
+    }
+    val res = Test.check(Test.Parameters.default
+      .withInitialSeed(Seed(20261020L)).withMinSuccessfulTests(500)
+      .withWorkers(1), prop)
+    assert(res.passed, Pretty.pretty(res))
+  }
+
   test("a scattered-key delete writes ZERO data files: same file list, " +
     "reads equal the filter, rowCountAt subtracts, time travel reads the " +
     "pre-delete state, re-deleting the same keys is a no-op, and the " +
@@ -156,20 +179,6 @@ class DeletionVectorSpec extends SparkSuite {
       "sidecar vectors survived the rename — no resurrection")
     assert(Snapshots.deletionVectorsAt(spark, dir,
       Snapshots.latest(spark, dir).get).size === 2)
-    // the documented refusal ENFORCES before anything reaches the
-    // driver: growing one file's vector past Dv.MaxInlinePositions
-    // refuses loudly (use the copy-on-write delete at that churn)
-    val hugeDir = tmpDir("huge")
-    val huge = spark.range(0, 1100000, 1, 4).select(col("id").as("k"),
-      lit(0L).as("bucket"))
-    Snapshots.publish(huge, hugeDir, "bucket", Seq("k"))
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.deleteVectored(huge.filter(col("k") % 21 =!= 0),
-        hugeDir, "bucket", Seq("k"))
-    }
-    assert(e.getMessage.contains("copy-on-write"), e.getMessage)
-    assert(Snapshots.versions(spark, hugeDir) === Seq(1L),
-      "the refused erasure committed nothing")
     // compact materializes both vectors; the final vacuum reclaims the
     // pre-delete data files AND the now-unreferenced sidecars
     val v4 = Snapshots.compact(spark, dir, "bucket", Seq("k"))
@@ -322,40 +331,35 @@ class DeletionVectorSpec extends SparkSuite {
       "re-deleting the same keys is a no-op under the /data root too")
   }
 
-  test("DEEP sidecar debt reads DISTRIBUTED: past the distribute " +
-    "threshold the anti-join's dead side comes from the #dvf sidecar " +
-    "FILES (one task each), not a driver LocalRelation — plan-pinned; " +
-    "answers identical to the broadcast path") {
-    val key = Snapshots.DvDistributeThresholdKey
+  test("DEEP sidecar debt reads through a per-row test in the scanning " +
+    "task: no driver LocalRelation and no join for the vector in the " +
+    "plan — answers identical") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
     val dir = tmpDir("deepdebt")
     val big = spark.range(0, 30000, 1, 4).select(col("id").as("k"),
       (col("id") * 7L).as("v"), expr("id div 10000").as("bucket"))
     Snapshots.publish(big, dir, "bucket", Seq("k"))
     // 15,000 dead over 3 files — all past Dv.InlineMax: sidecars only
-    Snapshots.deleteVectored(
+    val vDel = Snapshots.deleteVectored(
       big.filter(col("k") % 2 === 0).select("k", "bucket"),
       dir, "bucket", Seq("k"))
+    val mLines = scala.io.Source.fromFile(
+      new java.io.File(f"$dir/_manifests/v$vDel%020d"), "UTF-8").getLines().toList
+    assert(mLines.count(_.startsWith("#dvf:")) === 3, "the vectors are sidecars")
     val expect = 15000L
-    // default threshold (1M): small debt — LocalRelation + broadcast
-    val viaLocal = Snapshots.read(spark, dir)
-    assert(viaLocal.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
-    }.nonEmpty, "under the threshold the pairs side is driver-local")
-    assert(viaLocal.count() === expect)
-    spark.conf.set(key, "100")
-    try {
-      val viaSidecars = Snapshots.read(spark, dir)
-      assert(viaSidecars.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
-      }.isEmpty, "past the threshold NO driver LocalRelation in the plan")
-      assert(viaSidecars.count() === expect, "identical answer")
-      assert(viaSidecars.filter(col("k") % 2 === 0).count() === 0)
-      assert(viaSidecars.agg(sum("v")).head().getLong(0) ===
-        big.filter(col("k") % 2 =!= 0).agg(sum("v")).head().getLong(0))
-      // the pruned-scan surface takes the same path
-      assert(Snapshots.prunedScanAtBy(spark, dir,
-        Snapshots.latest(spark, dir).get, "k", 100L, 300L).count() === 100L)
-    } finally spark.conf.unset(key)
+    val read = Snapshots.read(spark, dir)
+    val plan = read.queryExecution.optimizedPlan
+    assert(plan.collect { case l: LocalRelation => l }.isEmpty,
+      s"NO driver LocalRelation in the plan:\n$plan")
+    assert(plan.collect { case j: Join => j }.isEmpty,
+      s"NO join applies the vector:\n$plan")
+    assert(read.count() === expect)
+    assert(read.filter(col("k") % 2 === 0).count() === 0)
+    assert(read.agg(sum("v")).head().getLong(0) ===
+      big.filter(col("k") % 2 =!= 0).agg(sum("v")).head().getLong(0))
+    // the pruned-scan surface takes the same path
+    assert(Snapshots.prunedScanAtBy(spark, dir,
+      Snapshots.latest(spark, dir).get, "k", 100L, 300L).count() === 100L)
   }
 
   test("the LAYOUT tables' OWN deleteVectored (z-order, across a shift " +
@@ -460,11 +464,9 @@ class DeletionVectorSpec extends SparkSuite {
     assert(HashBucketedTable.read(spark, hdir).count() === 12000L - nH)
   }
 
-  test("deleteVectored scans the candidate buckets ONCE past the persist " +
-    "threshold: the hits frame is persisted across the refusal guard and " +
-    "the collect — both driver actions plan against the cache, neither " +
-    "re-scans parquet naked (recordsRead is useless here: _metadata " +
-    "columns double-count it, so the pin is on the executed plans)") {
+  test("a vectored delete scans its candidate files once, never from a " +
+    "cache: one input-reading stage, no InMemoryTableScan in any plan, " +
+    "and a pinned job count") {
     val dir = tmpDir("onescan")
     val n = 40000L
     val df = spark.range(0, n, 1, 4).select(col("id").as("k"),
@@ -479,93 +481,45 @@ class DeletionVectorSpec extends SparkSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
+    // stages that read data files (input bytes > 0); the keys come from
+    // spark.range, so only a candidate-file scan reads input
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val sl = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.inputMetrics.bytesRead > 0) scans.incrementAndGet()
+    }
+    // registered before jobsOf's own listener: when jobsOf returns, this
+    // one has seen every event of the delete
+    spark.sparkContext.addSparkListener(sl)
     spark.listenerManager.register(ql)
-    // the gate fixture is tiny — force the persist path (threshold 0)
-    // to pin the wide-erasure shape; the default-threshold small case
-    // is pinned in the next test
-    spark.conf.set(Snapshots.DvPersistHitsBytesKey, "0")
-    try {
+    val jobs = try jobsOf {
       Snapshots.deleteVectored(
         df.filter(col("k") % 997 === 0).select("k", "bucket"),
         dir, "bucket", Seq("k"))
-      // listener events are async: the call runs 3 driver actions
-      // (bucket distinct, the refusal-guard aggregate, the hits
-      // collect) — wait for all of them to report
-      val deadline = System.currentTimeMillis() + 30000
-      while (plans.size < 3 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      import scala.jdk.CollectionConverters._
-      val ps = plans.iterator().asScala.toList
-      assert(ps.size >= 3, s"expected >=3 reported actions, got ${ps.size}")
-      val naked = ps.count(p =>
-        p.contains("FileScan parquet") && !p.contains("InMemoryTableScan"))
-      assert(naked === 0,
-        s"an action re-scanned the candidate buckets outside the cache " +
-          s"($naked naked parquet scans — the guard and the collect must " +
-          "share ONE persisted read)")
-      assert(ps.count(_.contains("InMemoryTableScan")) >= 2,
-        "both the guard aggregate and the collect planned against the " +
-          "persisted hits frame")
     } finally {
       spark.listenerManager.unregister(ql)
-      spark.conf.unset(Snapshots.DvPersistHitsBytesKey)
+      spark.sparkContext.removeSparkListener(sl)
     }
+    assert(scans.get === 1, s"${scans.get} stages read the candidate files")
+    import scala.jdk.CollectionConverters._
+    assert(!plans.asScala.exists(_.contains("InMemoryTableScan")),
+      "no action plans against a cached frame")
+    // the bucket lookup, the broadcast keys and the one grow pass
+    assert(jobs <= 4, s"a vectored delete ran $jobs jobs")
     assert(Snapshots.read(spark, dir).count() === n - (n + 996) / 997)
   }
 
-  test("below the persist threshold (the default at gate scale) a " +
-    "vectored delete does NOT materialize a cache — the guard and the " +
-    "collect re-plan the scan, the cache tax disappears, answers " +
-    "identical") {
-    val dir = tmpDir("nopersist")
-    val n = 40000L
-    val df = spark.range(0, n, 1, 4).select(col("id").as("k"),
-      (col("id") * 3L).as("v"), expr("id div 10000").as("bucket"))
+  test("vectors are grown in TASKS: no Dataset-level collect of the (file, " +
+    "position) pairs ever runs, sidecars land, and every vector equals an " +
+    "independent model — the row_index of the matching rows read straight " +
+    "from each data file") {
+    val dir = tmpDir("dvdist")
+    val df = spark.range(0, 60000L, 1, 4).select(col("id").as("k"),
+      (col("id") * 3L).as("v"), expr("id div 15000").as("bucket"))
     Snapshots.publish(df, dir, "bucket", Seq("k"))
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(ql)
-    try {
-      Snapshots.deleteVectored(
-        df.filter(col("k") % 997 === 0).select("k", "bucket"),
-        dir, "bucket", Seq("k"))
-      val deadline = System.currentTimeMillis() + 30000
-      while (plans.size < 3 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      import scala.jdk.CollectionConverters._
-      val ps = plans.iterator().asScala.toList
-      assert(ps.size >= 3, s"expected >=3 reported actions, got ${ps.size}")
-      assert(ps.count(_.contains("InMemoryTableScan")) === 0,
-        "a 40k-row candidate scan is far below the default " +
-          s"${Snapshots.DvPersistHitsBytesKey} — persisting it is pure " +
-          "overhead, the actions must plan naked scans")
-    } finally spark.listenerManager.unregister(ql)
-    assert(Snapshots.read(spark, dir).count() === n - (n + 996) / 997)
-  }
-
-  test("past the write-distribute threshold the COMMIT path encodes " +
-    "vectors from TASKS: no Dataset-level collect of the (file, " +
-    "position) pairs ever runs (only the refusal-guard aggregate " +
-    "collects), sidecars land correct, and the result is bit-identical " +
-    "to the driver-side encode of the same delete") {
-    def build(tag: String): String = {
-      val d = tmpDir(s"dvdist_$tag")
-      val df = spark.range(0, 60000L, 1, 4).select(col("id").as("k"),
-        (col("id") * 3L).as("v"), expr("id div 15000").as("bucket"))
-      Snapshots.publish(df, d, "bucket", Seq("k"))
-      d
-    }
-    val dirTask = build("task")
-    val dirDriver = build("driver")
     // id % 3: 5000 positions per 15000-row file — past Dv.InlineMax,
-    // so the task-side path writes real SIDECARS, not inline lines
+    // so the tasks write real SIDECARS, not inline lines
     val keys = spark.range(0, 60000L).filter(col("id") % 3 === 0)
       .select(col("id").as("k"), expr("id div 15000").as("bucket"))
     val collects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -578,56 +532,84 @@ class DeletionVectorSpec extends SparkSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    // task-side: threshold 0 forces the distributed encode; the only
-    // Dataset collect left is the per-file guard AGGREGATE (the pair
-    // shuffle is an RDD job — no Dataset collect event fires for it)
-    spark.conf.set(Snapshots.DvWriteDistributeThresholdKey, "0")
     spark.listenerManager.register(ql)
     try {
-      Snapshots.deleteVectored(keys, dirTask, "bucket", Seq("k"))
-      val deadline = System.currentTimeMillis() + 30000
-      while (collects.size < 1 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500) // drain any late events
+      jobsOf(Snapshots.deleteVectored(keys, dir, "bucket", Seq("k")))
       import scala.jdk.CollectionConverters._
       val cs = collects.iterator().asScala.toList
-      assert(cs.nonEmpty, "the refusal guard still collects its aggregate")
       assert(cs.forall(_.contains("HashAggregate")),
-        s"every Dataset collect on the distributed path is the per-file " +
-          s"guard aggregate — a non-aggregated collect means the pairs " +
-          s"landed on the driver:\n${cs.mkString("\n----\n")}")
-    } finally {
-      spark.listenerManager.unregister(ql)
-      spark.conf.unset(Snapshots.DvWriteDistributeThresholdKey)
+        s"every Dataset collect is an aggregate — a non-aggregated collect " +
+          s"means the pairs landed on the driver:\n${cs.mkString("\n----\n")}")
+    } finally spark.listenerManager.unregister(ql)
+    val v = Snapshots.latest(spark, dir).get
+    val got = Snapshots.deletionVectorsAt(spark, dir, v)
+    val files = Snapshots.files(spark, dir, v)
+    assert(got.keySet === files.toSet, "every file was touched")
+    files.foreach { rel =>
+      val model = spark.read.parquet(s"$dir/$rel")
+        .filter(col("k") % 3 === 0)
+        .select(col("_metadata.row_index")).collect().map(_.getLong(0)).sorted
+      assert(got(rel).toSeq === model.toSeq,
+        s"positions of $rel differ from the file's own row indexes")
     }
-    // driver-side reference on the identical twin (default threshold)
-    Snapshots.deleteVectored(keys, dirDriver, "bucket", Seq("k"))
-    val vT = Snapshots.latest(spark, dirTask).get
-    val vD = Snapshots.latest(spark, dirDriver).get
-    // rel paths carry per-publish staging UUIDs — key the twins by
-    // the stable (bucket dir, part index) pair instead
-    def stableKey(rel: String): String = {
-      val m = "__bdir=(\\d+)/part-(\\d+)".r.findFirstMatchIn(rel)
-      m.map(x => s"${x.group(1)}:${x.group(2)}").getOrElse(rel)
-    }
-    val dvT = Snapshots.deletionVectorsAt(spark, dirTask, vT)
-      .map { case (r, ps) => stableKey(r) -> ps }
-    val dvD = Snapshots.deletionVectorsAt(spark, dirDriver, vD)
-      .map { case (r, ps) => stableKey(r) -> ps }
-    assert(dvT.keySet === dvD.keySet, "same touched files")
-    dvT.keys.foreach(rel =>
-      assert(dvT(rel).toSeq === dvD(rel).toSeq,
-        s"positions differ for $rel — the task-side encode must be " +
-          "bit-identical to the driver-side one"))
-    assert(Snapshots.read(spark, dirTask).collect().toSet ===
-      Snapshots.read(spark, dirDriver).collect().toSet)
-    assert(Snapshots.read(spark, dirTask).count() === 40000L)
-    // and those vectors really are sidecar-backed (task-written files)
-    val mf = new java.io.File(f"$dirTask/_manifests/v$vT%020d")
+    assert(Snapshots.read(spark, dir).count() === 40000L)
+    assert(Snapshots.read(spark, dir).filter(col("k") % 3 === 0).count() === 0)
+    val mf = new java.io.File(f"$dir/_manifests/v$v%020d")
     val mLines = scala.io.Source.fromFile(mf, "UTF-8").getLines().toList
     assert(mLines.count(_.startsWith("#dvf:")) === 4 &&
       mLines.count(_.startsWith("#dv:")) === 0,
       "5000 positions/file > InlineMax — all four lines must be #dvf " +
         "sidecars written from tasks")
+  }
+
+  test("a refused delete writes no sidecar for the over-budget file and " +
+    "commits nothing") {
+    // one 1.1M-row file (bucket 0) and one 10k-row file (bucket 1)
+    val dir = tmpDir("huge")
+    val huge = spark.range(0, 1110000, 1, 4).select(col("id").as("k"),
+      expr("if(id < 1100000, 0L, 1L)").as("bucket"))
+    val v1 = Snapshots.publish(huge, dir, "bucket", Seq("k"))
+    def sidecars: Seq[java.io.File] = Option(new java.io.File(s"$dir/dv").listFiles())
+      .map(_.toSeq.filter(_.getName.endsWith(".dvs"))).getOrElse(Nil)
+    // growing bucket 0's vector past Dv.MaxInlinePositions refuses
+    // loudly (use the copy-on-write delete at that churn); bucket 1's
+    // 5000 positions are within budget
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.deleteVectored(huge.filter(
+          col("bucket") === 0L && col("k") % 21 =!= 0 ||
+            col("bucket") === 1L && col("k") % 2 === 0),
+        dir, "bucket", Seq("k"))
+    }
+    assert(e.getMessage.contains("copy-on-write"), e.getMessage)
+    assert(Snapshots.versions(spark, dir) === Seq(v1),
+      "the refused erasure committed nothing")
+    // the within-budget file's task may have written its sidecar (an
+    // orphan for vacuum); the over-budget file's task wrote none
+    val sizes = sidecars.map(f =>
+      Dv.decodeBytes(java.nio.file.Files.readAllBytes(f.toPath)).length)
+    assert(sizes.forall(_ == 5000), s"sidecar sizes on disk: $sizes")
+    assert(Snapshots.read(spark, dir).count() === 1110000L)
+  }
+
+  test("reading more sidecar positions than the cache bound still answers " +
+    "exactly, and the cache never holds more than its bound") {
+    val dir = tmpDir("cachebound")
+    val df = spark.range(0, 1200000L, 1, 4).select(col("id").as("k"),
+      expr("id div 400000").as("bucket"))
+    Snapshots.publish(df, dir, "bucket", Seq("k"))
+    // 360k dead per file, 1.08M in all: past Dv.CachePositions
+    Snapshots.deleteVectored(df.filter(col("k") % 10 =!= 0), dir, "bucket", Seq("k"))
+    assert(Dv.cachedPositions <= Dv.CachePositions)
+    val v = Snapshots.latest(spark, dir).get
+    assert(Snapshots.deadRowsAt(spark, dir, v) === 1080000L)
+    assert(Snapshots.deadRowsAt(spark, dir, v) > Dv.CachePositions)
+    Snapshots.clearCaches()
+    assert(Snapshots.read(spark, dir).count() === 120000L)
+    assert(Snapshots.read(spark, dir).filter(col("k") % 10 =!= 0).count() === 0)
+    assert(Dv.cachedPositions <= Dv.CachePositions)
+    // every vector, resolved in turn on the driver, is still exact
+    Snapshots.deletionVectorsAt(spark, dir, v).values.foreach(ps =>
+      assert(ps.length === 360000))
+    assert(Dv.cachedPositions <= Dv.CachePositions)
   }
 }
