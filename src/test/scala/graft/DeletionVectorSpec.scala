@@ -510,6 +510,32 @@ class DeletionVectorSpec extends SparkSuite {
     assert(Snapshots.read(spark, dir).count() === n - (n + 996) / 997)
   }
 
+  test("a vectored delete leaves no cache behind and reads back the same " +
+    "rows as a rewriting delete of the same keys, while writing no data " +
+    "file") {
+    val df = spark.range(0, 40000L, 1, 4).select(col("id").as("k"),
+      (col("id") * 3L).as("v"), expr("id div 10000").as("bucket"))
+    val dirVec = tmpDir("vec_vs_cow_v")
+    val dirCow = tmpDir("vec_vs_cow_c")
+    val v1 = Snapshots.publish(df, dirVec, "bucket", Seq("k"))
+    Snapshots.publish(df, dirCow, "bucket", Seq("k"))
+    val keys = df.filter(col("k") % 997 === 0).select("k", "bucket")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val v2 = Snapshots.deleteVectored(keys, dirVec, "bucket", Seq("k"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persistedBefore,
+      "the delete persisted an RDD and left it behind")
+    assert(keys.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "the delete cached its keys")
+    assert(Snapshots.files(spark, dirVec, v2) ===
+      Snapshots.files(spark, dirVec, v1), "metadata-only: the same files")
+    Snapshots.delete(keys, dirCow, "bucket", Seq("k"), Seq("k"))
+    def sorted(dir: String) = Snapshots.read(spark, dir).select("k", "v")
+      .as[(Long, Long)].collect().sorted.toSeq
+    val got = sorted(dirVec)
+    assert(got.size === 40000 - (40000 + 996) / 997)
+    assert(got === sorted(dirCow), "vectored and rewriting deletes differ")
+  }
+
   test("vectors are grown in TASKS: no Dataset-level collect of the (file, " +
     "position) pairs ever runs, sidecars land, and every vector equals an " +
     "independent model — the row_index of the matching rows read straight " +
