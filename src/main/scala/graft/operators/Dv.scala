@@ -102,16 +102,26 @@ object Dv {
   private final class DeadRows(dir: String, vecs: Map[String, Vec],
       conf: Broadcast[SerializableConfiguration])
       extends ((String, Long) => Boolean) with Serializable {
-    @transient private var last: (String, Array[Long]) = _
+    @transient private var last: (String, Long => Boolean) = _
     def apply(file: String, pos: Long): Boolean = {
       var l = last
       if (l == null || l._1 != file) {
-        l = (file, vecs.get(file).fold(Array.emptyLongArray)(
-          positions(conf.value.value, dir, _)))
+        l = (file, deadIn(conf.value.value, dir, vecs.get(file)))
         last = l
       }
-      java.util.Arrays.binarySearch(l._2, pos) >= 0
+      l._2(pos)
     }
+  }
+
+  /** One file's test: TRUE for the row positions `v` records dead
+    * (none without a vector). The sidecar, if any, is read here, by
+    * the task that tests the file. */
+  def deadIn(conf: => Configuration, dir: String,
+             v: Option[Vec]): Long => Boolean = v match {
+    case None => _ => false
+    case Some(vec) =>
+      val ps = positions(conf, dir, vec)
+      pos => java.util.Arrays.binarySearch(ps, pos) >= 0
   }
 
   /** Grow the vectors of the files `hits` (file rel path, position)

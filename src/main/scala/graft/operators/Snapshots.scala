@@ -898,6 +898,11 @@ object Snapshots {
     (ex, up)
   }
 
+  /** Serializes the [[stage]] `outputTimestampType` set/restore window
+    * (see there) — staging writes to DIFFERENT tables still overlap
+    * in every phase except the parquet write itself. */
+  private val stageTsLock = new Object
+
   /** Stage one bucket-partitioned, key-sorted load under a fresh
     * token dir and return the staged files relative to `dir`, plus
     * the meta (schema json + per-file key stats) for the commit.
@@ -910,11 +915,6 @@ object Snapshots {
     * wrote (cost ∝ this commit's churn, incremental by
     * construction); non-INT64 sort keys simply record no stats and
     * [[versionStats]] falls back to the verification walk. */
-  /** Serializes the [[stage]] `outputTimestampType` set/restore window
-    * (see there) — staging writes to DIFFERENT tables still overlap
-    * in every phase except the parquet write itself. */
-  private val stageTsLock = new Object
-
   private[operators] def stage(df: DataFrame, dir: String, bucketCol: String,
                     sortCols: Seq[String], blockSize: Long,
                     numTasks: Int, stat2Cols: Seq[String] = Nil,
@@ -1324,35 +1324,6 @@ object Snapshots {
     commitReplacing(spark, dir, pm, prev, Nil, st, schema)
   }
 
-  /** Read a set of manifest-relative files. With a recorded schema
-    * (format 2) this is ONE relation over a MANIFEST-BACKED
-    * [[org.apache.spark.sql.graftext.ManifestFileIndex]] (the public
-    * Delta-Lake shape: the log's file list + recorded `#fsize` byte
-    * lengths become the FileIndex inside a HadoopFsRelation):
-    *  - plan size flat in commit count, no partition discovery (the
-    *    bucket is a data column), files that predate a column
-    *    null-fill natively (additive evolution);
-    *  - ZERO filesystem calls at planning — the stock path's
-    *    InMemoryFileIndex `getFileStatus`es every file per query, a
-    *    million metadata ops at a million files (`sizes` misses fall
-    *    back to one stat each — legacy manifests only);
-    *  - the relation reports the manifest byte sum as `sizeInBytes`,
-    *    so Spark's OWN optimizer sees real table statistics: a plain
-    *    `read(fact).join(smallDim)` broadcasts under the session's
-    *    `autoBroadcastJoinThreshold` (× its documented
-    *    `fileCompressionFactor`) with no JoinPlanner call;
-    *  - `pruner` (when a manifest's typed stats back it) drops whole
-    *    files at PLANNING time from pushed-down range predicates —
-    *    data skipping on every plain `.filter`, not just the explicit
-    *    prunedScan APIs.
-    * Everything downstream is the stock V1 parquet path (vectorized
-    * reader, pushdown, codegen). `colMap` (physical → logical,
-    * format 2.1) handles RENAMED columns: the relation reads under
-    * the files' PHYSICAL names and ONE projection restores the
-    * logical surface — still a single scan. Without a recorded schema
-    * (legacy manifests written via raw [[commit]]), falls back to the
-    * per-token basePath union that recovers directory-partition
-    * columns. */
   /** A file-pruning hook for [[readFiles]]: pushed-down data filters
     * in, `Some(surviving manifest-relative files)` out (None = no
     * claim, read everything). [[statsPruner]] builds one from a
@@ -1382,6 +1353,35 @@ object Snapshots {
   private[operators] val FileCol = "__gfile"
   private[operators] val PosCol = "__gpos"
 
+  /** Read a set of manifest-relative files. With a recorded schema
+    * (format 2) this is ONE relation over a MANIFEST-BACKED
+    * [[org.apache.spark.sql.graftext.ManifestFileIndex]] (the public
+    * Delta-Lake shape: the log's file list + recorded `#fsize` byte
+    * lengths become the FileIndex inside a HadoopFsRelation):
+    *  - plan size flat in commit count, no partition discovery (the
+    *    bucket is a data column), files that predate a column
+    *    null-fill natively (additive evolution);
+    *  - ZERO filesystem calls at planning — the stock path's
+    *    InMemoryFileIndex `getFileStatus`es every file per query, a
+    *    million metadata ops at a million files (`sizes` misses fall
+    *    back to one stat each — legacy manifests only);
+    *  - the relation reports the manifest byte sum as `sizeInBytes`,
+    *    so Spark's OWN optimizer sees real table statistics: a plain
+    *    `read(fact).join(smallDim)` broadcasts under the session's
+    *    `autoBroadcastJoinThreshold` (× its documented
+    *    `fileCompressionFactor`) with no JoinPlanner call;
+    *  - `pruner` (when a manifest's typed stats back it) drops whole
+    *    files at PLANNING time from pushed-down range predicates —
+    *    data skipping on every plain `.filter`, not just the explicit
+    *    prunedScan APIs.
+    * Everything downstream is the stock V1 parquet path (vectorized
+    * reader, pushdown, codegen). `colMap` (physical → logical,
+    * format 2.1) handles RENAMED columns: the relation reads under
+    * the files' PHYSICAL names and ONE projection restores the
+    * logical surface — still a single scan. Without a recorded schema
+    * (legacy manifests written via raw [[commit]]), falls back to the
+    * per-token basePath union that recovers directory-partition
+    * columns. */
   private[operators] def readFiles(spark: SparkSession, dir: String,
                         rels: Seq[String],
                         schema: Option[StructType],
@@ -2256,7 +2256,7 @@ object Snapshots {
     * rows present in `vNew` but not `vOld`, 'delete' for the
     * reverse, EXACT MULTISET semantics (a replaced row appears as
     * one delete + one insert; duplicates count). Reads ONLY the
-    * files the two manifests do NOT share — file sharing makes the
+    * step's [[changeSet]] — file sharing makes the
     * carried-over bulk cancel at the metadata level, so a diff
     * across a merge reads just the rewritten buckets, and a diff
     * across a COMPACTION is provably empty (same rows, different
@@ -2265,19 +2265,8 @@ object Snapshots {
   def diff(spark: SparkSession, dir: String, vOld: Long, vNew: Long): DataFrame = {
     val mOld = committedManifest(spark, dir, vOld)
     val mNew = committedManifest(spark, dir, vNew)
-    val fo = mOld.files.toSet
-    val fn = mNew.files.toSet
-    val onlyOld = (fo -- fn).toSeq.sorted
-    val onlyNew = (fn -- fo).toSeq.sorted
-    // DELETION VECTORS: each side reads under ITS OWN version's
-    // vectors (a row dead at vOld must not re-delete; a row dead at
-    // vNew must not re-insert), and a SHARED file whose vector GREW
-    // contributes its newly-dead rows — deletes the file sets alone
-    // cannot see, because a DV commit changes no files at all
-    val (dvOld, dvNew) = (mOld.dvs, mNew.dvs)
-    def dead(m: Map[String, Dv.Vec], rel: String) = m.get(rel).fold(0L)(_.count)
-    val grown = (fo & fn).toSeq.filter(r => dead(dvNew, r) > dead(dvOld, r)).sorted
-    val sizes = mOld.fileSizes ++ mNew.fileSizes
+    val ChangeSet(onlyNew, onlyOld, grown, dvOld, dvNew, sizes) =
+      changeSet(mOld, mNew)
     // both sides read under vNew's schema AND column names: columns
     // the old files predate null-fill natively (additive evolution);
     // renamed columns resolve by PHYSICAL name on both sides
@@ -2313,6 +2302,31 @@ object Snapshots {
        else lit(null)).cast(newSide.schema(c).dataType).as(c)): _*)
     newSide.exceptAll(oldAligned).withColumn("_change", lit("insert"))
       .unionByName(oldAligned.exceptAll(newSide).withColumn("_change", lit("delete")))
+  }
+
+  /** What changed between two manifests, file by file: the files only
+    * the new one lists (`inserted`), the files only the old one lists
+    * (`removed`), and the shared files whose deletion vector GREW — a
+    * vectored delete changes no files, so only the vectors show its
+    * deletes — each side with its own vectors, and the recorded file
+    * sizes of both. Sorted by path. The rows a change reads: an
+    * inserted file's rows live at the new version, a removed file's
+    * rows live at the old one, a grown file's rows dead at the new
+    * version and live at the old one. */
+  private[graft] final case class ChangeSet(inserted: Seq[String],
+      removed: Seq[String], grown: Seq[String],
+      dvOld: Map[String, Dv.Vec], dvNew: Map[String, Dv.Vec],
+      sizes: Map[String, Long])
+
+  /** [[ChangeSet]] of the step `mOld` → `mNew`, from the manifests
+    * alone (the vectors' line-carried counts; no sidecar is read). */
+  private[graft] def changeSet(mOld: Manifest, mNew: Manifest): ChangeSet = {
+    val (fo, fn) = (mOld.files.toSet, mNew.files.toSet)
+    val (dvOld, dvNew) = (mOld.dvs, mNew.dvs)
+    def dead(m: Map[String, Dv.Vec], rel: String) = m.get(rel).fold(0L)(_.count)
+    ChangeSet((fn -- fo).toSeq.sorted, (fo -- fn).toSeq.sorted,
+      (fo & fn).toSeq.filter(r => dead(dvNew, r) > dead(dvOld, r)).sorted,
+      dvOld, dvNew, mOld.fileSizes ++ mNew.fileSizes)
   }
 
   /** Per-file key stats for version `v` — read from the MANIFEST
@@ -2568,25 +2582,12 @@ object Snapshots {
     Ndv.merge(have.map(recorded) ++ extra)
   }
 
-  /** The data-file rel path of one dv/dvf carry line (the LAST field
-    * either way) — what kept-file carry filters match on. */
   /** The manifest-relative path of a PER-FILE meta line (any of
     * [[FileFamilies]]) — the path is always the LAST field and never
     * contains ':' (the line grammar), so one extractor covers every
     * family. */
   private[operators] def lineRel(line: String): String =
     line.substring(line.lastIndexOf(':') + 1)
-
-  /** Resolve a manifest's FULL deletion vectors, sidecars decoded —
-    * the inspection surface ([[deletionVectorsAt]]) and the change
-    * feed's replay. Reads apply vectors per task instead
-    * ([[readFiles]]), and the planning surfaces ([[rowCountAt]]) use
-    * the line-carried counts. */
-  private[graft] def resolveDv(spark: SparkSession, dir: String,
-                               m: Manifest): Map[String, Array[Long]] =
-    m.dvs.map { case (rel, v) =>
-      rel -> Dv.positions(spark.sparkContext.hadoopConfiguration, dir, v)
-    }
 
   /** The version's DEAD-row count, manifest-only: inline vector
     * lengths plus the sidecar lines' carried counts — never opens a
@@ -2607,7 +2608,9 @@ object Snapshots {
     * the reclaimer). */
   def deletionVectorsAt(spark: SparkSession, dir: String,
                         v: Long): Map[String, Array[Long]] =
-    resolveDv(spark, dir, committedManifest(spark, dir, v))
+    committedManifest(spark, dir, v).dvs.map { case (rel, dv) =>
+      rel -> Dv.positions(spark.sparkContext.hadoopConfiguration, dir, dv)
+    }
 
   /** Drop every version below `keepFrom` and delete the data files
     * no kept version references. Returns (manifests dropped, data

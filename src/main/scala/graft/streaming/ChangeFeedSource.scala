@@ -1,19 +1,23 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.operators.Snapshots
+import graft.operators.{Dv, Snapshots}
 
 /** The CDC CONSUMER half of the snapshot table's streaming story —
   * the complement of [[graft.operators.Snapshots.mergeBatch]]'s
@@ -26,11 +30,14 @@ import graft.operators.Snapshots
   * Offsets ARE versions: `latestOffset` is one manifest-directory
   * listing, and planning a batch for versions (a, b] reads ONLY
   * manifests — for each step v-1 → v the input partitions are the
-  * files the two manifests do NOT share, each tagged `insert` (only
-  * in v) or `delete` (only in v-1) with its `_version`. File sharing
-  * cancels the carried-over bulk at the METADATA level, so a batch's
-  * I/O is ∝ the churn between its versions, never table size, and a
-  * compaction contributes only its rewritten buckets.
+  * step's [[graft.operators.Snapshots.ChangeSet]] (the rule
+  * [[graft.operators.Snapshots.diff]] reads by): the files only v
+  * lists tagged `insert`, the files only v-1 lists and the shared
+  * files whose deletion vector grew tagged `delete`, each with its
+  * `_version`. File sharing cancels the carried-over bulk at the
+  * METADATA level, so a batch's I/O is ∝ the churn between its
+  * versions, never table size, and a compaction contributes only its
+  * rewritten buckets.
   *
   * Semantics contract — FILE-level changelog: a row that was
   * rewritten byte-identically into a new file (a compaction, or the
@@ -43,12 +50,12 @@ import graft.operators.Snapshots
   * changes (the spec reconciles `net(drained) == diff` bit-for-bit
   * per version; net-of-a-compaction is provably empty).
   *
-  * Scale shape: executors read whole parquet files (the same
-  * row-group streams any scan reads) with no shuffle at all — the
-  * shuffle, if any, belongs to the consumer's fold. The reader
-  * handles flat scalar schemas (the snapshot-table write shape) and
-  * fails loudly outside them; files that predate a column (additive
-  * evolution) null-fill it by NAME, matching the batch read path.
+  * Scale shape: each executor task reads one whole parquet file
+  * through Spark's own parquet reader — the one the batch path scans
+  * with, so files that predate a column (additive evolution)
+  * null-fill it by NAME and narrow files widen exactly as
+  * [[graft.operators.Snapshots.readAt]] does — with no shuffle at
+  * all; the shuffle, if any, belongs to the consumer's fold.
   *
   * Vacuum interplay: streaming from `startVersion` requires every
   * manifest in (startVersion, latest] to still exist — a vacuumed
@@ -184,103 +191,104 @@ private[streaming] class ChangeFeedTable(dir: String, startVersion: Long,
 }
 
 /** Offset = committed table version (json is just the number). */
-private[streaming] case class ChangeFeedOffset(v: Long) extends Offset {
+private[graft] case class ChangeFeedOffset(v: Long) extends Offset {
   override def json(): String = v.toString
 }
 
-/** One input partition: a whole data file, tagged with the change
-  * kind and the version whose commit added/removed it. DELETION
-  * VECTORS ride as row-position filters: `skipPos` rows are excluded
-  * (they were already dead on this side's version — an insert-side
-  * file's own vector, or a delete-side file's PRE-existing vector);
-  * a non-empty `onlyPos` inverts the mode and emits EXACTLY those
-  * rows — the newly-dead rows of a shared file whose vector grew (a
-  * DV commit changes no files, so the file diff alone cannot see
-  * those deletes). Positions are within-file row indices, the same
-  * order this reader's sequential scan walks. */
-private[streaming] case class ChangeFilePartition(
-    absPath: String, change: String, version: Long,
-    skipPos: Array[Long] = Array.empty,
-    onlyPos: Array[Long] = Array.empty) extends InputPartition
+/** One input partition: a whole data file (manifest-relative), tagged
+  * with the change kind and the version whose step it belongs to, and
+  * the deletion vectors that pick its rows under
+  * [[graft.operators.Snapshots.ChangeSet]]'s rule: a row emits when
+  * `liveUnder` does not record it dead and, if `deadUnder` is set,
+  * that one does (the newly-dead rows of a shared file whose vector
+  * grew). Vectors ride as manifest descriptors; an executor resolves
+  * a sidecar when it reads the file. */
+private[graft] case class ChangeFilePartition(
+    rel: String, change: String, version: Long,
+    liveUnder: Option[Dv.Vec], deadUnder: Option[Dv.Vec] = None)
+    extends InputPartition
 
-private[streaming] class ChangeFeedStream(dir: String, startVersion: Long,
-                                          maxVersionsPerBatch: Long,
-                                          maxBytesPerBatch: Long,
-                                          fullSchema: StructType,
-                                          appendOnly: Boolean = false)
-    extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+private[graft] class ChangeFeedStream(dir: String, startVersion: Long,
+                                      maxVersionsPerBatch: Long,
+                                      maxBytesPerBatch: Long,
+                                      fullSchema: StructType,
+                                      appendOnly: Boolean = false)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private def spark = SparkSession.active
 
+  private def head: Long = Snapshots.latest(spark, dir).getOrElse(startVersion)
+
+  /** The head an AvailableNow run paces up to, pinned as it starts. */
+  @volatile private var availableNowEnd: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(head)
+
   override def initialOffset(): Offset = ChangeFeedOffset(startVersion)
 
-  override def latestOffset(): Offset =
-    ChangeFeedOffset(Snapshots.latest(spark, dir).getOrElse(startVersion))
+  override def latestOffset(): Offset = ChangeFeedOffset(head)
+
+  /** The change set of the step INTO committed version `v`. Its
+    * predecessor is the last COMMITTED version below it (aborted
+    * transactions' tombstones carry no state); without one the step
+    * is genesis, all inserts — valid only while history still starts
+    * at v1, else older state was vacuumed away and a full insert
+    * would double it. */
+  private def stepInto(v: Long, committed: Seq[Long],
+                       raw: Seq[Long]): Snapshots.ChangeSet = {
+    val old = committed.takeWhile(_ < v).lastOption match {
+      case Some(p) => Snapshots.manifest(spark, dir, p)
+      case None =>
+        require(raw.headOption.contains(1L),
+          s"changefeed: no committed predecessor of version $v and the " +
+            s"manifest history of $dir no longer starts at v1 (vacuumed) " +
+            "— cannot establish a change baseline")
+        Snapshots.Manifest(Nil, Nil)
+    }
+    Snapshots.changeSet(old, Snapshots.manifest(spark, dir, v))
+  }
+
+  /** Manifest-only byte cost of a step: the recorded `#fsize` sum of
+    * the files it reads — its change set's inserted, removed and
+    * grown files. Files without a recorded size count 0, so legacy
+    * tables degrade toward version pacing rather than stalling. */
+  private def stepBytes(cs: Snapshots.ChangeSet): Long =
+    (cs.inserted ++ cs.removed ++ cs.grown).map(cs.sizes.getOrElse(_, 0L)).sum
 
   /** ADMISSION CONTROL: with `maxVersionsPerBatch` set, a restart
     * facing a long committed-version backlog paces it across that
     * many versions per microbatch — bounded catch-up batches instead
     * of one giant one (the Delta `maxFilesPerTrigger` discipline,
-    * in version units because versions are this source's offsets). */
-  /** Manifest-only byte cost of the step INTO committed version `v`
-    * (the symmetric difference's recorded `#fsize` sum — insert-side
-    * sizes from v's manifest, delete-side from its predecessor's;
-    * files without a recorded size count 0, so legacy tables degrade
-    * toward version pacing rather than stalling). */
-  private def stepBytes(v: Long, prevCommitted: Option[Long]): Long = {
-    val mNew = Snapshots.manifest(spark, dir, v)
-    val fNew = mNew.files.toSet
-    val (fOld, oldSizes) = prevCommitted match {
-      case Some(p) =>
-        val mp = Snapshots.manifest(spark, dir, p)
-        (mp.files.toSet, mp.fileSizes)
-      case None => (Set.empty[String], Map.empty[String, Long])
-    }
-    val newSizes = mNew.fileSizes
-    // a shared file whose deletion vector grew is read too (to emit
-    // the newly-dead rows) — admission control prices it like churn
-    def deadCounts(m: graft.operators.Snapshots.Manifest): Map[String, Long] =
-      m.dvs.map { case (r, d) => r -> d.count }
-    val dvOldC = prevCommitted.map(p =>
-      deadCounts(Snapshots.manifest(spark, dir, p))).getOrElse(Map.empty)
-    val dvNewC = deadCounts(mNew)
-    val grown = (fNew & fOld).iterator.filter { r =>
-      dvNewC.getOrElse(r, 0L) > dvOldC.getOrElse(r, 0L)
-    }
-    (fNew -- fOld).iterator.map(newSizes.getOrElse(_, 0L)).sum +
-      (fOld -- fNew).iterator.map(oldSizes.getOrElse(_, 0L)).sum +
-      grown.map(newSizes.getOrElse(_, 0L)).sum
-  }
-
-  override def latestOffset(
-      start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
+    * in version units because versions are this source's offsets).
+    * `maxBytesPerBatch` paces by [[stepBytes]] the same way; an
+    * AvailableNow run paces up to the head pinned at its start. */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val a = start.asInstanceOf[ChangeFeedOffset].v
-    val end = Snapshots.latest(spark, dir).getOrElse(startVersion)
+    val end = availableNowEnd.getOrElse(head)
     if (maxVersionsPerBatch <= 0 && maxBytesPerBatch <= 0)
       ChangeFeedOffset(end)
     else {
       // pace in COMMITTED versions (tombstones carry no data and
       // should not consume batch budget); the version cap and the
       // byte cap compose — the stricter one stops admission
+      val raw = Snapshots.rawVersions(spark, dir)
       val committed = Snapshots.versions(spark, dir)
-      val window = committed.filter(v => v > a && v <= end)
-      var prev = committed.filter(_ <= a).lastOption
       var admitted = 0L
       var bytes = 0L
       var last = a
       var open = true
-      window.foreach { v =>
+      committed.filter(v => v > a && v <= end).foreach { v =>
         if (open) {
-          val cost = if (maxBytesPerBatch > 0) stepBytes(v, prev) else 0L
+          val cost =
+            if (maxBytesPerBatch > 0) stepBytes(stepInto(v, committed, raw)) else 0L
           val countOk = maxVersionsPerBatch <= 0 ||
             admitted < maxVersionsPerBatch
           // soft byte cap: the FIRST version always admits
           val bytesOk = maxBytesPerBatch <= 0 || admitted == 0 ||
             bytes + cost <= maxBytesPerBatch
           if (countOk && bytesOk) {
-            admitted += 1; bytes += cost; last = v; prev = Some(v)
+            admitted += 1; bytes += cost; last = v
           } else open = false
         }
       }
@@ -288,9 +296,7 @@ private[streaming] class ChangeFeedStream(dir: String, startVersion: Long,
     }
   }
 
-  override def getDefaultReadLimit
-      : org.apache.spark.sql.connector.read.streaming.ReadLimit =
-    org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def deserializeOffset(json: String): Offset =
     ChangeFeedOffset(json.toLong)
@@ -309,48 +315,16 @@ private[streaming] class ChangeFeedStream(dir: String, startVersion: Long,
           "cannot replay a gap; start the stream at or above the vacuum horizon"))
     val committed = Snapshots.versions(spark, dir)
     committed.filter(v => v > a && v <= b).flatMap { v =>
-      val mNew = Snapshots.manifest(spark, dir, v)
-      val fNew = mNew.files.toSet
-      val dvNew = Snapshots.resolveDv(spark, dir, mNew)
-      // aborted-transaction tombstones carry no state: a step's
-      // predecessor is the last COMMITTED version below it
-      val (fOld, dvOld) = committed.filter(_ < v).lastOption match {
-        case Some(p) =>
-          val mp = Snapshots.manifest(spark, dir, p)
-          (mp.files.toSet, Snapshots.resolveDv(spark, dir, mp))
-        case None =>
-          // genesis (all inserts) is only valid when history is
-          // complete back to version 1 — otherwise older committed
-          // state was vacuumed away and a full-insert would double it
-          require(raw.headOption.contains(1L),
-            s"changefeed: no committed predecessor of version $v and the " +
-              s"manifest history of $dir no longer starts at v1 (vacuumed) " +
-              "— cannot establish a change baseline")
-          (Set.empty[String], Map.empty[String, Array[Long]])
-      }
-      // DELETION VECTORS: a shared file whose vector GREW this step
-      // contributes its newly-dead rows as deletes (the file sets
-      // cannot see a metadata-only DV commit); each side's own files
-      // read under that side's vector so already-dead rows never
-      // re-emit
-      val grownDeletes = (fNew & fOld).toSeq.sorted.flatMap { r =>
-        val od = dvOld.getOrElse(r, Array.empty[Long])
-        val odSet = od.toSet
-        val nd = dvNew.getOrElse(r, Array.empty[Long]).filterNot(odSet)
-        if (nd.isEmpty) None
-        else Some(ChangeFilePartition(s"$dir/$r", "delete", v,
-          onlyPos = nd.sorted))
-      }
-      val inserts = (fNew -- fOld).toSeq.sorted.map(r =>
-        ChangeFilePartition(s"$dir/$r", "insert", v,
-          skipPos = dvNew.getOrElse(r, Array.empty[Long])))
+      val cs = stepInto(v, committed, raw)
+      val inserts = cs.inserted.map(r =>
+        ChangeFilePartition(r, "insert", v, cs.dvNew.get(r)))
       if (appendOnly) {
         // the append-only tail contract: a version that REMOVED data
         // (a rewrite, a delete, a grown deletion vector) refuses
         // loudly — silently dropping the deletes would desynchronize
         // every downstream consumer (the public Delta streaming rule:
         // fail on non-append changes; stream the change feed for CDC)
-        require((fOld -- fNew).isEmpty && grownDeletes.isEmpty,
+        require(cs.removed.isEmpty && cs.grown.isEmpty,
           s"streaming $dir as an append-only source hit a NON-APPEND " +
             s"change at version $v (files rewritten/removed or deletion " +
             "vectors grown) — stream the CHANGE FEED instead " +
@@ -359,288 +333,87 @@ private[streaming] class ChangeFeedStream(dir: String, startVersion: Long,
         inserts
       } else
         inserts ++
-          (fOld -- fNew).toSeq.sorted.map(r =>
-            ChangeFilePartition(s"$dir/$r", "delete", v,
-              skipPos = dvOld.getOrElse(r, Array.empty[Long]))) ++
-          grownDeletes
+          cs.removed.map(r => ChangeFilePartition(r, "delete", v, cs.dvOld.get(r))) ++
+          cs.grown.map(r =>
+            ChangeFilePartition(r, "delete", v, cs.dvOld.get(r), cs.dvNew.get(r)))
     }.toArray
   }
 
+  /** RENAMED columns (format 2.1): files store PHYSICAL names, the
+    * feed surfaces the latest LOGICAL names — physical names are
+    * immutable, so the latest manifest's map covers every replayed
+    * version's files. */
   override def createReaderFactory(): PartitionReaderFactory = {
-    // RENAMED columns (format 2.1): files store PHYSICAL names, the
-    // feed surfaces the latest LOGICAL names — resolve the mapping
-    // once from the latest manifest and ship it to the executors
-    // (physical names are immutable, so one map covers every replayed
-    // version's files)
     val toPhys = Snapshots.latest(spark, dir)
       .map(v => Snapshots.manifest(spark, dir, v).toPhysical)
       .getOrElse(Map.empty[String, String])
-    val dataFields =
-      if (appendOnly) fullSchema.fields else fullSchema.fields.dropRight(2)
-    val physNames = dataFields.map(f => toPhys.getOrElse(f.name, f.name))
-    new ChangeFeedReaderFactory(fullSchema.json, physNames,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
-      emitMeta = !appendOnly)
+    val (data, meta) = fullSchema.fields.splitAt(
+      if (appendOnly) fullSchema.length else fullSchema.length - 2)
+    ChangeFeedReaderFactory(spark, dir, StructType(data.map(f =>
+      f.copy(name = toPhys.getOrElse(f.name, f.name)))), StructType(meta))
   }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[streaming] class ChangeFeedReaderFactory(
-    schemaJson: String, physNames: Array[String],
-    conf: SerializableConfiguration, emitMeta: Boolean = true)
+private[graft] object ChangeFeedReaderFactory {
+  /** The factory over Spark's own parquet reader function — the format
+    * class the batch path scans with, so widening and by-name
+    * null-filling match [[Snapshots.readAt]] — built once, on the
+    * driver, for the `physical` columns, in row mode. A non-empty
+    * `meta` (CDC mode: `_change`, `_version`) rides as each file's
+    * constant partition values, appended by the reader itself. */
+  def apply(spark: SparkSession, dir: String, physical: StructType,
+            meta: StructType): ChangeFeedReaderFactory = {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, physical, meta, physical, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(hadoopConf))
+    new ChangeFeedReaderFactory(dir, read,
+      new SerializableConfiguration(hadoopConf), emitMeta = meta.nonEmpty)
+  }
+}
+
+/** Reads one [[ChangeFilePartition]]: the whole file as one split, in
+  * file order, so a row counter is the row's position for the
+  * deletion-vector test ([[Dv.deadIn]], the batch scan's per-file
+  * test). CDC mode gets `_change`/`_version` as the file's partition
+  * values; the append-only tail emits the table row as read. */
+private[graft] class ChangeFeedReaderFactory(dir: String,
+    read: PartitionedFile => Iterator[InternalRow],
+    conf: SerializableConfiguration, emitMeta: Boolean)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val cp = p.asInstanceOf[ChangeFilePartition]
-    new ChangeFileReader(cp,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType], physNames,
-      conf.value, emitMeta)
-  }
-}
-
-/** Executor-side whole-file parquet reader producing the feed's rows
-  * (data columns by NAME, then `_change`, `_version`). Built on the
-  * public parquet-mr record API — no SparkSession exists on the
-  * executor. Values materialize STRAIGHT into Catalyst slots through
-  * [[RowArrayReadSupport]] (guide §4: the CDC scan's per-row decode
-  * previously built one example-API SimpleGroup plus per-field boxes
-  * per row — pure allocation the drain's GC then paid for; q179's
-  * whole-history replay measured ~1 s of GC per bench round on it).
-  * Flat scalar schemas only (the snapshot-table write shape);
-  * columns the file predates null-fill. */
-private[streaming] class ChangeFileReader(
-    part: ChangeFilePartition, fullSchema: StructType,
-    physNames: Array[String],
-    conf: org.apache.hadoop.conf.Configuration,
-    emitMeta: Boolean = true)
-    extends PartitionReader[InternalRow] {
-
-  // CDC mode carries _change/_version as the LAST two fields; the
-  // append-only tail emits the table schema verbatim
-  private val dataFields =
-    if (emitMeta) fullSchema.fields.dropRight(2) else fullSchema.fields
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new RowArrayReadSupport(physNames,
-        dataFields.map(_.dataType),
-        dataFields.length + (if (emitMeta) 2 else 0), part.absPath),
-      new org.apache.hadoop.fs.Path(part.absPath))
-    .withConf(conf)
-    .build()
-  private val changeTag = UTF8String.fromString(part.change)
-  private var row: InternalRow = _
-  // deletion-vector position filters: sequential scan + sorted-array
-  // pointers, O(1) per row (positions are within-file row indices in
-  // exactly this reader's walk order)
-  private val onlyMode = part.onlyPos.nonEmpty
-  private var onlyIdx = 0
-  private var skipIdx = 0
-  private var pos = -1L
-
-  override def next(): Boolean = {
-    while (true) {
-      if (onlyMode && onlyIdx >= part.onlyPos.length) {
-        row = null; return false // emitted every selected row: done
+    val part = p.asInstanceOf[ChangeFilePartition]
+    val path = new Path(s"$dir/${part.rel}")
+    val len = path.getFileSystem(conf.value).getFileStatus(path).getLen
+    val meta =
+      if (emitMeta) InternalRow(UTF8String.fromString(part.change), part.version)
+      else InternalRow.empty
+    val rows = read(PartitionedFile(meta, SparkPath.fromPath(path), 0L, len,
+      fileSize = len))
+    val deadBefore = Dv.deadIn(conf.value, dir, part.liveUnder)
+    val deadAfter: Long => Boolean =
+      if (part.deadUnder.isEmpty) _ => true
+      else Dv.deadIn(conf.value, dir, part.deadUnder)
+    new PartitionReader[InternalRow] {
+      private var pos = -1L
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (rows.hasNext) {
+          row = rows.next()
+          pos += 1
+          if (!deadBefore(pos) && deadAfter(pos)) return true
+        }
+        false
       }
-      val vals = reader.read()
-      if (vals == null) { row = null; return false }
-      pos += 1
-      if (onlyMode) {
-        if (pos == part.onlyPos(onlyIdx)) {
-          onlyIdx += 1; row = toRow(vals); return true
-        } // else: not a newly-dead row of this step — skip
-      } else if (skipIdx < part.skipPos.length && pos == part.skipPos(skipIdx)) {
-        skipIdx += 1 // dead on this side's version: never emits
-      } else {
-        row = toRow(vals); return true
+      override def get(): InternalRow = row
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
       }
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
-
-  /** The materialized slot array is already output-shaped (one fresh
-    * array per record); CDC mode stamps the trailing meta slots. */
-  private def toRow(vals: Array[Any]): InternalRow = {
-    if (emitMeta) {
-      vals(dataFields.length) = changeTag
-      vals(dataFields.length + 1) = part.version
-    }
-    new GenericInternalRow(vals)
-  }
-}
-
-/** parquet-mr → Catalyst WITHOUT the example Group API: a
-  * [[org.apache.parquet.hadoop.api.ReadSupport]] whose converters
-  * write each primitive straight into a slot array (one fresh
-  * output-shaped array per record, no intermediate Group, no
-  * per-field box churn). The projection keeps only the requested
-  * PHYSICAL fields the file actually has — fields the file predates
-  * stay null (additive evolution), and each present field widens
-  * from the FILE's stored primitive to the requested Catalyst type
-  * (int32→long, float→double, int32→double — the lossless promotions
-  * [[graft.operators.Snapshots]] permits and Spark's own parquet
-  * reader performs on the batch path; any other pairing refuses
-  * loudly). Flat scalar schemas only. */
-private[graft] class RowArrayReadSupport(
-    physNames: Array[String], dataTypes: Array[DataType],
-    rowWidth: Int, where: String)
-    extends org.apache.parquet.hadoop.api.ReadSupport[Array[Any]] {
-  import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-  import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-  import org.apache.parquet.schema.MessageType
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  override def init(ctx: InitContext): ReadSupport.ReadContext = {
-    val file = ctx.getFileSchema
-    val kept = physNames.filter(file.containsField)
-    // a file containing NONE of the requested physical names (every
-    // requested field predates it) must still drive one null-filled
-    // output row per stored row — keep ONE file column as the row
-    // pacemaker rather than relying on parquet-mr's empty-projection
-    // path (some versions reject it, and its EmptyRecordReader never
-    // calls the root converter's start()); its values discard. It
-    // must be a PRIMITIVE column: prepareForRead hands the pacemaker
-    // a PrimitiveConverter, which a group column cannot take
-    val fields =
-      if (kept.nonEmpty) kept.map(n => file.getType(file.getFieldIndex(n)))
-      else Array((0 until file.getFieldCount).map(file.getType(_))
-        .find(_.isPrimitive).getOrElse(throw new UnsupportedOperationException(
-          s"no primitive column to pace null-filled rows by in $where")))
-    new ReadSupport.ReadContext(new MessageType(file.getName, fields: _*))
-  }
-
-  private def slotConverter(prim: PrimitiveTypeName, dt: DataType,
-                            slots: Array[Any], out: Int): PrimitiveConverter = {
-    def refuse(): Nothing = throw new UnsupportedOperationException(
-      s"column type ${dt.simpleString} cannot be read " +
-        s"from a $prim-typed file column in $where")
-    dt match {
-      case LongType | TimestampType | TimestampNTZType => prim match {
-        case INT64 => new PrimitiveConverter {
-          override def addLong(v: Long): Unit = slots(out) = v
-        }
-        case INT32 => new PrimitiveConverter { // pre-widening file
-          override def addInt(v: Int): Unit = slots(out) = v.toLong
-        }
-        case _ => refuse()
-      }
-      case IntegerType | DateType => prim match {
-        case INT32 => new PrimitiveConverter {
-          override def addInt(v: Int): Unit = slots(out) = v
-        }
-        case _ => refuse()
-      }
-      case DoubleType => prim match {
-        case DOUBLE => new PrimitiveConverter {
-          override def addDouble(v: Double): Unit = slots(out) = v
-        }
-        case FLOAT => new PrimitiveConverter { // pre-widening file
-          override def addFloat(v: Float): Unit = slots(out) = v.toDouble
-        }
-        case INT32 => new PrimitiveConverter { // int→double widening
-          override def addInt(v: Int): Unit = slots(out) = v.toDouble
-        }
-        case _ => refuse()
-      }
-      case FloatType => prim match {
-        case FLOAT => new PrimitiveConverter {
-          override def addFloat(v: Float): Unit = slots(out) = v
-        }
-        case _ => refuse()
-      }
-      // boolean/string/binary dispatch on the FILE's primitive like
-      // every numeric case: a contract-violating file refuses with
-      // the path-bearing diagnostic instead of parquet-mr's bare
-      // UnsupportedOperationException from the default add* methods
-      case BooleanType => prim match {
-        case BOOLEAN => new PrimitiveConverter {
-          override def addBoolean(v: Boolean): Unit = slots(out) = v
-        }
-        case _ => refuse()
-      }
-      case StringType => prim match {
-        case BINARY | FIXED_LEN_BYTE_ARRAY => new PrimitiveConverter {
-          override def addBinary(v: Binary): Unit =
-            slots(out) = UTF8String.fromBytes(v.getBytes)
-        }
-        case _ => refuse()
-      }
-      case BinaryType => prim match {
-        case BINARY | FIXED_LEN_BYTE_ARRAY => new PrimitiveConverter {
-          override def addBinary(v: Binary): Unit = slots(out) = v.getBytes
-        }
-        case _ => refuse()
-      }
-      case d: DecimalType => prim match {
-        case INT32 => new PrimitiveConverter {
-          override def addInt(v: Int): Unit = slots(out) =
-            org.apache.spark.sql.types.Decimal(v.toLong, d.precision, d.scale)
-        }
-        case INT64 => new PrimitiveConverter {
-          override def addLong(v: Long): Unit = slots(out) =
-            org.apache.spark.sql.types.Decimal(v, d.precision, d.scale)
-        }
-        case BINARY | FIXED_LEN_BYTE_ARRAY => new PrimitiveConverter {
-          override def addBinary(v: Binary): Unit = slots(out) =
-            org.apache.spark.sql.types.Decimal(
-              scala.math.BigDecimal(new java.math.BigDecimal(
-                new java.math.BigInteger(v.getBytes), d.scale)),
-              d.precision, d.scale)
-        }
-        case other => throw new UnsupportedOperationException(
-          s"decimal stored as $other is outside the contract ($where)")
-      }
-      case other => throw new UnsupportedOperationException(
-        s"flat scalar columns only; ${other.simpleString} " +
-          s"in $where is outside the contract")
-    }
-  }
-
-  override def prepareForRead(
-      conf: org.apache.hadoop.conf.Configuration,
-      keyValueMetaData: java.util.Map[String, String],
-      fileSchema: MessageType,
-      readContext: ReadSupport.ReadContext): RecordMaterializer[Array[Any]] = {
-    val requested = readContext.getRequestedSchema
-    val outIdx = physNames.zipWithIndex.toMap
-    val slots = new Array[Any](rowWidth)
-    val converters: Array[Converter] =
-      (0 until requested.getFieldCount).map { i =>
-        val f = requested.getType(i)
-        outIdx.get(f.getName) match {
-          case Some(out) =>
-            slotConverter(f.asPrimitiveType().getPrimitiveTypeName,
-              dataTypes(out), slots, out)
-          case None => // the row-pacemaker column of an all-predating
-            // file (init's empty-projection short circuit): discard
-            new PrimitiveConverter {
-              override def addBoolean(v: Boolean): Unit = ()
-              override def addInt(v: Int): Unit = ()
-              override def addLong(v: Long): Unit = ()
-              override def addFloat(v: Float): Unit = ()
-              override def addDouble(v: Double): Unit = ()
-              override def addBinary(v: Binary): Unit = ()
-            }
-        }
-      }.toArray
-    new RecordMaterializer[Array[Any]] {
-      private val root = new GroupConverter {
-        override def getConverter(fieldIndex: Int): Converter =
-          converters(fieldIndex)
-        override def start(): Unit = {
-          var i = 0
-          while (i < slots.length) { slots(i) = null; i += 1 }
-        }
-        override def end(): Unit = ()
-      }
-      override def getCurrentRecord: Array[Any] =
-        java.util.Arrays.copyOf(
-          slots.asInstanceOf[Array[AnyRef]], rowWidth).asInstanceOf[Array[Any]]
-      override def getRootConverter: GroupConverter = root
     }
   }
 }

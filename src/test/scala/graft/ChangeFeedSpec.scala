@@ -170,6 +170,28 @@ class ChangeFeedSpec extends SparkSuite {
     assert(nonEmpty.flatten.toSet === Set(1L, 2L, 3L, 4L))
   }
 
+  test("AVAILABLE NOW with maxVersionsPerBatch=1 reaches the head in one " +
+    "run, one batch per committed version") {
+    val dir = tmpDir("availnow")
+    buildTable(dir) // 4 committed versions before the query ever starts
+    Snapshots.append(fixture.filter(col("key") === 1L)
+      .withColumn("payload", lit(4242L)), dir, "bucket", Seq("key"))
+    val batches = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
+    val q = ChangeFeed.readStream(spark, dir, maxVersionsPerBatch = 1L)
+      .writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val vs = batch.select("_version").distinct()
+          .collect().map(_.getLong(0)).toSet
+        batches.synchronized { batches += vs }
+        ()
+      }.start()
+    try assert(q.awaitTermination(120000L), "the AvailableNow run ended")
+    finally q.stop()
+    assert(batches.toSeq === (1L to 5L).map(Set(_)),
+      s"one batch per version, up to the head: $batches")
+  }
+
   test("ADMISSION CONTROL by BYTES: maxBytesPerBatch paces the backlog by " +
     "each step's manifest-recorded file sizes — a tiny cap degrades to one " +
     "version per batch (soft: the first always admits), a huge cap drains " +
